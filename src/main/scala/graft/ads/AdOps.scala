@@ -46,18 +46,17 @@ object AdOps {
       .distinct().collect().map(_.getString(0)).toSeq.sorted
 
   /** P2 + V1 pass 2: nested record → flat wide row in ONE row-local
-    * projection — no shuffle, no aggregate. `map_from_entries` keeps the
-    * reference's per-row overwrite semantics (`main.py:389-391`: later
-    * entries win per key) via map key collision behavior, and missing
+    * projection — no shuffle, no aggregate. The reference's per-row
+    * overwrite semantics (`main.py:389-391`: later entries win per key) are
+    * part of the expression: an entry is dropped when a later entry repeats
+    * its action type, so `map_from_entries` never sees a duplicate key and
+    * the result holds under any `spark.sql.mapKeyDedupPolicy`. Missing
     * actions zero-fill (`main.py:383-386`).
     *
     * Scale: this is a narrow map over the scan — whole-stage codegen'd,
     * partition-count preserving, embarrassingly parallel at any SF.
     */
   def flattenAndPivot(raw: DataFrame, actionTypes: Seq[String]): DataFrame = {
-    // Reference semantics: a duplicated action_type within one record is
-    // overwritten by the later entry (dict assignment, main.py:389-391).
-    raw.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     val base = Seq(
       col("campaign_name"),
       col("ad_name"),
@@ -79,12 +78,17 @@ object AdOps {
       extractMetric(col("video_p100_watched_actions")).as("video_p100_views"))
     val actionMap = map_from_entries(
       when(col("actions").isNull, array())
-        .otherwise(expr("transform(actions, a -> struct(a.action_type AS k, a.value AS v))")))
+        .otherwise(expr("transform(filter(actions, (a, i) -> NOT exists(" +
+          "slice(actions, i + 2, size(actions)), b -> b.action_type = a.action_type)), " +
+          "a -> struct(a.action_type AS k, a.value AS v))")))
+    // the map is projected once and looked up per action column, so the
+    // lambdas are analyzed and evaluated once per row, not once per column
+    val withMap = raw.select(base :+ actionMap.as("__actions"): _*)
     val actionCols = actionTypes.map { t =>
-      coalesce(numericOrNull(try_element_at(actionMap, lit(t)), "^-?[0-9]+$")
+      coalesce(numericOrNull(try_element_at(col("__actions"), lit(t)), "^-?[0-9]+$")
         .cast("long"), lit(0L)).as(normalizeActionName(t))
     }
-    raw.select(base ++ actionCols: _*)
+    withMap.select(withMap.columns.init.map(col).toSeq ++ actionCols: _*)
   }
 
   /** D1: deterministic first-wins dedup (reference `main.py:500-515`).
@@ -98,12 +102,22 @@ object AdOps {
   def dedupFirstWins(
       raw: DataFrame,
       keys: Seq[String] = dedupKey,
+      orderCols: Seq[String] = Seq("account_idx", "ingest_idx")): DataFrame =
+    firstWinsRank(raw, keys, orderCols).filter(col(rankCol) === 1).drop(rankCol)
+
+  /** D1 without its filter: every raw row, with its position in ingest order
+    * among the rows sharing its key in [[rankCol]] (1 = the winner).
+    */
+  def firstWinsRank(
+      raw: DataFrame,
+      keys: Seq[String] = dedupKey,
       orderCols: Seq[String] = Seq("account_idx", "ingest_idx")): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keys.map(col): _*).orderBy(orderCols.map(col): _*)
-    raw.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    raw.withColumn(rankCol, row_number().over(w))
   }
+
+  val rankCol = "__rn"
 
   /** F2: inclusive date-range filter (reference `backfill.py:263-269`).
     * ISO-8601 strings compare correctly lexicographically — same reliance as

@@ -12,6 +12,23 @@ import org.apache.spark.sql.SparkSession
   */
 object AdsCli {
 
+  /** The result as one JSON object; Jackson escapes the message, which can
+    * carry data values (the reject sample quotes campaign names).
+    */
+  def jsonLine(r: JobResult): String = {
+    val c = r.counters
+    val fields = new java.util.LinkedHashMap[String, Any]()
+    fields.put("status", r.status)
+    fields.put("message", r.message)
+    fields.put("rows_processed", r.rowsProcessed)
+    fields.put("rows_read", c.rowsRead)
+    fields.put("rows_deduped", c.rowsDeduped)
+    fields.put("rejected", c.rejected)
+    fields.put("appended", c.appended)
+    fields.put("failed_accounts", java.util.List.of(c.failedAccounts: _*))
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(fields)
+  }
+
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark: SparkSession = graft.GraftSession.build("graft-ads", cpus.toInt)
@@ -38,7 +55,7 @@ object AdsCli {
         case other =>
           sys.error(s"usage: daily|backfill|load|compact ... (got: ${other.mkString(" ")})")
       }
-      println(s"""{"status":"${result.status}","message":"${result.message}","rows_processed":${result.rowsProcessed}}""")
+      println(jsonLine(result))
     } finally spark.stop()
   }
 }

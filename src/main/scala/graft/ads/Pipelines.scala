@@ -1,20 +1,66 @@
 package graft.ads
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, when}
+
+/** Typed counters of one ETL run, read from observations on the run's own
+  * jobs (no job of their own). A job without a stage leaves its counter 0:
+  * `rejected` is the table sink's, `appended` counts the rows the job wrote
+  * to its sink (the table for the daily sync and the CSV load, the CSV for
+  * the backfill).
+  */
+final case class EtlCounters(
+    rowsRead: Long = 0L,
+    rowsDeduped: Long = 0L,
+    rejected: Long = 0L,
+    appended: Long = 0L,
+    failedAccounts: Seq[String] = Seq.empty)
 
 /** §3 entry points: the three executables of the reference, wired from the
   * operators. (`main.py:454-550`, `backfill.py:177-291`,
   * `load_csv_to_bq.py:41-151`.)
   */
-final case class JobResult(status: String, message: String, rowsProcessed: Long)
+final case class JobResult(
+    status: String, message: String, rowsProcessed: Long,
+    counters: EtlCounters = EtlCounters())
 
 object Pipelines {
+
+  /** Runs `body` over the first-wins dedup of `raw`, materialized once: the
+    * ranked raw rows are cached, filled by the first job that reads them
+    * (one scan, one shuffle), and released when `body` returns or throws.
+    *
+    * `body` gets the winners twice: plain, and `counted`, which also
+    * observes (rows read, rows after dedup); both are returned. Give
+    * `counted` to the writes only. The observation completes on the first
+    * query that runs it, and a query whose adaptive plan drops the cached
+    * scan (an aggregate over no rows) completes it with no values.
+    */
+  private def withDeduped[T](raw: DataFrame)(
+      body: (DataFrame, DataFrame) => T): (T, Long, Long) = {
+    val ranked = AdOps.firstWinsRank(raw).cache()
+    val winner = col(AdOps.rankCol) === 1
+    val counts = Observation()
+    val counted = ranked
+      .observe(counts, count(lit(1)).as("read"), count(when(winner, 1)).as("kept"))
+    try {
+      val out = body(ranked.filter(winner).drop(AdOps.rankCol),
+        counted.filter(winner).drop(AdOps.rankCol))
+      (out, counts.get("read").asInstanceOf[Long], counts.get("kept").asInstanceOf[Long])
+    } finally ranked.unpersist(): Unit
+  }
 
   /** Daily sync (reference `main.py:454-550`): fetch per account with
     * failure isolation → first-wins dedup on RAW records → collect action
     * types → flatten+pivot → CSV audit → append to day-partitioned table
     * (schema-evolving). `dryRun` builds and audits but skips the table sink
     * (reference `main.py:462,538-540`).
+    *
+    * One pass, like the reference: the dedup is materialized once and the
+    * action-type collect, the pivot, the CSV audit and the append all read
+    * that one materialization, so each raw record is scanned once and the
+    * dedup shuffle runs once. Every count in the result is observed on
+    * those jobs (see [[EtlCounters]]); none runs a job of its own.
     */
   def dailySync(
       spark: SparkSession,
@@ -33,29 +79,28 @@ object Pipelines {
         InsightsSource.ReadResult(
           InsightsSource.readV2(spark, fixtureDir, accounts), Seq.empty)
       else InsightsSource.read(spark, fixtureDir, accounts)
-    val deduped = AdOps.dedupFirstWins(read.data)
-    val actionTypes = AdOps.collectActionTypes(deduped)
-    val flat = AdOps.flattenAndPivot(deduped, actionTypes)
-    Sinks.csvAudit(flat, auditCsvPath)
-    val (rows, rejectNote) =
-      if (dryRun) (flat.count(), "")
-      else {
-        val r = Sinks.appendToTableChecked(spark, flat, tablePath)
-        (r.appended,
-          if (r.rejected == 0) ""
-          else s"; rejected ${r.rejected} rows failing REQUIRED columns: " +
-            r.rowErrors.mkString(" | "))
+    val ((audited, append), rowsRead, rowsDeduped) =
+      withDeduped(read.data) { (deduped, counted) =>
+        val flat = AdOps.flattenAndPivot(counted, AdOps.collectActionTypes(deduped))
+        (Sinks.csvAudit(flat, auditCsvPath),
+          if (dryRun) None else Some(Sinks.appendToTableChecked(spark, flat, tablePath)))
       }
+    val rows = append.fold(audited)(_.appended)
+    val rejectNote = append.filter(_.rejected > 0).fold("")(r =>
+      s"; rejected ${r.rejected} rows failing REQUIRED columns: " + r.rowErrors.mkString(" | "))
+    val failed = read.failedAccounts.map(_._1)
     val failNote =
-      if (read.failedAccounts.isEmpty) ""
-      else s" (failed accounts: ${read.failedAccounts.map(_._1).mkString(", ")})"
+      if (failed.isEmpty) "" else s" (failed accounts: ${failed.mkString(", ")})"
     JobResult(if (dryRun) "dry_run" else "success",
-      s"processed $rows rows$failNote$rejectNote", rows)
+      s"processed $rows rows$failNote$rejectNote", rows,
+      EtlCounters(rowsRead, rowsDeduped, append.fold(0L)(_.rejected), rows, failed))
   }
 
   /** Backfill (reference `backfill.py:177-291`): ranged read, dedup across
     * the WHOLE multi-day batch, explicit inclusive range filter (the API may
-    * return out-of-range rows), CSV output named like the reference.
+    * return out-of-range rows), CSV output named like the reference. Same
+    * single materialization as [[dailySync]]; the row count is observed on
+    * the CSV write.
     */
   def backfill(
       spark: SparkSession,
@@ -67,14 +112,14 @@ object Pipelines {
     require(startDate <= endDate, s"start $startDate must be <= end $endDate")
     val read = InsightsSource.read(spark, fixtureDir, accounts,
       dateStart = Some(startDate), dateStop = Some(endDate))
-    val deduped = AdOps.dedupFirstWins(read.data)
-    val actionTypes = AdOps.collectActionTypes(deduped)
-    val flat = AdOps.flattenAndPivot(deduped, actionTypes)
-    val ranged = AdOps.dateRangeFilter(flat, startDate, endDate)
     val path = s"$outDir/backfill_${startDate}_to_$endDate.csv"
-    Sinks.csvAudit(ranged, path)
-    val n = ranged.count()
-    (path, JobResult("success", s"backfilled $n rows", n))
+    val (n, rowsRead, rowsDeduped) = withDeduped(read.data) { (deduped, counted) =>
+      val flat = AdOps.flattenAndPivot(counted, AdOps.collectActionTypes(deduped))
+      Sinks.csvAudit(AdOps.dateRangeFilter(flat, startDate, endDate), path)
+    }
+    (path, JobResult("success", s"backfilled $n rows", n,
+      EtlCounters(rowsRead, rowsDeduped, appended = n,
+        failedAccounts = read.failedAccounts.map(_._1))))
   }
 
   /** CSV → table append (reference `load_csv_to_bq.py:86-110`): header skip +
@@ -82,9 +127,10 @@ object Pipelines {
     */
   def loadCsv(spark: SparkSession, csvPath: String, tablePath: String): JobResult = {
     val df = spark.read.option("header", "true").option("inferSchema", "true").csv(csvPath)
-    val loaded = Sinks.appendToTable(spark, df, tablePath)
+    val loaded = Sinks.appendToTableChecked(spark, df, tablePath)
     val total = Sinks.readTable(spark, tablePath).count()
-    JobResult("success", s"loaded $loaded rows, table now $total rows", loaded)
+    JobResult("success", s"loaded ${loaded.appended} rows, table now $total rows",
+      loaded.appended, EtlCounters(rejected = loaded.rejected, appended = loaded.appended))
   }
 
   /** Daily sync as an INCREMENTAL streaming job: the landing zone consumed

@@ -1,5 +1,6 @@
 #!/usr/bin/env bash
-# One-command local gate: tests + correctness (DuckDB oracle) + bench smoke.
+# One-command local gate: tests + correctness (DuckDB oracle) + ads ETL smoke
+# + bench smoke.
 # Usage: tools/run_gate.sh [sfDir]   (default /root/testdata/sf0.01)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -12,6 +13,19 @@ echo "== Verify @$SF =="
 sbt "runMain graft.Verify $SF target/verify_out" > /tmp/graft_verify.log 2>&1
 grep "\[verify\]" /tmp/graft_verify.log || true
 python3 tools/check_oracle.py "$SF" target/verify_out
+
+echo "== Ads ETL smoke (perfbench ads_daily, traced) =="
+python3 perfbench/run.py --workload ads_daily --seed 1 --seconds 8 --trace 1 \
+  2>/tmp/graft_ads_smoke.err | tail -n 1 > /tmp/graft_ads_smoke.json
+python3 - /tmp/graft_ads_smoke.json <<'PY'
+import json, sys
+r = json.load(open(sys.argv[1]))
+m = r["metrics"]
+for k in ("Pipelines.dailySync.jobs", "etl.rows_read_per_row"):
+    print(f"{k} = {m[k]['value']:.3f}")
+if r["correct"] is not True:
+    sys.exit(f"ads smoke: correct = {r['correct']} (failed ops: {r['failed']}; see /tmp/graft_ads_smoke.err)")
+PY
 
 echo "== Bench smoke @sf0.001 =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 sbt "runMain graft.Bench" 2>/dev/null \
