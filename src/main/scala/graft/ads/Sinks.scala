@@ -36,7 +36,8 @@ object Sinks {
     *
     * Schema evolution: the batch is aligned to merge(existing, incoming)
     * so new action columns append as typed NULL-backed columns and old
-    * files simply lack them (readers merge footers).
+    * files simply lack them (readers get the merged schema, see
+    * [[readTable]]).
     */
   def appendToTable(spark: SparkSession, flat: DataFrame, path: String): Long =
     appendToTableChecked(spark, flat, path).appended
@@ -114,9 +115,15 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("p_date").parquet(path))
 
-  /** Table read with footer-merged schema (evolution-aware). */
+  /** Table read with the footer-merged schema (evolution-aware), given to
+    * the reader from [[SchemaEvolution.tableSchema]]: on a table unchanged
+    * since its last merge the read plans without a Spark job. A missing or
+    * empty table falls back to the plain merging read and fails as it does.
+    */
   def readTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
+    SchemaEvolution.tableSchema(spark, path)
+      .fold(spark.read.option("mergeSchema", "true"))(spark.read.schema)
+      .parquet(path)
 
   /** Small-file compaction: rewrite each day partition into
     * ceil(bytes / targetBytes) files. Daily appends leave one small file

@@ -1,13 +1,11 @@
 package graft.ads
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -22,43 +20,6 @@ class SinglePassSpec extends SparkSpec {
   private def work(name: String): String =
     Files.createTempDirectory(s"graft-single-pass-$name").toString
 
-  /** Jobs started, and records read by file scans (stages holding a
-    * `FileScanRDD`; cached-block reads are not counted), between `reset` and
-    * `drain`.
-    */
-  private final class ScanCounter extends SparkListener {
-    val jobs = new AtomicInteger
-    val fileRecords = new AtomicLong
-    private val marker = new AtomicBoolean
-    private val scanStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (e.properties != null && e.properties.getProperty("single-pass.marker") != null)
-        marker.set(true)
-      else {
-        jobs.incrementAndGet()
-        e.stageInfos.filter(_.rddInfos.exists(_.name == "FileScanRDD"))
-          .foreach(s => scanStages.add(s.stageId))
-      }
-
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      if (scanStages.contains(e.stageId) && e.taskMetrics != null)
-        fileRecords.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-
-    def reset(): Unit = { jobs.set(0); fileRecords.set(0); marker.set(false) }
-
-    /** Waits until every event before a marker job has been delivered. */
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      sc.setLocalProperty("single-pass.marker", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("single-pass.marker", null)
-      val deadline = System.nanoTime() + 30.seconds.toNanos
-      while (!marker.get() && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(marker.get(), "listener bus did not drain")
-    }
-  }
-
   private def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** The fixture accounts in a new directory: a plan over new paths cannot
@@ -72,21 +33,16 @@ class SinglePassSpec extends SparkSpec {
   }
 
   test("dailySync reads each raw record once and runs at most 6 jobs") {
-    val counter = new ScanCounter
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      val dir = work("scan")
-      counter.drain()
-      counter.reset()
-      val r = Pipelines.dailySync(spark, fixtureDir, Seq("a1", "a2"), s"$dir/t", s"$dir/audit")
-      counter.drain()
-      // 4 + 3 raw records in the two account files; 6 jobs measured (the
-      // table is new, so there is no footer-merge job)
-      assert(counter.fileRecords.get() == 7L)
-      assert(counter.jobs.get() <= 6, s"${counter.jobs.get()} jobs")
-      assert(r.counters == EtlCounters(rowsRead = 7, rowsDeduped = 5, rejected = 0,
-        appended = 5, failedAccounts = Seq.empty))
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val dir = work("scan")
+    val (r, counter) = JobCounter.during(spark) {
+      Pipelines.dailySync(spark, fixtureDir, Seq("a1", "a2"), s"$dir/t", s"$dir/audit")
+    }
+    // 4 + 3 raw records in the two account files; 6 jobs measured (the
+    // table is new, so there is no footer-merge job)
+    assert(counter.fileRecords.get() == 7L)
+    assert(counter.jobs.get() <= 6, s"${counter.jobs.get()} jobs")
+    assert(r.counters == EtlCounters(rowsRead = 7, rowsDeduped = 5, rejected = 0,
+      appended = 5, failedAccounts = Seq.empty))
   }
 
   test("no persistent RDD is left after dailySync, on success and when the append throws") {

@@ -21,10 +21,15 @@ python3 - /tmp/graft_ads_smoke.json <<'PY'
 import json, sys
 r = json.load(open(sys.argv[1]))
 m = r["metrics"]
-for k in ("Pipelines.dailySync.jobs", "etl.rows_read_per_row"):
+for k in ("Pipelines.dailySync.jobs", "etl.rows_read_per_row", "InsightsSource.read.s",
+          "SchemaEvolution.tableSchema.jobs", "Monitoring.healthCheck.jobs"):
     print(f"{k} = {m[k]['value']:.3f}")
 if r["correct"] is not True:
     sys.exit(f"ads smoke: correct = {r['correct']} (failed ops: {r['failed']}; see /tmp/graft_ads_smoke.err)")
+# the daily sync reads a table the previous day's monitoring just read, so
+# its schema must come from the memo, not a footer-merge job
+if m["SchemaEvolution.tableSchema.jobs"]["value"] != 0:
+    sys.exit("ads smoke: SchemaEvolution.tableSchema ran a footer-merge job in the daily sync")
 PY
 
 echo "== Bench smoke @sf0.001 =="
