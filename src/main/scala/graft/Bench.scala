@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every declared query at
@@ -45,8 +48,9 @@ object Bench {
     // Steady-state measurement: one untimed pass warms JIT/codegen and
     // shuffle machinery (cold-start dominates otherwise — e.g. the LSH
     // query costs ~3x its steady-state time on a cold JVM), then data
-    // caches are dropped so the timed pass recomputes from the source —
-    // only code paths stay warm, not results.
+    // caches are dropped so the timed pass recomputes from the source.
+    // Code paths stay warm, and so do table schemas: they are metadata
+    // memoized per file version (SchemaMemo), not results.
     selected.foreach { case (_, fn) =>
       try force(fn(spark, sfDir)) catch { case _: Throwable => () }
     }
@@ -70,18 +74,19 @@ object Bench {
       graft.queries.MultimodalQueries.prewarmSharedStages(spark, sfDir)
     val prewarmSec = (System.nanoTime() - tPre) / 1e9
 
-    // (name, seconds, succeeded): a query that throws records -1 in the
-    // artifact and its name in "failed" — a crash must not read as a fast run
+    // (name, seconds, error): a query that throws records -1 in the
+    // artifact, its name in "failed" and its exception in "errors" — a
+    // crash must not read as a fast run
     val results = selected.map { case (name, fn) =>
       // accumulated broadcast/shuffle state from ~60 prior queries inflates
       // later measurements 2-3x in a single local JVM; a GC between queries
       // keeps each measurement about the query, not the backlog
       System.gc()
-      def once(): (Double, Boolean) = {
+      def once(): (Double, Option[String]) = {
         val t0 = System.nanoTime()
-        val ok = try { force(fn(spark, sfDir)); true }
-        catch { case _: Throwable => false }
-        ((System.nanoTime() - t0) / 1e9, ok)
+        val err = try { force(fn(spark, sfDir)); None }
+        catch { case e: Throwable => Some(s"${e.getClass.getName}: ${e.getMessage}") }
+        ((System.nanoTime() - t0) / 1e9, err)
       }
       // streaming queries restart a StreamingQueryManager per run, and the
       // localCheckpoint-heavy dedup family is run-order sensitive — both
@@ -91,19 +96,23 @@ object Bench {
         name.charAt(2).isDigit
       val runs = if (noisy) Seq(once(), once(), once()) else Seq(once())
       val med = runs.map(_._1).sorted.apply(runs.size / 2)
-      (name, med, runs.forall(_._2))
+      (name, med, runs.flatMap(_._2).headOption)
     }
 
     def ms(v: Double): String = (math.round(v * 1000) / 1000.0).toString
-    val qs = results.map { case (k, v, ok) =>
-      "\"" + k + "\":" + (if (ok) ms(v) else "-1")
+    val qs = results.map { case (k, v, err) =>
+      "\"" + k + "\":" + (if (err.isEmpty) ms(v) else "-1")
     }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
+    val failed = results.collect { case (k, _, Some(_)) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val total = results.filter(_._3).map(_._2).sum
+    // exception texts carry quotes and newlines: Jackson escapes them
+    val errors = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+      ListMap.from(results.collect { case (k, _, Some(e)) => k -> e }).asJava)
+    val ok = results.filter(_._3.isEmpty)
+    val total = ok.map(_._2).sum
     // total leads the line AND trails it (total_sec): whichever end of the
     // line a bounded capture window keeps, the headline number survives
-    val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec","failed":$failed,"prewarm_sec":${ms(prewarmSec)},"queries":$qs,"sf":"$sfDir","total_sec":${ms(total)}}"""
+    val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec","failed":$failed,"errors":$errors,"prewarm_sec":${ms(prewarmSec)},"queries":$qs,"sf":"$sfDir","total_sec":${ms(total)}}"""
 
     // fixed-path artifact first — three rounds of per-query data were lost
     // to stdout truncation before this
@@ -115,7 +124,7 @@ object Bench {
     println(line)
     // compact, always-parseable LAST line: fits any tail window whole, so a
     // JSON scan of clipped stdout still yields total + slowest queries
-    val slow = results.filter(_._3).sortBy(-_._2).take(12)
+    val slow = ok.sortBy(-_._2).take(12)
       .map { case (k, v, _) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$slow,"failed":$failed,"sf":"$sfDir","full":"/root/repo/BENCH_LAST.json"}""")
 

@@ -126,7 +126,7 @@ object ScaleData {
     // `ts div 1000` accepts either representation
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    def table(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def table(t: String): DataFrame = Tables.read(spark, src, t)
     def keySpan(t: String, c: String): Long =
       table(t).agg(max(col(c))).head().getLong(0) + 1L
 

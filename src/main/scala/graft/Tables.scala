@@ -8,13 +8,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicate filters down to the scan, so readers stay unfiltered here and
   * every query declares its own projection/predicates declaratively.
   *
+  * Each table's schema is inferred once per file version ([[SchemaMemo]]):
+  * a read of a table unchanged since its last inference plans without the
+  * footer-reading Spark job.
+  *
   * Scale note (100 TB): at cluster scale these would be partitioned/bucketed
   * tables (`spark.table`), not single files; keeping every access behind this
   * one object means swapping the storage layout touches exactly one file.
   */
 object Tables {
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    SchemaMemo.schema(spark, path, mergeSchema = false)
+      .fold(spark.read)(spark.read.schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = read(s, d, "nation")

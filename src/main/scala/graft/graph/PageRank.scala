@@ -1,19 +1,25 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed PageRank as iterated joins — the second iterative graph
   * operator next to graft.dedup.Clusters (connected components).
   *
   * Scale design (100 TB of edges): the edge set is hash-partitioned on
-  * `src` ONCE and cached; every iteration's edge⨝rank join consumes that
-  * partitioning directly (asserted in PlanSpec — no ENSURE_REQUIREMENTS
-  * exchange ever sits on the cached scan), so per-round shuffle cost is
-  * O(|ranks|) for the rank side plus the keyed contribution sum on dst —
-  * never O(|edges|). Rank state is one row per node, localCheckpointed per
-  * round so lineage stays O(1). No driver-side state — node count travels
-  * as a 1-row broadcast.
+  * `src` ONCE and cached, with each edge's out-degree `deg` attached as a
+  * column; every iteration's edge⨝rank join consumes that partitioning
+  * directly (asserted in PageRankPlanSpec — no ENSURE_REQUIREMENTS exchange
+  * ever sits on the cached scan, and a round joins the edge scan exactly
+  * once), so per-round shuffle cost is O(|ranks|) for the rank side plus
+  * the keyed contribution sum on dst — never O(|edges|). Rank state is one
+  * row per node, localCheckpointed per round so lineage stays O(1). The
+  * node count is the only driver-side state: one scalar, observed on the
+  * node-set checkpoint's own job. Each round's teleport term is the
+  * driver-computed literal `teleport / n`, the same IEEE double as the
+  * oracle's `0.15 / n` (and no plan-time division by zero on an empty
+  * graph).
   *
   * Determinism (oracle parity): ranks are rounded to `roundTo` decimals at
   * EVERY iteration, so sub-ulp summation-order differences between engines
@@ -24,14 +30,12 @@ import org.apache.spark.sql.functions._
 object PageRank {
 
   /** The one-time graph state an iteration consumes: edges pre-partitioned
-    * on the join key and cached, out-degrees and the node set derived FROM
-    * that partitioned cache (their groupBys run exchange-free over
-    * co-located rows; localCheckpoint carries the physical
-    * outputPartitioning into the checkpointed plan, so deg joins back on
-    * src exchange-free too), and the node count as a 1-row broadcastable df.
+    * on the join key and cached with their source's out-degree (a window
+    * over `src`, which runs exchange-free on the partitioned rows), the
+    * node set derived FROM that partitioned cache and checkpointed, and the
+    * node count.
     */
-  private[graph] final case class Graph(
-      edges: DataFrame, deg: DataFrame, nodes: DataFrame, nn: DataFrame)
+  private[graph] final case class Graph(edges: DataFrame, nodes: DataFrame, n: Long)
 
   private[graph] def prepare(edges0: DataFrame): Graph = {
     // every iteration re-reads the edge set — materialize it ONCE (its
@@ -41,31 +45,35 @@ object PageRank {
     // shuffles per iteration, never the O(|edges|) cache. Spill-safe so a
     // 100 TB-derived edge list doesn't have to fit in memory.
     val edges = edges0.repartition(col("src"))
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    val nodeCount = Observation()
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
+      .observe(nodeCount, count(lit(1)).as("n"))
       .localCheckpoint()
-    Graph(edges, deg, nodes, nodes.agg(count(lit(1)).as("n")))
+    Graph(edges, nodes, nodeCount.get("n").asInstanceOf[Long])
   }
 
-  /** One power-iteration round as a lazy plan (PlanSpec asserts no exchange
-    * ever lands on the cached edge scan in this plan).
+  /** Rank mass flowing into each node: every edge carries its source's
+    * rank split evenly over the source's out-degree.
     */
-  private[graph] def step(g: Graph, pr: DataFrame, teleport: Double,
-      damping: Double, roundTo: Int): DataFrame = {
-    val contribs = g.edges
+  private def contribs(g: Graph, pr: DataFrame): DataFrame =
+    g.edges
       .join(pr.withColumnRenamed("node", "src"), "src")
-      .join(g.deg, "src")
       .groupBy(col("dst").as("node"))
       .agg(sum(col("pr") / col("deg")).as("in_c"))
-    g.nodes.crossJoin(g.nn)
-      .join(contribs, Seq("node"), "left")
+
+  /** One power-iteration round as a lazy plan (PageRankPlanSpec asserts no
+    * exchange ever lands on the cached edge scan in this plan).
+    */
+  private[graph] def step(g: Graph, pr: DataFrame, teleport: Double,
+      damping: Double, roundTo: Int): DataFrame =
+    g.nodes
+      .join(contribs(g, pr), Seq("node"), "left")
       .select(col("node"),
-        round(lit(teleport) / col("n") +
+        round(lit(teleport / g.n) +
           lit(damping) * coalesce(col("in_c"), lit(0.0)), roundTo).as("pr"))
-  }
 
   /** @param edges directed (src, dst); make it symmetric upstream if the
     *              graph is undirected (also removes dangling nodes).
@@ -75,8 +83,7 @@ object PageRank {
     val g = prepare(edges0)
     // pr₀ is a cheap projection over the checkpointed node set consumed
     // ONCE (by round 1) — checkpointing it was a pure extra job
-    var pr = g.nodes.crossJoin(g.nn)
-      .select(col("node"), round(lit(1.0) / col("n"), roundTo).as("pr"))
+    var pr = g.nodes.select(col("node"), round(lit(1.0 / g.n), roundTo).as("pr"))
     (1 to iters).foreach { _ =>
       pr = step(g, pr, teleport, damping, roundTo).localCheckpoint()
     }
@@ -112,13 +119,8 @@ object PageRank {
         round(when(col("is_seed").isNotNull, lit(1.0) / col("ns"))
           .otherwise(lit(0.0)), roundTo).as("pr"))
     (1 to iters).foreach { _ =>
-      val contribs = g.edges
-        .join(pr.withColumnRenamed("node", "src"), "src")
-        .join(g.deg, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("pr") / col("deg")).as("in_c"))
       pr = withSeed(g.nodes)
-        .join(contribs, Seq("node"), "left")
+        .join(contribs(g, pr), Seq("node"), "left")
         .select(col("node"),
           round(teleportTerm
             + lit(damping) * coalesce(col("in_c"), lit(0.0)), roundTo).as("pr"))

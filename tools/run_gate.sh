@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # One-command local gate: tests + correctness (DuckDB oracle) + ads ETL smoke
-# + bench smoke.
+# + pack smoke + bench smoke.
 # Usage: tools/run_gate.sh [sfDir]   (default /root/testdata/sf0.01)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -30,6 +30,24 @@ if r["correct"] is not True:
 # its schema must come from the memo, not a footer-merge job
 if m["SchemaEvolution.tableSchema.jobs"]["value"] != 0:
     sys.exit("ads smoke: SchemaEvolution.tableSchema ran a footer-merge job in the daily sync")
+PY
+
+echo "== Pack smoke (perfbench pack, traced) =="
+python3 perfbench/run.py --workload pack --seed 1 --seconds 8 --trace 1 \
+  2>/tmp/graft_pack_smoke.err | tail -n 1 > /tmp/graft_pack_smoke.json
+python3 - /tmp/graft_pack_smoke.json <<'PY'
+import json, sys
+r = json.load(open(sys.argv[1]))
+m = r["metrics"]
+for k in ("pack.jobs", "pack.eager_jobs", "q.gr1_pagerank.jobs",
+          "q.tq3_shipping_priority.jobs", "q.tq18_big_orders.jobs"):
+    print(f"{k} = {m[k]['value']:.1f}")
+if r["correct"] is not True:
+    sys.exit(f"pack smoke: correct = {r['correct']} (failed ops: {r['failed']}; see /tmp/graft_pack_smoke.err)")
+# tq3 reads three unchanged tables whose schemas come from the memo; more
+# than 4 jobs means a footer-inference job is back in the query body
+if m["q.tq3_shipping_priority.jobs"]["value"] > 4:
+    sys.exit("pack smoke: tq3_shipping_priority ran more than 4 jobs (a footer job came back)")
 PY
 
 echo "== Bench smoke @sf0.001 =="
