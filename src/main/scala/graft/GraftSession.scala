@@ -43,7 +43,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark) // idempotent; covers reuse
+    graft.functions.GraftFunctions.register(spark) // a reused session lacks the injected ones
     spark
   }
 }

@@ -33,11 +33,15 @@ object AdSchema {
     "video_p100_watched_actions")
 
   /** Nested source-boundary schema. `ingest_idx` is the explicit arrival
-    * order a faithful paging source would stamp (page number × page offset) —
-    * the reference depends on Python list order (`main.py:504-509`); under
-    * parallelism order must be data, not happenstance. `results` is requested
-    * by the reference but never extracted (`main.py:285`) — carried and
-    * dropped, same as there.
+    * order within a page that the source stamps on each record — the
+    * reference depends on Python list order (`main.py:504-509`); under
+    * parallelism order must be data, not happenstance. The reader orders
+    * records by (account, page, `ingest_idx`): a page file's values are
+    * lifted to `page << 40` plus the record's own (see [[InsightsSource]]),
+    * so a page's values must lie in [0, 2^40). The reader cannot see line
+    * numbers, so an unstamped record orders by (account, page) only, as 0
+    * within its page. `results` is requested by the reference but never
+    * extracted (`main.py:285`) — carried and dropped, same as there.
     */
   val rawSchema: StructType = StructType(
     Seq(

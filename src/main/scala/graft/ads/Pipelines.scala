@@ -1,7 +1,10 @@
 package graft.ads
 
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, when}
+import org.apache.spark.sql.streaming.Trigger
 
 /** Typed counters of one ETL run, read from observations on the run's own
   * jobs (no job of their own). A job without a stage leaves its counter 0:
@@ -14,7 +17,13 @@ final case class EtlCounters(
     rowsDeduped: Long = 0L,
     rejected: Long = 0L,
     appended: Long = 0L,
-    failedAccounts: Seq[String] = Seq.empty)
+    failedAccounts: Seq[String] = Seq.empty) {
+
+  /** Both runs' counters summed (a streaming sync's micro-batches). */
+  def +(o: EtlCounters): EtlCounters = EtlCounters(rowsRead + o.rowsRead,
+    rowsDeduped + o.rowsDeduped, rejected + o.rejected, appended + o.appended,
+    failedAccounts ++ o.failedAccounts)
+}
 
 /** §3 entry points: the three executables of the reference, wired from the
   * operators. (`main.py:454-550`, `backfill.py:177-291`,
@@ -26,26 +35,27 @@ final case class JobResult(
 
 object Pipelines {
 
-  /** Runs `body` over the first-wins dedup of `raw`, materialized once: the
+  /** The one ETL core, under the daily, backfill and streaming triggers:
+    * runs `sink` over the first-wins dedup of `raw`, flattened and pivoted
+    * on the batch's own action types. The dedup is materialized once: the
     * ranked raw rows are cached, filled by the first job that reads them
-    * (one scan, one shuffle), and released when `body` returns or throws.
+    * (one scan, one shuffle), and released when `sink` returns or throws.
     *
-    * `body` gets the winners twice: plain, and `counted`, which also
-    * observes (rows read, rows after dedup); both are returned. Give
-    * `counted` to the writes only. The observation completes on the first
-    * query that runs it, and a query whose adaptive plan drops the cached
-    * scan (an aggregate over no rows) completes it with no values.
+    * The rows `sink` gets also observe (rows read, rows after dedup); both
+    * are returned. The observation completes on the first query that runs
+    * them, and a query whose adaptive plan drops the cached scan (an
+    * aggregate over no rows) completes it with no values.
     */
-  private def withDeduped[T](raw: DataFrame)(
-      body: (DataFrame, DataFrame) => T): (T, Long, Long) = {
+  private def dedupPivot[T](raw: DataFrame)(sink: DataFrame => T): (T, Long, Long) = {
     val ranked = AdOps.firstWinsRank(raw).cache()
     val winner = col(AdOps.rankCol) === 1
     val counts = Observation()
     val counted = ranked
       .observe(counts, count(lit(1)).as("read"), count(when(winner, 1)).as("kept"))
+    def winners(df: DataFrame) = df.filter(winner).drop(AdOps.rankCol)
     try {
-      val out = body(ranked.filter(winner).drop(AdOps.rankCol),
-        counted.filter(winner).drop(AdOps.rankCol))
+      val out = sink(AdOps.flattenAndPivot(winners(counted),
+        AdOps.collectActionTypes(winners(ranked))))
       (out, counts.get("read").asInstanceOf[Long], counts.get("kept").asInstanceOf[Long])
     } finally ranked.unpersist(): Unit
   }
@@ -58,9 +68,10 @@ object Pipelines {
     *
     * One pass, like the reference: the dedup is materialized once and the
     * action-type collect, the pivot, the CSV audit and the append all read
-    * that one materialization, so each raw record is scanned once and the
-    * dedup shuffle runs once. Every count in the result is observed on
-    * those jobs (see [[EtlCounters]]); none runs a job of its own.
+    * that one materialization (see [[dedupPivot]]), so each raw record is
+    * scanned once and the dedup shuffle runs once. Every count in the
+    * result is observed on those jobs (see [[EtlCounters]]); none runs a
+    * job of its own.
     */
   def dailySync(
       spark: SparkSession,
@@ -68,23 +79,12 @@ object Pipelines {
       accounts: Seq[String],
       tablePath: String,
       auditCsvPath: String,
-      dryRun: Boolean = false,
-      useV2Source: Boolean = false): JobResult = {
-    // V2 = the paginated executor-side DSv2 reader (retries, error taxonomy,
-    // page-cursor walk); the driver-side reader keeps per-account failure
-    // isolation, which DSv2 partitions intentionally don't (a failed account
-    // fails the scan).
-    val read =
-      if (useV2Source)
-        InsightsSource.ReadResult(
-          InsightsSource.readV2(spark, fixtureDir, accounts), Seq.empty)
-      else InsightsSource.read(spark, fixtureDir, accounts)
-    val ((audited, append), rowsRead, rowsDeduped) =
-      withDeduped(read.data) { (deduped, counted) =>
-        val flat = AdOps.flattenAndPivot(counted, AdOps.collectActionTypes(deduped))
-        (Sinks.csvAudit(flat, auditCsvPath),
-          if (dryRun) None else Some(Sinks.appendToTableChecked(spark, flat, tablePath)))
-      }
+      dryRun: Boolean = false): JobResult = {
+    val read = InsightsSource.read(spark, fixtureDir, accounts)
+    val ((audited, append), rowsRead, rowsDeduped) = dedupPivot(read.data) { flat =>
+      (Sinks.csvAudit(flat, auditCsvPath),
+        if (dryRun) None else Some(Sinks.appendToTableChecked(spark, flat, tablePath)))
+    }
     val rows = append.fold(audited)(_.appended)
     val rejectNote = append.filter(_.rejected > 0).fold("")(r =>
       s"; rejected ${r.rejected} rows failing REQUIRED columns: " + r.rowErrors.mkString(" | "))
@@ -113,8 +113,7 @@ object Pipelines {
     val read = InsightsSource.read(spark, fixtureDir, accounts,
       dateStart = Some(startDate), dateStop = Some(endDate))
     val path = s"$outDir/backfill_${startDate}_to_$endDate.csv"
-    val (n, rowsRead, rowsDeduped) = withDeduped(read.data) { (deduped, counted) =>
-      val flat = AdOps.flattenAndPivot(counted, AdOps.collectActionTypes(deduped))
+    val (n, rowsRead, rowsDeduped) = dedupPivot(read.data) { flat =>
       Sinks.csvAudit(AdOps.dateRangeFilter(flat, startDate, endDate), path)
     }
     (path, JobResult("success", s"backfilled $n rows", n,
@@ -134,17 +133,17 @@ object Pipelines {
   }
 
   /** Daily sync as an INCREMENTAL streaming job: the landing zone consumed
-    * as a file stream, each micro-batch deduped/pivoted/appended via
-    * foreachBatch, Trigger.AvailableNow to drain-and-stop. This is the
-    * Spark-native form of the reference's scheduler-triggered batch
-    * (SURVEY §1.2): re-running picks up only NEW fixture files (checkpointed
-    * source offsets), giving exactly-once file consumption instead of
-    * max-instances=1 discipline.
+    * as a file stream ([[InsightsSource.readStream]]), each micro-batch run
+    * through the daily sync's core ([[dedupPivot]] → checked append),
+    * Trigger.AvailableNow to drain-and-stop. This is the Spark-native form
+    * of the reference's scheduler-triggered batch (SURVEY §1.2): re-running
+    * picks up only NEW fixture files (checkpointed source offsets), giving
+    * exactly-once file consumption instead of max-instances=1 discipline.
     *
-    * Note: action columns are pinned from the batch-visible data at start
-    * (the streaming plan needs a fixed schema); novel action types landing
-    * mid-stream surface on the next run — same cadence as the reference,
-    * which re-reads the table schema per run.
+    * Each micro-batch pivots on its own action types, so a novel type that
+    * lands mid-stream evolves the table in the same run. Dedup is per
+    * micro-batch. The counters are summed over the batches; `rowsProcessed`
+    * is the rows this run appended.
     */
   def dailySyncStreaming(
       spark: SparkSession,
@@ -152,40 +151,21 @@ object Pipelines {
       accounts: Seq[String],
       tablePath: String,
       checkpointDir: String): JobResult = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.Trigger
-    val batchRead = InsightsSource.read(spark, fixtureDir, accounts)
-    val actionTypes = AdOps.collectActionTypes(batchRead.data)
-    // lineage comes from the file path (raw records don't carry it):
-    // account id parsed from the name, ingest position from the list order
-    val idxMap = map(accounts.zipWithIndex.flatMap {
-      case (a, i) => Seq(lit(a), lit(i))
-    }: _*)
-    val stream = spark.readStream
-      .schema(AdSchema.rawSchema)
-      .option("pathGlobFilter", "account_*.jsonl")
-      .json(fixtureDir)
-      .withColumn("account_id",
-        regexp_extract(input_file_name(), "account_([^/.]+)\\.jsonl", 1))
-      .withColumn("account_idx",
-        coalesce(try_element_at(idxMap, col("account_id")), lit(Int.MaxValue)))
-      // batch/stream parity: the glob matches EVERY account file in the
-      // landing zone, so restrict to the requested accounts — an unlisted
-      // account's file must not be silently ingested
-      .filter(col("account_id").isInCollection(accounts))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val withLineage = batch
-        val deduped = AdOps.dedupFirstWins(withLineage)
-        val flat = AdOps.flattenAndPivot(deduped, actionTypes)
-        Sinks.appendToTable(spark, flat, tablePath): Unit
+    val total = new AtomicReference(EtlCounters())
+    val q = InsightsSource.readStream(spark, fixtureDir, accounts).writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val (append, rowsRead, rowsDeduped) =
+          dedupPivot(batch)(Sinks.appendToTableChecked(spark, _, tablePath))
+        val counters = EtlCounters(rowsRead, rowsDeduped, append.rejected, append.appended)
+        total.getAndUpdate(_ + counters): Unit
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val n = Sinks.readTable(spark, tablePath).count()
-    JobResult("success", s"streaming sync complete, table has $n rows", n)
+    val counters = total.get
+    JobResult("success", s"streaming sync appended ${counters.appended} rows",
+      counters.appended, counters)
   }
 
   /** S4: most-recent backfill file discovery (`load_csv_to_bq.py:132-148`). */

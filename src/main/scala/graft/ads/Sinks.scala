@@ -38,15 +38,11 @@ object Sinks {
     * so new action columns append as typed NULL-backed columns and old
     * files simply lack them (readers get the merged schema, see
     * [[readTable]]).
-    */
-  def appendToTable(spark: SparkSession, flat: DataFrame, path: String): Long =
-    appendToTableChecked(spark, flat, path).appended
-
-  /** The checked form: rows with a null REQUIRED column (schema.json mode,
+    *
+    * Checked: rows with a null REQUIRED column (schema.json mode,
     * [[AdSchema.requiredCols]]) are REJECTED — reported with per-row error
     * messages and optionally routed to `errorPath` — instead of silently
-    * appended; BigQuery would refuse them row-by-row. Valid rows append
-    * exactly as before.
+    * appended; BigQuery would refuse them row-by-row.
     *
     * One pass: the append write is the only job on the success path. An
     * [[Observation]] on that write counts appended and rejected rows as

@@ -14,40 +14,38 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 object GraftFunctions {
 
-  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "cosine_sim" -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
-    "sq_dist" -> (exprs => SqDist(exprs(0), exprs(1))),
-    "rolling_hash" -> (exprs => RollingHash(exprs.head)),
-    // aggregate: the analyzer wraps an AggregateFunction builder result in
-    // an AggregateExpression at resolution, same as the built-in registry
-    "capped_distinct" -> (exprs => CappedDistinctAgg(exprs(0), exprs(1))))
+  private type Builder = Seq[Expression] => Expression
 
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+  /** The one function table: name, registry info and builder of each. */
+  private[functions] val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] =
+    Seq[(String, Class[_], Builder)](
+      ("cosine_sim", classOf[CosineSimilarity], exprs => CosineSimilarity(exprs(0), exprs(1))),
+      ("sq_dist", classOf[SqDist], exprs => SqDist(exprs(0), exprs(1))),
+      ("rolling_hash", classOf[RollingHash], exprs => RollingHash(exprs.head)),
+      // aggregate: the analyzer wraps an AggregateFunction builder result in
+      // an AggregateExpression at resolution, same as the built-in registry
+      ("capped_distinct", classOf[CappedDistinctAgg],
+        exprs => CappedDistinctAgg(exprs(0), exprs(1)))
+    ).map { case (name, cls, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
     }
+
+  /** Registers each function the session's registry does not hold yet, so a
+    * session built with [[GraftExtensions]] keeps its injected functions and
+    * a repeated call replaces nothing.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
+  }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // theta range joins → binned equi-joins (no nested loops at scale)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sq_dist"),
-      new ExpressionInfo(classOf[SqDist].getName, "sq_dist"),
-      (exprs: Seq[Expression]) => SqDist(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("capped_distinct"),
-      new ExpressionInfo(classOf[CappedDistinctAgg].getName, "capped_distinct"),
-      (exprs: Seq[Expression]) => CappedDistinctAgg(exprs(0), exprs(1))))
+    GraftFunctions.functions.foreach(ext.injectFunction)
   }
 }

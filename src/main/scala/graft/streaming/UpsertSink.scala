@@ -18,7 +18,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * batch when small — the common CDC case); the read-merge-rewrite of the
   * target is the plain-parquet trade-off, which is exactly what table
   * formats amortize with partition overwrite — on a partitioned target
-  * you'd prune the rewrite to touched partitions (see Sinks.appendToTable's
+  * you'd prune the rewrite to touched partitions (see Sinks.appendToTableChecked's
   * layout). State never lives on the driver.
   */
 object UpsertSink {

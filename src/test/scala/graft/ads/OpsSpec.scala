@@ -135,7 +135,7 @@ class OpsSpec extends SparkSpec {
     ).toDF("campaign_name", "ad_name", "publisher_platform",
       "date_start", "date_stop", "impressions")
     // three appends → ≥3 files per day partition
-    (1 to 3).foreach(i => Sinks.appendToTable(spark, mk(s"ad$i", i * 10L), dir))
+    (1 to 3).foreach(i => Sinks.appendToTableChecked(spark, mk(s"ad$i", i * 10L), dir).appended)
     val before = Sinks.readTable(spark, dir).collect().toSet
     val (nBefore, nAfter) = Sinks.compact(spark, dir)
     assert(nBefore >= 6 && nAfter < nBefore, s"$nBefore -> $nAfter")

@@ -30,7 +30,7 @@ class SchemaMemoSpec extends SparkSpec {
   test("after evolving appends the schema equals a merging read, p_date last") {
     val table = s"${work("evolve")}/t"
     Seq("act_a", "act_b", "act_c").zipWithIndex.foreach { case (a, i) =>
-      Sinks.appendToTable(spark, batch(s"ad$i", s"2024-05-0${i + 1}", a), table)
+      Sinks.appendToTableChecked(spark, batch(s"ad$i", s"2024-05-0${i + 1}", a), table).appended
       Sinks.readTable(spark, table) // fills the memo for this version
     }
     val schema = Sinks.readTable(spark, table).schema
@@ -41,7 +41,7 @@ class SchemaMemoSpec extends SparkSpec {
 
   test("a second readTable on an unchanged table runs no Spark job") {
     val table = s"${work("hit")}/t"
-    Sinks.appendToTable(spark, batch("ad1", "2024-05-01", "act_a"), table)
+    Sinks.appendToTableChecked(spark, batch("ad1", "2024-05-01", "act_a"), table).appended
     val (_, first) = JobCounter.during(spark)(Sinks.readTable(spark, table))
     assert(first.footerMerges.get() == 1, "the table changed, so the first read merges")
     val (df, second) = JobCounter.during(spark)(Sinks.readTable(spark, table))
@@ -51,10 +51,10 @@ class SchemaMemoSpec extends SparkSpec {
 
   test("a new action column shows up after appendToTable, compact and a plain write") {
     val table = s"${work("writes")}/t"
-    Sinks.appendToTable(spark, batch("ad1", "2024-05-01", "act_a"), table)
+    Sinks.appendToTableChecked(spark, batch("ad1", "2024-05-01", "act_a"), table).appended
     assert(!Sinks.readTable(spark, table).columns.contains("act_b"))
 
-    Sinks.appendToTable(spark, batch("ad2", "2024-05-02", "act_b"), table)
+    Sinks.appendToTableChecked(spark, batch("ad2", "2024-05-02", "act_b"), table).appended
     assert(Sinks.readTable(spark, table).columns.contains("act_b"))
 
     Sinks.compact(spark, table)

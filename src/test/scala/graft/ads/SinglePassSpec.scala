@@ -107,11 +107,11 @@ class SinglePassSpec extends SparkSpec {
     val dir = work("compact")
     val table = s"$dir/t"
     (1 to 3).foreach { i =>
-      Sinks.appendToTable(spark, Seq(
+      Sinks.appendToTableChecked(spark, Seq(
         ("campX", s"ad$i", "facebook", "2024-05-01", "2024-05-01", i * 10L),
         ("campX", s"ad$i", "facebook", "2024-05-02", "2024-05-02", i * 10L)
       ).toDF("campaign_name", "ad_name", "publisher_platform",
-        "date_start", "date_stop", "impressions"), table)
+        "date_start", "date_stop", "impressions"), table).appended
     }
     val before = Sinks.readTable(spark, table).orderBy("ad_name", "date_start").collect().toSeq
     val (nBefore, nAfter) = Sinks.compact(spark, table)

@@ -1,7 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
-import graft.{SparkSpec, Tables}
+import graft.{GraftSession, SparkSpec, Tables}
 import graft.operators.SkewJoin
 
 class FunctionsSpec extends SparkSpec {
@@ -56,5 +58,26 @@ class FunctionsSpec extends SparkSpec {
     val salted = SkewJoin.saltedEquiJoin(li, part, "p_partkey", salts = 8)
       .groupBy("p_brand").agg(count(lit(1)).as("n"), round(sum($"l_extendedprice"), 2))
     assert(salted.collect().toSet == plain.collect().toSet)
+  }
+
+  test("register on a GraftSession keeps the registry's entries") {
+    spark // the suite's session, restored as the default below
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val graft = try GraftSession.build("functions-spec", 4) finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+    assert(graft ne spark)
+    val registry = graft.sessionState.functionRegistry
+    val id = FunctionIdentifier("cosine_sim")
+    val info = registry.lookupFunction(id).get
+    assert(info.getClassName == classOf[CosineSimilarity].getName)
+    GraftFunctions.register(graft)
+    GraftFunctions.register(graft)
+    assert(registry.lookupFunction(id).get eq info)
+    val row = graft.sql("SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)), " +
+      "capped_distinct(x, 10) FROM VALUES (1L), (2L), (2L) AS t(x)").head()
+    assert(row.getDouble(0) == 1.0 && row.getSeq[Long](1) == Seq(1L, 2L))
   }
 }

@@ -22,7 +22,8 @@ import json, sys
 r = json.load(open(sys.argv[1]))
 m = r["metrics"]
 for k in ("Pipelines.dailySync.jobs", "etl.rows_read_per_row", "InsightsSource.read.s",
-          "SchemaEvolution.tableSchema.jobs", "Monitoring.healthCheck.jobs"):
+          "InsightsSource.read.jobs", "SchemaEvolution.tableSchema.jobs",
+          "Monitoring.healthCheck.jobs"):
     print(f"{k} = {m[k]['value']:.3f}")
 if r["correct"] is not True:
     sys.exit(f"ads smoke: correct = {r['correct']} (failed ops: {r['failed']}; see /tmp/graft_ads_smoke.err)")
@@ -30,6 +31,9 @@ if r["correct"] is not True:
 # its schema must come from the memo, not a footer-merge job
 if m["SchemaEvolution.tableSchema.jobs"]["value"] != 0:
     sys.exit("ads smoke: SchemaEvolution.tableSchema ran a footer-merge job in the daily sync")
+# the read probes its files on the driver, so the day stays at 6 jobs
+if m["Pipelines.dailySync.jobs"]["value"] > 6:
+    sys.exit("ads smoke: Pipelines.dailySync ran more than 6 jobs (the file probe must not start jobs)")
 PY
 
 echo "== Pack smoke (perfbench pack, traced) =="
