@@ -17,6 +17,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Root of the on-disk scratch the queries write (staged inputs, stream
+    * sinks): `target` under the working directory.
+    */
+  val scratchRoot: String = new java.io.File("target").getAbsolutePath
+
   def build(appName: String, cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

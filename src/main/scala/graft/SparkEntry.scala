@@ -11,14 +11,15 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private def allQ: Seq[Q] =
-    RelationalQueries.all ++ TextQueries.all ++ SimilarityQueries.all ++
+  private def allQ: Seq[Q] = {
+    val all = RelationalQueries.all ++ TextQueries.all ++ SimilarityQueries.all ++
       StreamingQueries.all ++ MultimodalQueries.all ++ CorpusQueries.all ++
-      AnalyticsQueries.all ++ MlQueries.all ++ EvalQueries.all ++
-      StatQueries.all ++ TqSuiteQueries.all ++ Wave7Queries.all ++
-      Wave8Queries.all ++ Wave9Queries.all ++ Wave10Queries.all ++
-      Wave11Queries.all ++ Wave12Queries.all ++ Wave13Queries.all ++
-      Wave14Queries.all ++ Wave15Queries.all
+      AnalyticsQueries.all ++ GraphQueries.all ++ MlQueries.all ++
+      EvalQueries.all ++ StatQueries.all ++ TqSuiteQueries.all
+    val dup = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dup.isEmpty, s"duplicate query names: ${dup.toSeq.sorted.mkString(", ")}")
+    all
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -58,6 +58,8 @@ object Tables {
 
 /** One named query: a Spark plan plus (optionally) the DuckDB oracle SQL the
   * driver hash-compares against. Column names/aliases MUST match the oracle.
+  * The builders register graft's native functions on the session before
+  * the body runs, so no query body registers them itself.
   */
 final case class Q(
     name: String,
@@ -66,7 +68,13 @@ final case class Q(
 
 object Q {
   def apply(name: String, sql: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, Some(sql))
+    Q(name, registered(run), Some(sql))
   def unchecked(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
+    Q(name, registered(run), None)
+
+  private def registered(run: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = { (s, d) =>
+    graft.functions.GraftFunctions.register(s)
+    run(s, d)
+  }
 }

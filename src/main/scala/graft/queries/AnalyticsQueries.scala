@@ -4,21 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import QueryHelpers.h16
 
-/** Round-6/7 extensions: graph analytics beyond PageRank, deterministic
-  * weighted sampling, histogramming, cohort retention, substring-level
-  * dedup (ExactSubstr-lite), batch sessionization, bigram-LM quality
-  * scoring, cross-table referential expectations, temperature-based source
-  * mixture, BPE merge training (graft.text.Bpe) and int8 vector
-  * quantization. Each is a first-class operator a training-data or
-  * product-analytics pipeline runs, with an exact DuckDB oracle.
+/** Frequent itemsets (fi1, fm2), deterministic weighted sampling,
+  * histogramming, cohort retention, substring-level dedup
+  * (ExactSubstr-lite, with its dd8b referee), batch sessionization,
+  * bigram-LM quality scoring, data-quality expectations and skew reports
+  * (dq1–dq5), temperature-based source mixture, BPE merge training
+  * (graft.text.Bpe) and int8 vector quantization. Each is a first-class
+  * operator a training-data or product-analytics pipeline runs, with an
+  * exact DuckDB oracle.
   *
   * Scale design (100 TB):
-  *  - gr2 orients edges by (degree, id) before the wedge join — the
-  *    classic bound (Suri & Vassilvitskii, WWW'11): every wedge is
-  *    enumerated from its LOWEST-degree endpoint, so per-key join groups
-  *    are O(sqrt(m)) on skewed graphs instead of O(max-degree); the
-  *    closure check is a left-semi equi-join, never a cartesian.
   *  - sp4 is a top-k by a pure hash-derived priority — TakeOrderedAndProject
   *    (O(k) memory per partition, map-side partial top-k, no global sort).
   *  - h1 is a fixed-bin keyed agg with map-side partials and exact
@@ -30,46 +27,6 @@ import graft.{Q, Tables}
   *    guard as dd2's shingle cap).
   */
 object AnalyticsQueries {
-
-  import org.apache.spark.sql.DataFrame
-
-  /** Supplier co-purchase edges from (order, supplier) incidence rows: two
-    * suppliers are linked when they share an order. The naive pairing
-    * self-join on `o` has (suppliers-per-order)² fan-out and an unbounded
-    * join group on a hot order, so `maxOrderFanout` caps it — orders with
-    * more than `cap` qualifying suppliers are dropped (the same scale guard
-    * as dd2's/dd8's document-frequency caps), pinned in the oracle too.
-    *
-    * With a cap, pair generation needs NO join at all: one keyed shuffle
-    * collects each order's (deduped, sorted) supplier set, the size filter
-    * applies the cap, and pairs explode narrowly at O(cap²) per order —
-    * 2 exchanges total vs the self-join's 4, and measured FASTER than the
-    * uncapped join build at sf0.1. The collector is
-    * [[graft.functions.CappedCollectSet]]: its aggregation buffer admits at
-    * most cap+1 distinct elements (cap+1 observed distinct values already
-    * PROVE the order is over the cap), so even an adversarial order with
-    * ≫10⁶ suppliers holds O(cap) state — no unbounded collect_set buffer
-    * exists anywhere in the build; the `size <= cap` verdict is identical
-    * row-for-row (see CappedCollectSet's exactness note).
-    *
-    * `None` = exact: every co-purchase pair via the inverted-index
-    * self-join, join groups unbounded.
-    */
-  def coPurchaseEdges(base: DataFrame, maxOrderFanout: Option[Int]): DataFrame =
-    maxOrderFanout match {
-      case Some(cap) =>
-        base.groupBy("o").agg(
-            graft.functions.CappedCollectSet.sortedSetCapped(cap)(col("s")).as("ss"))
-          .filter(size(col("ss")) <= cap)
-          .select(explode(col("ss")).as("a"), col("ss"))
-          .select(col("a"), explode(col("ss")).as("b"))
-          .filter(col("a") < col("b"))
-          .select("a", "b").distinct()
-      case None =>
-        base.as("x").join(base.as("y"),
-            col("x.o") === col("y.o") && col("x.s") < col("y.s"))
-          .select(col("x.s").as("a"), col("y.s").as("b")).distinct()
-    }
 
   /** dd8's window table: distinct (doc_id, 30-char window) at the given
     * sampling stride. Text rides THROUGH the explode (one generator +
@@ -122,159 +79,6 @@ object AnalyticsQueries {
     graft.CacheRegistry.memoized(s, d, "dd8-pairs") {
       substringPairs(Tables.documents(s, d))
     }
-
-  /** Two unrolled HITS rounds from hub₀ = 1 over a bipartite incidence
-    * `(s, p)`: round 1 gives auth₁(p) = degree, hub₁(s) = Σ auth₁ of its
-    * parts; round 2 gives auth₂(p) = Σ hub₁ of its suppliers. All scores
-    * are EXACT integer sums of counts. Returns (p, auth).
-    */
-  def hitsAuthorities(e: DataFrame): DataFrame = {
-    val a1 = e.groupBy("p").agg(count(lit(1)).as("a"))
-    val h1 = e.join(a1, "p").groupBy("s").agg(sum(col("a")).as("h"))
-    e.join(h1, "s").groupBy("p").agg(sum(col("h")).as("auth"))
-  }
-
-  /** Synchronous majority-vote label propagation over undirected edges
-    * `(a, b)`: `rounds` sync updates of label(v) ← argmax over neighbor
-    * labels (max vote count, tie → smallest label). Deterministic by
-    * construction — the async/random-order schedule of the original
-    * algorithm can never hash-match an oracle. Returns (node, lbl) for
-    * every edge endpoint. Per round: one join shuffling labels onto the
-    * symmetric edge list, one (node, cand) count, one argmax-by-struct
-    * agg; labels localCheckpoint between rounds so iterative lineage
-    * doesn't stack (the gr1 pattern).
-    */
-  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    val sym = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
-    var labels = sym.select(col("u").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-    for (_ <- 1 to rounds) {
-      val votes = sym.join(
-        labels.select(col("node").as("v"), col("lbl").as("nl")), "v")
-        .select(col("u").as("node"), col("nl").as("cand"))
-      // argmax(count, then min label) as ONE agg over a struct ordering —
-      // (cnt, -cand) max picks the highest count, then the smallest
-      // label — cheaper than a per-node rank window and identical rows
-      labels = votes.groupBy("node", "cand").agg(count(lit(1)).as("cnt"))
-        .groupBy("node")
-        .agg(max(struct(col("cnt"), (-col("cand")).as("neg"))).as("m"))
-        .select(col("node"), (-col("m.neg")).as("lbl"))
-        .localCheckpoint()
-    }
-    labels
-  }
-
-  /** Bounded k-core peel over undirected edges `(a, b)`: `rounds`
-    * synchronous rounds of "drop every node whose degree < k, then drop
-    * edges touching a dropped node", emitting one (round, n_nodes,
-    * n_edges) row per round. The fixpoint is reached when two consecutive
-    * rows agree — the caller reads convergence off the rows, and both
-    * engines replay the SAME bounded recursion (lp1/gr1's fixed-round
-    * class: an unbounded while-loop can never hash-match an oracle).
-    * Per round: ONE keyed degree shuffle + two semi-joins; edges
-    * localCheckpoint between rounds so iterative lineage doesn't stack.
-    */
-  def kCore(edges0: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val spark = edges0.sparkSession
-    import spark.implicits._
-    // materialize the pair build ONCE: round 1 consumes it from three
-    // plans (degree agg + both join probes). Serialized columnar
-    // persist, NOT localCheckpoint: checkpoint blocks store DESERIALIZED
-    // InternalRows (~60 B per 2-long edge), and with two |E|-row
-    // generations live during a round build the sf10 peel (115M pairs)
-    // needed a 48 GB heap — the compressed columnar cache carries the
-    // same rows in ~1/6 the space and the peel fits the default heap.
-    // (The per-round counts are SEPARATE actions, so this is the
-    // cross-action consumer class where r12 measured persists winning —
-    // gm1/lk1 — not the single-action ReusedExchange class of gr2/gr4.)
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var edges = edges0.persist(level)
-    edges.count(): Unit // materialize before the loop's triple consumption
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    // DELTA PEEL: only round 1 pays the full 2|E|-row degree shuffle.
-    // From round 2 on, a surviving node's degree changes ONLY by its edges
-    // into last round's DROPPED set — deg_r(u) = deg_{r-1}(u) − |edges of
-    // u into dropped_{r-1}| — so each later round joins the edge cache
-    // against the (typically tiny, post-checkpoint stats-sized) dropped
-    // set instead of re-aggregating every edge endpoint, and removes dead
-    // edges with two anti-joins against the SAME small set instead of two
-    // semi-joins against the |V|-sized alive set. Fixpoint rounds (empty
-    // dropped) degrade to cheap no-op scans. The r13 memory discipline is
-    // unchanged: eager per-round counts, serialized edge persists, prev
-    // generation unpersisted before the next is built, node-grain state
-    // localCheckpointed (cuts per-round lineage).
-    var degAll: DataFrame = null     // (u, dg) over e_{r-1}, checkpointed
-    var olderEdges: DataFrame = null // e_{r-2}: the set last round's dropped
-                                     // nodes were dropped FROM — the delta
-                                     // source; released after the round's
-                                     // degree checkpoint, so peak live edge
-                                     // generations stay at TWO (unchanged)
-    for (r <- 1 to rounds) {
-      val deg =
-        if (r == 1)
-          edges.select(col("a").as("u")).unionAll(edges.select(col("b")))
-            .groupBy("u").agg(count(lit(1)).as("dg"))
-        else {
-          // deg_r(u) = deg_{r-1}(u) − |e_{r-2} edges at u into dropped_{r-1}|
-          // for u alive after round r−1: ONE pass over the cached edge set
-          // (two tiny probe joins in the same stage — a semi-join per
-          // direction would scan the cache twice) emitting only endpoints
-          // of edges INCIDENT to the dropped set, so the round's shuffle
-          // carries incident-edge rows, never the full 2|E| endpoint
-          // stream. An edge with BOTH endpoints dropped contributes only
-          // to dropped nodes' deltas, which the alive-keyed left join
-          // discards.
-          val dropped = degAll.filter(col("dg") < k.toLong).select("u")
-          val delta = olderEdges
-            .join(dropped.select(col("u").as("da")), col("a") === col("da"), "left")
-            .join(dropped.select(col("u").as("db")), col("b") === col("db"), "left")
-            .filter(col("da").isNotNull || col("db").isNotNull)
-            .select(explode(array(
-              when(col("db").isNotNull, col("a")),
-              when(col("da").isNotNull, col("b")))).as("u"))
-            .filter(col("u").isNotNull)
-            .groupBy("u").agg(count(lit(1)).as("rm"))
-          degAll.filter(col("dg") >= k.toLong)
-            .join(delta, Seq("u"), "left")
-            .select(col("u"),
-              (col("dg") - coalesce(col("rm"), lit(0L))).as("dg"))
-        }
-      // node-grain state is checkpointed (≤|V| rows of two longs): the
-      // degree build runs ONCE per round; without it the edge filter, the
-      // node count and the NEXT round's delta would each recompute it.
-      // localCheckpoint here also CUTS the growing per-round lineage at
-      // node grain, which the serialized edge persists do not. alive and
-      // dropped are cheap FILTERS over this one checkpoint — one
-      // materialization job per round, not one per derived set.
-      val prevDegAll = degAll
-      degAll = deg.localCheckpoint()
-      if (olderEdges != null) olderEdges.unpersist()
-      if (prevDegAll != null) prevDegAll.unpersist()
-      val dropNow = degAll.filter(col("dg") < k.toLong).select("u")
-      olderEdges = edges
-      edges = edges
-        .join(dropNow.select(col("u").as("a")), Seq("a"), "left_anti")
-        .join(dropNow.select(col("u").as("b")), Seq("b"), "left_anti")
-        .select("a", "b")
-        .persist(level)
-      // per-round counts are cheap scans of the materialized blocks; they
-      // are BOUNDED driver data (two longs per round — the pivot-key
-      // collect class), and taking them eagerly lets the dead round's
-      // blocks free immediately: holding all rounds at once is what bent
-      // the sf10 curve (seven deserialized 113M-row caches spilling +
-      // GC-thrashing the heap)
-      rows += ((r.toLong,
-        degAll.filter(col("dg") >= k.toLong).count(), edges.count()))
-    }
-    // the result rows are already materialized driver-side (two longs per
-    // round); release the final generations' caches before returning
-    if (olderEdges != null) olderEdges.unpersist()
-    edges.unpersist()
-    if (degAll != null) degAll.unpersist()
-    rows.toSeq.toDF("round", "n_nodes", "n_edges").orderBy("round")
-  }
-
   def all: Seq[Q] = Seq(
 
     // ── FI1: frequent co-ordered part pairs (association mining's 2-itemset
@@ -333,187 +137,117 @@ object AnalyticsQueries {
         .orderBy(col("support").desc, col("pa"), col("pb"))
     },
 
-    // ── GR2: per-node triangle counts on the supplier co-purchase graph
-    // (suppliers linked when a high-quantity item of each shares an order).
-    // Degree orientation makes each triangle discoverable exactly once
-    // (rank(a) < rank(b) < rank(c) under (deg, id) order), so the count is
-    // wedge-join + semi-join closure — no post-hoc dedup, no cartesian.
-    // e/deg/dir are MATERIALIZED: dir is referenced three times and DuckDB
-    // inlines plain CTEs, so without the hint the whole edge pipeline is
-    // re-derived per reference — at sf10 that recomputation overflowed 73 GB
-    // of spill; materialized, the oracle runs in minutes (sf10 probe).
-    Q("gr2_triangle_count",
-      """WITH base AS (SELECT DISTINCT l_orderkey AS o, l_suppkey AS s
-        |              FROM lineitem WHERE l_quantity >= 40),
-        |hot AS (SELECT o FROM base GROUP BY o HAVING count(*) > 25),
-        |bc AS (SELECT b.o, b.s FROM base b
-        |       WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.o = b.o)),
-        |e AS MATERIALIZED (SELECT DISTINCT x.s AS a, y.s AS b
-        |      FROM bc x JOIN bc y ON x.o = y.o AND x.s < y.s),
-        |deg AS MATERIALIZED (SELECT n, count(*) AS d
-        |        FROM (SELECT a AS n FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
-        |dir AS MATERIALIZED (SELECT CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.a ELSE e.b END AS src,
-        |               CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.b ELSE e.a END AS dst
-        |        FROM e JOIN deg da ON da.n = e.a JOIN deg db ON db.n = e.b),
-        |tri AS (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-        |        FROM dir e1 JOIN dir e2 ON e1.dst = e2.src
-        |        JOIN dir e3 ON e3.src = e1.src AND e3.dst = e2.dst)
-        |SELECT n AS node, count(*) AS n_tri
-        |FROM (SELECT a AS n FROM tri UNION ALL SELECT b FROM tri
-        |      UNION ALL SELECT c FROM tri)
-        |GROUP BY 1 ORDER BY n_tri DESC, node LIMIT 20""".stripMargin) { (s, d) =>
-      // no pre-distinct: the capped path's collect_set dedups (o, s) itself,
-      // so raw incidence rows save an exchange
-      val base = Tables.lineitem(s, d).filter(col("l_quantity") >= 40)
-        .select(col("l_orderkey").as("o"), col("l_suppkey").as("s"))
-      // fan-out cap 25 pinned in the oracle (qualifying suppliers/order is
-      // ~7 on this corpus — AnalyticsSpec asserts the cap changes nothing).
-      // NOT persisted: e and dir each feed several consumers, but their
-      // exchanges are deduped by Catalyst's ReusedExchange (plan-asserted
-      // in Wave12Spec) — a round-13 A/B at sf10 measured an explicit
-      // MEMORY_AND_DISK persist of e/dir 20% SLOWER than the reused
-      // exchanges (cache materialization + spill vs free shuffle reuse)
-      val e = coPurchaseEdges(base, maxOrderFanout = Some(25))
-      val deg = e.select(col("a").as("n")).unionAll(e.select(col("b")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      // orient every edge from the (degree, id)-smaller endpoint: bounds
-      // wedge fan-out by O(sqrt m) even on power-law degree skew
-      val withDeg = e
-        .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
-      val flip = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-      val dir = withDeg.select(
-        when(flip, col("a")).otherwise(col("b")).as("src"),
-        when(flip, col("b")).otherwise(col("a")).as("dst"))
-      val wedges = dir.as("e1")
-        .join(dir.as("e2"), col("e1.dst") === col("e2.src"))
-        .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))
-      val tri = wedges.join(
-        dir.select(col("src").as("a"), col("dst").as("c")),
-        Seq("a", "c"), "left_semi")
-      tri.select(col("a").as("n"))
-        .unionAll(tri.select(col("b"))).unionAll(tri.select(col("c")))
-        .groupBy("n").agg(count(lit(1)).as("n_tri"))
-        .select(col("n").as("node"), col("n_tri"))
-        .orderBy(col("n_tri").desc, col("node")).limit(20)
-    },
-
-    // ── KC1: k-core decomposition (bounded peel) over the PART
-    // co-purchase graph — the density filter the graph family lacked:
-    // gr2 counts triangles (local density), dd6 merges components
-    // (reachability); the k-core is the maximal subgraph where EVERY
-    // node keeps ≥ k neighbors — the "dense nucleus" recommendation and
-    // fraud pipelines cut to. k = 80 on the part graph (median degree
-    // ~115 at sf0.01, so the peel genuinely iterates: 5 rounds to the
-    // fixpoint there). Six UNROLLED rounds, convergence read off two
-    // consecutive equal rows — the fixed-round contract (lp1/gr1's
-    // class) both engines replay identically; the oracle is the same
-    // six rounds as materialized CTEs. Edges build through the capped
-    // collector (order fanout ≤ 16 — lines/order is structurally ~13 on
-    // this schema, so the cap is a pure adversarial guard, pinned in
-    // the oracle as NOT EXISTS hot). Per round: ONE keyed degree
-    // shuffle + two semi-joins, edges localCheckpointed between rounds.
-    // 100 TB: pair explosion is O(|orders|·cap²) narrow generation (no
-    // self-join), round count is fixed, and every per-round shuffle
-    // keys on the node id — the whole peel is 18 bounded shuffles
-    // whatever the corpus size.
-    Q("kc1_kcore", {
-      val roundCtes = (1 to 6).map { r =>
-        s"""d$r AS MATERIALIZED (SELECT u, count(*) AS dg
-           |  FROM (SELECT a AS u FROM e${r - 1} UNION ALL SELECT b FROM e${r - 1}) GROUP BY 1),
-           |a$r AS MATERIALIZED (SELECT u FROM d$r WHERE dg >= 80),
-           |e$r AS MATERIALIZED (SELECT a, b FROM e${r - 1}
-           |  WHERE a IN (SELECT u FROM a$r) AND b IN (SELECT u FROM a$r))""".stripMargin
-      }.mkString(",\n")
-      val roundRows = (1 to 6).map { r =>
-        s"SELECT CAST($r AS BIGINT) AS round," +
-          s" (SELECT CAST(count(*) AS BIGINT) FROM a$r) AS n_nodes," +
-          s" (SELECT CAST(count(*) AS BIGINT) FROM e$r) AS n_edges"
-      }.mkString(" UNION ALL ")
-      s"""WITH inc AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS s FROM lineitem),
-         |hot AS (SELECT o FROM inc GROUP BY o HAVING count(*) > 16),
-         |e0 AS MATERIALIZED (SELECT DISTINCT x.s AS a, y.s AS b
-         |  FROM inc x JOIN inc y ON x.o = y.o AND x.s < y.s
-         |  WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.o = x.o)),
-         |$roundCtes
-         |SELECT * FROM ($roundRows) ORDER BY round""".stripMargin
-    }) { (s, d) =>
-      val base = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("s"))
-      kCore(coPurchaseEdges(base, maxOrderFanout = Some(16)), k = 80, rounds = 6)
-    },
-
-    // ── LP1: community detection by synchronous majority-vote label
-    // propagation (Raghavan et al. 2007) over gr2's supplier co-purchase
-    // graph — the community readout dd6's connected components can't give
-    // (CC merges everything reachable; LPA finds densely-linked groups
-    // inside one component). Three SYNCHRONOUS rounds with a total
-    // tie-break (max vote count, then smallest label) make the fixpoint-
-    // free schedule a pure function of the data: async/random-order LPA —
-    // the paper's default — can never hash-match an oracle. Per round the
-    // plan is one join (labels onto the symmetric edge list, shuffles on
-    // key), one (node, cand) keyed count, and one argmax-by-struct agg —
-    // rank-carrying rows only, the gr1 iteration pattern, with labels
-    // localCheckpointed between rounds so lineage doesn't stack. Edges
-    // build once through the capped collector and are localCheckpointed
-    // before 3 rounds × 2 directions of reuse.
-    Q("lp1_label_propagation", {
-      def round(prev: String, cur: String): String =
-        s"""c$cur AS (SELECT s.u AS node, l.lbl AS cand, count(*) AS cnt
-           |       FROM sym s JOIN l$prev l ON l.node = s.v GROUP BY 1, 2),
-           |l$cur AS MATERIALIZED (SELECT node, cand AS lbl FROM
-           |  (SELECT node, cand, row_number() OVER (PARTITION BY node
-           |     ORDER BY cnt DESC, cand) AS rn FROM c$cur) WHERE rn = 1)"""
-          .stripMargin
-      s"""WITH base AS (SELECT DISTINCT l_orderkey AS o, l_suppkey AS s
-         |              FROM lineitem WHERE l_quantity >= 40),
-         |hot AS (SELECT o FROM base GROUP BY o HAVING count(*) > 25),
-         |bc AS (SELECT b.o, b.s FROM base b
-         |       WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.o = b.o)),
-         |e AS MATERIALIZED (SELECT DISTINCT x.s AS a, y.s AS b
-         |      FROM bc x JOIN bc y ON x.o = y.o AND x.s < y.s),
-         |sym AS MATERIALIZED (SELECT a AS u, b AS v FROM e
-         |                     UNION ALL SELECT b, a FROM e),
-         |l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM sym),
-         |${round("0", "1")},
-         |${round("1", "2")},
-         |${round("2", "3")}
-         |SELECT node, lbl FROM l3 ORDER BY node""".stripMargin
-    }) { (s, d) =>
-      val base = Tables.lineitem(s, d).filter(col("l_quantity") >= 40)
-        .select(col("l_orderkey").as("o"), col("l_suppkey").as("s"))
-      val e = coPurchaseEdges(base, maxOrderFanout = Some(25)).localCheckpoint()
-      labelPropagation(e, rounds = 3).orderBy("node")
-    },
-
-    // ── HUB1: HITS hubs & authorities (Kleinberg 1999) on the BIPARTITE
-    // supplier→part incidence — the mutually-recursive centrality gr1's
-    // damped PageRank isn't (PageRank ranks within one node set; HITS
-    // scores the two sides of an incidence against each other: a part is
-    // authoritative when stocked by good hubs, a supplier a good hub when
-    // it stocks authoritative parts). Two unrolled sync rounds from
-    // hub₀ = 1, kept in EXACT integers — every score is a sum of counts
-    // (magnitude ≤ maxdeg⁴, far inside BIGINT), so there is no float
-    // normalization step to disagree on and the oracle replays the
-    // arithmetic verbatim. Plan: two keyed join+agg rounds over the
-    // distinct incidence (shuffles on s / p only carry the score column),
-    // top-20 via TakeOrderedAndProject — never a global sort.
-    Q("hub1_hits",
-      """WITH e AS MATERIALIZED (SELECT DISTINCT l_suppkey AS s, l_partkey AS p
-        |      FROM lineitem WHERE l_quantity >= 40),
-        |a1 AS (SELECT p, count(*) AS a FROM e GROUP BY 1),
-        |h1 AS (SELECT e.s, CAST(sum(a1.a) AS BIGINT) AS h
-        |       FROM e JOIN a1 USING (p) GROUP BY 1),
-        |a2 AS (SELECT e.p, CAST(sum(h1.h) AS BIGINT) AS auth
-        |       FROM e JOIN h1 USING (s) GROUP BY 1)
-        |SELECT p AS part, auth FROM a2
-        |ORDER BY auth DESC, part LIMIT 20""".stripMargin) { (s, d) =>
-      val e = Tables.lineitem(s, d).filter(col("l_quantity") >= 40)
-        .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
-        .distinct().localCheckpoint()
-      hitsAuthorities(e)
-        .select(col("p").as("part"), col("auth"))
-        .orderBy(col("auth").desc, col("part")).limit(20)
+    // ── FM2: Apriori 3-itemset step over CUSTOMER baskets (fi1's pass
+    // extended one level). Baskets = per-customer distinct part sets,
+    // bot-guard cap 60 (pinned in the oracle); frequent pairs = support ≥
+    // 3. A triple is COUNTED only if all three sub-pairs are frequent —
+    // the Apriori downward-closure prune, applied as three equi-joins
+    // INSIDE the candidate join pipeline, so the (basket × basket ×
+    // basket) explosion never materializes beyond frequent-pair incidence:
+    // candidate volume is bounded by Σ_c |frequent pairs in c|·cap, not
+    // |basket|³. All supports exact integers; output is every triple with
+    // support ≥ 3 under a total order.
+    Q("fm2_frequent_triples",
+      """WITH b AS (SELECT DISTINCT o_custkey AS c, l_partkey AS p
+        |           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+        |sz AS (SELECT c, count(*) AS n FROM b GROUP BY 1),
+        |ok AS (SELECT c FROM sz WHERE n <= 60),
+        |bb AS (SELECT b.c, b.p FROM b JOIN ok USING (c)),
+        |pr AS (SELECT x.p AS pa, y.p AS pb, CAST(count(*) AS BIGINT) AS s
+        |       FROM bb x JOIN bb y ON x.c = y.c AND x.p < y.p GROUP BY 1, 2),
+        |fp AS (SELECT pa, pb FROM pr WHERE s >= 3),
+        |tr AS (SELECT x.p AS pa, y.p AS pb, z.p AS pc,
+        |              CAST(count(*) AS BIGINT) AS support
+        |       FROM bb x
+        |       JOIN bb y ON x.c = y.c AND x.p < y.p
+        |       JOIN fp f1 ON f1.pa = x.p AND f1.pb = y.p
+        |       JOIN bb z ON y.c = z.c AND y.p < z.p
+        |       JOIN fp f2 ON f2.pa = x.p AND f2.pb = z.p
+        |       JOIN fp f3 ON f3.pa = y.p AND f3.pb = z.p
+        |       GROUP BY 1, 2, 3)
+        |SELECT pa, pb, pc, support FROM tr WHERE support >= 3
+        |ORDER BY support DESC, pa, pb, pc""".stripMargin) { (s, d) =>
+      // Baskets as per-customer SORTED DISTINCT ARRAYS (fi1's device, cap
+      // 60): the capped collector dedups (c, p) map-side and bounds
+      // aggregation state at O(cap), so the join's incidence rows reach the
+      // basket grain through ONE c-keyed exchange — the former spelling
+      // paid a (c,p)-distinct exchange, a size-count exchange, a semi-join
+      // and a bb⋈bb SELF-JOIN (Σ|basket|² rows through pair-keyed
+      // shuffles). Pair and triple generation is now a narrow in-row
+      // explode over the sorted array: O(cap²) pairs per basket, each
+      // carrying the strictly-after-pb remainder slice for the third item.
+      val baskets = Tables.lineitem(s, d)
+        .select(col("l_orderkey"), col("l_partkey"))
+        .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("o_custkey").as("c"))
+        .agg(graft.functions.CappedCollectSet.sortedSetCapped(60)(
+          col("l_partkey")).as("ps"))
+        .filter(size(col("ps")) <= 60)
+        // EXPLICIT generative-stage parallelism: the basket table is tiny
+        // in BYTES (≤60-long arrays) but each row explodes into O(cap²)
+        // pair rows below — AQE's byte-based coalescing saw ~8 MB at
+        // sf0.1, folded the agg exchange to 2 partitions, and the whole
+        // 19M-row pair generation + partial agg ran on 2 cores (measured:
+        // the entire +4 s regression of the first rewrite; a hash(c)
+        // repartition was silently REMOVED as redundant against the agg's
+        // own exchange, so this one is keyless round-robin — user counts
+        // are never coalesced). Sized to the session's core budget, not a
+        // local constant: per-task generation is |baskets|·cap²/cores, and
+        // the pair count's own exchange stays data-adaptive downstream.
+        .repartition(s.sparkContext.defaultParallelism)
+      // pair incidence: one row per (basket, pa<pb) via two CODEGEN'D
+      // generators (fi1's device — a nested higher-order transform/slice
+      // spelling was measured 5× SLOWER here: HOFs are interpreted and
+      // allocate per-pair array slices). Generate preserves the basket
+      // agg's hash(c) partitioning, so everything below runs c-local.
+      val items = baskets.select(col("c"), explode(col("ps")).as("pa"), col("ps"))
+      val pairs = items
+        .select(col("c"), col("pa"), explode(col("ps")).as("pb"))
+        .filter(col("pa") < col("pb"))
+      // the c-keyed basket exchange and the (pa, pb) count exchange are the
+      // only two data-sized shuffles — the latter is Apriori's pass 2
+      // itself (10.4M near-distinct pairs at sf0.1; the cap bounds it at
+      // O(|baskets|·cap²) at every scale)
+      val pr = pairs.groupBy("pa", "pb").agg(count(lit(1)).as("s"))
+      val fp = pr.filter(col("s") >= 3).select("pa", "pb")
+      // Triple support via downward closure: support(pa,pb,pc) ≥ 3 implies
+      // EVERY sub-pair is frequent, so any generation rule that (a) emits
+      // each within-basket triple at most once and (b) covers all triples
+      // whose sub-pairs are frequent yields the identical ≥3-filtered
+      // output (the old f2/f3 joins were performance devices, not
+      // semantics). Rule used here: a triple row per basket pair of
+      // FREQUENT-pair incidences sharing (c, pa) with pb < pc. fp travels
+      // as an explicit broadcast — the frequent-itemset table fitting in
+      // memory IS Apriori's operating contract (min-support is the knob
+      // that keeps it bounded at any corpus size; sf0.1: 4,385 pairs), and
+      // the static planner cannot see that 10.1M-row pr shrinks to 4k
+      // under the support filter, so left to stats it sort-merges the full
+      // 10.4M-row incidence stream against it (measured: that sort is the
+      // whole regression). Frequent-pair incidence is probed at the ITEM
+      // grain (|bb| = 518k rows at sf0.1, never the 10.4M pair stream —
+      // re-exploding pairs for the probe measured +4 s): broadcast-join fp
+      // on the first item, then `array_contains` checks the second against
+      // the basket's sorted array in place — map-side throughout. The
+      // surviving-incidence self-join pays one (c, pa)-keyed exchange of
+      // 13k rows (sf0.1) — noise; fpInc is persisted scratch (rebuilt from
+      // parquet every run) so its build runs once, not once per self-join
+      // side.
+      val fpInc = graft.CacheRegistry.track(
+        items.join(broadcast(fp), Seq("pa"))
+          .filter(array_contains(col("ps"), col("pb")))
+          .select(col("c"), col("pa"), col("pb"))
+          .persist())
+      val tr = fpInc.as("x")
+        .join(fpInc.as("y"),
+          col("x.c") === col("y.c") && col("x.pa") === col("y.pa") &&
+            col("x.pb") < col("y.pb"))
+        .select(col("x.pa").as("pa"), col("x.pb").as("pb"), col("y.pb").as("pc"))
+        .groupBy(col("pa"), col("pb"), col("pc"))
+        .agg(count(lit(1)).as("support"))
+      tr.filter(col("support") >= 3)
+        .select(col("pa"), col("pb"), col("pc"), col("support"))
+        .orderBy(col("support").desc, col("pa"), col("pb"), col("pc"))
     },
 
     // ── SP4: deterministic weighted sampling without replacement
@@ -603,40 +337,67 @@ object AnalyticsQueries {
       substringPairsCached(s, d).orderBy("a", "b")
     },
 
-    // ── GR3: multi-hop BFS (graft.graph.Bfs) — hop distances ≤3 from
-    // customer 1 over the customer↔supplier trade graph (gr1's graph).
-    // Each round expands ONLY the frontier; the settled interior never
-    // re-joins. Integer distances + min semantics = exactly reproducible,
-    // so the oracle just unrolls the rounds as CTEs.
-    Q("gr3_bfs_hops",
-      """WITH e0 AS MATERIALIZED (
-        |  SELECT DISTINCT CAST(2 * o_custkey AS BIGINT) AS c,
-        |                  CAST(2 * l_suppkey + 1 AS BIGINT) AS s
-        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-        |ed AS MATERIALIZED (SELECT c AS src, s AS dst FROM e0 UNION SELECT s, c FROM e0),
-        |d0 AS (SELECT CAST(2 AS BIGINT) AS node, 0 AS dist),
-        |r1 AS (SELECT DISTINCT ed.dst AS node FROM ed JOIN d0 ON ed.src = d0.node),
-        |a1 AS (SELECT node, dist FROM d0 UNION ALL
-        |       SELECT node, 1 FROM r1 WHERE node NOT IN (SELECT node FROM d0)),
-        |r2 AS (SELECT DISTINCT ed.dst AS node FROM ed JOIN a1 ON ed.src = a1.node AND a1.dist = 1),
-        |a2 AS (SELECT node, dist FROM a1 UNION ALL
-        |       SELECT node, 2 FROM r2 WHERE node NOT IN (SELECT node FROM a1)),
-        |r3 AS (SELECT DISTINCT ed.dst AS node FROM ed JOIN a2 ON ed.src = a2.node AND a2.dist = 2),
-        |a3 AS (SELECT node, dist FROM a2 UNION ALL
-        |       SELECT node, 3 FROM r3 WHERE node NOT IN (SELECT node FROM a2))
-        |SELECT node, dist FROM a3 ORDER BY node""".stripMargin) { (s, d) =>
-      // parity-disjoint node ids (customer = 2k, supplier = 2k+1): unlike a
-      // fixed additive offset this cannot collide at ANY scale factor
-      val e0 = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).cast("long").as("c"),
-          (col("l_suppkey") * 2 + 1).cast("long").as("s"))
-        .distinct()
-      // directions are disjoint (c even, s odd): union == UNION's dedup
-      val ed = e0.select(col("c").as("src"), col("s").as("dst"))
-        .union(e0.select(col("s").as("src"), col("c").as("dst")))
-      val seeds = s.range(1, 2).select((col("id") * 2).as("node")) // customer 1 → 2
-      graft.graph.Bfs.run(ed, seeds, maxHops = 3).orderBy("node")
+    // ── DD8B: sampled exact-substring referee for dd8 (dd5c's pattern).
+    // dd8 samples 30-char windows at stride 4 from BOTH documents, so a
+    // shared literal run detected requires the two documents' window
+    // alignments to agree mod 4 — a miss class the production query
+    // cannot see. The exact predicate: stride-4 windows of one side
+    // joined to stride-1 (every alignment) windows of the other — for
+    // any shared run ≥ 33 chars the stride-4 side has a fully-inside
+    // window and the stride-1 side holds its exact alignment, so the
+    // exact set is COMPLETE for runs ≥ 33 (and includes whatever 30–32
+    // char runs align). Both directions unioned, orientation-normalized.
+    //
+    // Sample frame (bounded, deterministic): the base block doc_id <
+    // 2000 — at sf0.01 that is the WHOLE corpus, so the referee is
+    // exhaustive there; at scale it is ScaleData's replica 0, which
+    // carries planted near-dups at base density — plus a 2% md5-bucket
+    // sample (unbiased coverage of the synthesized replicas). n_extra
+    // pins soundness (reported ⊆ exact, since a shared stride-4 window
+    // is a shared window); n_missed is the measured stride+cap miss.
+    // 100 TB: stride-1 windows explode ~30× the text volume but ONLY
+    // over the bounded sample; everything else is dd8's own capped plan.
+    Q("dd8b_substring_referee",
+      s"""WITH smp AS (SELECT doc_id, text FROM documents
+         |             WHERE doc_id < 2000 OR ${h16("CAST(doc_id AS VARCHAR)")} < 1310),
+         |p4 AS (SELECT doc_id,
+         |         unnest(range(1, CAST(length(text) AS BIGINT) - 28, 4)) AS i
+         |       FROM smp WHERE length(text) >= 30),
+         |w4 AS (SELECT DISTINCT p4.doc_id, substr(m.text, CAST(p4.i AS INTEGER), 30) AS win
+         |       FROM p4 JOIN smp m USING (doc_id)),
+         |-- rep needs dd8's GLOBAL df cap, but only for windows of SAMPLE
+         |-- docs: price df via one linear full-corpus window scan filtered
+         |-- to the sample's window set BEFORE aggregating (the
+         |-- referee_substr device) — the corpus-wide DISTINCT + pair join
+         |-- spelling of the same set out-spilled a 73 GB disk at sf10
+         |df AS (SELECT win, count(DISTINCT doc_id) AS df FROM
+         |         (SELECT doc_id, substr(text, CAST(i AS INTEGER), 30) AS win
+         |          FROM (SELECT doc_id, text,
+         |                  unnest(range(1, CAST(length(text) AS BIGINT) - 28, 4)) AS i
+         |                FROM documents WHERE length(text) >= 30))
+         |       WHERE win IN (SELECT win FROM w4)
+         |       GROUP BY win),
+         |wcs AS (SELECT w4.doc_id, w4.win FROM w4
+         |        JOIN df ON df.win = w4.win AND df.df <= 20),
+         |rep AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+         |        FROM wcs x JOIN wcs y ON x.win = y.win AND x.doc_id < y.doc_id),
+         |p1 AS (SELECT doc_id,
+         |         unnest(range(1, CAST(length(text) AS BIGINT) - 28, 1)) AS i
+         |       FROM smp WHERE length(text) >= 30),
+         |w1 AS (SELECT DISTINCT p1.doc_id, substr(m.text, CAST(p1.i AS INTEGER), 30) AS win
+         |       FROM p1 JOIN smp m USING (doc_id)),
+         |ex AS (SELECT DISTINCT least(x.doc_id, y.doc_id) AS a,
+         |                       greatest(x.doc_id, y.doc_id) AS b
+         |       FROM w4 x JOIN w1 y ON x.win = y.win AND x.doc_id <> y.doc_id)
+         |SELECT (SELECT count(*) FROM smp) AS n_docs_sampled,
+         |       (SELECT count(*) FROM ex) AS n_exact,
+         |       (SELECT count(*) FROM rep) AS n_reported,
+         |       (SELECT count(*) FROM ex e WHERE NOT EXISTS
+         |          (SELECT 1 FROM rep r WHERE r.a = e.a AND r.b = e.b)) AS n_missed,
+         |       (SELECT count(*) FROM rep r WHERE NOT EXISTS
+         |          (SELECT 1 FROM ex e WHERE e.a = r.a AND e.b = r.b)) AS n_extra""".stripMargin) { (s, d) =>
+      substringReferee(Tables.documents(s, d),
+        AnalyticsQueries.substringPairsCached(s, d))
     },
 
     // ── DQ1: data-quality expectations / column profiling (the ANALYZE-
@@ -1306,6 +1067,55 @@ object AnalyticsQueries {
       benfordAudit(Tables.orders(s, d), "o_totalprice").orderBy("digit")
     },
 
+    // ── DQ5: join-key skew diagnostics on l_partkey — the pre-flight
+    // report that decides between j2's plain shuffle and j9's salting
+    // BEFORE a hot key kills the job: per-key multiplicities in one keyed
+    // agg, then top-1 share, exact p50/p99 multiplicity order statistics
+    // and their ratio, all computed over the FREQ-OF-FREQUENCIES table —
+    // bounded by the distinct multiplicity values, never |keys| (an ECDF
+    // window over the key histogram itself would be a fact/30-row sort:
+    // dq5's own warning applied to its own plan). Order stats are qq1's
+    // type-1 device: p_q = min{c : 100·cum ≥ q·n_keys}. p50 ≥ 1 always
+    // (multiplicities are ≥ 1), so the ratio division is total.
+    Q("dq5_key_skew",
+      """WITH h AS (SELECT l_partkey AS k, CAST(count(*) AS BIGINT) AS c
+        |           FROM lineitem GROUP BY 1),
+        |ff AS (SELECT c, CAST(count(*) AS BIGINT) AS m FROM h GROUP BY 1),
+        |e AS (SELECT c, m,
+        |        CAST(sum(m) OVER (ORDER BY c ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
+        |        CAST(sum(m) OVER () AS BIGINT) AS n_keys,
+        |        CAST(sum(c * m) OVER () AS BIGINT) AS n_rows,
+        |        CAST(max(c) OVER () AS BIGINT) AS max_cnt
+        |      FROM ff)
+        |SELECT max(n_rows) AS n_rows, max(n_keys) AS n_keys, max(max_cnt) AS max_cnt,
+        |       min(CASE WHEN 2 * cum >= n_keys THEN c END) AS p50,
+        |       min(CASE WHEN 100 * cum >= 99 * n_keys THEN c END) AS p99,
+        |       CAST((CAST(max(max_cnt) AS HUGEINT) * 1000000) // max(n_rows) AS BIGINT) AS top1_share_ppm,
+        |       CAST((CAST(min(CASE WHEN 100 * cum >= 99 * n_keys THEN c END) AS HUGEINT) * 1000000)
+        |         // min(CASE WHEN 2 * cum >= n_keys THEN c END) AS BIGINT) AS p99_p50_ratio_ppm
+        |FROM e""".stripMargin) { (s, d) =>
+      val h = Tables.lineitem(s, d)
+        .groupBy(col("l_partkey").as("k"))
+        .agg(count(lit(1)).cast("long").as("c"))
+      val ff = h.groupBy("c").agg(count(lit(1)).cast("long").as("m"))
+      val wcum = Window.orderBy("c")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val tot = ff.agg(sum("m").cast("long").as("n_keys"),
+        sum(col("c") * col("m")).cast("long").as("n_rows"),
+        max("c").cast("long").as("max_cnt"))
+      ff.withColumn("cum", sum("m").over(wcum).cast("long"))
+        .crossJoin(broadcast(tot))
+        .agg(max("n_rows").as("n_rows"), max("n_keys").as("n_keys"),
+          max("max_cnt").as("max_cnt"),
+          min(when(lit(2L) * col("cum") >= col("n_keys"), col("c"))).as("p50"),
+          min(when(lit(100L) * col("cum") >= lit(99L) * col("n_keys"), col("c"))).as("p99"))
+        .select(col("n_rows"), col("n_keys"), col("max_cnt"), col("p50"), col("p99"),
+          expr("cast((cast(max_cnt as decimal(38,0)) * 1000000) div n_rows as bigint)")
+            .as("top1_share_ppm"),
+          expr("cast((cast(p99 as decimal(38,0)) * 1000000) div p50 as bigint)")
+            .as("p99_p50_ratio_ppm"))
+    },
+
     // ── SCD1: slowly-changing-dimension type-2 history build — the CDC
     // op downstream of m1's upsert: collapse each user's event stream to
     // its event_type TRANSITIONS, each carrying [valid_from, valid_to)
@@ -1457,6 +1267,46 @@ object AnalyticsQueries {
         .orderBy("l_returnflag")
     }
   )
+
+  /** dd8b's referee core over an explicit document table — factored so the
+    * spec can run it on hand fixtures (where the base block covers the
+    * whole fixture corpus).
+    */
+  def substringReferee(docs: DataFrame): DataFrame =
+    substringReferee(docs, AnalyticsQueries.substringPairs(docs))
+
+  /** Referee with the production pair stage passed in — the declared query
+    * hands dd8's MEMOIZED pair stage here so a bench run pays the window
+    * build + inverted-index join once across dd8 and this referee.
+    */
+  def substringReferee(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    // 1310 = (0.02 * Sampling.Buckets).toInt — the 2% md5-bucket sample
+    val smp = docs
+      .filter(col("doc_id") < 2000 ||
+        graft.operators.Sampling.bucket(col("doc_id")) < 1310)
+      .select("doc_id", "text")
+    val smpIds = smp.select("doc_id")
+    val rep = pairs
+      .join(smpIds.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
+      .join(smpIds.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
+      .select("a", "b")
+    val w4 = AnalyticsQueries.substringWindows(smp, stride = 4)
+    val w1 = AnalyticsQueries.substringWindows(smp, stride = 1)
+    val ex = w4.as("x").join(w1.as("y"),
+        col("x.win") === col("y.win") && col("x.doc_id") =!= col("y.doc_id"))
+      .select(least(col("x.doc_id"), col("y.doc_id")).as("a"),
+        greatest(col("x.doc_id"), col("y.doc_id")).as("b"))
+      .distinct()
+    // 1-row aggregates composed by broadcast cross joins; repeated ex/rep
+    // subtrees dedup as ReusedExchange within the single action.
+    smp.agg(count(lit(1)).as("n_docs_sampled"))
+      .crossJoin(ex.agg(count(lit(1)).as("n_exact")))
+      .crossJoin(rep.agg(count(lit(1)).as("n_reported")))
+      .crossJoin(ex.join(rep, Seq("a", "b"), "left_anti")
+        .agg(count(lit(1)).as("n_missed")))
+      .crossJoin(rep.join(ex, Seq("a", "b"), "left_anti")
+        .agg(count(lit(1)).as("n_extra")))
+  }
 
   /** BPE-encoded corpus vocabulary (5 merges), memoized per (session, dir)
     * like the shingle cache: bpe2 and tok1 both consume the same 5-round

@@ -1,14 +1,18 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.text.Urls
+import QueryHelpers.{lnMicro, lnMicroSql}
 
 /** Corpus-preparation operators a training-data pipeline runs after text
   * analysis and dedup: relevance scoring (TF-IDF), rule-based quality
-  * filtering (Gopher/C4-style), benchmark-contamination flagging, and
-  * sequence packing. Plus the keyed upsert (graft.operators.Merge) that
+  * filtering (Gopher/C4-style), benchmark-contamination flagging, keyness
+  * (llr1), sequence packing, and the URL curation that runs before text
+  * dedup (canonicalization, URL dedup, per-domain caps and the crawl
+  * frontier: url1–url4). Plus the keyed upsert (graft.operators.Merge) that
   * mirrors the reference's idempotent daily re-run semantics
   * (`main.py:359-366` WRITE_TRUNCATE-per-day) as a general CDC merge.
   *
@@ -22,6 +26,116 @@ object CorpusQueries {
 
   /** Stopword markers shared by the quality rules (t8). */
   private val stops = "'the', 'and', 'of', 'a'"
+
+  /** Deterministic raw-URL derivation from (doc_id, source, lang) — the
+    * Spark spelling of [[urlSqlCte]]. The corpus has no URL column, so the
+    * URL queries derive one in-plan, and the oracle derives the same one.
+    * Residue classes are chosen so that
+    * canonicalization genuinely MERGES variants (scheme case, www, :80,
+    * utm params, param order, trailing slash, fragment all vary faster
+    * than the canonical key), and distinct documents still collide on the
+    * canonical key at driver-corpus density (url2 is non-vacuous at
+    * sf0.01).
+    */
+  def rawUrls(docs: DataFrame): DataFrame = {
+    val k = col("doc_id")
+    val scheme = when(k % 3 === 0, "http").when(k % 3 === 1, "HTTPS")
+      .otherwise("Http")
+    val www = when(k % 2 === 0, "www.").otherwise("")
+    val sub = when(k % 11 === 0, "m.").otherwise("")
+    val tld = when(col("lang") === "en", "co.uk").when(col("lang") === "de", "de")
+      .when(col("lang") === "fr", "fr").when(col("lang") === "es", "es")
+      .when(col("lang") === "zh", "com.cn").otherwise("com")
+    val port = when(k % 4 === 0, ":80").when(k % 4 === 1, ":8080").otherwise("")
+    val path = concat(lit("/p/"), (k % 3).cast("string"),
+      when(k % 6 === 0, "/").otherwise(""))
+    val qs = when(k % 4 === 0, concat(lit("?utm_source=feed&id="), (k % 2).cast("string")))
+      .when(k % 4 === 1, concat(lit("?id="), (k % 2).cast("string"), lit("&utm_campaign=q&r=1")))
+      .when(k % 4 === 2, concat(lit("?r=1&id="), (k % 2).cast("string")))
+      .otherwise("")
+    val frag = when(k % 6 === 0, "#top").otherwise("")
+    docs.select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
+      concat(scheme, lit("://"), www, sub, col("source"), lit("-"),
+        (k % 5).cast("string"), lit("."), tld, port, path, qs, frag).as("url"))
+  }
+
+  /** Canonicalized document-URL table: (doc_id, source, lang, n_chars,
+    * url, canon, host, domain). All per-row projections — zero shuffle.
+    */
+  def canonicalDocs(docs: DataFrame): DataFrame = {
+    val u = rawUrls(docs)
+    val h = Urls.host(col("url"))
+    u.select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
+      col("url"), Urls.canonicalize(col("url")).as("canon"),
+      h.as("host"), Urls.registrableDomain(h).as("domain"))
+  }
+
+  /** The oracle's spelling of [[rawUrls]]: CTE `u`. (`||` sits at line
+    * ENDS throughout the URL SQL: these fragments pass through up to
+    * three nested stripMargin applications, and a line-leading `||` loses
+    * a pipe per pass.)
+    */
+  private val urlSqlCte: String =
+    """u AS (SELECT doc_id, source, lang, n_chars,
+      |  (CASE doc_id % 3 WHEN 0 THEN 'http' WHEN 1 THEN 'HTTPS' ELSE 'Http' END) ||
+      |  '://' ||
+      |  (CASE WHEN doc_id % 2 = 0 THEN 'www.' ELSE '' END) ||
+      |  (CASE WHEN doc_id % 11 = 0 THEN 'm.' ELSE '' END) ||
+      |  source || '-' || CAST(doc_id % 5 AS VARCHAR) || '.' ||
+      |  (CASE lang WHEN 'en' THEN 'co.uk' WHEN 'de' THEN 'de'
+      |             WHEN 'fr' THEN 'fr' WHEN 'es' THEN 'es'
+      |             WHEN 'zh' THEN 'com.cn' ELSE 'com' END) ||
+      |  (CASE doc_id % 4 WHEN 0 THEN ':80' WHEN 1 THEN ':8080' ELSE '' END) ||
+      |  '/p/' || CAST(doc_id % 3 AS VARCHAR) ||
+      |  (CASE WHEN doc_id % 6 = 0 THEN '/' ELSE '' END) ||
+      |  (CASE doc_id % 4
+      |        WHEN 0 THEN '?utm_source=feed&id=' || CAST(doc_id % 2 AS VARCHAR)
+      |        WHEN 1 THEN '?id=' || CAST(doc_id % 2 AS VARCHAR) || '&utm_campaign=q&r=1'
+      |        WHEN 2 THEN '?r=1&id=' || CAST(doc_id % 2 AS VARCHAR)
+      |        ELSE '' END) ||
+      |  (CASE WHEN doc_id % 6 = 0 THEN '#top' ELSE '' END) AS url
+      |FROM documents)""".stripMargin
+
+  /** The oracle's spelling of [[canonicalDocs]]: CTEs `u` … `c`, with `c`
+    * exposing (doc_id, source, lang, n_chars, url, canon, host, domain).
+    * Mirrors graft.text.Urls step by step.
+    */
+  private val urlCanonSqlCtes: String =
+    s"""$urlSqlCte,
+       |nf AS (SELECT *, regexp_extract(url, '^([^#]*)', 1) AS nofrag FROM u),
+       |pr AS (SELECT *,
+       |  lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
+       |  regexp_extract(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?]*)', 1) AS hostport,
+       |  regexp_extract(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?]*(.*)$$', 1) AS pathq
+       |FROM nf),
+       |pp AS (SELECT *,
+       |  regexp_replace(lower(regexp_extract(hostport, '^([^:]*)', 1)), '^www\\.', '') AS host,
+       |  -- DuckDB regexp_extract yields NULL on no-match where Spark
+       |  -- yields '' — coalesce the two extractions that can miss
+       |  coalesce(regexp_extract(hostport, ':([0-9]+)$$', 1), '') AS prt,
+       |  regexp_replace(regexp_extract(pathq, '^([^?]*)', 1), '/+$$', '') AS path0,
+       |  coalesce(regexp_extract(pathq, '\\?(.*)$$', 1), '') AS qs
+       |FROM pr),
+       |cq AS (SELECT *,
+       |  CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path_out,
+       |  CASE WHEN prt = '' OR (scheme = 'http' AND prt = '80')
+       |         OR (scheme = 'https' AND prt = '443')
+       |       THEN '' ELSE ':' || prt END AS port_out,
+       |  -- coalesce: array_to_string of an EMPTY list is NULL in DuckDB
+       |  coalesce(array_to_string(list_sort(list_filter(string_split(qs, '&'),
+       |    x -> x <> '' AND NOT regexp_matches(x, '^utm_'))), '&'), '') AS qs_sorted
+       |FROM pp),
+       |c AS (SELECT doc_id, source, lang, n_chars, url, host,
+       |  scheme || '://' || host || port_out || path_out ||
+       |    (CASE WHEN qs_sorted = '' THEN '' ELSE '?' || qs_sorted END) AS canon,
+       |  CASE WHEN len(string_split(host, '.')) >= 3
+       |        AND (string_split(host, '.')[-2] || '.' || string_split(host, '.')[-1])
+       |            IN ('co.uk', 'com.cn')
+       |       THEN string_split(host, '.')[-3] || '.' || string_split(host, '.')[-2] ||
+       |            '.' || string_split(host, '.')[-1]
+       |       ELSE string_split(host, '.')[-2] || '.' || string_split(host, '.')[-1]
+       |  END AS domain
+       |FROM cq)""".stripMargin
 
   def all: Seq[Q] = Seq(
 
@@ -363,6 +477,88 @@ object CorpusQueries {
             .as("pmi"))
         .orderBy(col("pmi").desc, col("w1"), col("w2"))
         .limit(20)
+    },
+
+    // ── LLR1: Dunning log-likelihood keyword extraction — "which tokens
+    // CHARACTERIZE each source" via the G² statistic over the 2×2 table
+    // (token t in source s vs the rest of the corpus), the standard
+    // collocation/keyness test (Dunning 1993) that, unlike raw counts or
+    // PMI (t9), neither drowns in stopwords nor blows up on hapaxes.
+    // G² = 2·Σ_cells k·ln(kN/RC), computed per cell as the exact-integer
+    // combination k·(lnMicro(k)+lnMicro(N)−lnMicro(R)−lnMicro(C)) —
+    // ln always evaluates on an exact BIGINT (t11/mi1's contract), and
+    // the k·lnMicro products stay under 2^63 for any corpus below ~5e10
+    // tokens per margin (documented bound; the margins themselves are
+    // exact at any size). Only positively-associated cells survive
+    // (k11·N > R·C — the keyword direction), top-5 per source.
+    // 100 TB: one corpus-scan keyed agg to (source, token); margins are
+    // two rollups of THAT table (one broadcast-sized, one token-keyed);
+    // the rank window runs over the vocab-sized aggregate, never the
+    // corpus (ks1's bounded-window contract).
+    Q("llr1_keywords", {
+      val term = (k: String, r: String, c: String) =>
+        s"CASE WHEN $k > 0 THEN $k * (${lnMicroSql(k)} + ${lnMicroSql("nn.n")}" +
+          s" - ${lnMicroSql(r)} - ${lnMicroSql(c)}) ELSE 0 END"
+      s"""WITH t AS (SELECT doc_id, source,
+         |             regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
+         |tok AS (SELECT source, unnest(toks) AS token FROM t),
+         |stc AS (SELECT source, token, CAST(count(*) AS BIGINT) AS k FROM tok GROUP BY 1, 2),
+         |rs AS (SELECT source, CAST(sum(k) AS BIGINT) AS r FROM stc GROUP BY 1),
+         |ct AS (SELECT token, CAST(sum(k) AS BIGINT) AS c FROM stc GROUP BY 1),
+         |nn AS (SELECT CAST(sum(k) AS BIGINT) AS n FROM stc),
+         |g AS (SELECT s.source, s.token, s.k AS k11, ct.c - s.k AS k12,
+         |             rs.r - s.k AS k21, nn.n - rs.r - ct.c + s.k AS k22,
+         |             rs.r, ct.c, nn.n
+         |      FROM stc s JOIN rs USING (source) JOIN ct USING (token) CROSS JOIN nn),
+         |sc AS (SELECT source, token, k11,
+         |         2 * (${term("k11", "r", "c")} + ${term("k12", "(nn.n - r)", "c")}
+         |              + ${term("k21", "r", "(nn.n - c)")}
+         |              + ${term("k22", "(nn.n - r)", "(nn.n - c)")}) AS g2_micro
+         |       FROM g CROSS JOIN nn
+         |       WHERE CAST(k11 AS HUGEINT) * nn.n > CAST(r AS HUGEINT) * c),
+         |rk AS (SELECT source, token, k11, g2_micro,
+         |         row_number() OVER (PARTITION BY source
+         |                            ORDER BY g2_micro DESC, token) AS rk
+         |       FROM sc)
+         |SELECT source, token, k11 AS n_in_source, g2_micro
+         |FROM rk WHERE rk <= 5
+         |ORDER BY source, g2_micro DESC, token""".stripMargin
+    }) { (s, d) =>
+      val tok = Tables.documents(s, d)
+        .select(col("source"), explode(split(trim(col("text")), "\\s+")).as("token"))
+      val stc = tok.groupBy("source", "token")
+        .agg(count(lit(1)).cast("long").as("k"))
+      val rs = stc.groupBy("source").agg(sum("k").cast("long").as("r"))
+      val ct = stc.groupBy("token").agg(sum("k").cast("long").as("c"))
+      val nn = stc.agg(sum("k").cast("long").as("n"))
+      def term(k: Column, r: Column, c: Column, n: Column): Column =
+        when(k > 0,
+          k * (lnMicro(k) + lnMicro(n) - lnMicro(r) - lnMicro(c)))
+          .otherwise(lit(0L))
+      val g = stc
+        .join(broadcast(rs), "source") // |sources| rows
+        .join(ct, "token")             // token-keyed, vocab-sized
+        .crossJoin(broadcast(nn))
+        .select(col("source"), col("token"), col("k").as("k11"),
+          (col("c") - col("k")).as("k12"), (col("r") - col("k")).as("k21"),
+          (col("n") - col("r") - col("c") + col("k")).as("k22"),
+          col("r"), col("c"), col("n"))
+      val sc = g
+        .filter(col("k11").cast("decimal(38,0)") * col("n")
+          > col("r").cast("decimal(38,0)") * col("c"))
+        .select(col("source"), col("token"), col("k11"),
+          (lit(2L) * (term(col("k11"), col("r"), col("c"), col("n"))
+            + term(col("k12"), col("n") - col("r"), col("c"), col("n"))
+            + term(col("k21"), col("r"), col("n") - col("c"), col("n"))
+            + term(col("k22"), col("n") - col("r"), col("n") - col("c"), col("n"))))
+            .as("g2_micro"))
+      val w = Window.partitionBy("source")
+        .orderBy(col("g2_micro").desc, col("token"))
+      sc.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= 5)
+        .select(col("source"), col("token"), col("k11").as("n_in_source"),
+          col("g2_micro"))
+        .orderBy(col("source"), col("g2_micro").desc, col("token"))
     },
 
     // ── CH1: sliding-window chunking — 32-token windows at stride 16 (the
@@ -712,6 +908,121 @@ object CorpusQueries {
           sum(col("n_chars")).cast("long").as("sum_chars"),
           countDistinct(col("source")).as("n_sources"))
         .orderBy("lang")
+    },
+
+    // ── URL1: URL canonicalization + host/registrable-domain extraction.
+    // 100 TB: every output column is a codegen'd per-row projection
+    // (regexp/string ops, no UDF, no shuffle) — this runs inside the scan
+    // stage of whatever consumes it.
+    Q("url1_canonicalize",
+      s"""WITH $urlCanonSqlCtes
+         |SELECT doc_id, url, canon, host, domain FROM c
+         |ORDER BY doc_id""".stripMargin) { (s, d) =>
+      canonicalDocs(Tables.documents(s, d))
+        .select("doc_id", "url", "canon", "host", "domain")
+        .orderBy("doc_id")
+    },
+
+    // ── URL2: canonical-URL exact dedup — first-wins keeper per canonical
+    // key (d1's contract on url1's key). One keyed agg + one equi-join,
+    // both shuffling on the canonical string; at 100 TB this is dd1's
+    // plan with the md5 key replaced by the canonical URL (hash-partition
+    // on canon, no skew: a canonical key's multiplicity is its crawl
+    // duplication factor, not a power law).
+    Q("url2_url_dedup",
+      s"""WITH $urlCanonSqlCtes,
+         |g AS (SELECT canon, min(doc_id) AS keeper_id FROM c GROUP BY 1)
+         |SELECT c.doc_id, g.keeper_id,
+         |       CAST(CASE WHEN c.doc_id <> g.keeper_id THEN 1 ELSE 0 END AS INTEGER) AS is_dup
+         |FROM c JOIN g USING (canon)
+         |ORDER BY doc_id""".stripMargin) { (s, d) =>
+      val c = canonicalDocs(Tables.documents(s, d))
+      // keeper = min(doc_id) over the canon group as a WINDOW, not an
+      // agg + join-back: the join form shuffled the doc table twice (agg
+      // input + join probe, non-identical exchanges so no reuse); the
+      // window form is ONE canon-keyed exchange with the same hot-key
+      // clustering exposure the join had anyway
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("canon")
+      c.select(col("doc_id"), min(col("doc_id")).over(w).as("keeper_id"))
+        .select(col("doc_id"), col("keeper_id"),
+          when(col("doc_id") =!= col("keeper_id"), 1).otherwise(0)
+            .cast("int").as("is_dup"))
+        .orderBy("doc_id")
+    },
+
+    // ── URL3: per-registrable-domain corpus cap, quality-ranked — keep
+    // the top-3 docs per domain by (n_chars desc, doc_id asc). cap1's
+    // bounded TopKAggregator keyed by domain: the shuffle carries
+    // O(domains × K) rank-carrying rows, never O(docs) (the row_number
+    // window the oracle uses would sort every row of a hot domain
+    // through one task at 100 TB).
+    Q("url3_domain_cap",
+      s"""WITH $urlCanonSqlCtes,
+         |r AS (SELECT domain, doc_id, n_chars,
+         |        row_number() OVER (PARTITION BY domain
+         |                           ORDER BY n_chars DESC, doc_id) AS rn
+         |      FROM c)
+         |SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
+         |       CAST(sum(CASE WHEN rn <= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+         |       CAST(sum(CASE WHEN rn <= 3 THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars
+         |FROM r GROUP BY 1 ORDER BY domain""".stripMargin) { (s, d) =>
+      val K = 3
+      val c = canonicalDocs(Tables.documents(s, d))
+      val kept = c
+        .select(col("domain"), col("doc_id"), col("n_chars").cast("double").as("score"))
+        .groupBy("domain")
+        .agg(graft.functions.TopKAggregator.topK(K)(col("score"), col("doc_id"))
+          .as("top"))
+        .select(explode(col("top.id")).as("doc_id"))
+      val keptMass = c.join(broadcast(kept), Seq("doc_id"))
+        .groupBy("domain")
+        .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("kept_chars"))
+      c.groupBy("domain").agg(count(lit(1)).as("n_docs"))
+        .join(keptMass, Seq("domain"), "left")
+        .select(col("domain"), col("n_docs"),
+          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+          coalesce(col("kept_chars"), lit(0L)).cast("long").as("kept_chars"))
+        .orderBy("domain")
+    },
+
+    // ── URL4: politeness-aware crawl frontier. After url1 canonicalization
+    // and url2's first-wins dedup, each domain's URLs are quality-ranked
+    // (n_chars desc, doc_id asc) and the rank IS the crawl wave — a polite
+    // crawler fetches at most one URL per domain per wave, so wave w's
+    // size is the number of domains with ≥ w URLs left (the frontier
+    // drain curve). Ranks are produced by the bounded TopKAggregator
+    // (url3's device, K = 64): the shuffle carries O(domains × 64)
+    // rank-carrying rows, never O(urls) — the oracle's row_number window
+    // would sort a hot domain through one task at 100 TB. Output: per-wave
+    // URL count and fetched chars for the first 64 waves.
+    Q("url4_crawl_frontier",
+      s"""WITH ${urlCanonSqlCtes},
+         |k AS (SELECT canon, min(doc_id) AS doc_id FROM c GROUP BY 1),
+         |kd AS (SELECT c.domain, c.doc_id, c.n_chars
+         |       FROM c JOIN k ON k.doc_id = c.doc_id),
+         |r AS (SELECT domain, n_chars,
+         |        row_number() OVER (PARTITION BY domain
+         |                           ORDER BY n_chars DESC, doc_id) AS wave
+         |      FROM kd)
+         |SELECT wave, CAST(count(*) AS BIGINT) AS n_urls,
+         |       CAST(sum(n_chars) AS BIGINT) AS fetched_chars
+         |FROM r WHERE wave <= 64 GROUP BY 1 ORDER BY wave""".stripMargin) { (s, d) =>
+      val c = canonicalDocs(Tables.documents(s, d))
+      val keep = c.groupBy("canon").agg(min(col("doc_id")).as("doc_id"))
+        .select("doc_id")
+      val kd = c.join(keep, Seq("doc_id"), "left_semi")
+      val waves = kd.groupBy("domain")
+        .agg(graft.functions.TopKAggregator.topK(64)(
+          col("n_chars").cast("double"), col("doc_id")).as("top"))
+        .select(col("domain"), posexplode(col("top")))
+        // the aggregator's array is (score desc, id asc)-sorted, so the
+        // position is exactly the oracle's row_number; per-row cast back
+        // to long is exact (n_chars ≪ 2^53) so the sum stays integer
+        .select((col("pos") + 1).cast("long").as("wave"),
+          col("col.score").cast("long").as("chars"))
+      waves.groupBy("wave")
+        .agg(count(lit(1)).as("n_urls"), sum("chars").cast("long").as("fetched_chars"))
+        .orderBy("wave")
     }
   )
 
@@ -720,7 +1031,7 @@ object CorpusQueries {
     */
   private[graft] def stageOrc(s: SparkSession, d: String): String = {
     val sf = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = s"/root/repo/target/orc-stage/docs_$sf"
+    val dir = s"${graft.GraftSession.scratchRoot}/orc-stage/docs_$sf"
     val marker = new java.io.File(dir, "_STAGED")
     val fp = sourceFingerprint(s"$d/documents.parquet")
     val stale = !marker.exists() ||
@@ -754,7 +1065,7 @@ object CorpusQueries {
     */
   private[graft] def stageJsonl(s: SparkSession, d: String): String = {
     val sf = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = s"/root/repo/target/jsonl-stage/docs_$sf"
+    val dir = s"${graft.GraftSession.scratchRoot}/jsonl-stage/docs_$sf"
     val marker = new java.io.File(dir, "_STAGED")
     val fp = sourceFingerprint(s"$d/documents.parquet")
     val stale = !marker.exists() ||

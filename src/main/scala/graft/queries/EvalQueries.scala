@@ -1,20 +1,24 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import QueryHelpers.h16
 
-/** Round-10 extensions, second wave: the model-evaluation and monitoring
-  * operators of a production pipeline — rank-statistic AUC, empirical
-  * calibration tables, CUSUM changepoint detection over daily series,
-  * KMV distinct-intersection sketches, and last-touch revenue attribution.
+/** The model-evaluation and monitoring operators of a production pipeline
+  * — rank-statistic AUC, empirical calibration tables, precision/recall
+  * curves, CUSUM changepoint detection over daily series, forecast
+  * backtests, KMV distinct-intersection sketches — plus its privacy audits
+  * (k-anonymity, l-diversity, t-closeness, a geometric-mechanism release:
+  * pa1–pa3, dp1) and revenue attribution (last-touch, position-weighted,
+  * Markov removal effect: at1–at3).
   *
   * Determinism contracts (the ols1/ab1 class):
   *  - every cross-engine aggregate is an exact INTEGER (counts, integer
   *    ppm via `div`, exact cents) — identical at any partition count;
-  *  - no libm call appears anywhere in this file: AUC, calibration,
-  *    CUSUM, and KMV are pure integer arithmetic end to end.
+  *  - AUC, calibration, CUSUM, KMV, the privacy audits and the
+  *    attribution chain are pure integer arithmetic end to end.
   *
   * Scale design (100 TB):
   *  - auc1 reduces the corpus to |distinct scores| rows FIRST (one keyed
@@ -334,6 +338,128 @@ object EvalQueries {
           min("n").cast("long").as("min_group"))
     },
 
+    // ── PA2: l-diversity audit — for each (lang, length-bucket)
+    // quasi-identifier group, l = distinct sensitive values (source);
+    // output is the histogram of l with the rows exposed at each level.
+    // Groups with small l are the leak surface even when pa1's k is
+    // satisfied. Two keyed aggs: corpus → |groups|, then |groups| →
+    // |l-values|.
+    Q("pa2_l_diversity",
+      """WITH q AS (SELECT lang, n_chars // 200 AS len_bucket,
+        |             CAST(count(DISTINCT source) AS BIGINT) AS l,
+        |             CAST(count(*) AS BIGINT) AS n_rows
+        |           FROM documents GROUP BY 1, 2)
+        |SELECT l, CAST(count(*) AS BIGINT) AS n_groups,
+        |       CAST(sum(n_rows) AS BIGINT) AS n_rows
+        |FROM q GROUP BY l ORDER BY l""".stripMargin) { (s, d) =>
+      Tables.documents(s, d)
+        .groupBy(col("lang"), expr("n_chars div 200").as("len_bucket"))
+        .agg(countDistinct(col("source")).as("l"),
+          count(lit(1)).as("n_rows"))
+        .groupBy("l")
+        .agg(count(lit(1)).as("n_groups"), sum("n_rows").cast("long").as("n_rows"))
+        .orderBy("l")
+    },
+
+    // ── PA3: t-closeness audit. For each (lang, length-bucket) QI group,
+    // t = total-variation distance between the group's source distribution
+    // and the corpus-global one; output is the histogram of t in 0.1-wide
+    // buckets with the rows exposed at each level. EXACT integer: every
+    // per-source term |cnt_gs·N − cnt_s·n_g| shares the denominator
+    // 2·n_g·N, so the sum is one integer numerator and ONE truncating
+    // division yields t in ppm (products pass int64 at sf10 → decimal(38)/
+    // HUGEINT). Plan: two corpus-keyed aggs (group×source, group), the
+    // |groups|×|sources| grid is a broadcast cross join — the data-sized
+    // stage is the aggs; everything after is O(groups · sources) rows.
+    Q("pa3_t_closeness",
+      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM documents),
+        |gs AS (SELECT source, CAST(count(*) AS BIGINT) AS cs
+        |       FROM documents GROUP BY 1),
+        |g AS (SELECT lang, n_chars // 200 AS len_bucket,
+        |             CAST(count(*) AS BIGINT) AS ng
+        |      FROM documents GROUP BY 1, 2),
+        |gc AS (SELECT lang, n_chars // 200 AS len_bucket, source,
+        |              CAST(count(*) AS BIGINT) AS cgs
+        |       FROM documents GROUP BY 1, 2, 3),
+        |grid AS (SELECT g.lang, g.len_bucket, g.ng, gs.cs, nn,
+        |                coalesce(gc.cgs, 0) AS cgs
+        |         FROM g CROSS JOIN gs CROSS JOIN n
+        |         LEFT JOIN gc ON gc.lang = g.lang
+        |                     AND gc.len_bucket = g.len_bucket
+        |                     AND gc.source = gs.source),
+        |t AS (SELECT lang, len_bucket, ng,
+        |        CAST((sum(abs(CAST(cgs AS HUGEINT) * nn
+        |                      - CAST(cs AS HUGEINT) * ng)) * 1000000)
+        |             // (2 * CAST(ng AS HUGEINT) * max(nn)) AS BIGINT) AS t_ppm
+        |      FROM grid GROUP BY 1, 2, 3)
+        |SELECT t_ppm // 100000 AS t_bucket,
+        |       CAST(count(*) AS BIGINT) AS n_groups,
+        |       CAST(sum(ng) AS BIGINT) AS n_rows
+        |FROM t GROUP BY 1 ORDER BY t_bucket""".stripMargin) { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val n = docs.agg(count(lit(1)).as("nn"))
+      val gs = docs.groupBy("source").agg(count(lit(1)).as("cs"))
+      val g = docs.groupBy(col("lang"), expr("n_chars div 200").as("len_bucket"))
+        .agg(count(lit(1)).as("ng"))
+      val gc = docs
+        .groupBy(col("lang"), expr("n_chars div 200").as("len_bucket"), col("source"))
+        .agg(count(lit(1)).as("cgs"))
+      val grid = g.crossJoin(broadcast(gs)).crossJoin(broadcast(n))
+        .join(gc.withColumnsRenamed(Map(
+            "lang" -> "c_lang", "len_bucket" -> "c_len", "source" -> "c_src")),
+          col("c_lang") === col("lang") && col("c_len") === col("len_bucket")
+            && col("c_src") === col("source"), "left")
+        .select(col("lang"), col("len_bucket"), col("ng"), col("cs"), col("nn"),
+          coalesce(col("cgs"), lit(0L)).as("cgs"))
+      val t = grid.groupBy("lang", "len_bucket", "ng")
+        .agg(expr(
+          """cast((sum(abs(cast(cgs as decimal(38,0)) * nn
+            |              - cast(cs as decimal(38,0)) * ng)) * 1000000)
+            |     div (2 * cast(ng as decimal(38,0)) * max(nn)) as bigint)
+            |""".stripMargin.replaceAll("\n", " ")).as("t_ppm"))
+      t.groupBy(expr("t_ppm div 100000").as("t_bucket"))
+        .agg(count(lit(1)).as("n_groups"), sum("ng").cast("long").as("n_rows"))
+        .orderBy("t_bucket")
+    },
+
+    // ── DP1: ε = ln 2 differentially-private per-language count release
+    // (geometric mechanism). noise = tz(u_x) − tz(u_y) with u_x/u_y
+    // INDEPENDENT 16-bit md5 buckets keyed on the release id + group key:
+    // tz ~ Geom(1/2), and the difference of two iid geometrics IS the
+    // two-sided geometric P(k) ∝ 2^-|k| — the exact discrete-Laplace
+    // mechanism for sensitivity-1 counts (tail truncated at 16, mass
+    // 2^-16 ≈ 1.5e-5, documented bias bound). Deterministic: the "draw"
+    // is a pure function of the group key, so release replay is
+    // idempotent — and both engines compute the identical integers.
+    // Plan: one data-sized count agg; the mechanism is a per-row
+    // projection over |groups| rows. True counts are emitted beside the
+    // release because this pack row is the mechanism's AUDIT (the
+    // noise/released columns alone are what a real release ships).
+    Q("dp1_geometric_release",
+      s"""WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS true_n
+         |           FROM documents GROUP BY 1),
+         |u AS (SELECT lang, true_n,
+         |        ${h16("'dp1x|' || lang")} AS ux,
+         |        ${h16("'dp1y|' || lang")} AS uy
+         |      FROM c),
+         |z AS (SELECT lang, true_n,
+         |        ${tzSql("ux")} - ${tzSql("uy")} AS noise
+         |      FROM u)
+         |SELECT lang, true_n, CAST(noise AS BIGINT) AS noise,
+         |       CAST(true_n + noise AS BIGINT) AS released_n
+         |FROM z ORDER BY lang""".stripMargin) { (s, d) =>
+      val ux = graft.operators.Sampling.bucket(concat(lit("dp1x|"), col("lang")))
+        .cast("long")
+      val uy = graft.operators.Sampling.bucket(concat(lit("dp1y|"), col("lang")))
+        .cast("long")
+      val noise = (tzCol(ux) - tzCol(uy)).as("noise")
+      Tables.documents(s, d)
+        .groupBy("lang").agg(count(lit(1)).as("true_n"))
+        .select(col("lang"), col("true_n"), noise,
+          (col("true_n") + tzCol(ux) - tzCol(uy)).cast("long").as("released_n"))
+        .orderBy("lang")
+    },
+
     // ── AT1: last-touch revenue attribution — which channel (the last
     // non-purchase event before each purchase) gets credit for the
     // revenue. The per-user carry-forward is `last(..., ignoreNulls)` over
@@ -370,6 +496,93 @@ object EvalQueries {
         .agg(count(lit(1)).as("n_purchases"),
           round(sum(round(col("value") * 100).cast("long")) / 100.0, 2).as("revenue"))
         .orderBy("channel")
+    },
+
+    // ── AT2: position-weighted (U-shaped) multi-touch attribution — at1
+    // gives the last touch 100%; the U-shaped model marketing teams
+    // actually reconcile against gives 40% to the FIRST touch, 40% to the
+    // LAST, and splits 20% among the middles: per purchase, the same
+    // user's view/click/signup events in the preceding 7 days rank by
+    // (ts, event_id); credits are integer ppm — n=1 → 1e6, n=2 → 5e5
+    // each, n≥3 → 4e5/4e5 ends + 2e5 div (n−2) per middle (truncating
+    // per middle — mi1's per-cell class; the sub-ppm remainder is
+    // documented unassigned). 100 TB: ONE user-keyed join with the time
+    // range as a residual predicate; the rank window is keyed per
+    // conversion; users with > 256 touch events are excluded (the hot-key
+    // guard bounding the join fan-out a bot user would otherwise make
+    // quadratic — cap pinned in the oracle, inert on every driver corpus).
+    Q("at2_position_weighted",
+      """WITH c AS (SELECT event_id AS cid, user_id, CAST(ts AS TIMESTAMP) AS cts
+        |           FROM events WHERE event_type = 'purchase'),
+        |t0 AS (SELECT event_id AS tid, user_id, event_type,
+        |             CAST(ts AS TIMESTAMP) AS tts
+        |      FROM events WHERE event_type IN ('view', 'click', 'signup')),
+        |hot AS (SELECT user_id FROM t0 GROUP BY 1 HAVING count(*) > 256),
+        |t AS (SELECT * FROM t0
+        |      WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.user_id = t0.user_id)),
+        |j AS (SELECT c.cid, t.tid, t.event_type,
+        |        row_number() OVER (PARTITION BY c.cid ORDER BY t.tts, t.tid) AS rk,
+        |        count(*) OVER (PARTITION BY c.cid) AS n
+        |      FROM c JOIN t ON t.user_id = c.user_id
+        |        AND t.tts < c.cts AND t.tts >= c.cts - INTERVAL 7 DAY),
+        |cr AS (SELECT event_type,
+        |         CASE WHEN n = 1 THEN 1000000
+        |              WHEN n = 2 THEN 500000
+        |              WHEN rk = 1 OR rk = n THEN 400000
+        |              ELSE 200000 // (n - 2) END AS ppm
+        |       FROM j)
+        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_touches,
+        |       CAST(sum(ppm) AS BIGINT) AS credit_ppm
+        |FROM cr GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
+      val ev = Tables.events(s, d)
+      val c = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id").as("cid"), col("user_id").as("cu"),
+          col("ts").as("cts"))
+      val t0 = ev.filter(col("event_type").isin("view", "click", "signup"))
+        .select(col("event_id").as("tid"), col("user_id").as("tu"),
+          col("event_type"), col("ts").as("tts"))
+      // hot-user guard (fi1/gr2's cap class, pinned in the oracle): a bot
+      // with T touches and P purchases explodes the join to T*P rows —
+      // users over 256 touch events are excluded outright, bounding
+      // per-conversion fan-out; ~13 events/user on every driver corpus,
+      // so the cap is purely adversarial (spec-asserted inert)
+      val hot = t0.groupBy("tu").agg(count(lit(1)).as("ntouch"))
+        .filter(col("ntouch") > 256).select("tu")
+      val t = t0.join(broadcast(hot), Seq("tu"), "left_anti")
+      val j = c.join(t, col("tu") === col("cu")
+          && col("tts") < col("cts")
+          && col("tts") >= col("cts") - expr("INTERVAL 7 DAY"))
+      val wr = Window.partitionBy("cid").orderBy(col("tts"), col("tid"))
+      val wn = Window.partitionBy("cid")
+      j.withColumn("rk", row_number().over(wr).cast("long"))
+        .withColumn("n", count(lit(1)).over(wn).cast("long"))
+        .select(col("event_type"),
+          when(col("n") === 1L, 1000000L)
+            .when(col("n") === 2L, 500000L)
+            .when(col("rk") === 1L || col("rk") === col("n"), 400000L)
+            .otherwise(expr("200000L div (n - 2)")).as("ppm"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).cast("long").as("n_touches"),
+          sum("ppm").cast("long").as("credit_ppm"))
+        .orderBy("event_type")
+    },
+
+    // ── AT3: Markov removal-effect attribution. Stage 1 (the data-sized
+    // part): per-user journeys cut at the first purchase — one user-keyed
+    // window shuffle (at1's ordering: sec, then event_id) — aggregated to
+    // a |states|² transition-count table. Stage 2 (O(channels²) rows):
+    // ppm transition probabilities, then 24 exact-integer power-iteration
+    // rounds run SIMULTANEOUSLY for every removal variant (mass table
+    // keyed by (removed_channel, state) — one plan, not one per channel),
+    // each round localCheckpointed so lineage stays O(1). Removal effect
+    // = base conversion mass minus the variant's; purchase revenue is
+    // attributed proportionally in exact integer cents.
+    // Every chain step is exact integer arithmetic (ppm transition
+    // probabilities, 1e12-scale mass, truncating div), so Spark and DuckDB
+    // agree bit-for-bit — ses1/t11's micro-integer discipline applied to
+    // matrix power iteration.
+    Q("at3_markov_attribution", at3OracleSql) { (s, d) =>
+      at3Attribution(s, d)
     },
 
     // ── PF1: Pareto frontier (skyline) — the multi-objective operator
@@ -993,8 +1206,403 @@ object EvalQueries {
         size(array_distinct(split(trim(col("text")), "[ \\t\\n\\f\\r]+")))
           .cast("long").as("y"))
       spearmanByGroup(docs, "lang", "x", "y").orderBy("lang")
+    },
+
+    // ── PRC1: precision/recall curve for a monotone score — the
+    // imbalanced-classification companion to auc1 (one scalar) and cal1
+    // (response curve): one row per distinct threshold t = "predict
+    // positive when score ≥ t", carrying exact tp/fp and ppm precision/
+    // recall. Score: n_chars; positive: lang = 'en' (the house auc1
+    // framing). 100 TB: ONE keyed agg collapses the corpus to the
+    // distinct-score table; the reverse-cumulative window and the final
+    // sort run over that bounded table (ks1's bounded-window contract —
+    // n_chars domain ≤ max doc length); totals ride a 1-row broadcast.
+    // tp·1e6 rides decimal(38,0)/HUGEINT (passes 2^63 at ~9.2e12 docs).
+    Q("prc1_pr_curve",
+      """WITH s AS (SELECT n_chars AS score,
+        |             CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS pos
+        |           FROM documents),
+        |g AS (SELECT score, CAST(sum(pos) AS BIGINT) AS np,
+        |             CAST(count(*) - sum(pos) AS BIGINT) AS nn
+        |      FROM s GROUP BY 1),
+        |c AS (SELECT score,
+        |        CAST(sum(np) OVER (ORDER BY score DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
+        |        CAST(sum(nn) OVER (ORDER BY score DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS fp,
+        |        CAST(sum(np) OVER () AS BIGINT) AS n_pos
+        |      FROM g)
+        |SELECT score, tp, fp,
+        |       CAST((CAST(tp AS HUGEINT) * 1000000) // (tp + fp) AS BIGINT) AS prec_ppm,
+        |       CASE WHEN n_pos = 0 THEN NULL
+        |            ELSE CAST((CAST(tp AS HUGEINT) * 1000000) // n_pos AS BIGINT) END AS rec_ppm
+        |FROM c ORDER BY score DESC""".stripMargin) { (s, d) =>
+      val sdf = Tables.documents(s, d).select(col("n_chars").as("score"),
+        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
+      val g = sdf.groupBy("score").agg(sum("pos").cast("long").as("np"),
+        (count(lit(1)) - sum("pos")).cast("long").as("nn"))
+      val w = Window.orderBy(col("score").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val tot = g.agg(sum("np").cast("long").as("n_pos"))
+      g.withColumn("tp", sum("np").over(w).cast("long"))
+        .withColumn("fp", sum("nn").over(w).cast("long"))
+        .crossJoin(broadcast(tot))
+        .select(col("score"), col("tp"), col("fp"),
+          expr("cast((cast(tp as decimal(38,0)) * 1000000) div (tp + fp) as bigint)")
+            .as("prec_ppm"),
+          when(col("n_pos") === 0L, lit(null).cast("long"))
+            .otherwise(expr("cast((cast(tp as decimal(38,0)) * 1000000) div n_pos as bigint)"))
+            .as("rec_ppm"))
+        .orderBy(col("score").desc)
+    },
+
+    // ── FC1: seasonal-naive forecast backtest — the accuracy readout
+    // that closes the time-series family: forecast(d) = revenue(d − 7
+    // CALENDAR days) (the strongest naive baseline on weekly-seasonal
+    // data; sd1 established the weekday structure), scored as MAPE and
+    // signed bias in ppm. The lag is a calendar equi-join of the day
+    // table with itself — a ROWS-7 window would silently misalign the
+    // season across day gaps. Per-day APE truncates to ppm then averages
+    // exactly (mi1's per-cell class); bias multiplies through — both
+    // sums first, one division, sign device. Days without a 7-day-old
+    // twin or with zero revenue score NULL and drop from both engines
+    // identically.
+    Q("fc1_backtest_mape",
+      """WITH dc AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
+        |                            '%Y-%m-%d') AS day,
+        |              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+        |            FROM events WHERE event_type = 'purchase' GROUP BY 1),
+        |l AS (SELECT a.day, a.cents, b.cents AS fc
+        |      FROM dc a LEFT JOIN dc b
+        |        ON CAST(b.day AS DATE) = CAST(a.day AS DATE) - INTERVAL 7 DAY),
+        |s AS (SELECT CASE WHEN fc IS NULL OR cents <= 0 THEN NULL
+        |               ELSE CAST((CAST(abs(cents - fc) AS HUGEINT) * 1000000) // cents AS BIGINT)
+        |             END AS ape_ppm,
+        |        CASE WHEN fc IS NULL OR cents <= 0 THEN NULL ELSE cents END AS y,
+        |        CASE WHEN fc IS NULL OR cents <= 0 THEN NULL ELSE fc END AS yh
+        |      FROM l)
+        |SELECT CAST(count(ape_ppm) AS BIGINT) AS n_scored,
+        |       CASE WHEN count(ape_ppm) = 0 THEN NULL
+        |            ELSE CAST(sum(ape_ppm) // count(ape_ppm) AS BIGINT) END AS mape_ppm,
+        |       CASE WHEN count(ape_ppm) = 0 OR sum(y) = 0 THEN NULL
+        |            ELSE CAST(CAST(sign(sum(yh) - sum(y)) AS BIGINT)
+        |                   * ((CAST(abs(sum(yh) - sum(y)) AS HUGEINT) * 1000000) // sum(y)) AS BIGINT) END AS bias_ppm
+        |FROM s""".stripMargin) { (s, d) =>
+      val dc = Tables.events(s, d).filter(col("event_type") === "purchase")
+        .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
+        .agg(sum(expr("cast(round(value * 100) as bigint)")).as("cents"))
+      val a = dc.select(to_date(col("day")).as("dd"), col("cents"))
+      val b = dc.select(to_date(col("day")).as("bd"), col("cents").as("fc"))
+      val l = a.join(b, col("bd") === date_sub(col("dd"), 7), "left")
+      val scored = l.select(
+        when(col("fc").isNull || col("cents") <= 0L, lit(null).cast("long"))
+          .otherwise(expr("cast((cast(abs(cents - fc) as decimal(38,0)) * 1000000) div cents as bigint)"))
+          .as("ape_ppm"),
+        when(col("fc").isNull || col("cents") <= 0L, lit(null).cast("long"))
+          .otherwise(col("cents")).as("y"),
+        when(col("fc").isNull || col("cents") <= 0L, lit(null).cast("long"))
+          .otherwise(col("fc")).as("yh"))
+      scored.agg(count(col("ape_ppm")).cast("long").as("n_scored"),
+          sum("ape_ppm").as("sape"), sum("y").as("sy"), sum("yh").as("syh"))
+        .select(col("n_scored"),
+          when(col("n_scored") === 0L, lit(null).cast("long"))
+            .otherwise(expr("cast(sape div n_scored as bigint)")).as("mape_ppm"),
+          when(col("n_scored") === 0L || col("sy") === 0L, lit(null).cast("long"))
+            .otherwise(expr("cast(cast(sign(syh - sy) as bigint)" +
+              " * ((cast(abs(syh - sy) as decimal(38,0)) * 1000000) div sy) as bigint)"))
+            .as("bias_ppm"))
+    },
+
+    // ── RBO1: rank-biased overlap (p = 0.9, depth 20) between this year's
+    // and last year's top-20 revenue parts — the TOP-WEIGHTED ranking
+    // similarity rk1's churn counts can't read (rk1 says how many names
+    // moved; RBO says how much the ranking changed WHERE IT MATTERS, with
+    // geometric depth discounting — Webber et al. 2010). Exact integers:
+    // term_d = (overlap_d · 9^d · 1e6) div (d · 10^d) truncated per depth
+    // (mi1's per-cell class; 9^20·1e6 ≈ 1.2e25 rides decimal/HUGEINT),
+    // rbo_min_micro = (Σ term_d) div 9 — the (1−p)/p factor as a final
+    // integer division. Both rankings are TakeOrdered-20 under the total
+    // (revenue desc, partkey) order; overlap_d counts keys with both ranks
+    // ≤ d over the ≤40-key full-outer join × 20-row depth grid — all
+    // bounded tables after the two keyed apportioning aggs.
+    Q("rbo1_rank_overlap",
+      """WITH y AS (SELECT CAST(strftime(l_shipdate, '%Y') AS INT) AS yr,
+        |             l_partkey AS k,
+        |             CAST(round(l_extendedprice * 100) AS BIGINT) AS c
+        |           FROM lineitem),
+        |mx AS (SELECT max(yr) AS y2 FROM y),
+        |ra AS (SELECT k, row_number() OVER (ORDER BY sum(c) DESC, k) AS r
+        |       FROM y, mx WHERE yr = y2 GROUP BY k ORDER BY r LIMIT 20),
+        |rb AS (SELECT k, row_number() OVER (ORDER BY sum(c) DESC, k) AS r
+        |       FROM y, mx WHERE yr = y2 - 1 GROUP BY k ORDER BY r LIMIT 20),
+        |j AS (SELECT coalesce(ra.k, rb.k) AS k, ra.r AS r_a, rb.r AS r_b
+        |      FROM ra FULL OUTER JOIN rb ON ra.k = rb.k),
+        |pw(d, p9, p10) AS (VALUES
+        |  (1, 9, 10),
+        |  (2, 81, 100),
+        |  (3, 729, 1000),
+        |  (4, 6561, 10000),
+        |  (5, 59049, 100000),
+        |  (6, 531441, 1000000),
+        |  (7, 4782969, 10000000),
+        |  (8, 43046721, 100000000),
+        |  (9, 387420489, 1000000000),
+        |  (10, 3486784401, 10000000000),
+        |  (11, 31381059609, 100000000000),
+        |  (12, 282429536481, 1000000000000),
+        |  (13, 2541865828329, 10000000000000),
+        |  (14, 22876792454961, 100000000000000),
+        |  (15, 205891132094649, 1000000000000000),
+        |  (16, 1853020188851841, 10000000000000000),
+        |  (17, 16677181699666569, 100000000000000000),
+        |  (18, 150094635296999121, 1000000000000000000),
+        |  (19, 1350851717672992089, 10000000000000000000),
+        |  (20, 12157665459056928801, 100000000000000000000)),
+        |ov AS (SELECT pw.d, CAST(count(j.k) AS BIGINT) AS overlap
+        |       FROM pw LEFT JOIN j ON j.r_a <= pw.d AND j.r_b <= pw.d
+        |       GROUP BY 1),
+        |tm AS (SELECT ov.d, ov.overlap,
+        |         CAST((CAST(ov.overlap AS HUGEINT) * CAST(pw.p9 AS HUGEINT) * 1000000)
+        |           // (CAST(ov.d AS HUGEINT) * CAST(pw.p10 AS HUGEINT)) AS BIGINT) AS term_micro
+        |       FROM ov JOIN pw ON pw.d = ov.d)
+        |SELECT CAST(sum(CASE WHEN d = 20 THEN overlap END) AS BIGINT) AS overlap_20,
+        |       CAST(sum(term_micro) // 9 AS BIGINT) AS rbo_min_micro
+        |FROM tm""".stripMargin) { (s, d) =>
+      val y = Tables.lineitem(s, d).select(
+        year(col("l_shipdate")).as("yr"), col("l_partkey").as("k"),
+        expr("cast(round(l_extendedprice * 100) as bigint)").as("c"))
+      val mx = y.agg(max("yr").as("y2"))
+      def top(cond: Column): DataFrame = y.crossJoin(broadcast(mx)).filter(cond)
+        .groupBy("k").agg(sum("c").as("rev"))
+        .orderBy(col("rev").desc, col("k")).limit(20)
+        .select(col("k"), row_number().over(
+          Window.orderBy(col("rev").desc, col("k"))).cast("long").as("r"))
+      val ra = top(col("yr") === col("y2"))
+        .select(col("k"), col("r").as("r_a"))
+      val rb = top(col("yr") === col("y2") - 1)
+        .select(col("k").as("kb"), col("r").as("r_b"))
+      val j = ra.join(rb, col("k") === col("kb"), "full_outer")
+        .select(coalesce(col("k"), col("kb")).as("k"), col("r_a"), col("r_b"))
+      // exact 9^d / 10^d as a 20-row LITERAL grid (double power() loses
+      // exactness past 2^53 — 9^20 ~ 1.2e19 would round)
+      import s.implicits._
+      val grid = (1 to 20).map(dd =>
+        (dd.toLong, BigInt(9).pow(dd).toString, BigInt(10).pow(dd).toString))
+        .toDF("d", "p9", "p10")
+        .select(col("d"), col("p9").cast("decimal(38,0)").as("p9"),
+          col("p10").cast("decimal(38,0)").as("p10"))
+      val ov = grid.join(j,
+          col("r_a") <= col("d") && col("r_b") <= col("d"), "left")
+        .groupBy("d", "p9", "p10").agg(count(col("k")).cast("long").as("overlap"))
+      val tm2 = ov.select(col("d"), col("overlap"),
+        expr("cast((cast(overlap as decimal(38,0)) * p9 * 1000000)" +
+          " div (cast(d as decimal(38,0)) * p10) as bigint)").as("term_micro"))
+      tm2.agg(
+        sum(when(col("d") === 20, col("overlap"))).cast("long").as("overlap_20"),
+        expr("cast(sum(term_micro) div 9 as bigint)").as("rbo_min_micro"))
     }
   )
+
+  /** at3's unrolled chain depth: mass not yet absorbed after t rounds is
+    * ≤ (max row-mass of the transient submatrix)^t of the start mass;
+    * 24 rounds drive the truncated remainder far below the 1e-6 grain the
+    * ppm arithmetic resolves, and both engines compute the SAME truncated
+    * value exactly — the bound is about meaningfulness, not agreement.
+    */
+  private val at3Rounds = 24
+
+  /** Trailing-zero count of a 16-bit bucket (0 → 16): P(tz = k) = 2^-(k+1),
+    * i.e. tz ~ Geometric(1/2) — the noise primitive for dp1. Pure modular
+    * arithmetic (no engine-specific bit intrinsics), identical CASE in
+    * both engines.
+    */
+  private def tzCol(c: Column): Column =
+    (15 to 0 by -1).foldLeft(lit(16L)) { (acc, k) =>
+      when(c % (1L << (k + 1)) === (1L << k), k.toLong).otherwise(acc)
+    }
+
+  private def tzSql(e: String): String = {
+    val whens = (0 to 15).map { k =>
+      s"WHEN ($e) % ${1L << (k + 1)} = ${1L << k} THEN ${k}"
+    }.mkString(" ")
+    s"(CASE $whens ELSE 16 END)"
+  }
+
+  /** at3 stage 1, ONE materialization job: (src, nxt, ppm) transition
+    * probabilities from per-user journeys cut at the first purchase
+    * (states: 'START', the channel event types, absorbing 'CONV'/'NULL'),
+    * UNIONED with one audit row per raw event type (nxt = '__CT__',
+    * ppm = that type's total purchase cents) — the channel list and the
+    * revenue total ride the same checkpoint instead of costing their own
+    * events scans (the former shape paid three passes over the fact table:
+    * transitions, DISTINCT event_type, and the revenue sum inside the
+    * final action). The two legs are independent subtrees of one job, so
+    * their scans overlap on idle cores.
+    */
+  private[queries] def at3Stage1(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val order = Window.partitionBy("user_id").orderBy("sec", "event_id")
+    val e = Tables.events(s, d).select(col("user_id"), col("event_id"),
+      unix_timestamp(col("ts")).as("sec"), col("event_type"))
+    // rows before (and including) the user's first purchase: the count of
+    // STRICTLY PRECEDING purchases is 0
+    val kept = e.withColumn("pprev",
+        count(when(col("event_type") === "purchase", 1))
+          .over(order.rowsBetween(Window.unboundedPreceding, -1)))
+      .filter(coalesce(col("pprev"), lit(0L)) === 0L)
+      .select(col("user_id"), col("sec"), col("event_id"),
+        when(col("event_type") === "purchase", "CONV")
+          .otherwise(col("event_type")).as("st"))
+    val seq = kept
+      .withColumn("prev", lag(col("st"), 1).over(order))
+      .withColumn("rdesc", row_number().over(
+        Window.partitionBy("user_id").orderBy(col("sec").desc, col("event_id").desc)))
+    val tr = seq.select(coalesce(col("prev"), lit("START")).as("src"), col("st").as("nxt"))
+      .unionByName(seq.filter(col("rdesc") === 1 && col("st") =!= "CONV")
+        .select(col("st").as("src"), lit("NULL").as("nxt")))
+    val c = tr.groupBy("src", "nxt").agg(count(lit(1)).as("n"))
+    val tw = Window.partitionBy("src")
+    val p = c.withColumn("tot", sum(col("n")).over(tw))
+      .select(col("src"), col("nxt"), expr("(n * 1000000L) div tot").as("ppm"))
+    // audit leg: per-event-type purchase cents (exact integers); '__CT__'
+    // can never collide with a transition row's nxt (event types, CONV,
+    // NULL). The leg is one keyed agg with map-side partials.
+    val ct = Tables.events(s, d)
+      .groupBy(col("event_type"))
+      .agg(sum(when(col("event_type") === "purchase",
+        round(col("value") * 100).cast("long")).otherwise(0L))
+        .cast("long").as("cents"))
+      .select(col("event_type").as("src"), lit("__CT__").as("nxt"),
+        col("cents").as("ppm"))
+    p.unionByName(ct)
+  }
+
+  /** at3 stage 2: exact-integer chain iteration + proportional revenue
+    * split. Every DataFrame past the first two aggs is O(channels²) rows.
+    */
+  private def at3Attribution(s: SparkSession, d: String): DataFrame = {
+    // ONE checkpoint job pins transitions + the per-event-type audit rows;
+    // the 24 rounds then iterate on in-memory |states|²-row data and the
+    // final action never touches the fact table again
+    val stage1 = at3Stage1(s, d).localCheckpoint()
+    val p = stage1.filter(col("nxt") =!= "__CT__")
+    val channels = stage1
+      .filter(col("nxt") === "__CT__" && col("src") =!= "purchase")
+      .select(col("src").as("rem"))
+    val rem = channels.unionByName(
+      s.range(1).select(lit("__none__").as("rem")))
+    // hash-partition the mass table by rem ONCE: rem never changes through
+    // a round (only st does), and HashPartitioning(rem) clusters the
+    // round agg's (rem, st) keys — so every round's groupBy runs WITHOUT
+    // an exchange and the whole chain between checkpoints is one stage
+    var m = rem.select(col("rem"), lit("START").as("st"),
+      lit(1000000000000L).as("v")).repartition(col("rem")).localCheckpoint()
+    // One round = ONE left join instead of the former absorbed/moved
+    // filter-union (which referenced m twice, so plans doubled per
+    // un-checkpointed round and m had to be checkpointed EVERY round —
+    // 24 jobs over a ~50-row mass table was the query's dominant cost,
+    // not arithmetic). The left join touches each mass row once: an
+    // absorbed row matches no transition (the join condition excludes
+    // absorbing states) and passes through on the null-extended side; a
+    // transient row fans out to its surviving transitions and is dropped
+    // if removal left it none (inner-join semantics via the post-filter).
+    // p is O(|states|²) — broadcast, so the mass side never shuffles for
+    // the join. Single-reference rounds grow the plan LINEARLY, so one
+    // checkpoint per 8 rounds (3 jobs total; A/B-swept 4/6/8/12 — 8 won,
+    // 12 pays superlinear planning) bounds lineage; the
+    // truncated-integer arithmetic is checkpoint-cadence-invariant.
+    val absorbing = col("m.st").isin("CONV", "NULL")
+    for (r <- 1 to at3Rounds) {
+      m = m.as("m")
+        .join(broadcast(p.as("p")),
+          !absorbing && col("p.src") === col("m.st") &&
+            col("p.nxt") =!= col("m.rem"), "left")
+        .filter(absorbing || col("p.src").isNotNull)
+        .select(col("m.rem").as("rem"),
+          when(absorbing, col("m.st")).otherwise(col("p.nxt")).as("st"),
+          when(absorbing, col("m.v"))
+            .otherwise(expr("(v * ppm) div 1000000L")).as("v"))
+        .groupBy("rem", "st").agg(sum("v").cast("long").as("v"))
+      if (r % 8 == 0) m = m.localCheckpoint()
+    }
+    val conv = m.filter(col("st") === "CONV").select(col("rem"), col("v"))
+    val base = rem.filter(col("rem") === "__none__")
+      .join(conv, Seq("rem"), "left")
+      .select(coalesce(col("v"), lit(0L)).as("base_conv"))
+    val eff = channels.join(conv, Seq("rem"), "left")
+      .crossJoin(broadcast(base))
+      .select(col("rem").as("channel"),
+        greatest(col("base_conv") - coalesce(col("v"), lit(0L)), lit(0L)).as("eff"))
+    val tot = stage1.filter(col("nxt") === "__CT__")
+      .agg(sum(col("ppm")).cast("long").as("total_cents"))
+    val sumEff = eff.agg(sum("eff").cast("long").as("sum_eff"))
+    eff.crossJoin(broadcast(tot)).crossJoin(broadcast(sumEff))
+      .select(col("channel"), col("eff").as("removal_e12"),
+        when(col("sum_eff") > 0,
+          expr("(CAST(total_cents AS DECIMAL(38,0)) * eff) div sum_eff"))
+          .otherwise(0L).cast("long").as("attributed_cents"))
+      .orderBy("channel")
+  }
+
+  /** at3's oracle: the identical journey cut, ppm probabilities, and
+    * 24 exact-integer rounds unrolled as materialized CTEs (one mass table
+    * keyed by (removed, state) — same simultaneous-variant shape as the
+    * Spark plan). HUGEINT only where cents × 1e12 exceeds int64.
+    */
+  private def at3OracleSql: String = {
+    val rounds = (1 to at3Rounds).map { i =>
+      s"""m$i AS MATERIALIZED (
+         |  SELECT rem, st, CAST(sum(v) AS BIGINT) AS v FROM (
+         |    SELECT rem, st, v FROM m${i - 1} WHERE st IN ('CONV', 'NULL')
+         |    UNION ALL
+         |    SELECT m.rem, p.nxt AS st, (m.v * p.ppm) // 1000000 AS v
+         |    FROM m${i - 1} m JOIN p ON p.src = m.st AND p.nxt <> m.rem
+         |    WHERE m.st NOT IN ('CONV', 'NULL')
+         |  ) GROUP BY 1, 2)""".stripMargin
+    }.mkString(",\n")
+    s"""WITH e AS (SELECT user_id, event_id, event_type,
+       |             date_diff('second', TIMESTAMP '1970-01-01 00:00:00',
+       |                       CAST(ts AS TIMESTAMP)) AS sec
+       |           FROM events),
+       |k AS (SELECT user_id, sec, event_id,
+       |        CASE WHEN event_type = 'purchase' THEN 'CONV' ELSE event_type END AS st,
+       |        count(CASE WHEN event_type = 'purchase' THEN 1 END)
+       |          OVER (PARTITION BY user_id ORDER BY sec, event_id
+       |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pprev
+       |      FROM e),
+       |j AS (SELECT user_id, sec, event_id, st FROM k WHERE coalesce(pprev, 0) = 0),
+       |sq AS (SELECT user_id, st,
+       |         lag(st) OVER (PARTITION BY user_id ORDER BY sec, event_id) AS prev,
+       |         row_number() OVER (PARTITION BY user_id
+       |                            ORDER BY sec DESC, event_id DESC) AS rdesc
+       |       FROM j),
+       |tr AS (SELECT coalesce(prev, 'START') AS src, st AS nxt FROM sq
+       |       UNION ALL
+       |       SELECT st, 'NULL' FROM sq WHERE rdesc = 1 AND st <> 'CONV'),
+       |c AS (SELECT src, nxt, CAST(count(*) AS BIGINT) AS n FROM tr GROUP BY 1, 2),
+       |p AS MATERIALIZED (SELECT src, nxt,
+       |       (n * 1000000) // CAST(sum(n) OVER (PARTITION BY src) AS BIGINT) AS ppm
+       |     FROM c),
+       |ch AS MATERIALIZED (SELECT DISTINCT event_type AS rem FROM events
+       |                    WHERE event_type <> 'purchase'),
+       |rem AS (SELECT rem FROM ch UNION ALL SELECT '__none__'),
+       |m0 AS MATERIALIZED (SELECT rem, 'START' AS st,
+       |                           CAST(1000000000000 AS BIGINT) AS v FROM rem),
+       |$rounds,
+       |conv AS (SELECT rem, v FROM m$at3Rounds WHERE st = 'CONV'),
+       |base AS (SELECT coalesce((SELECT v FROM conv WHERE rem = '__none__'), 0) AS base_conv),
+       |eff AS (SELECT ch.rem AS channel,
+       |               greatest(base_conv - coalesce(conv.v, 0), 0) AS eff
+       |        FROM ch CROSS JOIN base LEFT JOIN conv ON conv.rem = ch.rem),
+       |tot AS (SELECT CAST(sum(CASE WHEN event_type = 'purchase'
+       |                             THEN CAST(round(value * 100) AS BIGINT)
+       |                             ELSE 0 END) AS BIGINT) AS total_cents
+       |        FROM events),
+       |se AS (SELECT CAST(sum(eff) AS BIGINT) AS sum_eff FROM eff)
+       |SELECT channel, CAST(eff AS BIGINT) AS removal_e12,
+       |       CAST(CASE WHEN sum_eff > 0
+       |                 THEN (CAST(total_cents AS HUGEINT) * eff) // sum_eff
+       |                 ELSE 0 END AS BIGINT) AS attributed_cents
+       |FROM eff CROSS JOIN tot CROSS JOIN se ORDER BY channel""".stripMargin
+  }
 
   /** sc1's operator: tie-corrected Spearman rho of `xc` vs `yc` within each
     * `grp`. Doubled average ranks (exact integers) via a prefix window over

@@ -1,13 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import QueryHelpers.{h16, lnMicro, lnMicroSql, ws, wsSql}
 
-/** Round-10 extensions: the model-adjacent operators of a training-data
-  * pipeline — per-doc information metrics (token entropy), broadcast-weight
-  * linear-model inference, behavioral Markov transition matrices,
+/** The model-adjacent operators of a training-data pipeline — per-doc
+  * information metrics (token entropy), broadcast-weight linear-model
+  * inference, in-engine trainers (closed-form ridge rg1, Naive Bayes nb1),
+  * behavioral Markov transition matrices,
   * higher-moment distribution profiling, per-source corpus caps, k-NN label
   * prediction, and a distributed power-iteration principal component.
   *
@@ -40,18 +42,6 @@ import graft.{Q, Tables}
   *    exact below ~10⁹ vectors.
   */
 object MlQueries {
-
-  /** DuckDB twin of graft.operators.Sampling.bucket: the first 4 md5
-    * nibbles as a 16-bit integer (dsir1's arithmetic).
-    */
-  private def h16(e: String): String =
-    s"""((strpos('0123456789abcdef', substr(md5($e), 1, 1)) - 1) * 4096
-       | + (strpos('0123456789abcdef', substr(md5($e), 2, 1)) - 1) * 256
-       | + (strpos('0123456789abcdef', substr(md5($e), 3, 1)) - 1) * 16
-       | + (strpos('0123456789abcdef', substr(md5($e), 4, 1)) - 1))""".stripMargin
-
-  private val ws = "[ \\t\\n\\f\\r]+"
-  private val wsSql = """[ \t\n\f\r]+"""
 
   // ────────────────────────────────────────────────────────────────────────
   // PCA1 helpers: quantized power iteration.
@@ -359,7 +349,6 @@ object MlQueries {
         |       CAST(nlabel AS INTEGER) AS pred_label, CAST(nv AS BIGINT) AS n_votes,
         |       CAST(CASE WHEN nlabel = qlabel THEN 1 ELSE 0 END AS INTEGER) AS correct
         |FROM best WHERE vr = 1 ORDER BY qid""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val corpus = Tables.embeddings(s, d)
       val queries = corpus.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("label").as("qlabel"),
@@ -588,7 +577,6 @@ object MlQueries {
          |FROM topf f LEFT JOIN topp p ON p.qid = f.qid AND p.nid = f.nid
          |GROUP BY 1 ORDER BY f.qid""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val corpus = Tables.embeddings(s, d)
       val queries = corpus.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -703,7 +691,6 @@ object MlQueries {
          |FROM qs LEFT JOIN dcg ON dcg.qid = qs.qid CROSS JOIN ideal
          |ORDER BY qs.qid""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val corpus = Tables.embeddings(s, d)
       val queries = corpus.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -784,7 +771,6 @@ object MlQueries {
         .mkString("\nUNION ALL ")
       s"WITH $norms,\n$cand,\n$steps\n$out\nORDER BY step"
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val corpus = Tables.embeddings(s, d)
       val q0 = corpus.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
       val cands = corpus.crossJoin(broadcast(q0)).filter(col("vec_id") =!= 0)
@@ -859,6 +845,207 @@ object MlQueries {
           .otherwise("unchanged").as("status"))
         .groupBy("status").agg(count(lit(1)).as("n_docs"))
         .orderBy("status")
+    },
+
+    // ── RG1: closed-form ridge regression of daily purchase revenue on
+    // (day index, weekend flag) — the in-engine GLM trainer beside ols1's
+    // per-group simple regression: TWO features + intercept solved by
+    // Cramer's rule on the 3×3 ridge normal equations A+λ·diag(0,1,1),
+    // λ = 1 (the intercept is never penalized — standard ridge). With
+    // λ > 0 and ≥ 1 day, A' is positive definite (x'A'x = 0 forces
+    // x₂ = x₃ = 0 and then n·x₁² = 0), so det > 0 always; the NULL guard
+    // is belt-and-braces. Every sufficient statistic and every cofactor
+    // is an exact integer in decimal(38,0)/HUGEINT; coefficients emit in
+    // MILLI-cents via sign·(abs div d) (milli, not micro: the ×1e3 keeps
+    // the det_i product under 38 digits out to a 10-year × sf10-density
+    // envelope — det_i ≤ ~1.2e33, ×1e3 = 1.2e36 < 1e38; micro would pass
+    // 1e38 one decade earlier — ses1's documented magnitude-contract
+    // class). Weekend via ISO day-of-week (Spark weekday()+1 = DuckDB
+    // isodow — both Monday=1..Sunday=7, no locale dependence).
+    // 100 TB: ONE keyed corpus scan → day grain; the min-day anchor is a
+    // 1-row broadcast (seg1's device); eight sufficient statistics in one
+    // agg over the |days|-row table; the solve is single-row arithmetic.
+    Q("rg1_ridge_regression", {
+      val a22 = "(stt + 1)"; val a33 = "(sw + 1)"
+      val det = s"(n * ($a22 * $a33 - stw * stw)" +
+        s" - st * (st * $a33 - stw * sw)" +
+        s" + sw * (st * stw - $a22 * sw))"
+      val det0 = s"(sy * ($a22 * $a33 - stw * stw)" +
+        s" - st * (sty * $a33 - stw * swy)" +
+        s" + sw * (sty * stw - $a22 * swy))"
+      val det1 = s"(n * (sty * $a33 - swy * stw)" +
+        s" - sy * (st * $a33 - stw * sw)" +
+        s" + sw * (st * swy - sty * sw))"
+      val det2 = s"(n * ($a22 * swy - stw * sty)" +
+        s" - st * (st * swy - sw * sty)" +
+        s" + sy * (st * stw - $a22 * sw))"
+      def emit(num: String, alias: String) =
+        s"""CASE WHEN $det = 0 THEN NULL
+           |     ELSE CAST(CAST(sign($num) AS BIGINT) * CAST(sign($det) AS BIGINT)
+           |            * ((abs($num) * 1000) // abs($det)) AS BIGINT) END AS $alias"""
+          .stripMargin.replace("\n", " ")
+      s"""WITH dc AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
+         |                            '%Y-%m-%d') AS day,
+         |              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+         |            FROM events WHERE event_type = 'purchase' GROUP BY 1),
+         |anchor AS (SELECT min(day) AS d0 FROM dc),
+         |d AS (SELECT CAST(date_diff('day', CAST(d0 AS DATE), CAST(day AS DATE)) AS BIGINT) AS t,
+         |        CAST(CASE WHEN isodow(CAST(day AS DATE)) >= 6 THEN 1 ELSE 0 END AS BIGINT) AS w,
+         |        y
+         |      FROM dc, anchor),
+         |s AS (SELECT CAST(count(*) AS HUGEINT) AS n,
+         |        CAST(sum(t) AS HUGEINT) AS st, CAST(sum(t * t) AS HUGEINT) AS stt,
+         |        CAST(sum(w) AS HUGEINT) AS sw, CAST(sum(t * w) AS HUGEINT) AS stw,
+         |        sum(CAST(y AS HUGEINT)) AS sy,
+         |        sum(CAST(t AS HUGEINT) * y) AS sty,
+         |        sum(CAST(w AS HUGEINT) * y) AS swy
+         |      FROM d)
+         |SELECT CAST(n AS BIGINT) AS n_days, CAST(1 AS BIGINT) AS lambda,
+         |       ${emit(det0, "b0_milli")},
+         |       ${emit(det1, "b1_milli")},
+         |       ${emit(det2, "b2_milli")}
+         |FROM s""".stripMargin
+    }) { (s, d) =>
+      val a22 = "(stt + 1)"; val a33 = "(sw + 1)"
+      val det = s"(n * ($a22 * $a33 - stw * stw)" +
+        s" - st * (st * $a33 - stw * sw)" +
+        s" + sw * (st * stw - $a22 * sw))"
+      val det0 = s"(sy * ($a22 * $a33 - stw * stw)" +
+        s" - st * (sty * $a33 - stw * swy)" +
+        s" + sw * (sty * stw - $a22 * swy))"
+      val det1 = s"(n * (sty * $a33 - swy * stw)" +
+        s" - sy * (st * $a33 - stw * sw)" +
+        s" + sw * (st * swy - sty * sw))"
+      val det2 = s"(n * ($a22 * swy - stw * sty)" +
+        s" - st * (st * swy - sw * sty)" +
+        s" + sy * (st * stw - $a22 * sw))"
+      def emit(num: String): Column =
+        when(expr(det) === 0, lit(null).cast("long"))
+          .otherwise(expr(s"cast(cast(sign($num) as bigint) * cast(sign($det) as bigint)" +
+            s" * ((abs($num) * 1000) div abs($det)) as bigint)"))
+      val dc = Tables.events(s, d).filter(col("event_type") === "purchase")
+        .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
+        .agg(sum(expr("cast(round(value * 100) as bigint)")).as("y"))
+      val anchor = dc.agg(min("day").as("d0"))
+      val day = dc.crossJoin(broadcast(anchor))
+        .select(datediff(to_date(col("day")), to_date(col("d0"))).cast("long").as("t"),
+          when(expr("weekday(to_date(day)) + 1") >= 6, 1L).otherwise(0L).as("w"),
+          col("y"))
+      day.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
+          sum(col("t")).cast("decimal(38,0)").as("st"),
+          sum(col("t") * col("t")).cast("decimal(38,0)").as("stt"),
+          sum(col("w")).cast("decimal(38,0)").as("sw"),
+          sum(col("t") * col("w")).cast("decimal(38,0)").as("stw"),
+          sum(col("y").cast("decimal(38,0)")).as("sy"),
+          sum(col("t").cast("decimal(38,0)") * col("y")).as("sty"),
+          sum(col("w").cast("decimal(38,0)") * col("y")).as("swy"))
+        .select(col("n").cast("long").as("n_days"),
+          lit(1L).as("lambda"),
+          emit(det0).as("b0_milli"),
+          emit(det1).as("b1_milli"),
+          emit(det2).as("b2_milli"))
+    },
+
+    // ── NB1: multinomial Naive Bayes language classifier — train on the
+    // 90% split (doc_id % 10 ≠ 0), apply to the held-out 10%, emit the
+    // confusion matrix: the in-engine "can a bag-of-words model recover
+    // lang?" pass every curation pipeline runs before trusting a learned
+    // quality/language filter (lr1 scores with FIXED weights; nb1 LEARNS
+    // its table from the corpus). Laplace-smoothed scores live entirely
+    // in micro-ln integers: score(doc, c) = Σ_tok mult·lnMicro(cnt+1)
+    // − m_doc·lnMicro(tot_c + V) + lnMicro(n_c) − lnMicro(n_train) —
+    // every ln on an exact integer, every sum exact, so argmax (ties →
+    // smallest lang) is deterministic on both engines. Out-of-vocabulary
+    // test tokens are DROPPED (the documented convention — they carry the
+    // same smoothed mass in every class, so they cannot move the argmax
+    // ordering... except through m_doc; dropping them is the standard
+    // choice and is replayed identically in the oracle). Priors count ALL
+    // train docs (token-free docs included); a token-free test doc is
+    // classified by prior alone (the tedoc grid LEFT-joins token scores).
+    // 100 TB: the model is a TABLE keyed on (lang, tok) — never a driver
+    // object; the grid costs |test tokens|·|langs| narrow rows (langs
+    // bounded ~6); the only windows partition per doc over ≤ |langs| rows.
+    Q("nb1_naive_bayes", {
+      val lnC = lnMicroSql("coalesce(c, 0) + 1")
+      s"""WITH tok AS (SELECT doc_id, lang, t.tok AS tok
+         |             FROM documents, unnest(regexp_split_to_array(trim(text), '\\s+')) AS t(tok)
+         |             WHERE t.tok <> ''),
+         |tr AS (SELECT * FROM tok WHERE doc_id % 10 <> 0),
+         |cls AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_c
+         |        FROM documents WHERE doc_id % 10 <> 0 GROUP BY 1),
+         |ctot AS (SELECT lang, CAST(count(*) AS BIGINT) AS tot_c FROM tr GROUP BY 1),
+         |tot AS (SELECT CAST(sum(n_c) AS BIGINT) AS n_train FROM cls),
+         |voc AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v FROM tr),
+         |cnt AS (SELECT lang, tok, CAST(count(*) AS BIGINT) AS c FROM tr GROUP BY 1, 2),
+         |te AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS mult
+         |       FROM tok WHERE doc_id % 10 = 0 GROUP BY 1, 2),
+         |tev AS (SELECT te.doc_id, te.tok, te.mult
+         |        FROM te JOIN (SELECT DISTINCT tok FROM tr) v USING (tok)),
+         |sc AS (SELECT tev.doc_id, cls.lang,
+         |         CAST(sum(tev.mult) AS BIGINT) AS m_doc,
+         |         CAST(sum(tev.mult * $lnC) AS BIGINT) AS ts
+         |       FROM tev CROSS JOIN cls
+         |       LEFT JOIN cnt ON cnt.lang = cls.lang AND cnt.tok = tev.tok
+         |       GROUP BY 1, 2),
+         |tedoc AS (SELECT doc_id, lang AS true_lang FROM documents WHERE doc_id % 10 = 0),
+         |grid AS (SELECT td.doc_id, td.true_lang, cls.lang,
+         |           coalesce(sc.ts, 0)
+         |             - coalesce(sc.m_doc, 0)
+         |               * ${lnMicroSql("coalesce(ctot.tot_c, 0) + voc.v")}
+         |             + ${lnMicroSql("cls.n_c")} - ${lnMicroSql("tot.n_train")} AS score
+         |         FROM tedoc td
+         |         CROSS JOIN cls
+         |         LEFT JOIN ctot ON ctot.lang = cls.lang
+         |         CROSS JOIN voc CROSS JOIN tot
+         |         LEFT JOIN sc ON sc.doc_id = td.doc_id AND sc.lang = cls.lang),
+         |pred AS (SELECT doc_id, true_lang, lang AS pred_lang,
+         |           row_number() OVER (PARTITION BY doc_id
+         |                              ORDER BY score DESC, lang) AS rk
+         |         FROM grid)
+         |SELECT true_lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
+         |FROM pred WHERE rk = 1 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+    }) { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val tok = docs
+        .select(col("doc_id"), col("lang"),
+          explode(split(trim(col("text")), "\\s+")).as("tok"))
+        .filter(col("tok") =!= "")
+      val tr = tok.filter(col("doc_id") % 10 =!= 0)
+      val cls = docs.filter(col("doc_id") % 10 =!= 0)
+        .groupBy("lang").agg(count(lit(1)).cast("long").as("n_c"))
+      val ctot = tr.groupBy("lang").agg(count(lit(1)).cast("long").as("tot_c"))
+      val tot = cls.agg(sum("n_c").cast("long").as("n_train"))
+      val voc = tr.agg(countDistinct("tok").cast("long").as("v"))
+      val cnt = tr.groupBy("lang", "tok").agg(count(lit(1)).cast("long").as("c"))
+      val te = tok.filter(col("doc_id") % 10 === 0)
+        .groupBy("doc_id", "tok").agg(count(lit(1)).cast("long").as("mult"))
+      val tev = te.join(tr.select("tok").distinct(), Seq("tok"), "left_semi")
+      // class grid: |langs| is bounded (~6), so the cls side broadcasts
+      val sc = tev.crossJoin(broadcast(cls.select("lang")))
+        .join(cnt, Seq("lang", "tok"), "left")
+        .groupBy("doc_id", "lang")
+        .agg(sum("mult").cast("long").as("m_doc"),
+          sum(col("mult") * lnMicro(coalesce(col("c"), lit(0L)) + lit(1L)))
+            .cast("long").as("ts"))
+      val tedoc = docs.filter(col("doc_id") % 10 === 0)
+        .select(col("doc_id"), col("lang").as("true_lang"))
+      val grid = tedoc
+        .crossJoin(broadcast(cls
+          .join(ctot, Seq("lang"), "left")
+          .crossJoin(voc).crossJoin(tot)))
+        .join(sc, Seq("doc_id", "lang"), "left")
+        .select(col("doc_id"), col("true_lang"), col("lang"),
+          (coalesce(col("ts"), lit(0L))
+            - coalesce(col("m_doc"), lit(0L))
+              * lnMicro(coalesce(col("tot_c"), lit(0L)) + col("v"))
+            + lnMicro(col("n_c")) - lnMicro(col("n_train"))).as("score"))
+      val wr = Window.partitionBy("doc_id")
+        .orderBy(col("score").desc, col("lang"))
+      grid.withColumn("rk", row_number().over(wr))
+        .filter(col("rk") === 1)
+        .groupBy(col("true_lang"), col("lang").as("pred_lang"))
+        .agg(count(lit(1)).cast("long").as("n_docs"))
+        .orderBy("true_lang", "pred_lang")
     }
   )
 }

@@ -248,7 +248,7 @@ object MultimodalQueries {
   private def stageBinaryFiles(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     val sf = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = s"/root/repo/target/binfile-stage/docs_$sf"
+    val dir = s"${graft.GraftSession.scratchRoot}/binfile-stage/docs_$sf"
     val marker = new java.io.File(dir, "_STAGED")
     val fp = CorpusQueries.sourceFingerprint(s"$d/documents.parquet")
     val stale = !marker.exists() ||

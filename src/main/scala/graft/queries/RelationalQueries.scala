@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.operators.{GlobalIds, Sampling}
 
 /** Reference-surface relational operators (SURVEY.md §2) re-expressed over the
   * driver corpus, each paired with its DuckDB oracle.
@@ -156,6 +157,55 @@ object RelationalQueries {
         .agg(sumMoney(col("value")))
         .na.fill(0.0)
         .orderBy("user_id")
+    },
+
+    // ── V2: top-k-with-OTHER pivot guard — v1's dynamic pivot collects
+    // the DISTINCT key set to the driver, which is only safe while the
+    // key domain is column-dimension-bounded; v2 is the cap that makes it
+    // safe on ANY domain: pivot columns = the top-3 event types by global
+    // count (total order: count desc, then name), everything else folds
+    // into 'other'. The collect is 3 rows BY CONSTRUCTION (the pivot-key
+    // class with a guaranteed bound). The wide pivot then unpivots back to
+    // long form so the oracle stays SF-general (pivot column NAMES are
+    // data-dependent; a long-form compare is the v1/p9 pair's device).
+    Q("v2_pivot_topk_other",
+      """WITH cnt AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n
+        |             FROM events GROUP BY 1),
+        |top AS (SELECT event_type FROM cnt ORDER BY n DESC, event_type LIMIT 3),
+        |mapped AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
+        |                           '%Y-%m-%d') AS day,
+        |             CASE WHEN event_type IN (SELECT event_type FROM top)
+        |                  THEN event_type ELSE 'other' END AS bucket
+        |           FROM events)
+        |SELECT day, bucket, CAST(count(*) AS BIGINT) AS n
+        |FROM mapped GROUP BY 1, 2 ORDER BY day, bucket""".stripMargin) { (s, d) =>
+      val ev = Tables.events(s, d)
+      // BOUNDED driver collect (3 rows by construction — the pivot-key
+      // class with a cap the data cannot exceed)
+      val top = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("event_type")).limit(3)
+        .collect().map(_.getString(0)).toSeq
+      // an event_type literally named 'other' must not yield a duplicate
+      // pivot column (its rows and the folded tail are the same bucket)
+      val buckets = (top :+ "other").distinct
+      val mapped = ev.select(
+        date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
+        when(col("event_type").isin(top: _*), col("event_type"))
+          .otherwise("other").as("bucket"))
+      val wide = mapped.groupBy("day").pivot("bucket", buckets).count()
+      // unpivot back to long form (p9's device) so the compare is
+      // SF-general; pivot NULLs (day × absent bucket) drop like the
+      // oracle's missing GROUP BY combinations. The pivot columns are
+      // rebound POSITIONALLY (toDF) before unpivoting — event types are
+      // data, and a name holding a quote/backtick must never reach a
+      // parsed SQL fragment
+      val safe = wide.toDF("day" +: buckets.indices.map(i => s"b$i"): _*)
+      safe.select(col("day"), explode(array(buckets.indices.map(i =>
+          struct(lit(buckets(i)).as("bucket"), col(s"b$i").as("n"))): _*)).as("x"))
+        .filter(col("x.n").isNotNull)
+        .select(col("day"), col("x.bucket").as("bucket"),
+          col("x.n").cast("long").as("n"))
+        .orderBy("day", "bucket")
     },
 
     // ── P2/P6/P7: JSON flatten + cast (main.py:359-393; resp.json parse) ───
@@ -1193,6 +1243,57 @@ object RelationalQueries {
         .orderBy("day")
     },
 
+    // ── MV2: incremental JOIN-view maintenance — the delta rule
+    // Δ(A⋈B) = A⋈ΔB when only B changed, demonstrated on the
+    // per-customer revenue view over lineitem⋈orders: the latest order
+    // day is "today's delta", history is the base. The base side pays
+    // the one honest fact-fact keyed shuffle; the DELTA side joins by
+    // broadcast (a day's orders vs full history — the whole point of
+    // incremental refresh), and the two partial views merge by
+    // re-aggregation at customer grain (exact 4dp integer revenue, the
+    // tq5/j1 contract, so partial ⊕ partial == full recompute EXACTLY).
+    // The oracle IS the full recompute — equality is the correctness of
+    // the delta rule itself. Refresh cost at 100 TB: broadcast probe +
+    // |view| merge; never a second history shuffle.
+    Q("mv2_join_delta",
+      """WITH mx AS (SELECT max(o_orderdate) AS d0 FROM orders)
+        |SELECT o.o_custkey AS custkey, CAST(count(*) AS BIGINT) AS n_lines,
+        |       CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
+        |                * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS BIGINT) AS rev_c4
+        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
+      val li = Tables.lineitem(s, d).select(col("l_orderkey"),
+        (expr("cast(round(l_extendedprice * 100) as bigint)")
+          * (lit(100L) - expr("cast(round(l_discount * 100) as bigint)"))).as("r4"))
+      val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
+        col("o_orderdate"))
+      val mx = o.agg(max("o_orderdate").as("d0"))
+      // base view: history (all but the delta day) — the keyed fact-fact
+      // join an incremental pipeline computed YESTERDAY and persisted
+      val base = li.join(o.crossJoin(broadcast(mx))
+          .filter(col("o_orderdate") < col("d0"))
+          .select("o_orderkey", "o_custkey"),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy("o_custkey")
+        .agg(count(lit(1)).cast("long").as("n_lines"),
+          sum(col("r4").cast("decimal(38,0)")).as("rev"))
+      // delta view: today's order slice joins BROADCAST — the fact side
+      // probes a day-sized build, no second history shuffle
+      val delta = li.join(broadcast(o.crossJoin(broadcast(mx))
+          .filter(col("o_orderdate") === col("d0"))
+          .select("o_orderkey", "o_custkey")),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy("o_custkey")
+        .agg(count(lit(1)).cast("long").as("n_lines"),
+          sum(col("r4").cast("decimal(38,0)")).as("rev"))
+      base.unionByName(delta)
+        .groupBy("o_custkey")
+        .agg(sum("n_lines").cast("long").as("n_lines"),
+          sum("rev").cast("long").as("rev_c4"))
+        .select(col("o_custkey").as("custkey"), col("n_lines"), col("rev_c4"))
+        .orderBy("custkey")
+    },
+
     // ── AD1: anomaly flagging on the daily event rollup — trailing-7-day
     // mean/stddev (current day excluded), 3σ exceedance flag: the
     // monitoring health-check (reference A4) upgraded from fixed
@@ -1271,34 +1372,6 @@ object RelationalQueries {
         .unionByName(stage(p, "v3_purchase")).orderBy("stage")
     },
 
-    // ── GR1: PageRank (graft.graph.PageRank) over the customer↔supplier
-    // trade graph (distinct pairs through orders×lineitem, symmetrized so
-    // no node dangles; supplier ids offset to a disjoint range). 3 Lloyd-
-    // style rounds of iterated joins, per-round rounding for cross-engine
-    // determinism; oracle = the same rounds unrolled as materialized CTEs.
-    Q("gr1_pagerank",
-      graft.graph.PageRank.unrolledSql(
-        """WITH e0 AS MATERIALIZED (
-          |  SELECT DISTINCT CAST(2 * o_custkey AS BIGINT) AS c,
-          |                  CAST(2 * l_suppkey + 1 AS BIGINT) AS s
-          |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-          |ed AS MATERIALIZED (SELECT c AS src, s AS dst FROM e0 UNION SELECT s, c FROM e0)""".stripMargin,
-        iters = 3, topK = 20)) { (s, d) =>
-      // parity-disjoint node ids (customer = 2k, supplier = 2k+1): a fixed
-      // additive offset collides once custkey reaches it (sf >= ~6.7)
-      val e0 = orders(s, d)
-        .join(lineitem(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).cast("long").as("c"),
-          (col("l_suppkey") * 2 + 1).cast("long").as("s"))
-        .distinct()
-      // the two directions are disjoint (c even, s odd), so plain union
-      // equals SQL UNION's dedup here
-      val ed = e0.select(col("c").as("src"), col("s").as("dst"))
-        .union(e0.select(col("s").as("src"), col("c").as("dst")))
-      graft.graph.PageRank.run(ed, iters = 3)
-        .orderBy(col("pr").desc, col("node")).limit(20)
-    },
-
     // ── J11: the SAME interval-join shape written as the NATURAL theta
     // join — no manual binning, no equi key. graft.plans.RangeJoinRewrite
     // (injected via GraftExtensions) rewrites it to the binned equi-join
@@ -1358,6 +1431,174 @@ object RelationalQueries {
         .select("l_orderkey", "revenue", "odate")
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
+    },
+
+    // ── CD1: daily new customers + cumulative distinct customers — the
+    // growth-accounting curve ("how many distinct customers ever, by
+    // acquisition day"), which a naive per-day count(DISTINCT) gets wrong
+    // (it counts actives, not news) and a running distinct over the raw
+    // stream cannot do without per-day state. Anchored on orders/o_custkey
+    // (a 562-day arrival curve on this corpus; the events table's 150
+    // users all arrive within 2 days — degenerate, the tq11 lesson).
+    // First-order day per customer is ONE keyed agg; new-customer counts
+    // and the running total live on the |days| table (bounded window,
+    // ks1's contract).
+    Q("cd1_cumulative_distinct",
+      """WITH f AS (SELECT o_custkey,
+        |             min(strftime(date_trunc('day', CAST(o_orderdate AS TIMESTAMP)),
+        |                          '%Y-%m-%d')) AS day
+        |           FROM orders GROUP BY 1),
+        |d AS (SELECT day, CAST(count(*) AS BIGINT) AS n_new FROM f GROUP BY 1)
+        |SELECT day, n_new,
+        |       CAST(sum(n_new) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_customers
+        |FROM d ORDER BY day""".stripMargin) { (s, d) =>
+      val f = Tables.orders(s, d)
+        .groupBy("o_custkey")
+        .agg(min(date_format(date_trunc("day", col("o_orderdate")), "yyyy-MM-dd"))
+          .as("day"))
+      val dd = f.groupBy("day").agg(count(lit(1)).cast("long").as("n_new"))
+      val w = Window.orderBy("day")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      dd.withColumn("cum_customers", sum("n_new").over(w).cast("long"))
+        .orderBy("day")
+    },
+
+    // ── PT1: top user journeys — each user's first three event types in
+    // time order, counted: mk1's one-step transitions generalized to the
+    // 3-step paths product analytics reads ("view > click > purchase" vs
+    // "view > view > view"). The rank window is KEYED per user (w2's
+    // class — scale-safe at any user count); ties on ts break by
+    // event_id (total order); the path table is bounded by
+    // |event_type|³. concat_ws skips the NULLs of shorter journeys
+    // identically on both engines; top-20 under (n_users desc, path).
+    Q("pt1_top_paths",
+      """WITH r AS (SELECT user_id, event_type,
+        |             row_number() OVER (PARTITION BY user_id
+        |                                ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rk
+        |           FROM events),
+        |p AS (SELECT user_id,
+        |        concat_ws('>', max(CASE WHEN rk = 1 THEN event_type END),
+        |                       max(CASE WHEN rk = 2 THEN event_type END),
+        |                       max(CASE WHEN rk = 3 THEN event_type END)) AS path
+        |      FROM r WHERE rk <= 3 GROUP BY 1)
+        |SELECT path, CAST(count(*) AS BIGINT) AS n_users
+        |FROM p GROUP BY 1 ORDER BY n_users DESC, path LIMIT 20""".stripMargin) { (s, d) =>
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      val r = Tables.events(s, d)
+        .select(col("user_id"), col("event_type"),
+          row_number().over(w).as("rk"))
+        .filter(col("rk") <= 3)
+      r.groupBy("user_id")
+        .agg(concat_ws(">",
+          max(when(col("rk") === 1, col("event_type"))),
+          max(when(col("rk") === 2, col("event_type"))),
+          max(when(col("rk") === 3, col("event_type")))).as("path"))
+        .groupBy("path").agg(count(lit(1)).cast("long").as("n_users"))
+        .orderBy(col("n_users").desc, col("path")).limit(20)
+    },
+
+    // ── RP1: range-split planner — the balanced repartitionByRange
+    // boundaries, computed IN-PLAN: Spark's range partitioner samples to
+    // the DRIVER and is boundary-nondeterministic run to run; rp1 derives
+    // 16 splits on l_orderkey from a DETERMINISTIC 2% md5 sample (sp1's
+    // device, pinned in the oracle), ranks the sampled keys with
+    // GlobalIds (range-repartition + O(P) prefix sum — no single-
+    // partition sort), picks boundary j at sample rank (j·n) div 16
+    // against a 1-row broadcast, and then measures ACHIEVED balance with
+    // one fact scan against the 16-row broadcast interval table — the
+    // report that tells you whether these splits would spill before you
+    // launch the real job. share in ppm; an empty split keeps its row
+    // with n_rows = 0 (intervals LEFT JOIN counts).
+    Q("rp1_range_splits", {
+      val bucket = (c: String) =>
+        s"(strpos('0123456789abcdef', substr(md5(CAST($c AS VARCHAR)), 1, 1)) - 1) * 4096" +
+          s" + (strpos('0123456789abcdef', substr(md5(CAST($c AS VARCHAR)), 2, 1)) - 1) * 256" +
+          s" + (strpos('0123456789abcdef', substr(md5(CAST($c AS VARCHAR)), 3, 1)) - 1) * 16" +
+          s" + (strpos('0123456789abcdef', substr(md5(CAST($c AS VARCHAR)), 4, 1)) - 1)"
+      s"""WITH samp AS (SELECT DISTINCT l_orderkey AS k FROM lineitem
+         |              WHERE ${bucket("l_orderkey")} < 1310),
+         |rk AS (SELECT k, row_number() OVER (ORDER BY k) - 1 AS r FROM samp),
+         |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM samp),
+         |b AS (SELECT j.range AS j, rk.k
+         |      FROM range(1, 16) j JOIN n ON true
+         |      JOIN rk ON rk.r = (j.range * n.n) // 16),
+         |iv AS (SELECT j, k AS lo, lead(k) OVER (ORDER BY j) AS hi FROM b),
+         |iv0 AS (SELECT CAST(0 AS BIGINT) AS split_no, CAST(NULL AS BIGINT) AS lo,
+         |               (SELECT min(k) FROM b WHERE j = 1) AS hi
+         |        UNION ALL SELECT j, lo, hi FROM iv),
+         |cts AS (SELECT i.split_no, CAST(count(l.l_orderkey) AS BIGINT) AS n_rows
+         |        FROM iv0 i LEFT JOIN lineitem l
+         |          ON (i.lo IS NULL OR l.l_orderkey >= i.lo)
+         |         AND (i.hi IS NULL OR l.l_orderkey < i.hi)
+         |        GROUP BY 1),
+         |tot AS (SELECT CAST(count(*) AS BIGINT) AS nt FROM lineitem)
+         |SELECT i.split_no, i.lo, i.hi, c.n_rows,
+         |       CASE WHEN tot.nt = 0 THEN NULL
+         |            ELSE CAST((CAST(c.n_rows AS HUGEINT) * 1000000) // tot.nt AS BIGINT) END AS share_ppm
+         |FROM iv0 i JOIN cts c USING (split_no) CROSS JOIN tot
+         |ORDER BY split_no""".stripMargin
+    }) { (s, d) =>
+      val li = Tables.lineitem(s, d)
+      val samp = Sampling.uniform(li.select(col("l_orderkey").as("k")),
+        col("k"), 0.02).distinct()
+      val ranked = GlobalIds.withGlobalId(samp, "r", col("k"))
+      val n = samp.agg(count(lit(1)).cast("long").as("n"))
+      val js = s.range(1, 16).select(col("id").as("j"))
+      val b = ranked.crossJoin(broadcast(n))
+        .join(broadcast(js), col("r") === expr("(j * n) div 16"))
+        .select(col("j"), col("k"))
+      val wj = Window.orderBy("j")
+      val iv = b.withColumn("hi", lead("k", 1).over(wj))
+        .select(col("j").as("split_no"), col("k").as("lo"), col("hi"))
+      val first = b.agg(min(when(col("j") === 1, col("k"))).as("hi"))
+        .select(lit(0L).as("split_no"), lit(null).cast("long").as("lo"), col("hi"))
+      val iv0 = first.unionByName(iv)
+      // INNER fact⋈broadcast(intervals), empties restored by a 16×16 left
+      // join AFTER the aggregate: a LEFT join FROM the 16-row side would
+      // force Spark to broadcast the FACT (the build side of a left-outer
+      // BNLJ is the right side) — a 4 GiB broadcast at sf10, caught by the
+      // scale bench
+      val hits = li.select(col("l_orderkey"))
+        .join(broadcast(iv0),
+          (col("lo").isNull || col("l_orderkey") >= col("lo"))
+            && (col("hi").isNull || col("l_orderkey") < col("hi")))
+        .groupBy("split_no")
+        .agg(count(lit(1)).cast("long").as("n_rows"))
+      val cts = iv0.join(hits, Seq("split_no"), "left")
+        .select(col("split_no"), col("lo"), col("hi"),
+          coalesce(col("n_rows"), lit(0L)).as("n_rows"))
+      val tot = li.agg(count(lit(1)).cast("long").as("nt"))
+      cts.crossJoin(broadcast(tot))
+        .select(col("split_no"), col("lo"), col("hi"), col("n_rows"),
+          when(col("nt") === 0L, lit(null).cast("long"))
+            .otherwise(expr("cast((cast(n_rows as decimal(38,0)) * 1000000) div nt as bigint)"))
+            .as("share_ppm"))
+        .orderBy("split_no")
+    },
+
+    // ── S6: bounded ordered LISTAGG — the string_agg/LISTAGG surface done
+    // scale-safely: the 10 alphabetically-first supplier names per nation,
+    // ranked in a KEYED window FIRST (w2's class) so the collect_list that
+    // follows holds ≤ 10 elements per group BY CONSTRUCTION (a bare
+    // collect_list caps state only by luck); the list sorts before
+    // concatenation so the string is order-deterministic whatever the
+    // merge order.
+    Q("s6_ordered_listagg",
+      """WITH r AS (SELECT s_nationkey, s_name,
+        |             row_number() OVER (PARTITION BY s_nationkey ORDER BY s_name, s_suppkey) AS rk
+        |           FROM supplier)
+        |SELECT s_nationkey AS nationkey, CAST(count(*) AS BIGINT) AS n_kept,
+        |       string_agg(s_name, ',' ORDER BY s_name) AS names_csv
+        |FROM r WHERE rk <= 10 GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
+      val wr = Window.partitionBy("s_nationkey")
+        .orderBy(col("s_name"), col("s_suppkey"))
+      Tables.supplier(s, d)
+        .withColumn("rk", row_number().over(wr))
+        .filter(col("rk") <= 10)
+        .groupBy(col("s_nationkey").as("nationkey"))
+        .agg(count(lit(1)).cast("long").as("n_kept"),
+          concat_ws(",", array_sort(collect_list(col("s_name")))).as("names_csv"))
+        .orderBy("nationkey")
     }
   )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
@@ -24,7 +24,6 @@ import graft.{Q, Tables}
 object SimilarityQueries {
 
   private[queries] def topkCos(s: SparkSession, d: String, sameLabelOnly: Boolean, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val corpus = Tables.embeddings(s, d)
     val queries = corpus.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"),
@@ -51,7 +50,7 @@ object SimilarityQueries {
     */
   private def stagePartitioned(s: SparkSession, d: String): String = {
     val sf = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = s"/root/repo/target/ivf-stage/emb_$sf"
+    val dir = s"${graft.GraftSession.scratchRoot}/ivf-stage/emb_$sf"
     if (!new java.io.File(dir, "_SUCCESS").exists()) {
       Tables.embeddings(s, d).write.mode("overwrite")
         .partitionBy("label").parquet(dir)
@@ -102,7 +101,6 @@ object SimilarityQueries {
     // at 100 TB this is the difference between scanning the corpus and
     // scanning nProbe/nList of it.
     Q("sim2b_ivf_partitioned", cosSql(sameLabelOnly = true, k = 5)) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val corpus = s.read.parquet(stagePartitioned(s, d))
       val queries = corpus.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("label").as("qlabel"),
@@ -586,6 +584,70 @@ object SimilarityQueries {
         .orderBy("qid", "dist_fp", "nid")
     },
 
+    // ── EMB9: binary quantization + Hamming shortlist + exact rerank —
+    // the 1-bit extreme of the compression ladder (emb1 int8 4×, emb7
+    // block fp8, emb2/3/4 PQ ~16-32×; emb9 is 64×: sign bits packed into
+    // two BIGINT words). Search = Hamming distance on signatures (XOR +
+    // popcount — pure integer, identical on both engines), overfetch a
+    // 32-candidate shortlist, then EXACT cosine rerank of only those
+    // (emb8's refine pattern) to the final top-3. 100 TB: the corpus
+    // scan reads 16 bytes/vector; raw floats are fetched by the
+    // (queries×32)-row broadcast semi-join, never scanned.
+    Q("emb9_binary_quant",
+      """WITH sig AS (SELECT vec_id,
+        |         CAST(sum(CASE WHEN r.range < 32 AND embedding[r.range+1] > 0
+        |                       THEN (CAST(1 AS BIGINT) << r.range) ELSE 0 END) AS BIGINT) AS lo,
+        |         CAST(sum(CASE WHEN r.range >= 32 AND embedding[r.range+1] > 0
+        |                       THEN (CAST(1 AS BIGINT) << (r.range - 32)) ELSE 0 END) AS BIGINT) AS hi
+        |       FROM embeddings, range(64) r GROUP BY 1),
+        |q AS (SELECT vec_id AS qid, lo AS qlo, hi AS qhi FROM sig WHERE vec_id < 10),
+        |h AS (SELECT q.qid, s.vec_id AS nid,
+        |        CAST(bit_count(xor(q.qlo, s.lo)) + bit_count(xor(q.qhi, s.hi)) AS BIGINT) AS ham
+        |      FROM q JOIN sig s ON s.vec_id <> q.qid),
+        |sl AS (SELECT qid, nid, ham,
+        |         row_number() OVER (PARTITION BY qid ORDER BY ham, nid) AS rn
+        |       FROM h),
+        |cand AS (SELECT qid, nid FROM sl WHERE rn <= 32),
+        |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[64]) AS ve,
+        |        sqrt(array_inner_product(CAST(embedding AS DOUBLE[64]),
+        |                                 CAST(embedding AS DOUBLE[64]))) AS nrm
+        |      FROM embeddings),
+        |sc AS (SELECT c.qid, c.nid,
+        |         round(array_inner_product(vq.ve, vn.ve) / (vq.nrm * vn.nrm), 4) AS cos_sim
+        |       FROM cand c JOIN v vq ON vq.vec_id = c.qid JOIN v vn ON vn.vec_id = c.nid),
+        |rr AS (SELECT qid, nid, cos_sim,
+        |         row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rn
+        |       FROM sc)
+        |SELECT qid, nid, cos_sim FROM rr WHERE rn <= 3
+        |ORDER BY qid, cos_sim DESC, nid""".stripMargin) { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      val sig = emb.select(col("vec_id"),
+        expr("aggregate(transform(sequence(0, 31)," +
+          " i -> IF(embedding[i] > 0F, shiftleft(1L, i), 0L)), 0L, (a, x) -> a + x)")
+          .as("lo"),
+        expr("aggregate(transform(sequence(32, 63)," +
+          " i -> IF(embedding[i] > 0F, shiftleft(1L, i - 32), 0L)), 0L, (a, x) -> a + x)")
+          .as("hi"))
+      val q = sig.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("qid"), col("lo").as("qlo"), col("hi").as("qhi"))
+      val h = sig.join(broadcast(q), col("vec_id") =!= col("qid"))
+        .select(col("qid"), col("vec_id").as("nid"),
+          (expr("bit_count(qlo ^ lo)") + expr("bit_count(qhi ^ hi)"))
+            .cast("long").as("ham"))
+      val wq = Window.partitionBy("qid").orderBy(col("ham"), col("nid"))
+      val cand = h.withColumn("rn", row_number().over(wq))
+        .filter(col("rn") <= 32).select("qid", "nid")
+      val sc = cand
+        .join(emb.select(col("vec_id").as("qid"), col("embedding").as("qe")), "qid")
+        .join(emb.select(col("vec_id").as("nid"), col("embedding").as("ne")), "nid")
+        .select(col("qid"), col("nid"),
+          round(expr("cosine_sim(qe, ne)"), 4).as("cos_sim"))
+      val wr = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid"))
+      sc.withColumn("rn", row_number().over(wr)).filter(col("rn") <= 3)
+        .select("qid", "nid", "cos_sim")
+        .orderBy(col("qid"), col("cos_sim").desc, col("nid"))
+    },
+
     // M-step: mean vector per cluster, emitted LONG-form (label, dim, c) so
     // the compare stays scalar. Explode-to-dims + groupBy(label, dim) is
     // one shuffle with map-side partials — at 100 TB this is how you
@@ -652,6 +714,66 @@ object SimilarityQueries {
         .orderBy("cid", "dim")
     },
 
+    // ── KM3: farthest-point (k-center / maxmin) k-means seeding — the
+    // deterministic init km1/km2 assumed as given (their codebooks are
+    // "vec_id < k" by convention; km3 is the principled seeding: each new
+    // centroid is the point FARTHEST from the chosen set, the standard
+    // 2-approximation to k-center and the deterministic cousin of
+    // kmeans++). Three rounds, each ONE corpus scan against the ≤2-row
+    // broadcast of chosen vectors; distances are the km1 family's
+    // round(Σ(Δ²), 4) doubles; argmax ties break to the smallest vec_id
+    // via TakeOrdered(1) on (dist desc, vec_id). Seed 1 is the minimum
+    // vec_id (1-row broadcast anchor).
+    // 100 TB: no driver-side vectors, no global sort.
+    Q("km3_farthest_init",
+      """WITH m AS (SELECT min(vec_id) AS c1 FROM embeddings),
+        |p1 AS (SELECT e.vec_id, CAST(e.embedding AS DOUBLE[64]) AS v
+        |       FROM embeddings e JOIN m ON e.vec_id = m.c1),
+        |d1 AS (SELECT e.vec_id,
+        |         round(sum((CAST(e.embedding[r.range+1] AS DOUBLE) - p1.v[r.range+1])
+        |                 * (CAST(e.embedding[r.range+1] AS DOUBLE) - p1.v[r.range+1])), 4) AS dist
+        |       FROM embeddings e, p1, range(64) r GROUP BY 1),
+        |c2 AS (SELECT vec_id, dist FROM d1 ORDER BY dist DESC, vec_id LIMIT 1),
+        |ch AS (SELECT m.c1 AS vec_id FROM m UNION ALL SELECT vec_id FROM c2),
+        |d2 AS (SELECT e.vec_id, min(dd.dist) AS dist
+        |       FROM embeddings e,
+        |            LATERAL (SELECT round(sum((CAST(e.embedding[r.range+1] AS DOUBLE)
+        |                              - CAST(c.embedding[r.range+1] AS DOUBLE))
+        |                            * (CAST(e.embedding[r.range+1] AS DOUBLE)
+        |                              - CAST(c.embedding[r.range+1] AS DOUBLE))), 4) AS dist
+        |                     FROM ch JOIN embeddings c ON c.vec_id = ch.vec_id, range(64) r
+        |                     GROUP BY ch.vec_id) dd
+        |       GROUP BY 1),
+        |c3 AS (SELECT vec_id, dist FROM d2 ORDER BY dist DESC, vec_id LIMIT 1)
+        |SELECT CAST(1 AS BIGINT) AS round, m.c1 AS vec_id, CAST(NULL AS DOUBLE) AS dist FROM m
+        |UNION ALL SELECT 2, vec_id, dist FROM c2
+        |UNION ALL SELECT 3, vec_id, dist FROM c3
+        |ORDER BY round""".stripMargin) { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      def sq(a: Column, b: Column): Column =
+        round(expr("aggregate(zip_with(cast(va as array<double>), cast(vb as array<double>)," +
+          " (x, y) -> (x - y) * (x - y)), 0d, (acc, z) -> acc + z)"), 4)
+      val m = emb.agg(min("vec_id").as("c1"))
+      val p1 = emb.join(broadcast(m), col("vec_id") === col("c1"))
+        .select(col("vec_id").as("cid"), col("embedding").as("vb"))
+      def minDist(chosen: DataFrame): DataFrame = emb
+        .select(col("vec_id"), col("embedding").as("va"))
+        .crossJoin(broadcast(chosen))
+        .select(col("vec_id"), sq(col("va"), col("vb")).as("dist"))
+        .groupBy("vec_id").agg(min("dist").as("dist"))
+      val c2 = minDist(p1).orderBy(col("dist").desc, col("vec_id")).limit(1)
+      val ch2 = p1.select("cid")
+        .unionAll(c2.select(col("vec_id").as("cid")))
+        .join(emb, col("cid") === emb("vec_id"))
+        .select(col("cid"), col("embedding").as("vb"))
+      val c3 = minDist(ch2).orderBy(col("dist").desc, col("vec_id")).limit(1)
+      m.select(lit(1L).as("round"), col("c1").as("vec_id"),
+          lit(null).cast("double").as("dist"))
+        .unionAll(c2.select(lit(2L).as("round"), col("vec_id"), col("dist")))
+        .unionAll(c3.select(lit(3L).as("round"), col("vec_id"), col("dist")))
+        .orderBy("round")
+    },
+
     // ── SIM3: signed-random-projection LSH ANN (multi-probe). The neighbor
     // SETS are approximate by design (the seeded hyperplanes aren't
     // expressible in the oracle) — but, same keys-exact pattern as
@@ -713,7 +835,6 @@ object SimilarityQueries {
         |SELECT cid, count(*) AS n,
         |       round(sum(sppm) * 1.0 / (count(*) * 1000000.0), 6) AS mean_s
         |FROM sv GROUP BY cid ORDER BY cid""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val cents = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -860,7 +981,6 @@ object SimilarityQueries {
          |       JOIN e eb ON eb.vec_id = j.negative
          |ORDER BY anchor""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val p = graft.operators.EpochShuffle.withPosition(
         emb.select("vec_id"), col("vec_id"), "ng0", "r")
@@ -876,6 +996,34 @@ object SimilarityQueries {
         .select(col("anchor"), col("negative"),
           round(expr("cosine_sim(ea, eb)"), 4).as("cos_sim"))
         .orderBy("anchor")
+    },
+
+    // ── ANN2: IVF recall audit — per query vector, recall@5 of the
+    // single-probe IVF search (sim2's same-cluster plan) against the
+    // exact global top-5 (sim1's brute-force plan): the published metric
+    // of every ANN index. Both top-5 sets use the pack's deterministic
+    // ranking (rounded cosine, id tie-break) so the intersection is
+    // exact; recall is integer ppm. Plan: sim1's broadcast-queries scan ×
+    // sim2's pruned scan, then a |queries|·k-row join — the eval is as
+    // cheap as the searches it audits.
+    Q("ann2_recall_eval",
+      s"""WITH ex AS (${SimilarityQueries.cosSql(sameLabelOnly = false, k = 5)}),
+         |iv AS (${SimilarityQueries.cosSql(sameLabelOnly = true, k = 5)}),
+         |hit AS (SELECT ex.qid,
+         |               CAST(count(iv.nid) AS BIGINT) AS n_hit
+         |        FROM ex LEFT JOIN iv ON iv.qid = ex.qid AND iv.nid = ex.nid
+         |        GROUP BY 1)
+         |SELECT qid, n_hit, (n_hit * 1000000) // 5 AS recall_ppm
+         |FROM hit ORDER BY qid""".stripMargin) { (s, d) =>
+      val ex = SimilarityQueries.topkCos(s, d, sameLabelOnly = false, k = 5)
+        .select(col("qid"), col("nid"))
+      val iv = SimilarityQueries.topkCos(s, d, sameLabelOnly = true, k = 5)
+        .select(col("qid").as("iqid"), col("nid").as("inid"))
+      ex.join(iv, col("iqid") === col("qid") && col("inid") === col("nid"), "left")
+        .groupBy("qid").agg(count(col("inid")).as("n_hit"))
+        .select(col("qid"), col("n_hit"),
+          expr("(n_hit * 1000000L) div 5").as("recall_ppm"))
+        .orderBy("qid")
     }
   )
 }

@@ -4,12 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.operators.{GlobalIds, Sampling}
+import QueryHelpers.{lnMicro, lnMicroSql, ws, wsSql}
 
-/** Round-10 extensions, third wave: the distribution-testing and corpus-
-  * statistics operators of a monitoring/curation pipeline — two-sample
-  * Kolmogorov–Smirnov drift, categorical mutual information, Good–Turing
-  * unseen-mass estimation, Zipf-slope fitting, a Kaplan–Meier-input life
-  * table, and a TPC-H Q8-style market-share join.
+/** The distribution-testing and corpus-statistics operators of a
+  * monitoring/curation pipeline — two-sample Kolmogorov–Smirnov drift,
+  * categorical mutual information, Good–Turing unseen-mass estimation,
+  * Zipf-slope fitting, a Kaplan–Meier-input life table, a TPC-H Q8-style
+  * market-share join, robust location and agreement (tm1, ka1),
+  * resampling inference (ci1, pm1), and variance reduction and
+  * normalization (cuped1, qn1).
   *
   * Determinism contracts (the ent1/ols1 class):
   *  - every cross-engine aggregate is an exact integer (counts, integer
@@ -44,18 +48,6 @@ import graft.{Q, Tables}
   *    plan survives 1000 executors unchanged.
   */
 object StatQueries {
-
-  private val ws = "[ \\t\\n\\f\\r]+"
-  private val wsSql = """[ \t\n\f\r]+"""
-
-  /** round(ln(c)·1e6) as BIGINT — both engines evaluate ln on the same
-    * exact integer (t11's contract; the 1-ulp .5-boundary risk is the
-    * documented dsir1 class).
-    */
-  private def lnMicro(c: Column): Column =
-    round(log(c.cast("double")) * 1e6).cast("long")
-  private def lnMicroSql(e: String): String =
-    s"CAST(round(ln($e) * 1e6) AS BIGINT)"
 
   private def lnMilli(c: Column): Column =
     round(log(c.cast("double")) * 1e3).cast("long")
@@ -1129,6 +1121,403 @@ object StatQueries {
             .otherwise(expr("cast(cast(sign(n_conc - n_disc) as bigint)" +
               " * ((abs(n_conc - n_disc) * 1000000) div n_pairs) as bigint)"))
             .as("tau_a_ppm"))
+    },
+
+    // ── TM1: 10% two-sided trimmed mean of document length per language —
+    // the robust location estimate os1's MAD flags can't give (os1 says
+    // WHICH rows are outliers; tm1 says what the center is once they're
+    // gone). EXACT type-1 order statistics without any per-row rank: with
+    // k = n div 10 trimmed each side, a distinct value v with inclusive
+    // cumulative count cum and multiplicity cnt keeps
+    // max(0, min(cum, n−k) − max(cum−cnt, k)) copies — pure integer
+    // arithmetic over the ECDF table (qq1's device, made per-group).
+    // kept_n = n − 2k ≥ ceil(0.8n) ≥ 1 for every non-empty group, so the
+    // terminal division never sees 0. v·kc rides decimal/HUGEINT.
+    // 100 TB: ONE keyed agg → |lang|×|distinct n_chars| rows; both windows
+    // partition by lang over that bounded table (ks1's contract).
+    Q("tm1_trimmed_mean",
+      """WITH g AS (SELECT lang, n_chars AS v, CAST(count(*) AS BIGINT) AS cnt
+        |           FROM documents GROUP BY 1, 2),
+        |c AS (SELECT lang, v, cnt,
+        |        CAST(sum(cnt) OVER (PARTITION BY lang ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
+        |        CAST(sum(cnt) OVER (PARTITION BY lang) AS BIGINT) AS n
+        |      FROM g),
+        |k AS (SELECT lang, v, cnt, cum, n, n // 10 AS k FROM c),
+        |kept AS (SELECT lang, n, k, n - 2 * k AS kept_n, v,
+        |           greatest(CAST(0 AS BIGINT),
+        |                    least(cum, n - k) - greatest(cum - cnt, k)) AS kc
+        |         FROM k)
+        |SELECT lang, max(n) AS n_docs, max(k) AS k_trim, max(kept_n) AS kept_n,
+        |       CAST(sum(CAST(v AS HUGEINT) * kc) AS BIGINT) AS trimmed_sum,
+        |       CAST((sum(CAST(v AS HUGEINT) * kc) * 1000) // max(kept_n) AS BIGINT) AS tmean_milli
+        |FROM kept GROUP BY lang ORDER BY lang""".stripMargin) { (s, d) =>
+      val g = Tables.documents(s, d)
+        .groupBy(col("lang"), col("n_chars").as("v"))
+        .agg(count(lit(1)).cast("long").as("cnt"))
+      val wc = Window.partitionBy("lang").orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val wn = Window.partitionBy("lang")
+      g.withColumn("cum", sum("cnt").over(wc).cast("long"))
+        .withColumn("n", sum("cnt").over(wn).cast("long"))
+        .withColumn("k", expr("n div 10"))
+        .select(col("lang"), col("n"), col("k"),
+          (col("n") - lit(2L) * col("k")).as("kept_n"), col("v"),
+          greatest(lit(0L),
+            least(col("cum"), col("n") - col("k"))
+              - greatest(col("cum") - col("cnt"), col("k"))).as("kc"))
+        .groupBy("lang")
+        .agg(max("n").as("n_docs"), max("k").as("k_trim"),
+          max("kept_n").as("kept_n"),
+          sum(expr("cast(v as decimal(38,0)) * kc")).as("tsum"))
+        .select(col("lang"), col("n_docs"), col("k_trim"), col("kept_n"),
+          col("tsum").cast("long").as("trimmed_sum"),
+          expr("cast((tsum * 1000) div kept_n as bigint)").as("tmean_milli"))
+        .orderBy("lang")
+    },
+
+    // ── KA1: Cohen's kappa between two heuristic quality annotators —
+    // the agreement readout every labeling loop needs before trusting a
+    // rule (or a model) as ground truth. Annotator A: n_chars ≥ 500;
+    // annotator B: ≥ 80 whitespace tokens (t1's exact token device, so
+    // the raters disagree exactly where short-token/long-char docs live).
+    // kappa = (po − pe)/(1 − pe) multiplied through: num = n·(n11+n00) −
+    // (a1·b1 + a0·b0), den = n² − (a1·b1 + a0·b0) — every term an exact
+    // integer in decimal(38,0)/HUGEINT; num can be negative
+    // (worse-than-chance agreement) so the ppm travels sign·(abs div d);
+    // den = 0 ⟺ a rater is constant (pe = 1) → NULL symmetrically.
+    // 100 TB: ONE conditional-agg corpus scan to four cells.
+    Q("ka1_cohens_kappa",
+      """WITH r AS (SELECT
+        |             CAST(CASE WHEN n_chars >= 500 THEN 1 ELSE 0 END AS BIGINT) AS a,
+        |             CAST(CASE WHEN len(regexp_split_to_array(trim(text), '\s+')) >= 80 THEN 1 ELSE 0 END AS BIGINT) AS b
+        |           FROM documents),
+        |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |        CAST(sum(a * b) AS BIGINT) AS n11,
+        |        CAST(sum(a * (1 - b)) AS BIGINT) AS n10,
+        |        CAST(sum((1 - a) * b) AS BIGINT) AS n01,
+        |        CAST(sum((1 - a) * (1 - b)) AS BIGINT) AS n00
+        |      FROM r),
+        |f AS (SELECT n, n11, n10, n01, n00,
+        |        CAST(n AS HUGEINT) * (n11 + n00)
+        |          - (CAST(n11 + n10 AS HUGEINT) * (n11 + n01)
+        |             + CAST(n01 + n00 AS HUGEINT) * (n10 + n00)) AS num,
+        |        CAST(n AS HUGEINT) * n
+        |          - (CAST(n11 + n10 AS HUGEINT) * (n11 + n01)
+        |             + CAST(n01 + n00 AS HUGEINT) * (n10 + n00)) AS den
+        |      FROM m)
+        |SELECT n AS n_docs, n11, n10, n01, n00,
+        |       CASE WHEN den = 0 THEN NULL
+        |            ELSE CAST(CAST(sign(num) AS BIGINT)
+        |                   * ((abs(num) * 1000000) // den) AS BIGINT) END AS kappa_ppm
+        |FROM f""".stripMargin) { (s, d) =>
+      val r = Tables.documents(s, d).select(
+        when(col("n_chars") >= 500L, 1L).otherwise(0L).as("a"),
+        when(size(split(trim(col("text")), "\\s+")) >= 80, 1L).otherwise(0L).as("b"))
+      r.agg(count(lit(1)).cast("long").as("n"),
+          sum(col("a") * col("b")).cast("long").as("n11"),
+          sum(col("a") * (lit(1L) - col("b"))).cast("long").as("n10"),
+          sum((lit(1L) - col("a")) * col("b")).cast("long").as("n01"),
+          sum((lit(1L) - col("a")) * (lit(1L) - col("b"))).cast("long").as("n00"))
+        .withColumn("num",
+          expr("cast(n as decimal(38,0)) * (n11 + n00)" +
+            " - (cast(n11 + n10 as decimal(38,0)) * (n11 + n01)" +
+            "    + cast(n01 + n00 as decimal(38,0)) * (n10 + n00))"))
+        .withColumn("den",
+          expr("cast(n as decimal(38,0)) * n" +
+            " - (cast(n11 + n10 as decimal(38,0)) * (n11 + n01)" +
+            "    + cast(n01 + n00 as decimal(38,0)) * (n10 + n00))"))
+        .select(col("n").as("n_docs"), col("n11"), col("n10"), col("n01"), col("n00"),
+          when(col("den") === 0, lit(null).cast("long"))
+            .otherwise(expr("cast(cast(sign(num) as bigint)" +
+              " * ((abs(num) * 1000000) div den) as bigint)"))
+            .as("kappa_ppm"))
+    },
+
+    // ── CI1: grouped-jackknife error bars for the mean document length —
+    // the standard error a corpus metric needs before anyone reads a
+    // day-over-day delta as real: 32 deterministic md5 buckets (sp1's
+    // device, pinned in the oracle), delete-one-bucket means in exact
+    // integer micro (per-bucket truncating division — mi1's per-cell
+    // class), SE = sqrt((B−1)/B · Σ(mean_b − M)²) with the ONE terminal
+    // sqrt as wt1's single-double-expression device (round(·,4)). Fewer
+    // than 2 non-empty buckets → NULL symmetrically.
+    // 100 TB: one keyed agg to ≤32 rows; everything after is arithmetic
+    // on that bounded table.
+    Q("ci1_jackknife", {
+      val bucket = (c: String) =>
+        s"((strpos('0123456789abcdef', substr(md5(CAST($c AS VARCHAR)), 1, 1)) - 1) * 4096" +
+          s" + (strpos('0123456789abcdef', substr(md5(CAST($c AS VARCHAR)), 2, 1)) - 1) * 256" +
+          s" + (strpos('0123456789abcdef', substr(md5(CAST($c AS VARCHAR)), 3, 1)) - 1) * 16" +
+          s" + (strpos('0123456789abcdef', substr(md5(CAST($c AS VARCHAR)), 4, 1)) - 1)) // 2048"
+      s"""WITH b AS (SELECT ${bucket("doc_id")} AS bkt,
+         |             CAST(sum(n_chars) AS BIGINT) AS s_b,
+         |             CAST(count(*) AS BIGINT) AS n_b
+         |           FROM documents GROUP BY 1),
+         |t AS (SELECT CAST(sum(s_b) AS BIGINT) AS s, CAST(sum(n_b) AS BIGINT) AS n,
+         |             CAST(count(*) AS BIGINT) AS nb FROM b),
+         |loo AS (SELECT b.bkt,
+         |          CAST((CAST(t.s - b.s_b AS HUGEINT) * 1000000) // (t.n - b.n_b) AS BIGINT) AS m_b
+         |        FROM b CROSS JOIN t WHERE t.n - b.n_b > 0),
+         |mm AS (SELECT CAST(count(*) AS BIGINT) AS be,
+         |              CAST(sum(m_b) // count(*) AS BIGINT) AS m FROM loo),
+         |v AS (SELECT mm.be, mm.m,
+         |        sum(CAST(loo.m_b - mm.m AS HUGEINT) * (loo.m_b - mm.m)) AS ss
+         |      FROM loo CROSS JOIN mm GROUP BY 1, 2)
+         |SELECT t.n AS n_docs, v.be AS n_buckets,
+         |       CAST((CAST(t.s AS HUGEINT) * 1000000) // t.n AS BIGINT) AS mean_micro,
+         |       CASE WHEN v.be < 2 THEN NULL
+         |            ELSE round(sqrt((v.be - 1.0) / v.be * CAST(v.ss AS DOUBLE)), 4) END AS se_micro
+         |FROM v CROSS JOIN t""".stripMargin
+    }) { (s, d) =>
+      val b = Tables.documents(s, d)
+        .groupBy((Sampling.bucket(col("doc_id")) / 2048).cast("long").as("bkt"))
+        .agg(sum("n_chars").cast("long").as("s_b"),
+          count(lit(1)).cast("long").as("n_b"))
+      val t = b.agg(sum("s_b").cast("long").as("s"),
+        sum("n_b").cast("long").as("n"), count(lit(1)).cast("long").as("nb"))
+      val loo = b.crossJoin(broadcast(t))
+        .filter(col("n") - col("n_b") > 0L)
+        .select(col("bkt"),
+          expr("cast((cast(s - s_b as decimal(38,0)) * 1000000) div (n - n_b) as bigint)")
+            .as("m_b"))
+      val mm = loo.agg(count(lit(1)).cast("long").as("be"),
+        expr("cast(sum(m_b) div count(*) as bigint)").as("m"))
+      val v = loo.crossJoin(broadcast(mm))
+        .groupBy("be", "m")
+        .agg(sum(expr("cast(m_b - m as decimal(38,0)) * (m_b - m)")).as("ss"))
+      v.crossJoin(broadcast(t))
+        .select(col("n").as("n_docs"), col("be").as("n_buckets"),
+          expr("cast((cast(s as decimal(38,0)) * 1000000) div n as bigint)")
+            .as("mean_micro"),
+          when(col("be") < 2L, lit(null).cast("double"))
+            .otherwise(round(sqrt((col("be") - lit(1.0)) / col("be")
+              * col("ss").cast("double")), 4)).as("se_micro"))
+    },
+
+    // ── PM1: deterministic permutation test — is the en/non-en mean-length
+    // gap larger than chance relabeling produces? The resampling cousin of
+    // wt1 (which assumes the z approximation) and the inference partner of
+    // ci1's jackknife: 64 deterministic label permutations (side = md5
+    // parity of doc_id#perm — sp1's device, pinned in the oracle), each
+    // replica's |mean gap| compared against the observed gap by EXACT
+    // cross-multiplication on the common-denominator form |S_a·n_b −
+    // S_b·n_a| (no rational ever materializes; the cross products ride
+    // decimal(38,0)/HUGEINT — the envelope passes 38 digits near ~1e8 docs
+    // per side, past which the comparison must drop to truncated ppm).
+    // p = (1 + #extreme) / (B + 1), the standard add-one estimate. ONE
+    // corpus scan computes all 64 replicas (narrow 64× explode, each row
+    // (perm, side, value)); an empty side → NULL symmetrically.
+    // The 64 replicas then reduce in one keyed agg to 64 rows; the observed
+    // gap rides a 1-row broadcast.
+    Q("pm1_permutation_test", {
+      val parity = (k: String) =>
+        s"(strpos('0123456789abcdef', substr(md5($k), 1, 1)) - 1) % 2"
+      s"""WITH obs AS (SELECT CAST(sum(CASE WHEN lang = 'en' THEN n_chars ELSE 0 END) AS HUGEINT) AS s_a,
+         |              CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+         |              CAST(sum(CASE WHEN lang <> 'en' THEN n_chars ELSE 0 END) AS HUGEINT) AS s_b,
+         |              CAST(sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_b
+         |            FROM documents),
+         |pe AS (SELECT p.range AS perm,
+         |         ${parity("CAST(d.doc_id AS VARCHAR) || '#' || CAST(p.range AS VARCHAR)")} AS side,
+         |         d.n_chars
+         |       FROM documents d, range(64) p),
+         |pr AS (SELECT perm,
+         |         CAST(sum(CASE WHEN side = 0 THEN n_chars ELSE 0 END) AS HUGEINT) AS s_pa,
+         |         CAST(sum(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pa,
+         |         CAST(sum(CASE WHEN side = 1 THEN n_chars ELSE 0 END) AS HUGEINT) AS s_pb,
+         |         CAST(sum(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_pb
+         |       FROM pe GROUP BY 1),
+         |x AS (SELECT CAST(count(*) AS BIGINT) AS n_extreme
+         |      FROM pr CROSS JOIN obs
+         |      WHERE n_pa > 0 AND n_pb > 0
+         |        AND abs(s_pa * n_pb - s_pb * n_pa) * (CAST(obs.n_a AS HUGEINT) * obs.n_b)
+         |            >= abs(obs.s_a * obs.n_b - obs.s_b * obs.n_a) * (CAST(n_pa AS HUGEINT) * n_pb))
+         |SELECT obs.n_a, obs.n_b,
+         |       CAST(abs(obs.s_a * obs.n_b - obs.s_b * obs.n_a) AS BIGINT) AS d_obs_scaled,
+         |       CASE WHEN obs.n_a = 0 OR obs.n_b = 0 THEN NULL ELSE x.n_extreme END AS n_extreme,
+         |       CASE WHEN obs.n_a = 0 OR obs.n_b = 0 THEN NULL
+         |            ELSE CAST(((x.n_extreme + 1) * 1000000) // 65 AS BIGINT) END AS p_ppm
+         |FROM obs CROSS JOIN x""".stripMargin
+    }) { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val obs = docs.agg(
+        sum(when(col("lang") === "en", col("n_chars")).otherwise(0L))
+          .cast("decimal(38,0)").as("s_a"),
+        sum(when(col("lang") === "en", 1L).otherwise(0L)).cast("long").as("n_a"),
+        sum(when(col("lang") =!= "en", col("n_chars")).otherwise(0L))
+          .cast("decimal(38,0)").as("s_b"),
+        sum(when(col("lang") =!= "en", 1L).otherwise(0L)).cast("long").as("n_b"))
+      val pe = docs.select(col("doc_id"), col("n_chars"))
+        .crossJoin(broadcast(s.range(0, 64).select(col("id").as("perm"))))
+        .select(col("perm"),
+          // first md5 hex digit parity — Sampling.bucket's conv device
+          // (Spark has no strpos; the oracle spells the same digit lookup)
+          (conv(substring(md5(concat_ws("#", col("doc_id").cast("string"),
+            col("perm").cast("string"))), 1, 1), 16, 10).cast("long") % 2)
+            .as("side"),
+          col("n_chars"))
+      val pr = pe.groupBy("perm").agg(
+        sum(when(col("side") === 0, col("n_chars")).otherwise(0L))
+          .cast("decimal(38,0)").as("s_pa"),
+        sum(when(col("side") === 0, 1L).otherwise(0L)).cast("long").as("n_pa"),
+        sum(when(col("side") === 1, col("n_chars")).otherwise(0L))
+          .cast("decimal(38,0)").as("s_pb"),
+        sum(when(col("side") === 1, 1L).otherwise(0L)).cast("long").as("n_pb"))
+      val x = pr.crossJoin(broadcast(obs))
+        .filter(col("n_pa") > 0L && col("n_pb") > 0L)
+        .filter(expr("abs(s_pa * n_pb - s_pb * n_pa) * (cast(n_a as decimal(38,0)) * n_b)" +
+          " >= abs(s_a * n_b - s_b * n_a) * (cast(n_pa as decimal(38,0)) * n_pb)"))
+        .agg(count(lit(1)).cast("long").as("n_extreme"))
+      obs.crossJoin(broadcast(x))
+        .select(col("n_a"), col("n_b"),
+          expr("cast(abs(s_a * n_b - s_b * n_a) as bigint)").as("d_obs_scaled"),
+          when(col("n_a") === 0L || col("n_b") === 0L, lit(null).cast("long"))
+            .otherwise(col("n_extreme")).as("n_extreme"),
+          when(col("n_a") === 0L || col("n_b") === 0L, lit(null).cast("long"))
+            .otherwise(expr("cast(((n_extreme + 1) * 1000000) div 65 as bigint)"))
+            .as("p_ppm"))
+    },
+
+    // ── CUPED1: CUPED variance-reduction diagnostic — before running an
+    // experiment on revenue, the standard question is "how much variance
+    // does pre-period adjustment (CUPED, Deng et al. 2013) buy us?": with
+    // θ = cov(pre, post)/var(pre), the adjusted metric post − θ·(pre −
+    // mean(pre)) has variance var(post)·(1 − ρ²) — so ρ² IS the
+    // reduction. Pre/post = did1's midpoint day split; per-user cents are
+    // exact; the five moment sums (n, Σx, Σy, Σxy, Σx², Σy²) accumulate
+    // in decimal(38,0)/HUGEINT (mom1's device — exact to ~1e9 users ×
+    // ~1e9 cents, documented), and only the final two SCALARS (θ, ρ²)
+    // are computed in IEEE double from those identical exact integers
+    // (cr1's device) — bit-identical across engines and partitionings.
+    // 100 TB: one user-keyed agg, one 1-row reduction; nothing else.
+    Q("cuped1_variance_reduction",
+      """WITH b AS (SELECT CAST(min(date_diff('day', DATE '1970-01-01',
+        |                     CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE))) AS BIGINT) AS mn,
+        |             CAST(max(date_diff('day', DATE '1970-01-01',
+        |                     CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE))) AS BIGINT) AS mx
+        |           FROM events WHERE event_type = 'purchase'),
+        |e AS (SELECT user_id,
+        |        CASE WHEN CAST(date_diff('day', DATE '1970-01-01',
+        |               CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)) AS BIGINT)
+        |             >= (b.mn + b.mx + 1) // 2 THEN 1 ELSE 0 END AS post,
+        |        CAST(round(value * 100) AS BIGINT) AS cents
+        |      FROM events CROSS JOIN b WHERE event_type = 'purchase'),
+        |u AS (SELECT user_id,
+        |        CAST(sum(CASE WHEN post = 0 THEN cents ELSE 0 END) AS BIGINT) AS x,
+        |        CAST(sum(CASE WHEN post = 1 THEN cents ELSE 0 END) AS BIGINT) AS y
+        |      FROM e GROUP BY 1),
+        |m AS (SELECT CAST(count(*) AS HUGEINT) AS n,
+        |        sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
+        |        sum(CAST(x AS HUGEINT) * y) AS sxy,
+        |        sum(CAST(x AS HUGEINT) * x) AS sxx,
+        |        sum(CAST(y AS HUGEINT) * y) AS syy
+        |      FROM u)
+        |SELECT CAST(n AS BIGINT) AS n_users,
+        |       CAST(sx AS BIGINT) AS pre_cents, CAST(sy AS BIGINT) AS post_cents,
+        |       CASE WHEN n * sxx - sx * sx > 0
+        |            THEN round(CAST(n * sxy - sx * sy AS DOUBLE)
+        |                       / CAST(n * sxx - sx * sx AS DOUBLE), 6) END AS theta,
+        |       CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
+        |            THEN CAST(round(CAST(n * sxy - sx * sy AS DOUBLE)
+        |                            * CAST(n * sxy - sx * sy AS DOUBLE)
+        |                            / (CAST(n * sxx - sx * sx AS DOUBLE)
+        |                               * CAST(n * syy - sy * sy AS DOUBLE))
+        |                            * 1000000) AS BIGINT) END AS var_reduction_ppm
+        |FROM m""".stripMargin) { (s, d) =>
+      val ev = Tables.events(s, d).filter(col("event_type") === "purchase")
+        .select(col("user_id"),
+          datediff(date_trunc("day", col("ts")), lit("1970-01-01").cast("date"))
+            .cast("long").as("day"),
+          expr("cast(round(value * 100) as bigint)").as("cents"))
+      val b = ev.agg(min("day").as("mn"), max("day").as("mx"))
+      val u = ev.crossJoin(broadcast(b))
+        .withColumn("post",
+          when(col("day") >= expr("(mn + mx + 1) div 2"), 1).otherwise(0))
+        .groupBy("user_id")
+        .agg(sum(when(col("post") === 0, col("cents")).otherwise(0L))
+            .cast("long").as("x"),
+          sum(when(col("post") === 1, col("cents")).otherwise(0L))
+            .cast("long").as("y"))
+      val dec = (c: Column) => c.cast("decimal(38,0)")
+      val m = u.agg(
+        count(lit(1)).cast("decimal(38,0)").as("n"),
+        sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
+        sum(dec(col("x")) * col("y")).as("sxy"),
+        sum(dec(col("x")) * col("x")).as("sxx"),
+        sum(dec(col("y")) * col("y")).as("syy"))
+      m.select(
+        col("n").cast("long").as("n_users"),
+        col("sx").cast("long").as("pre_cents"),
+        col("sy").cast("long").as("post_cents"),
+        when(col("n") * col("sxx") - col("sx") * col("sx") > 0,
+          round((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
+            / (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"), 6))
+          .as("theta"),
+        when((col("n") * col("sxx") - col("sx") * col("sx") > 0)
+            && (col("n") * col("syy") - col("sy") * col("sy") > 0),
+          round((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
+            * (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
+            / ((col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
+              * (col("n") * col("syy") - col("sy") * col("sy")).cast("double"))
+            * 1e6).cast("long"))
+          .as("var_reduction_ppm"))
+    },
+
+    // ── QN1: within-source quantile normalization — map every source's
+    // n_chars distribution onto the POOLED distribution (each doc's value
+    // is replaced by the pooled value at its within-source quantile) —
+    // the batch-effect correction applied before mixing heterogeneous
+    // sources (microarray lineage; for corpora: a source whose "long"
+    // docs are another's "medium" stops skewing length-based filters). Exact
+    // integer rank semantics: within-source rank r (1-based, ties broken
+    // by doc_id), pooled target rank = ((2r−1)·N) div (2·n_s) + 1 clamped
+    // to N (midpoint mapping — both engines replay the same truncating
+    // arithmetic; the multiply rides decimal(38,0)/HUGEINT so 1e12-doc
+    // corpora can't overflow it).
+    // 100 TB: BOTH rank assignments are GlobalIds (range repartition +
+    // O(P) prefix sum) — the row_number()-over-everything the oracle
+    // writes would be a single-partition sort at corpus scale; per-source
+    // offsets and counts broadcast (|sources| rows); the normalized value
+    // arrives by ONE equi-join on pooled rank.
+    Q("qn1_quantile_normalize",
+      """WITH d AS (SELECT doc_id, source, n_chars FROM documents),
+        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d),
+        |r AS (SELECT doc_id, source, n_chars,
+        |        CAST(row_number() OVER (PARTITION BY source
+        |                                ORDER BY n_chars, doc_id) AS BIGINT) AS r,
+        |        CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS ns FROM d),
+        |p AS (SELECT n_chars AS v,
+        |        CAST(row_number() OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS p FROM d),
+        |ix AS (SELECT doc_id, source, n_chars,
+        |         least(nn.n, CAST(((2 * r - 1) * CAST(nn.n AS HUGEINT))
+        |                          // (2 * ns) AS BIGINT) + 1) AS idx
+        |       FROM r CROSS JOIN nn)
+        |SELECT i.doc_id, i.source, i.n_chars, p.v AS norm_chars
+        |FROM ix i JOIN p ON p.p = i.idx
+        |ORDER BY doc_id""".stripMargin) { (s, d) =>
+      val docs = Tables.documents(s, d).select("doc_id", "source", "n_chars")
+      // within-source ranks WITHOUT a per-source sort task: one global
+      // (source, n_chars, doc_id) ranking, minus the source's offset
+      val g = GlobalIds.withGlobalId(docs, "g",
+        col("source"), col("n_chars"), col("doc_id"))
+      val off = g.groupBy("source")
+        .agg(min("g").as("off"), count(lit(1)).cast("long").as("ns"))
+      val nn = off.agg(sum("ns").cast("long").as("n"))
+      val r = g.join(broadcast(off), "source")
+        .withColumn("r", col("g") - col("off") + 1)
+      val pooled = GlobalIds.withGlobalId(
+          docs.select(col("n_chars").as("v"), col("doc_id").as("pid")),
+          "p0", col("v"), col("pid"))
+        .select((col("p0") + 1).as("p"), col("v"))
+      val ix = r.crossJoin(broadcast(nn))
+        .select(col("doc_id"), col("source"), col("n_chars"),
+          least(col("n"),
+            expr("cast(((2 * r - 1) * cast(n as decimal(38,0))) div (2 * ns) as bigint) + 1")
+          ).as("idx"))
+      ix.join(pooled, col("idx") === col("p"))
+        .select(col("doc_id"), col("source"), col("n_chars"),
+          col("v").as("norm_chars"))
+        .orderBy("doc_id")
     }
   )
 }

@@ -20,7 +20,7 @@ import graft.{Q, Tables}
   */
 object StreamingQueries {
 
-  private val stageDirRoot = "/root/repo/target/stream-stage"
+  private val stageDirRoot = s"${graft.GraftSession.scratchRoot}/stream-stage"
 
   /** State-partition count for the stateful streaming queries.
     *
@@ -93,7 +93,7 @@ object StreamingQueries {
   }
 
   /** File-stream sources need a directory; stage the single parquet file into
-    * one under the repo (never writing outside /root/repo).
+    * one under [[graft.GraftSession.scratchRoot]].
     */
   private[graft] def stageEvents(s: SparkSession, d: String): String = {
     val sf = d.replaceAll("[^A-Za-z0-9.]", "_")
@@ -115,7 +115,7 @@ object StreamingQueries {
     // registered for deletion at end-of-unit-of-work (clearCaches): the
     // read-back result is lazy, so the sink dir must outlive this method
     val out = graft.CacheRegistry.trackPath(
-      s"/root/repo/target/stream-sink/${tag}_${System.nanoTime()}")
+      s"${graft.GraftSession.scratchRoot}/stream-sink/${tag}_${System.nanoTime()}")
     val q = df.writeStream.format("parquet")
       .option("path", out)
       .option("checkpointLocation", s"$out/_ckpt")
@@ -158,7 +158,7 @@ object StreamingQueries {
     */
   private def drainCompleteToParquet(s: SparkSession, df: DataFrame, tag: String): DataFrame = {
     val out = graft.CacheRegistry.trackPath(
-      s"/root/repo/target/stream-sink/${tag}_${System.nanoTime()}")
+      s"${graft.GraftSession.scratchRoot}/stream-sink/${tag}_${System.nanoTime()}")
     val data = s"$out/data"
     val q = df.writeStream
       .outputMode("complete").trigger(Trigger.AvailableNow())
@@ -467,7 +467,7 @@ object StreamingQueries {
   private def st8Drained(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val out = graft.CacheRegistry.trackPath(
-      s"/root/repo/target/stream-sink/st8_${System.nanoTime()}")
+      s"${graft.GraftSession.scratchRoot}/stream-sink/st8_${System.nanoTime()}")
     val data = s"$out/data"
     val q = st8Profiles(s, dir).toDF().writeStream
       .outputMode("update").trigger(Trigger.AvailableNow())

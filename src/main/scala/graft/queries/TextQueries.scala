@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import QueryHelpers.h16
 
 /** Text-analysis and deduplication operators for a training-data pipeline,
   * over the `documents` table. Everything is built from portable primitives
@@ -392,12 +393,8 @@ object TextQueries {
 
     // ── SP2: stratified deterministic sample (per-language rates) ──────────
     Q("sp2_stratified_sample",
-      """WITH b AS (
-        |  SELECT doc_id, lang,
-        |    (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-        |  + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-        |  + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-        |  + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) AS bkt
+      s"""WITH b AS (
+        |  SELECT doc_id, lang, ${h16("CAST(doc_id AS VARCHAR)")} AS bkt
         |  FROM documents)
         |SELECT doc_id, lang FROM b
         |WHERE bkt < CASE lang WHEN 'en' THEN 13107 WHEN 'de' THEN 6553 ELSE 3276 END
@@ -413,11 +410,7 @@ object TextQueries {
     // .split), so rows can never leak between splits across runs, engines,
     // or repartitions; counts per split prove both engines cut identically.
     Q("sp3_train_val_test",
-      """WITH b AS (SELECT doc_id,
-        |    (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-        |  + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-        |  + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-        |  + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) AS bkt
+      s"""WITH b AS (SELECT doc_id, ${h16("CAST(doc_id AS VARCHAR)")} AS bkt
         |  FROM documents)
         |SELECT CASE WHEN bkt < 52428 THEN 'train'
         |            WHEN bkt < 58982 THEN 'val' ELSE 'test' END AS split,
@@ -441,7 +434,6 @@ object TextQueries {
         |l AS (SELECT doc_id, list(code ORDER BY i) AS codes FROM c GROUP BY doc_id)
         |SELECT doc_id, list_reduce(codes, (a, x) -> (a * 31 + x) % 4294967296) AS rh
         |FROM l ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d).select(col("doc_id"),
         expr("rolling_hash(lower(trim(regexp_replace(text, '\\\\s+', ' '))))").as("rh"))
         .orderBy("doc_id")
@@ -684,6 +676,42 @@ object TextQueries {
         |FROM g JOIN nd ON nd.source = g.source ORDER BY g.source""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       sourceNovelty(docs, shinglesDf(s, d)).orderBy("source")
+    },
+
+    // ── DD11: containment near-supersets — dd2's Jaccard is SYMMETRIC, so
+    // a short document quoted wholesale inside a long one scores low
+    // (|A∩B|/|A∪B| is dragged down by the superset's size) and survives
+    // Jaccard dedup; containment C = |A∩B|/min(|A|,|B|) reads "the smaller
+    // document is 90%+ inside the larger" regardless of the size gap —
+    // the quote/boilerplate-envelope detector an LLM curation pipeline
+    // runs NEXT TO Jaccard (Lee et al. 2022's superset class; dd8 finds
+    // shared SUBSTRINGS, dd11 flags whole-document engulfment). Exact
+    // integer: cont_ppm = inter·1e6 div min(sza, szb) ≥ 900000. Rides the
+    // SAME memoized inverted-index pair table as dd2/dd6 (df-capped
+    // shingle join groups), so the pipeline pays one projection for it.
+    Q("dd11_containment",
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
+        |sh AS (SELECT DISTINCT doc_id,
+        |         toks[r.range+1] || ' ' || toks[r.range+2] || ' ' || toks[r.range+3] AS sh
+        |       FROM t, range(1024) r WHERE r.range < len(toks) - 2),
+        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+        |pairs AS (SELECT x.doc_id AS a, y.doc_id AS b, CAST(count(*) AS BIGINT) AS inter
+        |          FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id GROUP BY 1, 2)
+        |SELECT a, b, inter, CAST(sa.sz AS BIGINT) AS sza, CAST(sb.sz AS BIGINT) AS szb,
+        |       (inter * 1000000) // least(sa.sz, sb.sz) AS cont_ppm
+        |FROM pairs JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
+        |WHERE (inter * 1000000) // least(sa.sz, sb.sz) >= 900000
+        |ORDER BY a, b""".stripMargin) { (s, d) =>
+      // plain LONG arithmetic: inter is bounded by shingles/doc (<= 1022 on
+      // any corpus — the 1024-token cap), so inter*1e6 <= ~1e9, nowhere
+      // near 2^63; the decimal form cost 11x dd2's scan of the SAME cached
+      // pair table at sf10 (7.4 s vs 0.7 s — 25M per-row decimal multiplies)
+      TextQueries.allPairsDf(s, d)
+        .select(col("a"), col("b"), col("inter").cast("long").as("inter"),
+          col("sza").cast("long").as("sza"), col("szb").cast("long").as("szb"),
+          expr("(inter * 1000000L) div least(sza, szb)").as("cont_ppm"))
+        .filter(col("cont_ppm") >= 900000L)
+        .orderBy("a", "b")
     }
   )
 

@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.AnalyticsQueries
+import graft.queries.GraphQueries
 
-/** gr2's fan-out cap (AnalyticsQueries.coPurchaseEdges): the guard bounds
+/** gr2's fan-out cap (GraphQueries.coPurchaseEdges): the guard bounds
   * the (suppliers-per-order)² pairing join without changing results on a
   * corpus whose orders sit under the cap — and it genuinely drops hot
   * orders when one exceeds it (so the guard is real, not vacuous).
@@ -14,12 +14,13 @@ class AnalyticsSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("gr2 edge build: cap 25 changes nothing on the test corpus (max fan-out sits under it)") {
-    val base = Tables.lineitem(spark, sf).filter(col("l_quantity") >= 40)
+    val li = Tables.lineitem(spark, sf)
+    val base = li.filter(col("l_quantity") >= 40)
       .select(col("l_orderkey").as("o"), col("l_suppkey").as("s")).distinct()
     val maxFanout = base.groupBy("o").count().agg(max("count")).head().getLong(0)
     assert(maxFanout <= 25, s"corpus fan-out $maxFanout exceeds the pinned cap — oracle semantics diverge")
-    val capped = AnalyticsQueries.coPurchaseEdges(base, Some(25))
-    val exact = AnalyticsQueries.coPurchaseEdges(base, None)
+    val capped = GraphQueries.coPurchaseEdges(li, "l_suppkey", Some(40), Some(25))
+    val exact = GraphQueries.coPurchaseEdges(li, "l_suppkey", Some(40), None)
     assert(capped.exceptAll(exact).isEmpty && exact.exceptAll(capped).isEmpty,
       "capped edges differ from exact below the cap")
   }
@@ -27,11 +28,11 @@ class AnalyticsSpec extends SparkSpec {
   test("gr2 edge build: a hot order above the cap is dropped, bounding the join group") {
     // order 1: 30 suppliers (above cap) — contributes 435 pairs uncapped;
     // order 2: 3 suppliers (under cap) — contributes 3 pairs
-    val hot = spark.range(30).select(lit(1L).as("o"), col("id").as("s"))
-    val ok = spark.range(3).select(lit(2L).as("o"), (col("id") + 100).as("s"))
-    val base = hot.unionByName(ok)
-    assert(AnalyticsQueries.coPurchaseEdges(base, Some(25)).count() == 3)
-    assert(AnalyticsQueries.coPurchaseEdges(base, None).count() == 435 + 3)
+    val hot = spark.range(30).select(lit(1L).as("l_orderkey"), col("id").as("l_suppkey"))
+    val ok = spark.range(3).select(lit(2L).as("l_orderkey"), (col("id") + 100).as("l_suppkey"))
+    val li = hot.unionByName(ok)
+    assert(GraphQueries.coPurchaseEdges(li, "l_suppkey", None, Some(25)).count() == 3)
+    assert(GraphQueries.coPurchaseEdges(li, "l_suppkey", None, None).count() == 435 + 3)
   }
 
   test("gr2 collector: aggregation state stays O(cap) on an adversarially hot order") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.AnalyticsQueries
+import graft.queries.GraphQueries
 
 /** hub1's two-round HITS: authority is NOT degree — a part stocked by few
   * strong hubs outranks a part stocked by more weak ones (the property the
@@ -20,7 +20,7 @@ class HitsSpec extends SparkSpec {
       (1 to 9).map(i => (2L, 300L + i)) ++                // s2's filler parts
       Seq((3L, 101L), (4L, 101L), (5L, 101L))             // B = 101
     ).toDF("s", "p")
-    val auth = AnalyticsQueries.hitsAuthorities(e)
+    val auth = GraphQueries.hitsAuthorities(e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(auth(100L) == 22L, s"auth(A) = ${auth(100L)}, expected 22")
     assert(auth(101L) == 9L, s"auth(B) = ${auth(101L)}, expected 9")

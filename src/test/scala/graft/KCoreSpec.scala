@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.AnalyticsQueries
+import graft.queries.GraphQueries
 
 /** kc1's bounded k-core peel: the helper on hand-peelable toy graphs (the
   * query pins k = 80 for the part graph, so semantics are proven at k = 2/3
@@ -23,7 +23,7 @@ class KCoreSpec extends SparkSpec {
     // clique is degree-3 everywhere after that — the fixpoint
     val e = edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (5L, 6L))
-    assert(rows(AnalyticsQueries.kCore(e, k = 3, rounds = 3)) ==
+    assert(rows(GraphQueries.kCore(e, k = 3, rounds = 3)) ==
       Seq((1L, 4L, 6L), (2L, 4L, 6L), (3L, 4L, 6L)))
   }
 
@@ -32,13 +32,13 @@ class KCoreSpec extends SparkSpec {
     // round 2 drops {2,3} (their degree fell to 1), round 3 is empty —
     // the cascade a single-pass degree filter would miss
     val e = edges((1L, 2L), (2L, 3L), (3L, 4L))
-    assert(rows(AnalyticsQueries.kCore(e, k = 2, rounds = 3)) ==
+    assert(rows(GraphQueries.kCore(e, k = 2, rounds = 3)) ==
       Seq((1L, 2L, 1L), (2L, 0L, 0L), (3L, 0L, 0L)))
   }
 
   test("a cycle IS its own 2-core: nothing peels") {
     val e = edges((1L, 2L), (2L, 3L), (3L, 1L))
-    assert(rows(AnalyticsQueries.kCore(e, k = 2, rounds = 2)) ==
+    assert(rows(GraphQueries.kCore(e, k = 2, rounds = 2)) ==
       Seq((1L, 3L, 3L), (2L, 3L, 3L)))
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.AnalyticsQueries
+import graft.queries.GraphQueries
 
 /** lp1's synchronous LPA: finds communities connected components can't
   * (two dense cliques joined by one bridge edge are ONE component but TWO
@@ -21,7 +21,7 @@ class LabelPropagationSpec extends SparkSpec {
       for { i <- ids; j <- ids if i < j } yield (i, j)
     val e = edges(clique(Seq(1L, 2L, 3L, 4L)) ++
       clique(Seq(10L, 11L, 12L, 13L)) :+ (4L, 10L): _*)
-    val labels = AnalyticsQueries.labelPropagation(e, rounds = 3)
+    val labels = GraphQueries.labelPropagation(e, rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val left = Seq(1L, 2L, 3L, 4L).map(labels)
     val right = Seq(10L, 11L, 12L, 13L).map(labels)
@@ -37,7 +37,7 @@ class LabelPropagationSpec extends SparkSpec {
 
   test("tie votes resolve to the smallest label") {
     // node 5 sees exactly one vote each from 1 and 2 in round 1 → picks 1
-    val labels = AnalyticsQueries.labelPropagation(edges((1L, 5L), (2L, 5L)), rounds = 1)
+    val labels = GraphQueries.labelPropagation(edges((1L, 5L), (2L, 5L)), rounds = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels(5L) == 1L, s"tie broke to ${labels(5L)}, expected 1")
   }

@@ -24,7 +24,10 @@ class QueriesSpec extends SparkSpec {
     val unchecked = Set.empty[String]
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing == unchecked, s"queries without oracle SQL: $missing")
-    assert(SparkEntry.queries.size >= 157)
+    // the query set is pinned: a dropped or duplicated name fails here
+    // (SparkEntry itself refuses a duplicate name)
+    assert(SparkEntry.queries.size == 272)
+    assert(SparkEntry.oracleSql.size == 272)
   }
 
   test("GK approx quantiles sit within ±0.01-rank exact bounds (p50_ok/p90_ok)") {

@@ -1,6 +1,6 @@
 package graft.ads
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import scala.concurrent.duration._
@@ -8,8 +8,9 @@ import scala.concurrent.duration._
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
-/** Jobs started, footer-merge jobs among them (a stage whose call site is
-  * [[SchemaEvolution.tableSchema]]), and records read by file scans (stages
+/** Jobs started with their call sites, footer-merge jobs among them (a
+  * stage whose call site is [[SchemaEvolution.tableSchema]]), and records
+  * read by file scans (stages
   * holding a `FileScanRDD`; cached-block reads are not counted), between
   * `reset` and `drain`. Use it through [[JobCounter.during]].
   */
@@ -17,6 +18,8 @@ final class JobCounter(spark: SparkSession) extends SparkListener {
   val jobs = new AtomicInteger
   val footerMerges = new AtomicInteger
   val fileRecords = new AtomicLong
+  /** Each job's call site (its result stage's name), in start order. */
+  val callSites = new ConcurrentLinkedQueue[String]
   private val marker = new AtomicBoolean
   private val scanStages = ConcurrentHashMap.newKeySet[Int]()
 
@@ -25,6 +28,7 @@ final class JobCounter(spark: SparkSession) extends SparkListener {
       marker.set(true)
     else {
       jobs.incrementAndGet()
+      callSites.add(e.stageInfos.maxBy(_.stageId).name)
       if (e.stageInfos.exists(_.details.contains("SchemaEvolution$.tableSchema")))
         footerMerges.incrementAndGet()
       e.stageInfos.filter(_.rddInfos.exists(_.name == "FileScanRDD"))
@@ -37,6 +41,7 @@ final class JobCounter(spark: SparkSession) extends SparkListener {
 
   def reset(): Unit = {
     jobs.set(0); footerMerges.set(0); fileRecords.set(0); marker.set(false)
+    callSites.clear()
   }
 
   /** Waits until every event before a marker job has been delivered. */

@@ -23,7 +23,7 @@ r = json.load(open(sys.argv[1]))
 m = r["metrics"]
 for k in ("Pipelines.dailySync.jobs", "etl.rows_read_per_row", "InsightsSource.read.s",
           "InsightsSource.read.jobs", "SchemaEvolution.tableSchema.jobs",
-          "Monitoring.healthCheck.jobs"):
+          "Monitoring.healthCheck.jobs", "Pipelines.loadCsv.jobs"):
     print(f"{k} = {m[k]['value']:.3f}")
 if r["correct"] is not True:
     sys.exit(f"ads smoke: correct = {r['correct']} (failed ops: {r['failed']}; see /tmp/graft_ads_smoke.err)")
@@ -34,6 +34,10 @@ if m["SchemaEvolution.tableSchema.jobs"]["value"] != 0:
 # the read probes its files on the driver, so the day stays at 6 jobs
 if m["Pipelines.dailySync.jobs"]["value"] > 6:
     sys.exit("ads smoke: Pipelines.dailySync ran more than 6 jobs (the file probe must not start jobs)")
+# the CSV load is its two inference jobs plus the append's write; a fourth
+# job means the load scans the table after appending again
+if m["Pipelines.loadCsv.jobs"]["value"] > 3:
+    sys.exit("ads smoke: Pipelines.loadCsv ran more than 3 jobs (a job after the append's write)")
 PY
 
 echo "== Pack smoke (perfbench pack, traced) =="
