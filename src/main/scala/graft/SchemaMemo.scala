@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.StructType
   * was made at, and readers of an unchanged table pass it to
   * `spark.read.schema(...)` and plan without a job. Any write to the table,
   * through this program or not, adds or replaces files, which changes the
-  * version and forces a fresh inference.
+  * version and forces a fresh inference, unless the writer records the
+  * schema it produced ([[recordMerged]]).
   */
 object SchemaMemo {
 
@@ -44,11 +45,35 @@ object SchemaMemo {
     * an empty directory), where the caller's own read keeps its error.
     *
     * A miss runs that read; a hit on the current version runs no Spark job.
-    * Names starting with `_` (other than `k=v` partition dirs) or `.` are
-    * left out of the version, as Spark's file listing leaves them out of a
-    * read.
     */
-  def schema(spark: SparkSession, path: String, mergeSchema: Boolean): Option[StructType] = {
+  def schema(spark: SparkSession, path: String, mergeSchema: Boolean): Option[StructType] =
+    current(spark, path).map { case (table, version) =>
+      val key = (table, mergeSchema)
+      Option(inferred.get(key)).collect { case (`version`, s) => s }.getOrElse {
+        val reader = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
+        val s = reader.parquet(path).schema
+        inferred.put(key, (version, s))
+        s
+      }
+    }
+
+  /** Records `merged` as the schema the footer-merging read of `path`
+    * returns at its current version, so the next [[schema]] call runs no
+    * job. For a writer that has just added files whose schema it knows;
+    * `merged` must be exactly what that read would infer, and no other
+    * writer may have changed the table since.
+    */
+  def recordMerged(spark: SparkSession, path: String, merged: StructType): Unit =
+    current(spark, path).foreach { case (table, version) =>
+      inferred.put((table, true), (version, merged))
+    }
+
+  /** The qualified path and current version of the parquet file or table
+    * directory at `path`; None if it holds no data files. Names starting
+    * with `_` (other than `k=v` partition dirs) or `.` are left out, as
+    * Spark's file listing leaves them out of a read.
+    */
+  private def current(spark: SparkSession, path: String): Option[(String, Version)] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
@@ -59,17 +84,8 @@ object SchemaMemo {
       try files(fs.getFileStatus(root))
       catch { case _: FileNotFoundException => Seq.empty }
     if (found.isEmpty) None
-    else {
-      val version = Version(
-        found.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted,
-        schemaSettings.map(spark.conf.getOption))
-      val key = (fs.makeQualified(root).toString, mergeSchema)
-      Option(inferred.get(key)).collect { case (`version`, s) => s }.orElse {
-        val reader = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
-        val s = reader.parquet(path).schema
-        inferred.put(key, (version, s))
-        Some(s)
-      }
-    }
+    else Some((fs.makeQualified(root).toString, Version(
+      found.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted,
+      schemaSettings.map(spark.conf.getOption))))
   }
 }

@@ -3,6 +3,8 @@ package graft.ads
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.SchemaMemo
 
 /** Outcome of a checked table append: rows written, rows rejected by
   * REQUIRED-column validation, and a bounded sample of per-row error
@@ -49,7 +51,9 @@ object Sinks {
     * they stream past, so `flat` is neither cached nor counted separately;
     * callers that read `flat` more than once materialize it themselves
     * (see [[Pipelines.dailySync]]). The error sample and `errorPath` re-read
-    * `flat`, the sample only when rows were rejected.
+    * `flat`, the sample only when rows were rejected. The schema the write
+    * produced goes to [[graft.SchemaMemo]] under the table's new version,
+    * so the next [[readTable]] runs no footer-merge job.
     */
   def appendToTableChecked(
       spark: SparkSession, flat: DataFrame, path: String,
@@ -64,9 +68,20 @@ object Sinks {
       .observe(counts, count(when(valid, 1)).as("appended"),
         count(when(!valid, 1)).as("rejected"))
       .filter(valid).drop("_row_errors")
-    aligned(spark, good, path).write.mode("append").partitionBy("p_date").parquet(path)
+    val table = aligned(spark, good, path)
+    table.write.mode("append").partitionBy("p_date").parquet(path)
     val appended = counts.get("appended").asInstanceOf[Long]
     val rejected = counts.get("rejected").asInstanceOf[Long]
+    // every new file holds all of `table`'s data columns, a superset of the
+    // older files' in the same order, so the merging read of the new
+    // version returns them in that order, then p_date (partition type
+    // inference on, as GraftSession leaves it), all nullable. With no rows
+    // appended no file was added and the memo already holds the version.
+    if (appended > 0) {
+      val (date, data) = table.schema.partition(_.name == "p_date")
+      SchemaMemo.recordMerged(spark, path,
+        StructType((data ++ date).map(_.copy(nullable = true))))
+    }
     val bad = marked.filter(!valid)
     val sample =
       if (rejected == 0) Seq.empty

@@ -199,15 +199,17 @@ object AnalyticsQueries {
       // pair incidence: one row per (basket, pa<pb) via two CODEGEN'D
       // generators (fi1's device — a nested higher-order transform/slice
       // spelling was measured 5× SLOWER here: HOFs are interpreted and
-      // allocate per-pair array slices). Generate preserves the basket
-      // agg's hash(c) partitioning, so everything below runs c-local.
+      // allocate per-pair array slices). The round-robin repartition above
+      // has already spread the baskets without regard to c, so nothing
+      // below is c-local: the pair count and the fpInc self-join below
+      // each pay their own keyed exchange.
       val items = baskets.select(col("c"), explode(col("ps")).as("pa"), col("ps"))
       val pairs = items
         .select(col("c"), col("pa"), explode(col("ps")).as("pb"))
         .filter(col("pa") < col("pb"))
-      // the c-keyed basket exchange and the (pa, pb) count exchange are the
-      // only two data-sized shuffles — the latter is Apriori's pass 2
-      // itself (10.4M near-distinct pairs at sf0.1; the cap bounds it at
+      // the c-keyed basket exchange, its round-robin spread and the (pa, pb)
+      // count exchange are the data-sized shuffles — the last is Apriori's
+      // pass 2 itself (10.4M near-distinct pairs at sf0.1; the cap bounds it at
       // O(|baskets|·cap²) at every scale)
       val pr = pairs.groupBy("pa", "pb").agg(count(lit(1)).as("s"))
       val fp = pr.filter(col("s") >= 3).select("pa", "pb")

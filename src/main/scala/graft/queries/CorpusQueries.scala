@@ -137,6 +137,83 @@ object CorpusQueries {
        |  END AS domain
        |FROM cq)""".stripMargin
 
+  /** The 3-term query t14 and rrf1 rank: one row per matched (doc_id, w)
+    * with its tf, the term's df, the doc's len, and the corpus's n and
+    * avgdl. The term filter lands before the tf aggregation; df and the
+    * (n, avgdl) row are broadcasts.
+    */
+  private def queryTermMatches(docs: DataFrame): DataFrame = {
+    val terms = Seq("vector", "stream", "merge")
+    val t = docs.select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
+    val l = t.select(col("doc_id"), size(col("toks")).as("len"))
+    val st = l.agg(count(lit(1)).as("n"),
+      (sum(col("len")).cast("double") / count(lit(1))).as("avgdl"))
+    val u = t.select(col("doc_id"), explode(col("toks")).as("w"))
+      .filter(col("w").isin(terms: _*))
+    val tf = u.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
+    val dfw = u.groupBy("w").agg(countDistinct(col("doc_id")).as("df"))
+    tf.join(broadcast(dfw), "w").join(l, "doc_id").crossJoin(broadcast(st))
+  }
+
+  /** Okapi BM25 (k1 = 1.2, b = 0.75, Lucene's non-negative idf) of one
+    * [[queryTermMatches]] row, in integer micro-units.
+    */
+  private val bm25Micro: Column =
+    round(lit(1000000) * (log(lit(1) + (col("n").cast("double") - col("df") + 0.5) / (col("df") + 0.5))
+      * ((col("tf") * 2.2) / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len").cast("double") / col("avgdl")))))))
+      .cast("long")
+
+  /** [[queryTermMatches]] as DuckDB CTEs `t`, `l`, `st`, `u`, `tf` and `df`. */
+  private val queryTermMatchesSql =
+    """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
+      |l AS (SELECT doc_id, len(toks) AS len FROM t),
+      |st AS (SELECT count(*) AS n, CAST(sum(len) AS DOUBLE) / count(*) AS avgdl FROM l),
+      |u AS (SELECT doc_id, unnest(toks) AS w FROM t),
+      |tf AS (SELECT doc_id, w, count(*) AS tf FROM u
+      |       WHERE w IN ('vector', 'stream', 'merge') GROUP BY 1, 2),
+      |df AS (SELECT w, count(DISTINCT doc_id) AS df FROM u
+      |       WHERE w IN ('vector', 'stream', 'merge') GROUP BY 1)""".stripMargin
+
+  /** [[bm25Micro]] over the `tf`, `df`, `l` and `st` CTEs. */
+  private val bm25MicroSql =
+    """CAST(round(1000000 * (ln(1 + (CAST(st.n AS DOUBLE) - df.df + 0.5) / (df.df + 0.5))
+      |                * ((tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * (CAST(l.len AS DOUBLE) / st.avgdl)))))) AS BIGINT)""".stripMargin
+
+  /** The contamination hits ct1 and ct3 count: each non-benchmark doc's
+    * shingles shared with the benchmark set → (doc_id, n_shared). The
+    * benchmark is the deterministic 5% hash sample of doc_id, and its
+    * shingle set is broadcast, so the corpus never shuffles for the probe.
+    */
+  private def contaminationHits(s: SparkSession, d: String): DataFrame = {
+    val sh = TextQueries.shinglesDf(s, d)
+    val bench = graft.operators.Sampling
+      .uniform(Tables.documents(s, d), col("doc_id"), 0.05)
+      .select("doc_id")
+    val benchSh = sh.join(bench, Seq("doc_id"), "left_semi")
+      .select("sh").distinct()
+    sh.join(bench, Seq("doc_id"), "left_anti")
+      .join(broadcast(benchSh), "sh")
+      .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
+  }
+
+  /** [[contaminationHits]] as DuckDB CTEs `t`, `sh` (the 3-gram shingles),
+    * `bench`, `bs` and `hits`.
+    */
+  private val contaminationHitsSql =
+    """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
+      |sh AS (SELECT DISTINCT doc_id,
+      |         toks[r.range+1] || ' ' || toks[r.range+2] || ' ' || toks[r.range+3] AS sh
+      |       FROM t, range(1024) r WHERE r.range < len(toks) - 2),
+      |bench AS (SELECT doc_id FROM documents
+      |  WHERE (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
+      |      + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
+      |      + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
+      |      + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) < 3276),
+      |bs AS (SELECT DISTINCT sh FROM sh JOIN bench USING (doc_id)),
+      |hits AS (SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shared
+      |         FROM sh s JOIN bs USING (sh)
+      |         WHERE s.doc_id NOT IN (SELECT doc_id FROM bench) GROUP BY 1)""".stripMargin
+
   def all: Seq[Q] = Seq(
 
     // ── T7: doc-level TF-IDF, top-3 terms per document. tf = in-doc term
@@ -182,38 +259,16 @@ object CorpusQueries {
     // exact; both engines build the identical expression tree, so every
     // IEEE op rounds identically (ln carries the documented 1-ulp risk).
     Q("t14_bm25",
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-        |l AS (SELECT doc_id, len(toks) AS len FROM t),
-        |st AS (SELECT count(*) AS n, CAST(sum(len) AS DOUBLE) / count(*) AS avgdl FROM l),
-        |u AS (SELECT doc_id, unnest(toks) AS w FROM t),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM u
-        |       WHERE w IN ('vector', 'stream', 'merge') GROUP BY 1, 2),
-        |df AS (SELECT w, count(DISTINCT doc_id) AS df FROM u
-        |       WHERE w IN ('vector', 'stream', 'merge') GROUP BY 1),
-        |sc AS (SELECT tf.doc_id,
-        |              CAST(round(1000000 * (ln(1 + (CAST(st.n AS DOUBLE) - df.df + 0.5) / (df.df + 0.5))
-        |                * ((tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * (CAST(l.len AS DOUBLE) / st.avgdl)))))) AS BIGINT) AS s
-        |       FROM tf JOIN df USING (w) JOIN l ON l.doc_id = tf.doc_id, st),
-        |tot AS (SELECT doc_id, CAST(sum(s) AS BIGINT) AS bm25_micro FROM sc GROUP BY 1)
-        |SELECT doc_id, bm25_micro FROM tot
-        |ORDER BY bm25_micro DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      val terms = Seq("vector", "stream", "merge")
-      val t = Tables.documents(s, d)
-        .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      val l = t.select(col("doc_id"), size(col("toks")).as("len"))
-      val st = l.agg(count(lit(1)).as("n"),
-        (sum(col("len")).cast("double") / count(lit(1))).as("avgdl"))
-      val u = t.select(col("doc_id"), explode(col("toks")).as("w"))
-        .filter(col("w").isin(terms: _*))
-      val tf = u.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-      val dfw = u.groupBy("w").agg(countDistinct(col("doc_id")).as("df"))
-      val sc = tf.join(broadcast(dfw), "w").join(l, "doc_id")
-        .crossJoin(broadcast(st))
-        .select(col("doc_id"),
-          round(lit(1000000) * (log(lit(1) + (col("n").cast("double") - col("df") + 0.5) / (col("df") + 0.5))
-            * ((col("tf") * 2.2) / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len").cast("double") / col("avgdl")))))))
-            .cast("long").as("s"))
-      sc.groupBy("doc_id").agg(sum(col("s")).cast("long").as("bm25_micro"))
+      s"""$queryTermMatchesSql,
+         |sc AS (SELECT tf.doc_id,
+         |              $bm25MicroSql AS s
+         |       FROM tf JOIN df USING (w) JOIN l ON l.doc_id = tf.doc_id, st),
+         |tot AS (SELECT doc_id, CAST(sum(s) AS BIGINT) AS bm25_micro FROM sc GROUP BY 1)
+         |SELECT doc_id, bm25_micro FROM tot
+         |ORDER BY bm25_micro DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
+      queryTermMatches(Tables.documents(s, d))
+        .select(col("doc_id"), bm25Micro.as("s"))
+        .groupBy("doc_id").agg(sum(col("s")).cast("long").as("bm25_micro"))
         .orderBy(col("bm25_micro").desc, col("doc_id")).limit(20)
     },
 
@@ -227,48 +282,26 @@ object CorpusQueries {
     // invariant — the rank window never sees the whole corpus), share one
     // candidate scan, and top-20 is TakeOrderedAndProject.
     Q("rrf1_rank_fusion",
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-        |l AS (SELECT doc_id, len(toks) AS len FROM t),
-        |st AS (SELECT count(*) AS n, CAST(sum(len) AS DOUBLE) / count(*) AS avgdl FROM l),
-        |u AS (SELECT doc_id, unnest(toks) AS w FROM t),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM u
-        |       WHERE w IN ('vector', 'stream', 'merge') GROUP BY 1, 2),
-        |df AS (SELECT w, count(DISTINCT doc_id) AS df FROM u
-        |       WHERE w IN ('vector', 'stream', 'merge') GROUP BY 1),
-        |sc AS (SELECT tf.doc_id,
-        |              CAST(round(1000000 * (ln(1 + (CAST(st.n AS DOUBLE) - df.df + 0.5) / (df.df + 0.5))
-        |                * ((tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * (CAST(l.len AS DOUBLE) / st.avgdl)))))) AS BIGINT) AS s1,
-        |              CAST(round(1000000 * (tf.tf * ln(CAST(st.n AS DOUBLE) / df.df))) AS BIGINT) AS s2
-        |       FROM tf JOIN df USING (w) JOIN l ON l.doc_id = tf.doc_id, st),
-        |tot AS (SELECT doc_id, CAST(sum(s1) AS BIGINT) AS bm25, CAST(sum(s2) AS BIGINT) AS tfidf
-        |        FROM sc GROUP BY 1),
-        |t1 AS (SELECT doc_id FROM tot ORDER BY bm25 DESC, doc_id LIMIT 100),
-        |t2 AS (SELECT doc_id FROM tot ORDER BY tfidf DESC, doc_id LIMIT 100),
-        |r1 AS (SELECT t1.doc_id, row_number() OVER (ORDER BY bm25 DESC, t1.doc_id) AS r
-        |       FROM t1 JOIN tot ON tot.doc_id = t1.doc_id),
-        |r2 AS (SELECT t2.doc_id, row_number() OVER (ORDER BY tfidf DESC, t2.doc_id) AS r
-        |       FROM t2 JOIN tot ON tot.doc_id = t2.doc_id)
-        |SELECT coalesce(r1.doc_id, r2.doc_id) AS doc_id,
-        |       CAST(coalesce(1000000000 // (60 + r1.r), 0)
-        |          + coalesce(1000000000 // (60 + r2.r), 0) AS BIGINT) AS rrf_nano
-        |FROM r1 FULL OUTER JOIN r2 ON r1.doc_id = r2.doc_id
-        |ORDER BY rrf_nano DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      val terms = Seq("vector", "stream", "merge")
-      val t = Tables.documents(s, d)
-        .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      val l = t.select(col("doc_id"), size(col("toks")).as("len"))
-      val st = l.agg(count(lit(1)).as("n"),
-        (sum(col("len")).cast("double") / count(lit(1))).as("avgdl"))
-      val u = t.select(col("doc_id"), explode(col("toks")).as("w"))
-        .filter(col("w").isin(terms: _*))
-      val tf = u.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-      val dfw = u.groupBy("w").agg(countDistinct(col("doc_id")).as("df"))
-      val sc = tf.join(broadcast(dfw), "w").join(l, "doc_id")
-        .crossJoin(broadcast(st))
-        .select(col("doc_id"),
-          round(lit(1000000) * (log(lit(1) + (col("n").cast("double") - col("df") + 0.5) / (col("df") + 0.5))
-            * ((col("tf") * 2.2) / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len").cast("double") / col("avgdl")))))))
-            .cast("long").as("s1"),
+      s"""$queryTermMatchesSql,
+         |sc AS (SELECT tf.doc_id,
+         |              $bm25MicroSql AS s1,
+         |              CAST(round(1000000 * (tf.tf * ln(CAST(st.n AS DOUBLE) / df.df))) AS BIGINT) AS s2
+         |       FROM tf JOIN df USING (w) JOIN l ON l.doc_id = tf.doc_id, st),
+         |tot AS (SELECT doc_id, CAST(sum(s1) AS BIGINT) AS bm25, CAST(sum(s2) AS BIGINT) AS tfidf
+         |        FROM sc GROUP BY 1),
+         |t1 AS (SELECT doc_id FROM tot ORDER BY bm25 DESC, doc_id LIMIT 100),
+         |t2 AS (SELECT doc_id FROM tot ORDER BY tfidf DESC, doc_id LIMIT 100),
+         |r1 AS (SELECT t1.doc_id, row_number() OVER (ORDER BY bm25 DESC, t1.doc_id) AS r
+         |       FROM t1 JOIN tot ON tot.doc_id = t1.doc_id),
+         |r2 AS (SELECT t2.doc_id, row_number() OVER (ORDER BY tfidf DESC, t2.doc_id) AS r
+         |       FROM t2 JOIN tot ON tot.doc_id = t2.doc_id)
+         |SELECT coalesce(r1.doc_id, r2.doc_id) AS doc_id,
+         |       CAST(coalesce(1000000000 // (60 + r1.r), 0)
+         |          + coalesce(1000000000 // (60 + r2.r), 0) AS BIGINT) AS rrf_nano
+         |FROM r1 FULL OUTER JOIN r2 ON r1.doc_id = r2.doc_id
+         |ORDER BY rrf_nano DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
+      val sc = queryTermMatches(Tables.documents(s, d))
+        .select(col("doc_id"), bm25Micro.as("s1"),
           round(lit(1000000) * (col("tf") * log(col("n").cast("double") / col("df"))))
             .cast("long").as("s2"))
       val tot = sc.groupBy("doc_id").agg(
@@ -279,8 +312,7 @@ object CorpusQueries {
       // a corpus-wide single-partition sort
       def ranked(score: String) = {
         val top = tot.orderBy(col(score).desc, col("doc_id")).limit(100)
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy(col(score).desc, col("doc_id"))
+        val w = Window.orderBy(col(score).desc, col("doc_id"))
         top.withColumn("r", row_number().over(w)).select(col("doc_id"), col("r"))
       }
       val r1 = ranked("bm25").withColumnRenamed("r", "r1")
@@ -367,31 +399,9 @@ object CorpusQueries {
     // tiny relative to the corpus, so the hit join broadcasts at any scale
     // — contamination checking never shuffles the corpus.
     Q("ct1_contamination",
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT DISTINCT doc_id,
-        |         toks[r.range+1] || ' ' || toks[r.range+2] || ' ' || toks[r.range+3] AS sh
-        |       FROM t, range(1024) r WHERE r.range < len(toks) - 2),
-        |bench AS (SELECT doc_id FROM documents
-        |  WHERE (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-        |      + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-        |      + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-        |      + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) < 3276),
-        |bs AS (SELECT DISTINCT sh FROM sh JOIN bench USING (doc_id)),
-        |hits AS (SELECT s.doc_id, count(*) AS n_shared
-        |         FROM sh s JOIN bs USING (sh)
-        |         WHERE s.doc_id NOT IN (SELECT doc_id FROM bench) GROUP BY 1)
-        |SELECT doc_id, CAST(n_shared AS BIGINT) AS n_shared
-        |FROM hits ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val sh = TextQueries.shinglesDf(s, d)
-      val bench = graft.operators.Sampling
-        .uniform(Tables.documents(s, d), col("doc_id"), 0.05)
-        .select("doc_id")
-      val benchSh = sh.join(bench, Seq("doc_id"), "left_semi")
-        .select("sh").distinct()
-      sh.join(bench, Seq("doc_id"), "left_anti")
-        .join(broadcast(benchSh), "sh")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-        .orderBy("doc_id")
+      s"""$contaminationHitsSql
+         |SELECT doc_id, n_shared FROM hits ORDER BY doc_id""".stripMargin) { (s, d) =>
+      contaminationHits(s, d).orderBy("doc_id")
     },
 
     // ── CT3: contamination overlap FRACTION — ct1 counts shared shingles;
@@ -403,34 +413,14 @@ object CorpusQueries {
     // the fraction travels as integer ppm and the 10% verdict as the
     // integer test n_shared·10 > n_shingles — no float ratio to drift.
     Q("ct3_overlap_fraction",
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT DISTINCT doc_id,
-        |         toks[r.range+1] || ' ' || toks[r.range+2] || ' ' || toks[r.range+3] AS sh
-        |       FROM t, range(1024) r WHERE r.range < len(toks) - 2),
-        |ns AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles FROM sh GROUP BY 1),
-        |bench AS (SELECT doc_id FROM documents
-        |  WHERE (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-        |      + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-        |      + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-        |      + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) < 3276),
-        |bs AS (SELECT DISTINCT sh FROM sh JOIN bench USING (doc_id)),
-        |hits AS (SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shared
-        |         FROM sh s JOIN bs USING (sh)
-        |         WHERE s.doc_id NOT IN (SELECT doc_id FROM bench) GROUP BY 1)
-        |SELECT h.doc_id, n_shared, n_shingles,
-        |       (n_shared * 1000000) // n_shingles AS frac_ppm,
-        |       CAST(n_shared * 10 > n_shingles AS INT) AS flagged
-        |FROM hits h JOIN ns USING (doc_id) ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val sh = TextQueries.shinglesDf(s, d)
-      val ns = sh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-      val bench = graft.operators.Sampling
-        .uniform(Tables.documents(s, d), col("doc_id"), 0.05)
-        .select("doc_id")
-      val benchSh = sh.join(bench, Seq("doc_id"), "left_semi")
-        .select("sh").distinct()
-      sh.join(bench, Seq("doc_id"), "left_anti")
-        .join(broadcast(benchSh), "sh")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
+      s"""$contaminationHitsSql,
+         |ns AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles FROM sh GROUP BY 1)
+         |SELECT h.doc_id, n_shared, n_shingles,
+         |       (n_shared * 1000000) // n_shingles AS frac_ppm,
+         |       CAST(n_shared * 10 > n_shingles AS INT) AS flagged
+         |FROM hits h JOIN ns USING (doc_id) ORDER BY doc_id""".stripMargin) { (s, d) =>
+      val ns = TextQueries.shinglesDf(s, d).groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
+      contaminationHits(s, d)
         .join(ns, "doc_id")
         .select(col("doc_id"), col("n_shared"), col("n_shingles"),
           expr("(n_shared * 1000000L) div n_shingles").as("frac_ppm"),
@@ -1029,20 +1019,8 @@ object CorpusQueries {
   /** Stage documents as ORC once per dataset dir (fingerprint-guarded —
     * re-staged when the driver regenerates the corpus in place).
     */
-  private[graft] def stageOrc(s: SparkSession, d: String): String = {
-    val sf = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = s"${graft.GraftSession.scratchRoot}/orc-stage/docs_$sf"
-    val marker = new java.io.File(dir, "_STAGED")
-    val fp = sourceFingerprint(s"$d/documents.parquet")
-    val stale = !marker.exists() ||
-      scala.io.Source.fromFile(marker).mkString.trim != fp
-    if (stale) {
-      Tables.documents(s, d).write.mode("overwrite").orc(dir)
-      val w = new java.io.PrintWriter(marker)
-      try w.print(fp) finally w.close()
-    }
-    dir
-  }
+  private[graft] def stageOrc(s: SparkSession, d: String): String =
+    staged(d, "orc")(Tables.documents(s, d).write.mode("overwrite").orc(_))
 
   /** documents' enforced read schema (JSONL carries no footer metadata —
     * the expected shape is part of the ingest contract).
@@ -1063,19 +1041,28 @@ object CorpusQueries {
     * same path, so a path-keyed cache alone would serve stale JSONL while
     * the oracle reads fresh parquet. Fingerprint mismatch → re-stage.
     */
-  private[graft] def stageJsonl(s: SparkSession, d: String): String = {
-    val sf = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = s"${graft.GraftSession.scratchRoot}/jsonl-stage/docs_$sf"
-    val marker = new java.io.File(dir, "_STAGED")
-    val fp = sourceFingerprint(s"$d/documents.parquet")
-    val stale = !marker.exists() ||
-      scala.io.Source.fromFile(marker).mkString.trim != fp
-    if (stale) {
+  private[graft] def stageJsonl(s: SparkSession, d: String): String =
+    staged(d, "jsonl") { dir =>
       Tables.documents(s, d).write.mode("overwrite").json(dir)
       import s.implicits._
       Seq("""{"doc_id": 900000001, "text": "truncated line""",
           """{"doc_id": "not-a-number", "text": "bad type", "lang": "en", "source": "srcX", "n_chars": 8}""")
         .toDS().coalesce(1).write.mode("append").text(dir)
+    }
+
+  /** The staging directory `<scratch>/<kind>-stage/docs_<dataset>`, written
+    * by `write` when its `_STAGED` marker is missing or holds another
+    * fingerprint of the source parquet.
+    */
+  private def staged(d: String, kind: String)(write: String => Unit): String = {
+    val sf = d.replaceAll("[^A-Za-z0-9.]", "_")
+    val dir = s"${graft.GraftSession.scratchRoot}/$kind-stage/docs_$sf"
+    val marker = new java.io.File(dir, "_STAGED")
+    val fp = sourceFingerprint(s"$d/documents.parquet")
+    val stale = !marker.exists() ||
+      scala.io.Source.fromFile(marker).mkString.trim != fp
+    if (stale) {
+      write(dir)
       val w = new java.io.PrintWriter(marker)
       try w.print(fp) finally w.close()
     }

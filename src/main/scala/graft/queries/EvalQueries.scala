@@ -56,6 +56,25 @@ object EvalQueries {
   /** 2^48 — the hash domain size for the (k−1)·M/h_k KMV estimator. */
   private val KmvM = 1L << 48
 
+  /** auc1's and prc1's input: document lengths labelled positive when the
+    * doc is English, collapsed to the distinct-score table (score, np, nn)
+    * of positive and negative counts.
+    */
+  private def labeledScoreCounts(docs: DataFrame): DataFrame =
+    docs.select(col("n_chars").as("score"),
+        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
+      .groupBy("score").agg(sum("pos").cast("long").as("np"),
+        (count(lit(1)) - sum("pos")).cast("long").as("nn"))
+
+  /** [[labeledScoreCounts]] as DuckDB CTEs `s` and `g`. */
+  private val labeledScoreCountsSql =
+    """WITH s AS (SELECT n_chars AS score,
+      |             CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS pos
+      |           FROM documents),
+      |g AS (SELECT score, CAST(sum(pos) AS BIGINT) AS np,
+      |             CAST(count(*) - sum(pos) AS BIGINT) AS nn
+      |      FROM s GROUP BY 1)""".stripMargin
+
   def all: Seq[Q] = Seq(
 
     // ── AUC1: tie-corrected Mann–Whitney AUC of a score column against a
@@ -74,12 +93,7 @@ object EvalQueries {
     // 100 TB: the corpus collapses to |distinct scores| rows in one
     // map-side-combined agg; the prefix window orders THAT table.
     Q("auc1_rank_auc",
-      """WITH s AS (SELECT n_chars AS score,
-        |             CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS pos
-        |           FROM documents),
-        |g AS (SELECT score, CAST(sum(pos) AS BIGINT) AS np,
-        |             CAST(count(*) - sum(pos) AS BIGINT) AS nn
-        |      FROM s GROUP BY 1),
+      s"""$labeledScoreCountsSql,
         |c AS (SELECT score, np, nn,
         |        CAST(coalesce(sum(nn) OVER (ORDER BY score
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_lt
@@ -90,10 +104,7 @@ object EvalQueries {
         |SELECT n_pos, n_neg, u2,
         |       (u2 * 1000000) // (2 * n_pos * n_neg) AS auc_ppm
         |FROM u""".stripMargin) { (s, d) =>
-      val sdf = Tables.documents(s, d).select(col("n_chars").as("score"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
-      val g = sdf.groupBy("score").agg(sum("pos").cast("long").as("np"),
-        (count(lit(1)) - sum("pos")).cast("long").as("nn"))
+      val g = labeledScoreCounts(Tables.documents(s, d))
       val w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
       g.withColumn("cum_lt", coalesce(sum("nn").over(w), lit(0L)).cast("long"))
         .agg(sum("np").cast("long").as("n_pos"),
@@ -1219,12 +1230,7 @@ object EvalQueries {
     // n_chars domain ≤ max doc length); totals ride a 1-row broadcast.
     // tp·1e6 rides decimal(38,0)/HUGEINT (passes 2^63 at ~9.2e12 docs).
     Q("prc1_pr_curve",
-      """WITH s AS (SELECT n_chars AS score,
-        |             CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS pos
-        |           FROM documents),
-        |g AS (SELECT score, CAST(sum(pos) AS BIGINT) AS np,
-        |             CAST(count(*) - sum(pos) AS BIGINT) AS nn
-        |      FROM s GROUP BY 1),
+      s"""$labeledScoreCountsSql,
         |c AS (SELECT score,
         |        CAST(sum(np) OVER (ORDER BY score DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
         |        CAST(sum(nn) OVER (ORDER BY score DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS fp,
@@ -1235,10 +1241,7 @@ object EvalQueries {
         |       CASE WHEN n_pos = 0 THEN NULL
         |            ELSE CAST((CAST(tp AS HUGEINT) * 1000000) // n_pos AS BIGINT) END AS rec_ppm
         |FROM c ORDER BY score DESC""".stripMargin) { (s, d) =>
-      val sdf = Tables.documents(s, d).select(col("n_chars").as("score"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
-      val g = sdf.groupBy("score").agg(sum("pos").cast("long").as("np"),
-        (count(lit(1)) - sum("pos")).cast("long").as("nn"))
+      val g = labeledScoreCounts(Tables.documents(s, d))
       val w = Window.orderBy(col("score").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val tot = g.agg(sum("np").cast("long").as("n_pos"))
@@ -1426,11 +1429,13 @@ object EvalQueries {
     s"(CASE $whens ELSE 16 END)"
   }
 
-  /** at3 stage 1, ONE materialization job: (src, nxt, ppm) transition
-    * probabilities from per-user journeys cut at the first purchase
-    * (states: 'START', the channel event types, absorbing 'CONV'/'NULL'),
-    * UNIONED with one audit row per raw event type (nxt = '__CT__',
-    * ppm = that type's total purchase cents) — the channel list and the
+  /** at3 stage 1, ONE materialization job: (src, nxt, ppm, audit = false)
+    * transition probabilities from per-user journeys cut at the first
+    * purchase (states: 'START', the channel event types, absorbing
+    * 'CONV'/'NULL'), UNIONED with one audit row per raw event type
+    * (src = the type, nxt NULL, ppm = its total purchase cents, audit =
+    * true) — the tag is a column of its own, so no event type's name can
+    * pass for an audit row. The channel list and the
     * revenue total ride the same checkpoint instead of costing their own
     * events scans (the former shape paid three passes over the fact table:
     * transitions, DISTINCT event_type, and the revenue sum inside the
@@ -1461,17 +1466,17 @@ object EvalQueries {
     val c = tr.groupBy("src", "nxt").agg(count(lit(1)).as("n"))
     val tw = Window.partitionBy("src")
     val p = c.withColumn("tot", sum(col("n")).over(tw))
-      .select(col("src"), col("nxt"), expr("(n * 1000000L) div tot").as("ppm"))
-    // audit leg: per-event-type purchase cents (exact integers); '__CT__'
-    // can never collide with a transition row's nxt (event types, CONV,
-    // NULL). The leg is one keyed agg with map-side partials.
+      .select(col("src"), col("nxt"), expr("(n * 1000000L) div tot").as("ppm"),
+        lit(false).as("audit"))
+    // audit leg: per-event-type purchase cents (exact integers), one keyed
+    // agg with map-side partials
     val ct = Tables.events(s, d)
       .groupBy(col("event_type"))
       .agg(sum(when(col("event_type") === "purchase",
         round(col("value") * 100).cast("long")).otherwise(0L))
         .cast("long").as("cents"))
-      .select(col("event_type").as("src"), lit("__CT__").as("nxt"),
-        col("cents").as("ppm"))
+      .select(col("event_type").as("src"), lit(null).cast("string").as("nxt"),
+        col("cents").as("ppm"), lit(true).as("audit"))
     p.unionByName(ct)
   }
 
@@ -1483,9 +1488,9 @@ object EvalQueries {
     // the 24 rounds then iterate on in-memory |states|²-row data and the
     // final action never touches the fact table again
     val stage1 = at3Stage1(s, d).localCheckpoint()
-    val p = stage1.filter(col("nxt") =!= "__CT__")
+    val p = stage1.filter(!col("audit")).drop("audit")
     val channels = stage1
-      .filter(col("nxt") === "__CT__" && col("src") =!= "purchase")
+      .filter(col("audit") && col("src") =!= "purchase")
       .select(col("src").as("rem"))
     val rem = channels.unionByName(
       s.range(1).select(lit("__none__").as("rem")))
@@ -1531,7 +1536,7 @@ object EvalQueries {
       .crossJoin(broadcast(base))
       .select(col("rem").as("channel"),
         greatest(col("base_conv") - coalesce(col("v"), lit(0L)), lit(0L)).as("eff"))
-    val tot = stage1.filter(col("nxt") === "__CT__")
+    val tot = stage1.filter(col("audit"))
       .agg(sum(col("ppm")).cast("long").as("total_cents"))
     val sumEff = eff.agg(sum("eff").cast("long").as("sum_eff"))
     eff.crossJoin(broadcast(tot)).crossJoin(broadcast(sumEff))

@@ -85,6 +85,59 @@ object GraphQueries {
        |      FROM bc x JOIN bc y ON x.o = y.o AND x.s < y.s)""".stripMargin
   }
 
+  /** Degrees (n, d) and per-node triangle counts (n, n_tri) of an
+    * undirected edge list `(a, b)`. Every edge is oriented from its
+    * (degree, id)-smaller endpoint, which bounds wedge fan-out by O(sqrt m)
+    * even on power-law degree skew and finds each triangle exactly once:
+    * one wedge join, then a left-semi closure on the third edge.
+    *
+    * `e` and the oriented edges each feed several consumers; they are NOT
+    * persisted, because Catalyst dedups their exchanges as ReusedExchange
+    * (plan-asserted in Wave12Spec) and an sf10 A/B measured an explicit
+    * MEMORY_AND_DISK persist 20% slower than the reused exchanges.
+    * [[trianglesSql]] is the oracle's spelling.
+    */
+  private def triangles(e: DataFrame): (DataFrame, DataFrame) = {
+    val deg = e.select(col("a").as("n")).unionAll(e.select(col("b")))
+      .groupBy("n").agg(count(lit(1)).as("d"))
+    val withDeg = e
+      .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
+      .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
+    val flip = struct(col("da"), col("a")) < struct(col("db"), col("b"))
+    val dir = withDeg.select(
+      when(flip, col("a")).otherwise(col("b")).as("src"),
+      when(flip, col("b")).otherwise(col("a")).as("dst"))
+    val wedges = dir.as("e1")
+      .join(dir.as("e2"), col("e1.dst") === col("e2.src"))
+      .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))
+    val tri = wedges.join(
+      dir.select(col("src").as("a"), col("dst").as("c")),
+      Seq("a", "c"), "left_semi")
+    val perNode = tri.select(col("a").as("n"))
+      .unionAll(tri.select(col("b"))).unionAll(tri.select(col("c")))
+      .groupBy("n").agg(count(lit(1)).as("n_tri"))
+    (deg, perNode)
+  }
+
+  /** [[triangles]] as DuckDB CTEs over an edge CTE `e`: `deg`, `dir`,
+    * `tri` and the per-node counts `pt`. deg and dir are MATERIALIZED:
+    * dir is referenced three times and DuckDB inlines plain CTEs, so
+    * without the hint the whole edge pipeline is re-derived per reference
+    * (at sf10 that recomputation overflowed 73 GB of spill).
+    */
+  private val trianglesSql: String =
+    """deg AS MATERIALIZED (SELECT n, CAST(count(*) AS BIGINT) AS d
+      |        FROM (SELECT a AS n FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
+      |dir AS MATERIALIZED (SELECT CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.a ELSE e.b END AS src,
+      |               CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.b ELSE e.a END AS dst
+      |        FROM e JOIN deg da ON da.n = e.a JOIN deg db ON db.n = e.b),
+      |tri AS (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
+      |        FROM dir e1 JOIN dir e2 ON e1.dst = e2.src
+      |        JOIN dir e3 ON e3.src = e1.src AND e3.dst = e2.dst),
+      |pt AS (SELECT n, CAST(count(*) AS BIGINT) AS n_tri
+      |       FROM (SELECT a AS n FROM tri UNION ALL SELECT b FROM tri
+      |             UNION ALL SELECT c FROM tri) GROUP BY 1)""".stripMargin
+
   /** Two unrolled HITS rounds from hub₀ = 1 over a bipartite incidence
     * `(s, p)`: round 1 gives auth₁(p) = degree, hub₁(s) = Σ auth₁ of its
     * parts; round 2 gives auth₂(p) = Σ hub₁ of its suppliers. All scores
@@ -268,59 +321,19 @@ object GraphQueries {
     },
 
     // ── GR2: per-node triangle counts on the supplier co-purchase graph
-    // (suppliers linked when a high-quantity item of each shares an order).
-    // Degree orientation makes each triangle discoverable exactly once
-    // (rank(a) < rank(b) < rank(c) under (deg, id) order), so the count is
-    // wedge-join + semi-join closure — no post-hoc dedup, no cartesian.
-    // e/deg/dir are MATERIALIZED: dir is referenced three times and DuckDB
-    // inlines plain CTEs, so without the hint the whole edge pipeline is
-    // re-derived per reference — at sf10 that recomputation overflowed 73 GB
-    // of spill; materialized, the oracle runs in minutes (sf10 probe).
+    // (suppliers linked when a high-quantity item of each shares an order),
+    // by [[triangles]]' degree-oriented wedge join + semi-join closure — no
+    // post-hoc dedup, no cartesian.
     Q("gr2_triangle_count",
       s"""WITH ${coPurchaseEdgesSql("l_suppkey", Some(40), 25)},
-        |deg AS MATERIALIZED (SELECT n, count(*) AS d
-        |        FROM (SELECT a AS n FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
-        |dir AS MATERIALIZED (SELECT CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.a ELSE e.b END AS src,
-        |               CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.b ELSE e.a END AS dst
-        |        FROM e JOIN deg da ON da.n = e.a JOIN deg db ON db.n = e.b),
-        |tri AS (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-        |        FROM dir e1 JOIN dir e2 ON e1.dst = e2.src
-        |        JOIN dir e3 ON e3.src = e1.src AND e3.dst = e2.dst)
-        |SELECT n AS node, count(*) AS n_tri
-        |FROM (SELECT a AS n FROM tri UNION ALL SELECT b FROM tri
-        |      UNION ALL SELECT c FROM tri)
-        |GROUP BY 1 ORDER BY n_tri DESC, node LIMIT 20""".stripMargin) { (s, d) =>
-      // no pre-distinct: the capped path's collect_set dedups (o, s) itself,
-      // so raw incidence rows save an exchange
+        |$trianglesSql
+        |SELECT n AS node, n_tri FROM pt
+        |ORDER BY n_tri DESC, node LIMIT 20""".stripMargin) { (s, d) =>
       // fan-out cap 25 pinned in the oracle (qualifying suppliers/order is
-      // ~7 on this corpus — AnalyticsSpec asserts the cap changes nothing).
-      // NOT persisted: e and dir each feed several consumers, but their
-      // exchanges are deduped by Catalyst's ReusedExchange (plan-asserted
-      // in Wave12Spec) — a round-13 A/B at sf10 measured an explicit
-      // MEMORY_AND_DISK persist of e/dir 20% SLOWER than the reused
-      // exchanges (cache materialization + spill vs free shuffle reuse)
-      val e = coPurchaseEdges(Tables.lineitem(s, d), "l_suppkey", Some(40), Some(25))
-      val deg = e.select(col("a").as("n")).unionAll(e.select(col("b")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      // orient every edge from the (degree, id)-smaller endpoint: bounds
-      // wedge fan-out by O(sqrt m) even on power-law degree skew
-      val withDeg = e
-        .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
-      val flip = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-      val dir = withDeg.select(
-        when(flip, col("a")).otherwise(col("b")).as("src"),
-        when(flip, col("b")).otherwise(col("a")).as("dst"))
-      val wedges = dir.as("e1")
-        .join(dir.as("e2"), col("e1.dst") === col("e2.src"))
-        .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))
-      val tri = wedges.join(
-        dir.select(col("src").as("a"), col("dst").as("c")),
-        Seq("a", "c"), "left_semi")
-      tri.select(col("a").as("n"))
-        .unionAll(tri.select(col("b"))).unionAll(tri.select(col("c")))
-        .groupBy("n").agg(count(lit(1)).as("n_tri"))
-        .select(col("n").as("node"), col("n_tri"))
+      // ~7 on this corpus — AnalyticsSpec asserts the cap changes nothing)
+      val (_, perNode) = triangles(
+        coPurchaseEdges(Tables.lineitem(s, d), "l_suppkey", Some(40), Some(25)))
+      perNode.select(col("n").as("node"), col("n_tri"))
         .orderBy(col("n_tri").desc, col("node")).limit(20)
     },
 
@@ -372,47 +385,16 @@ object GraphQueries {
     // (coeff desc, n_tri desc, node).
     Q("gr4_clustering_coeff",
       s"""WITH ${coPurchaseEdgesSql("l_suppkey", Some(40), 25)},
-        |deg AS MATERIALIZED (SELECT n, CAST(count(*) AS BIGINT) AS d
-        |        FROM (SELECT a AS n FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
-        |dir AS MATERIALIZED (SELECT CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.a ELSE e.b END AS src,
-        |               CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.b ELSE e.a END AS dst
-        |        FROM e JOIN deg da ON da.n = e.a JOIN deg db ON db.n = e.b),
-        |tri AS (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-        |        FROM dir e1 JOIN dir e2 ON e1.dst = e2.src
-        |        JOIN dir e3 ON e3.src = e1.src AND e3.dst = e2.dst),
-        |pt AS (SELECT n, CAST(count(*) AS BIGINT) AS n_tri
-        |       FROM (SELECT a AS n FROM tri UNION ALL SELECT b FROM tri
-        |             UNION ALL SELECT c FROM tri) GROUP BY 1)
+        |$trianglesSql
         |SELECT deg.n AS node, deg.d AS degree, coalesce(pt.n_tri, 0) AS n_tri,
         |       CAST((2000000 * coalesce(pt.n_tri, 0)) // (deg.d * (deg.d - 1)) AS BIGINT) AS coeff_ppm
         |FROM deg LEFT JOIN pt ON pt.n = deg.n
         |WHERE deg.d >= 2
         |ORDER BY coeff_ppm DESC, n_tri DESC, node LIMIT 20""".stripMargin) { (s, d) =>
       // the capped collector feeds deg, the orientation join AND (unlike
-      // gr2) the final coefficient join; dir feeds both wedge sides and
-      // the closing semi-join — NOT persisted: the repeated subtrees are
-      // deduped by Catalyst's ReusedExchange (plan-asserted in Wave12Spec;
-      // a round-13 sf10 A/B measured explicit persists 20% slower than
-      // the reused exchanges)
-      val e = coPurchaseEdges(Tables.lineitem(s, d), "l_suppkey", Some(40), Some(25))
-      val deg = e.select(col("a").as("n")).unionAll(e.select(col("b")))
-        .groupBy("n").agg(count(lit(1)).cast("long").as("d"))
-      val withDeg = e
-        .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
-      val flip = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-      val dir = withDeg.select(
-        when(flip, col("a")).otherwise(col("b")).as("src"),
-        when(flip, col("b")).otherwise(col("a")).as("dst"))
-      val wedges = dir.as("e1")
-        .join(dir.as("e2"), col("e1.dst") === col("e2.src"))
-        .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))
-      val tri = wedges.join(
-        dir.select(col("src").as("a"), col("dst").as("c")),
-        Seq("a", "c"), "left_semi")
-      val perNode = tri.select(col("a").as("n"))
-        .unionAll(tri.select(col("b"))).unionAll(tri.select(col("c")))
-        .groupBy("n").agg(count(lit(1)).cast("long").as("n_tri"))
+      // gr2) the final coefficient join
+      val (deg, perNode) = triangles(
+        coPurchaseEdges(Tables.lineitem(s, d), "l_suppkey", Some(40), Some(25)))
       deg.filter(col("d") >= 2)
         .join(perNode, Seq("n"), "left")
         .select(col("n").as("node"), col("d").as("degree"),

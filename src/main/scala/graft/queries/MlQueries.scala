@@ -107,6 +107,65 @@ object MlQueries {
        |v$i AS (SELECT j, CAST(round(CAST(u AS DOUBLE) / nrm * 1e4) AS BIGINT) AS vq
        |        FROM u$i, n$i)""".stripMargin
 
+  /** The top-10 cosine neighbours (qid, nid, rn) of the 10 query vectors
+    * (vec_id < 10), ranked on the first `dims` dimensions of each vector:
+    * sim1's plan (broadcast queries, one corpus stream, rounded cosine,
+    * nid tie-break) at a matryoshka prefix.
+    */
+  private def prefixTopK(corpus: DataFrame, dims: Int): DataFrame = {
+    val queries = corpus.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vec_id"))
+    corpus.crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("cos_sim",
+        round(expr(s"cosine_sim(slice(qe, 1, $dims), slice(embedding, 1, $dims))"), 4))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
+      .select(col("qid"), col("vec_id").as("nid"), col("rn"))
+  }
+
+  /** [[prefixTopK]] as DuckDB CTEs `norms<cte>` and `top<cte>`. */
+  private def prefixTopKSql(dims: Int, cte: String): String =
+    s"""norms$cte AS (
+       |  SELECT vec_id, sqrt(sum(CAST(embedding[r.range+1] AS DOUBLE)
+       |                          * CAST(embedding[r.range+1] AS DOUBLE))) AS nrm
+       |  FROM embeddings, range($dims) r GROUP BY vec_id),
+       |top$cte AS (
+       |  SELECT qid, nid, rn FROM (
+       |    SELECT qid, nid,
+       |           row_number() OVER (PARTITION BY qid
+       |             ORDER BY round(dot / (nq.nrm * ne.nrm), 4) DESC, nid) AS rn
+       |    FROM (SELECT q.vec_id AS qid, e.vec_id AS nid,
+       |                 sum(CAST(q.embedding[r.range+1] AS DOUBLE)
+       |                     * CAST(e.embedding[r.range+1] AS DOUBLE)) AS dot
+       |          FROM embeddings q, embeddings e, range($dims) r
+       |          WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id
+       |          GROUP BY 1, 2) d
+       |    JOIN norms$cte nq ON nq.vec_id = qid
+       |    JOIN norms$cte ne ON ne.vec_id = nid)
+       |  WHERE rn <= 10)""".stripMargin
+
+  /** rg1's Cramer's-rule determinants (det, det0, det1, det2) of the ridge
+    * normal equations A + λ·diag(0, 1, 1), λ = 1, over the sufficient
+    * statistics n, st, stt, sw, stw, sy, sty, swy — one expression text
+    * that both engines parse.
+    */
+  private val (ridgeDet, ridgeDet0, ridgeDet1, ridgeDet2) = {
+    val a22 = "(stt + 1)"; val a33 = "(sw + 1)"
+    (s"(n * ($a22 * $a33 - stw * stw)" +
+      s" - st * (st * $a33 - stw * sw)" +
+      s" + sw * (st * stw - $a22 * sw))",
+     s"(sy * ($a22 * $a33 - stw * stw)" +
+      s" - st * (sty * $a33 - stw * swy)" +
+      s" + sw * (sty * stw - $a22 * swy))",
+     s"(n * (sty * $a33 - swy * stw)" +
+      s" - sy * (st * $a33 - stw * sw)" +
+      s" + sw * (st * swy - sty * sw))",
+     s"(n * ($a22 * swy - stw * sty)" +
+      s" - st * (st * swy - sw * sty)" +
+      s" + sy * (st * stw - $a22 * sw))")
+  }
+
   def all: Seq[Q] = Seq(
 
     // ── ENT1: per-document token entropy (a quality/diversity signal —
@@ -550,47 +609,15 @@ object MlQueries {
     // O(queries·k) join. The 100 TB read: a 4× cheaper scan that keeps
     // ~most of the neighborhood is the retrieval mode worth shipping —
     // and this query is the measurement that justifies it.
-    Q("emb5_matryoshka_overlap", {
-      def rankedSql(dims: Int, cte: String): String =
-        s"""norms$cte AS (
-           |  SELECT vec_id, sqrt(sum(CAST(embedding[r.range+1] AS DOUBLE)
-           |                          * CAST(embedding[r.range+1] AS DOUBLE))) AS nrm
-           |  FROM embeddings, range($dims) r GROUP BY vec_id),
-           |dots$cte AS (
-           |  SELECT q.vec_id AS qid, e.vec_id AS nid,
-           |         sum(CAST(q.embedding[r.range+1] AS DOUBLE)
-           |             * CAST(e.embedding[r.range+1] AS DOUBLE)) AS dot
-           |  FROM embeddings q, embeddings e, range($dims) r
-           |  WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id
-           |  GROUP BY 1, 2),
-           |top$cte AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT qid, nid,
-           |           row_number() OVER (PARTITION BY qid
-           |             ORDER BY round(dot / (nq.nrm * ne.nrm), 4) DESC, nid) AS rn
-           |    FROM dots$cte JOIN norms$cte nq ON nq.vec_id = qid
-           |                  JOIN norms$cte ne ON ne.vec_id = nid)
-           |  WHERE rn <= 10)""".stripMargin
-      s"""WITH ${rankedSql(64, "f")},
-         |${rankedSql(16, "p")}
+    Q("emb5_matryoshka_overlap",
+      s"""WITH ${prefixTopKSql(64, "f")},
+         |${prefixTopKSql(16, "p")}
          |SELECT f.qid, CAST(sum(CASE WHEN p.nid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_overlap
          |FROM topf f LEFT JOIN topp p ON p.qid = f.qid AND p.nid = f.nid
-         |GROUP BY 1 ORDER BY f.qid""".stripMargin
-    }) { (s, d) =>
+         |GROUP BY 1 ORDER BY f.qid""".stripMargin) { (s, d) =>
       val corpus = Tables.embeddings(s, d)
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      def topk(cosExpr: String): DataFrame = {
-        val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vec_id"))
-        corpus.crossJoin(broadcast(queries))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("cos_sim", round(expr(cosExpr), 4))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
-          .select(col("qid"), col("vec_id").as("nid"))
-      }
-      val full = topk("cosine_sim(qe, embedding)")
-      val pre = topk("cosine_sim(slice(qe, 1, 16), slice(embedding, 1, 16))")
-        .withColumn("m", lit(1))
+      val full = prefixTopK(corpus, 64).select("qid", "nid")
+      val pre = prefixTopK(corpus, 16).select(col("qid"), col("nid"), lit(1).as("m"))
       full.join(pre, Seq("qid", "nid"), "left")
         .groupBy("qid")
         .agg(sum(coalesce(col("m"), lit(0))).cast("long").as("n_overlap"))
@@ -657,27 +684,8 @@ object MlQueries {
     // t11's risk class) so the per-query Σ is exact; idcg is the same
     // integers over the ideal positions.
     Q("ndcg1_rank_quality", {
-      def rankedSql(dims: Int, cte: String): String =
-        s"""norms$cte AS (
-           |  SELECT vec_id, sqrt(sum(CAST(embedding[r.range+1] AS DOUBLE)
-           |                          * CAST(embedding[r.range+1] AS DOUBLE))) AS nrm
-           |  FROM embeddings, range($dims) r GROUP BY vec_id),
-           |top$cte AS (
-           |  SELECT qid, nid, rn FROM (
-           |    SELECT qid, nid,
-           |           row_number() OVER (PARTITION BY qid
-           |             ORDER BY round(dot / (nq.nrm * ne.nrm), 4) DESC, nid) AS rn
-           |    FROM (SELECT q.vec_id AS qid, e.vec_id AS nid,
-           |                 sum(CAST(q.embedding[r.range+1] AS DOUBLE)
-           |                     * CAST(e.embedding[r.range+1] AS DOUBLE)) AS dot
-           |          FROM embeddings q, embeddings e, range($dims) r
-           |          WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id
-           |          GROUP BY 1, 2) d
-           |    JOIN norms$cte nq ON nq.vec_id = qid
-           |    JOIN norms$cte ne ON ne.vec_id = nid)
-           |  WHERE rn <= 10)""".stripMargin
-      s"""WITH ${rankedSql(64, "f")},
-         |${rankedSql(16, "p")},
+      s"""WITH ${prefixTopKSql(64, "f")},
+         |${prefixTopKSql(16, "p")},
          |gains AS (SELECT p.qid,
          |            CAST(round((11 - f.rn) * 1e6 / (ln(p.rn + 1) / ln(2))) AS BIGINT) AS g
          |          FROM topp p JOIN topf f ON f.qid = p.qid AND f.nid = p.nid),
@@ -692,18 +700,8 @@ object MlQueries {
          |ORDER BY qs.qid""".stripMargin
     }) { (s, d) =>
       val corpus = Tables.embeddings(s, d)
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      def topk(cosExpr: String): DataFrame = {
-        val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vec_id"))
-        corpus.crossJoin(broadcast(queries))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("cos_sim", round(expr(cosExpr), 4))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
-          .select(col("qid"), col("vec_id").as("nid"), col("rn"))
-      }
-      val full = topk("cosine_sim(qe, embedding)")
-      val pre = topk("cosine_sim(slice(qe, 1, 16), slice(embedding, 1, 16))")
+      val full = prefixTopK(corpus, 64)
+      val pre = prefixTopK(corpus, 16)
       val gains = pre.as("p")
         .join(full.as("f"), col("p.qid") === col("f.qid") && col("p.nid") === col("f.nid"))
         .select(col("p.qid").as("qid"),
@@ -866,23 +864,10 @@ object MlQueries {
     // 1-row broadcast (seg1's device); eight sufficient statistics in one
     // agg over the |days|-row table; the solve is single-row arithmetic.
     Q("rg1_ridge_regression", {
-      val a22 = "(stt + 1)"; val a33 = "(sw + 1)"
-      val det = s"(n * ($a22 * $a33 - stw * stw)" +
-        s" - st * (st * $a33 - stw * sw)" +
-        s" + sw * (st * stw - $a22 * sw))"
-      val det0 = s"(sy * ($a22 * $a33 - stw * stw)" +
-        s" - st * (sty * $a33 - stw * swy)" +
-        s" + sw * (sty * stw - $a22 * swy))"
-      val det1 = s"(n * (sty * $a33 - swy * stw)" +
-        s" - sy * (st * $a33 - stw * sw)" +
-        s" + sw * (st * swy - sty * sw))"
-      val det2 = s"(n * ($a22 * swy - stw * sty)" +
-        s" - st * (st * swy - sw * sty)" +
-        s" + sy * (st * stw - $a22 * sw))"
       def emit(num: String, alias: String) =
-        s"""CASE WHEN $det = 0 THEN NULL
-           |     ELSE CAST(CAST(sign($num) AS BIGINT) * CAST(sign($det) AS BIGINT)
-           |            * ((abs($num) * 1000) // abs($det)) AS BIGINT) END AS $alias"""
+        s"""CASE WHEN $ridgeDet = 0 THEN NULL
+           |     ELSE CAST(CAST(sign($num) AS BIGINT) * CAST(sign($ridgeDet) AS BIGINT)
+           |            * ((abs($num) * 1000) // abs($ridgeDet)) AS BIGINT) END AS $alias"""
           .stripMargin.replace("\n", " ")
       s"""WITH dc AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
          |                            '%Y-%m-%d') AS day,
@@ -901,28 +886,15 @@ object MlQueries {
          |        sum(CAST(w AS HUGEINT) * y) AS swy
          |      FROM d)
          |SELECT CAST(n AS BIGINT) AS n_days, CAST(1 AS BIGINT) AS lambda,
-         |       ${emit(det0, "b0_milli")},
-         |       ${emit(det1, "b1_milli")},
-         |       ${emit(det2, "b2_milli")}
+         |       ${emit(ridgeDet0, "b0_milli")},
+         |       ${emit(ridgeDet1, "b1_milli")},
+         |       ${emit(ridgeDet2, "b2_milli")}
          |FROM s""".stripMargin
     }) { (s, d) =>
-      val a22 = "(stt + 1)"; val a33 = "(sw + 1)"
-      val det = s"(n * ($a22 * $a33 - stw * stw)" +
-        s" - st * (st * $a33 - stw * sw)" +
-        s" + sw * (st * stw - $a22 * sw))"
-      val det0 = s"(sy * ($a22 * $a33 - stw * stw)" +
-        s" - st * (sty * $a33 - stw * swy)" +
-        s" + sw * (sty * stw - $a22 * swy))"
-      val det1 = s"(n * (sty * $a33 - swy * stw)" +
-        s" - sy * (st * $a33 - stw * sw)" +
-        s" + sw * (st * swy - sty * sw))"
-      val det2 = s"(n * ($a22 * swy - stw * sty)" +
-        s" - st * (st * swy - sw * sty)" +
-        s" + sy * (st * stw - $a22 * sw))"
       def emit(num: String): Column =
-        when(expr(det) === 0, lit(null).cast("long"))
-          .otherwise(expr(s"cast(cast(sign($num) as bigint) * cast(sign($det) as bigint)" +
-            s" * ((abs($num) * 1000) div abs($det)) as bigint)"))
+        when(expr(ridgeDet) === 0, lit(null).cast("long"))
+          .otherwise(expr(s"cast(cast(sign($num) as bigint) * cast(sign($ridgeDet) as bigint)" +
+            s" * ((abs($num) * 1000) div abs($ridgeDet)) as bigint)"))
       val dc = Tables.events(s, d).filter(col("event_type") === "purchase")
         .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
         .agg(sum(expr("cast(round(value * 100) as bigint)")).as("y"))
@@ -941,9 +913,9 @@ object MlQueries {
           sum(col("w").cast("decimal(38,0)") * col("y")).as("swy"))
         .select(col("n").cast("long").as("n_days"),
           lit(1L).as("lambda"),
-          emit(det0).as("b0_milli"),
-          emit(det1).as("b1_milli"),
-          emit(det2).as("b2_milli"))
+          emit(ridgeDet0).as("b0_milli"),
+          emit(ridgeDet1).as("b1_milli"),
+          emit(ridgeDet2).as("b2_milli"))
     },
 
     // ── NB1: multinomial Naive Bayes language classifier — train on the

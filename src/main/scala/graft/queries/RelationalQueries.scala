@@ -44,6 +44,25 @@ object RelationalQueries {
   private[queries] def sumMoney(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     round(sum(cents(c)) / 100.0, 2)
 
+  /** The oracle of j6 and j6b, the as-of join's two Spark formulations:
+    * tag both streams, order by (time, orders first, key), and carry the
+    * last order key forward.
+    */
+  private val asOfSql =
+    """WITH tagged AS (
+      |  SELECT o_custkey AS k, o_orderdate AS t, o_orderkey AS okey,
+      |         NULL::BIGINT AS event_id, 1 AS is_order FROM orders
+      |  UNION ALL
+      |  SELECT user_id, ts, NULL, event_id, 0 FROM events),
+      |carried AS (
+      |  SELECT k, t, event_id, is_order,
+      |         last_value(okey IGNORE NULLS) OVER (
+      |           PARTITION BY k ORDER BY t, is_order DESC, okey
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS asof_okey
+      |  FROM tagged)
+      |SELECT event_id, asof_okey FROM carried WHERE is_order = 0
+      |ORDER BY event_id""".stripMargin
+
   def all: Seq[Q] = Seq(
     // ── A1: row count (docs/GCP_SETUP.md:362-365) ──────────────────────────
     Q("a1_count",
@@ -617,20 +636,7 @@ object RelationalQueries {
     // tag both streams, order by (time, orders-first, key), carry the last
     // order key forward. One shuffle on the join key — no range-join
     // explosion. Same formulation in DuckDB.
-    Q("j6_asof_join",
-      """WITH tagged AS (
-        |  SELECT o_custkey AS k, o_orderdate AS t, o_orderkey AS okey,
-        |         NULL::BIGINT AS event_id, 1 AS is_order FROM orders
-        |  UNION ALL
-        |  SELECT user_id, ts, NULL, event_id, 0 FROM events),
-        |carried AS (
-        |  SELECT k, t, event_id, is_order,
-        |         last_value(okey IGNORE NULLS) OVER (
-        |           PARTITION BY k ORDER BY t, is_order DESC, okey
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS asof_okey
-        |  FROM tagged)
-        |SELECT event_id, asof_okey FROM carried WHERE is_order = 0
-        |ORDER BY event_id""".stripMargin) { (s, d) =>
+    Q("j6_asof_join", asOfSql) { (s, d) =>
       // runs on the CUSTOM physical operator (graft.plans.AsOfJoin:
       // LogicalPlan + Strategy + sorted-merge SparkPlan) — oracle-gated
       // here; AsOfJoinSpec proves it equal to the union+window formulation
@@ -645,20 +651,7 @@ object RelationalQueries {
     // ── J6b: the same as-of join composed from built-ins (union + carry-
     // forward window) — SURVEY §7.3 preference (a), kept oracle-checked as
     // the portable formulation.
-    Q("j6b_asof_window",
-      """WITH tagged AS (
-        |  SELECT o_custkey AS k, o_orderdate AS t, o_orderkey AS okey,
-        |         NULL::BIGINT AS event_id, 1 AS is_order FROM orders
-        |  UNION ALL
-        |  SELECT user_id, ts, NULL, event_id, 0 FROM events),
-        |carried AS (
-        |  SELECT k, t, event_id, is_order,
-        |         last_value(okey IGNORE NULLS) OVER (
-        |           PARTITION BY k ORDER BY t, is_order DESC, okey
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS asof_okey
-        |  FROM tagged)
-        |SELECT event_id, asof_okey FROM carried WHERE is_order = 0
-        |ORDER BY event_id""".stripMargin) { (s, d) =>
+    Q("j6b_asof_window", asOfSql) { (s, d) =>
       val o = orders(s, d).select(col("o_custkey").as("k"),
         col("o_orderdate").as("t"), col("o_orderkey").as("okey"),
         lit(null).cast("long").as("event_id"), lit(1).as("is_order"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.similarity.{KMeans, ProductQuantizer}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`ArrayType(FloatType)`, dim 64).
@@ -23,8 +24,10 @@ import graft.{Q, Tables}
   */
 object SimilarityQueries {
 
-  private[queries] def topkCos(s: SparkSession, d: String, sameLabelOnly: Boolean, k: Int): DataFrame = {
-    val corpus = Tables.embeddings(s, d)
+  /** Top-k cosine neighbours of the 10 query vectors (vec_id < 10) in
+    * `corpus`, within the query's label when `sameLabelOnly`.
+    */
+  private[queries] def topkCos(corpus: DataFrame, sameLabelOnly: Boolean, k: Int): DataFrame = {
     val queries = corpus.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("embedding").as("qe"))
@@ -83,15 +86,138 @@ object SimilarityQueries {
        |ORDER BY qid, cos_sim DESC, nid""".stripMargin
   }
 
+  /** The km family's seed centroids: the 8 lowest-id vectors as (cid, cvec). */
+  private def seedCentroids(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+
+  /** KMeans.assign against [[seedCentroids]] as DuckDB CTEs `c`, `d` and
+    * `rr`: `rr` ranks each vector's rounded distances to the 8 seeds, ties on
+    * cid, so rn = 1 is its assignment and rn = 2 its runner-up.
+    */
+  private val kmAssignSql =
+    """WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
+      |d AS (SELECT e.vec_id, c.cid,
+      |        round(sum((CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))
+      |                * (CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))), 4) AS dist
+      |      FROM embeddings e, c, range(64) r GROUP BY 1, 2),
+      |rr AS (SELECT vec_id, cid, dist,
+      |             row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d)""".stripMargin
+
+  /** The PQ index emb3, emb4 and emb8 search: 4-entry codebooks per 8-dim
+    * subspace trained by one Lloyd step from the vec_id < 4 seeds (sub, cid,
+    * cv), the corpus encoded against them (vec_id, sub, code), and the
+    * subvectors of the 8 query vectors vec_id < 8 (qid, sub, sv).
+    */
+  private def pqIndex(emb: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val books = ProductQuantizer.train(emb, "vec_id", "embedding",
+      nSub = 8, subDim = 8, k = 4, iters = 1)
+    val subs = ProductQuantizer.subvectors(emb, "vec_id", "embedding", nSub = 8, subDim = 8)
+    val codes = ProductQuantizer.encode(subs, "vec_id", books).select("vec_id", "sub", "code")
+    (books, codes, subs.filter(col("vec_id") < 8).withColumnRenamed("vec_id", "qid"))
+  }
+
+  /** [[pqIndex]] as DuckDB CTEs over the `s` (sub) and `dims` (i) ranges:
+    * `sv` the long-form subvectors, `b0` → `b1` the seed and trained
+    * codebooks, `codes` the encoded corpus and `dt` the queries' distance
+    * table in 1e-4 fixed point.
+    */
+  private val pqIndexSql =
+    """sv AS (SELECT e.vec_id, s.sub, d.i AS dim,
+      |              CAST(e.embedding[s.sub*8 + d.i + 1] AS DOUBLE) AS x
+      |       FROM embeddings e, s, dims d),
+      |b0 AS (SELECT sub, CAST(vec_id AS BIGINT) AS cid, dim, x AS c
+      |       FROM sv WHERE vec_id < 4),
+      |d1 AS (SELECT v.vec_id, v.sub, b.cid,
+      |              round(sum((v.x - b.c) * (v.x - b.c)), 4) AS dist
+      |       FROM sv v JOIN b0 b ON b.sub = v.sub AND b.dim = v.dim
+      |       GROUP BY 1, 2, 3),
+      |a1 AS (SELECT vec_id, sub, cid FROM (
+      |         SELECT vec_id, sub, cid, row_number() OVER (
+      |           PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn FROM d1)
+      |       WHERE rn = 1),
+      |m1 AS (SELECT a.sub, a.cid, v.dim, round(avg(v.x), 6) AS c
+      |       FROM a1 a JOIN sv v ON v.vec_id = a.vec_id AND v.sub = a.sub
+      |       GROUP BY 1, 2, 3),
+      |b1 AS (SELECT b0.sub, b0.cid, b0.dim, coalesce(m1.c, b0.c) AS c
+      |       FROM b0 LEFT JOIN m1 ON m1.sub = b0.sub AND m1.cid = b0.cid
+      |                           AND m1.dim = b0.dim),
+      |d2 AS (SELECT v.vec_id, v.sub, b.cid,
+      |              round(sum((v.x - b.c) * (v.x - b.c)), 4) AS dist
+      |       FROM sv v JOIN b1 b ON b.sub = v.sub AND b.dim = v.dim
+      |       GROUP BY 1, 2, 3),
+      |codes AS (SELECT vec_id, sub, cid AS code FROM (
+      |            SELECT vec_id, sub, cid, row_number() OVER (
+      |              PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn FROM d2)
+      |          WHERE rn = 1),
+      |dt AS (SELECT v.vec_id AS qid, v.sub, b.cid AS code,
+      |              CAST(round(sum((v.x - b.c) * (v.x - b.c)) * 10000) AS BIGINT) AS dfp
+      |       FROM sv v JOIN b1 b ON b.sub = v.sub AND b.dim = v.dim
+      |       WHERE v.vec_id < 8 GROUP BY 1, 2, 3)""".stripMargin
+
+  /** emb4's IVF-PQ search: the [[seedCentroids]] are the coarse lists, each
+    * query probes its 2 nearest, and ADC over [[pqIndex]] ranks only the
+    * probed lists' vectors → the top `k` (qid, nid, adist_fp) per query.
+    */
+  private def ivfPqTopK(emb: DataFrame, k: Int): DataFrame = {
+    val cents = seedCentroids(emb)
+    val coarse = KMeans.assign(emb, "vec_id", "embedding", cents)
+      .select(col("vec_id"), col("cid").as("lid"))
+    // probe ranking is nq×8 rows — the window is trivially small
+    val pw = Window.partitionBy("vec_id").orderBy(col("dist"), col("cid"))
+    val probe = emb.filter(col("vec_id") < 8)
+      .crossJoin(broadcast(cents))
+      .withColumn("dist", round(KMeans.sqDist("embedding", "cvec"), 4))
+      .withColumn("rn", row_number().over(pw)).filter(col("rn") <= 2)
+      .select(col("vec_id").as("qid"), col("cid").as("lid"))
+    val (books, codes, qsubs) = pqIndex(emb)
+    val dtable = ProductQuantizer.distanceTable(qsubs, books, "qid")
+    val cand = codes.join(coarse, "vec_id").join(broadcast(probe), "lid")
+    val w = Window.partitionBy("qid").orderBy(col("adist_fp"), col("vec_id"))
+    cand.join(broadcast(dtable), Seq("qid", "sub", "code"))
+      .groupBy("qid", "vec_id").agg(sum(col("dfp")).as("adist_fp"))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+      .select(col("qid"), col("vec_id").as("nid"), col("adist_fp"))
+  }
+
+  /** [[ivfPqTopK]] as DuckDB CTEs, up to `ad`: every probed candidate's
+    * (qid, nid, adist_fp) before the top-k cut.
+    */
+  private val ivfPqSql =
+    s"""WITH s AS (SELECT CAST(range AS INT) AS sub FROM range(8)),
+       |dims AS (SELECT CAST(range AS INT) AS i FROM range(8)),
+       |c8 AS (SELECT vec_id AS lid, embedding AS ce FROM embeddings WHERE vec_id < 8),
+       |dc AS (SELECT e.vec_id, c.lid,
+       |         round(sum((CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))
+       |                 * (CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))), 4) AS dist
+       |       FROM embeddings e, c8 c, range(64) r GROUP BY 1, 2),
+       |asn AS (SELECT vec_id, lid FROM (
+       |          SELECT vec_id, lid, row_number() OVER (
+       |            PARTITION BY vec_id ORDER BY dist, lid) AS rn FROM dc)
+       |        WHERE rn = 1),
+       |probe AS (SELECT vec_id AS qid, lid FROM (
+       |            SELECT vec_id, lid, row_number() OVER (
+       |              PARTITION BY vec_id ORDER BY dist, lid) AS rn FROM dc
+       |            WHERE vec_id < 8)
+       |          WHERE rn <= 2),
+       |$pqIndexSql,
+       |cand AS (SELECT p.qid, c.vec_id, c.sub, c.code
+       |         FROM codes c JOIN asn a ON a.vec_id = c.vec_id
+       |                      JOIN probe p ON p.lid = a.lid),
+       |ad AS (SELECT cand.qid, cand.vec_id AS nid, CAST(sum(dt.dfp) AS BIGINT) AS adist_fp
+       |       FROM cand JOIN dt ON dt.qid = cand.qid AND dt.sub = cand.sub
+       |                        AND dt.code = cand.code
+       |       GROUP BY 1, 2)""".stripMargin
+
   def all: Seq[Q] = Seq(
     // ── SIM1: brute-force cosine top-k (exact baseline) ────────────────────
     Q("sim1_cosine_topk", cosSql(sameLabelOnly = false, k = 10)) { (s, d) =>
-      topkCos(s, d, sameLabelOnly = false, k = 10)
+      topkCos(Tables.embeddings(s, d), sameLabelOnly = false, k = 10)
     },
 
     // ── SIM2: IVF-style probe — search only the query's coarse cluster ─────
     Q("sim2_ivf_topk", cosSql(sameLabelOnly = true, k = 5)) { (s, d) =>
-      topkCos(s, d, sameLabelOnly = true, k = 5)
+      topkCos(Tables.embeddings(s, d), sameLabelOnly = true, k = 5)
     },
 
     // ── SIM2B: the REAL inverted-file layout — corpus storage-partitioned
@@ -101,17 +227,7 @@ object SimilarityQueries {
     // at 100 TB this is the difference between scanning the corpus and
     // scanning nProbe/nList of it.
     Q("sim2b_ivf_partitioned", cosSql(sameLabelOnly = true, k = 5)) { (s, d) =>
-      val corpus = s.read.parquet(stagePartitioned(s, d))
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-          col("embedding").as("qe"))
-      val scored = corpus.join(broadcast(queries),
-          col("label") === col("qlabel") && col("vec_id") =!= col("qid"))
-        .withColumn("cos_sim", round(expr("cosine_sim(qe, embedding)"), 4))
-      val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vec_id"))
-      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-        .select(col("qid"), col("vec_id").as("nid"), col("cos_sim"))
-        .orderBy(col("qid"), col("cos_sim").desc, col("nid"))
+      topkCos(s.read.parquet(stagePartitioned(s, d)), sameLabelOnly = true, k = 5)
     },
 
     // ── DD5: embedding-cosine near-duplicate pairs, EXACT via the blocked
@@ -294,56 +410,18 @@ object SimilarityQueries {
     // every join side except the corpus itself is broadcast. The oracle
     // replays the full train→encode→ADC chain in long form.
     Q("emb3_pq_adc",
-      """WITH s AS (SELECT CAST(range AS INT) AS sub FROM range(8)),
-        |dims AS (SELECT CAST(range AS INT) AS i FROM range(8)),
-        |sv AS (SELECT e.vec_id, s.sub, d.i AS dim,
-        |              CAST(e.embedding[s.sub*8 + d.i + 1] AS DOUBLE) AS x
-        |       FROM embeddings e, s, dims d),
-        |b0 AS (SELECT sub, CAST(vec_id AS BIGINT) AS cid, dim, x AS c
-        |       FROM sv WHERE vec_id < 4),
-        |d1 AS (SELECT v.vec_id, v.sub, b.cid,
-        |              round(sum((v.x - b.c) * (v.x - b.c)), 4) AS dist
-        |       FROM sv v JOIN b0 b ON b.sub = v.sub AND b.dim = v.dim
-        |       GROUP BY 1, 2, 3),
-        |a1 AS (SELECT vec_id, sub, cid FROM (
-        |         SELECT vec_id, sub, cid, row_number() OVER (
-        |           PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn FROM d1)
-        |       WHERE rn = 1),
-        |m1 AS (SELECT a.sub, a.cid, v.dim, round(avg(v.x), 6) AS c
-        |       FROM a1 a JOIN sv v ON v.vec_id = a.vec_id AND v.sub = a.sub
-        |       GROUP BY 1, 2, 3),
-        |b1 AS (SELECT b0.sub, b0.cid, b0.dim, coalesce(m1.c, b0.c) AS c
-        |       FROM b0 LEFT JOIN m1 ON m1.sub = b0.sub AND m1.cid = b0.cid
-        |                           AND m1.dim = b0.dim),
-        |d2 AS (SELECT v.vec_id, v.sub, b.cid,
-        |              round(sum((v.x - b.c) * (v.x - b.c)), 4) AS dist
-        |       FROM sv v JOIN b1 b ON b.sub = v.sub AND b.dim = v.dim
-        |       GROUP BY 1, 2, 3),
-        |codes AS (SELECT vec_id, sub, cid AS code FROM (
-        |            SELECT vec_id, sub, cid, row_number() OVER (
-        |              PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn FROM d2)
-        |          WHERE rn = 1),
-        |dt AS (SELECT v.vec_id AS qid, v.sub, b.cid AS code,
-        |              CAST(round(sum((v.x - b.c) * (v.x - b.c)) * 10000) AS BIGINT) AS dfp
-        |       FROM sv v JOIN b1 b ON b.sub = v.sub AND b.dim = v.dim
-        |       WHERE v.vec_id < 8 GROUP BY 1, 2, 3),
-        |ad AS (SELECT dt.qid, c.vec_id AS nid, CAST(sum(dt.dfp) AS BIGINT) AS adist_fp
-        |       FROM codes c JOIN dt ON dt.sub = c.sub AND dt.code = c.code
-        |       GROUP BY 1, 2)
-        |SELECT qid, nid, adist_fp FROM (
-        |  SELECT qid, nid, adist_fp, row_number() OVER (
-        |    PARTITION BY qid ORDER BY adist_fp, nid) AS rn FROM ad)
-        |WHERE rn <= 3 ORDER BY qid, adist_fp, nid""".stripMargin) { (s, d) =>
-      val pq = graft.similarity.ProductQuantizer
-      val emb = Tables.embeddings(s, d)
-      val books = pq.train(emb, "vec_id", "embedding",
-        nSub = 8, subDim = 8, k = 4, iters = 1)
-      val subs = pq.subvectors(emb, "vec_id", "embedding", nSub = 8, subDim = 8)
-      val codes = pq.encode(subs, "vec_id", books)
-        .select("vec_id", "sub", "code")
-      val qsubs = subs.filter(col("vec_id") < 8)
-        .withColumnRenamed("vec_id", "qid")
-      pq.adcTopK(codes, books, qsubs, "qid", "vec_id", k = 3)
+      s"""WITH s AS (SELECT CAST(range AS INT) AS sub FROM range(8)),
+         |dims AS (SELECT CAST(range AS INT) AS i FROM range(8)),
+         |$pqIndexSql,
+         |ad AS (SELECT dt.qid, c.vec_id AS nid, CAST(sum(dt.dfp) AS BIGINT) AS adist_fp
+         |       FROM codes c JOIN dt ON dt.sub = c.sub AND dt.code = c.code
+         |       GROUP BY 1, 2)
+         |SELECT qid, nid, adist_fp FROM (
+         |  SELECT qid, nid, adist_fp, row_number() OVER (
+         |    PARTITION BY qid ORDER BY adist_fp, nid) AS rn FROM ad)
+         |WHERE rn <= 3 ORDER BY qid, adist_fp, nid""".stripMargin) { (s, d) =>
+      val (books, codes, qsubs) = pqIndex(Tables.embeddings(s, d))
+      ProductQuantizer.adcTopK(codes, books, qsubs, "qid", "vec_id", k = 3)
         .orderBy("qid", "adist_fp", "nid")
     },
 
@@ -358,95 +436,13 @@ object SimilarityQueries {
     // 1e-4 fixed-point. The oracle replays coarse-assign → probe →
     // train → encode → masked ADC in one CTE chain.
     Q("emb4_ivfpq_adc",
-      """WITH s AS (SELECT CAST(range AS INT) AS sub FROM range(8)),
-        |dims AS (SELECT CAST(range AS INT) AS i FROM range(8)),
-        |c8 AS (SELECT vec_id AS lid, embedding AS ce FROM embeddings WHERE vec_id < 8),
-        |dc AS (SELECT e.vec_id, c.lid,
-        |         round(sum((CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))
-        |                 * (CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))), 4) AS dist
-        |       FROM embeddings e, c8 c, range(64) r GROUP BY 1, 2),
-        |asn AS (SELECT vec_id, lid FROM (
-        |          SELECT vec_id, lid, row_number() OVER (
-        |            PARTITION BY vec_id ORDER BY dist, lid) AS rn FROM dc)
-        |        WHERE rn = 1),
-        |probe AS (SELECT vec_id AS qid, lid FROM (
-        |            SELECT vec_id, lid, row_number() OVER (
-        |              PARTITION BY vec_id ORDER BY dist, lid) AS rn FROM dc
-        |            WHERE vec_id < 8)
-        |          WHERE rn <= 2),
-        |sv AS (SELECT e.vec_id, s.sub, d.i AS dim,
-        |              CAST(e.embedding[s.sub*8 + d.i + 1] AS DOUBLE) AS x
-        |       FROM embeddings e, s, dims d),
-        |b0 AS (SELECT sub, CAST(vec_id AS BIGINT) AS cid, dim, x AS c
-        |       FROM sv WHERE vec_id < 4),
-        |d1 AS (SELECT v.vec_id, v.sub, b.cid,
-        |              round(sum((v.x - b.c) * (v.x - b.c)), 4) AS dist
-        |       FROM sv v JOIN b0 b ON b.sub = v.sub AND b.dim = v.dim
-        |       GROUP BY 1, 2, 3),
-        |a1 AS (SELECT vec_id, sub, cid FROM (
-        |         SELECT vec_id, sub, cid, row_number() OVER (
-        |           PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn FROM d1)
-        |       WHERE rn = 1),
-        |m1 AS (SELECT a.sub, a.cid, v.dim, round(avg(v.x), 6) AS c
-        |       FROM a1 a JOIN sv v ON v.vec_id = a.vec_id AND v.sub = a.sub
-        |       GROUP BY 1, 2, 3),
-        |b1 AS (SELECT b0.sub, b0.cid, b0.dim, coalesce(m1.c, b0.c) AS c
-        |       FROM b0 LEFT JOIN m1 ON m1.sub = b0.sub AND m1.cid = b0.cid
-        |                           AND m1.dim = b0.dim),
-        |d2 AS (SELECT v.vec_id, v.sub, b.cid,
-        |              round(sum((v.x - b.c) * (v.x - b.c)), 4) AS dist
-        |       FROM sv v JOIN b1 b ON b.sub = v.sub AND b.dim = v.dim
-        |       GROUP BY 1, 2, 3),
-        |codes AS (SELECT vec_id, sub, cid AS code FROM (
-        |            SELECT vec_id, sub, cid, row_number() OVER (
-        |              PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn FROM d2)
-        |          WHERE rn = 1),
-        |dt AS (SELECT v.vec_id AS qid, v.sub, b.cid AS code,
-        |              CAST(round(sum((v.x - b.c) * (v.x - b.c)) * 10000) AS BIGINT) AS dfp
-        |       FROM sv v JOIN b1 b ON b.sub = v.sub AND b.dim = v.dim
-        |       WHERE v.vec_id < 8 GROUP BY 1, 2, 3),
-        |cand AS (SELECT p.qid, c.vec_id, c.sub, c.code
-        |         FROM codes c JOIN asn a ON a.vec_id = c.vec_id
-        |                      JOIN probe p ON p.lid = a.lid),
-        |ad AS (SELECT cand.qid, cand.vec_id AS nid, CAST(sum(dt.dfp) AS BIGINT) AS adist_fp
-        |       FROM cand JOIN dt ON dt.qid = cand.qid AND dt.sub = cand.sub
-        |                        AND dt.code = cand.code
-        |       GROUP BY 1, 2)
-        |SELECT qid, nid, adist_fp FROM (
-        |  SELECT qid, nid, adist_fp, row_number() OVER (
-        |    PARTITION BY qid ORDER BY adist_fp, nid) AS rn FROM ad)
-        |WHERE rn <= 3 ORDER BY qid, adist_fp, nid""".stripMargin) { (s, d) =>
-      val pq = graft.similarity.ProductQuantizer
-      val emb = Tables.embeddings(s, d)
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val coarse = graft.similarity.KMeans.assign(emb, "vec_id", "embedding", cents)
-        .select(col("vec_id"), col("cid").as("lid"))
-      // probe ranking is nq×8 rows — the window is trivially small
-      val pw = org.apache.spark.sql.expressions.Window
-        .partitionBy("vec_id").orderBy(col("dist"), col("cid"))
-      val probe = emb.filter(col("vec_id") < 8)
-        .crossJoin(broadcast(cents))
-        .withColumn("dist", round(graft.similarity.KMeans.sqDist("embedding", "cvec"), 4))
-        .withColumn("rn", row_number().over(pw)).filter(col("rn") <= 2)
-        .select(col("vec_id").as("qid"), col("cid").as("lid"))
-      val books = pq.train(emb, "vec_id", "embedding",
-        nSub = 8, subDim = 8, k = 4, iters = 1)
-      val subs = pq.subvectors(emb, "vec_id", "embedding", nSub = 8, subDim = 8)
-      val codes = pq.encode(subs, "vec_id", books).select("vec_id", "sub", "code")
-      val qsubs = subs.filter(col("vec_id") < 8).withColumnRenamed("vec_id", "qid")
-      val dtable = qsubs.join(broadcast(books), "sub")
-        .select(col("qid"), col("sub"), col("cid").as("code"),
-          round(graft.similarity.KMeans.sqDist("sv", "cv") * 10000)
-            .cast("long").as("dfp"))
-      val cand = codes.join(coarse, "vec_id").join(broadcast(probe), "lid")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("adist_fp"), col("vec_id"))
-      cand.join(broadcast(dtable), Seq("qid", "sub", "code"))
-        .groupBy("qid", "vec_id").agg(sum(col("dfp")).as("adist_fp"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-        .select(col("qid"), col("vec_id").as("nid"), col("adist_fp"))
-        .orderBy("qid", "adist_fp", "nid")
+      ivfPqSql +
+        """
+          |SELECT qid, nid, adist_fp FROM (
+          |  SELECT qid, nid, adist_fp, row_number() OVER (
+          |    PARTITION BY qid ORDER BY adist_fp, nid) AS rn FROM ad)
+          |WHERE rn <= 3 ORDER BY qid, adist_fp, nid""".stripMargin) { (s, d) =>
+      ivfPqTopK(Tables.embeddings(s, d), k = 3).orderBy("qid", "adist_fp", "nid")
     },
 
     // ── SIM4: per-label centroids — the IVF coarse-quantizer / k-means
@@ -462,63 +458,8 @@ object SimilarityQueries {
     // |shortlist| vectors, not the corpus. Exact distances ride the
     // family's ×10000 fixed-point contract; every rank window partitions
     // by query over ≤ 12 candidate rows.
-    Q("emb8_ivfpq_refine", {
-      val adcChain = // emb4's trained-codebook ADC pipeline, verbatim
-        """WITH s AS (SELECT CAST(range AS INT) AS sub FROM range(8)),
-          |dims AS (SELECT CAST(range AS INT) AS i FROM range(8)),
-          |c8 AS (SELECT vec_id AS lid, embedding AS ce FROM embeddings WHERE vec_id < 8),
-          |dc AS (SELECT e.vec_id, c.lid,
-          |         round(sum((CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))
-          |                 * (CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))), 4) AS dist
-          |       FROM embeddings e, c8 c, range(64) r GROUP BY 1, 2),
-          |asn AS (SELECT vec_id, lid FROM (
-          |          SELECT vec_id, lid, row_number() OVER (
-          |            PARTITION BY vec_id ORDER BY dist, lid) AS rn FROM dc)
-          |        WHERE rn = 1),
-          |probe AS (SELECT vec_id AS qid, lid FROM (
-          |            SELECT vec_id, lid, row_number() OVER (
-          |              PARTITION BY vec_id ORDER BY dist, lid) AS rn FROM dc
-          |            WHERE vec_id < 8)
-          |          WHERE rn <= 2),
-          |sv AS (SELECT e.vec_id, s.sub, d.i AS dim,
-          |              CAST(e.embedding[s.sub*8 + d.i + 1] AS DOUBLE) AS x
-          |       FROM embeddings e, s, dims d),
-          |b0 AS (SELECT sub, CAST(vec_id AS BIGINT) AS cid, dim, x AS c
-          |       FROM sv WHERE vec_id < 4),
-          |d1 AS (SELECT v.vec_id, v.sub, b.cid,
-          |              round(sum((v.x - b.c) * (v.x - b.c)), 4) AS dist
-          |       FROM sv v JOIN b0 b ON b.sub = v.sub AND b.dim = v.dim
-          |       GROUP BY 1, 2, 3),
-          |a1 AS (SELECT vec_id, sub, cid FROM (
-          |         SELECT vec_id, sub, cid, row_number() OVER (
-          |           PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn FROM d1)
-          |       WHERE rn = 1),
-          |m1 AS (SELECT a.sub, a.cid, v.dim, round(avg(v.x), 6) AS c
-          |       FROM a1 a JOIN sv v ON v.vec_id = a.vec_id AND v.sub = a.sub
-          |       GROUP BY 1, 2, 3),
-          |b1 AS (SELECT b0.sub, b0.cid, b0.dim, coalesce(m1.c, b0.c) AS c
-          |       FROM b0 LEFT JOIN m1 ON m1.sub = b0.sub AND m1.cid = b0.cid
-          |                           AND m1.dim = b0.dim),
-          |d2 AS (SELECT v.vec_id, v.sub, b.cid,
-          |              round(sum((v.x - b.c) * (v.x - b.c)), 4) AS dist
-          |       FROM sv v JOIN b1 b ON b.sub = v.sub AND b.dim = v.dim
-          |       GROUP BY 1, 2, 3),
-          |codes AS (SELECT vec_id, sub, cid AS code FROM (
-          |            SELECT vec_id, sub, cid, row_number() OVER (
-          |              PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn FROM d2)
-          |          WHERE rn = 1),
-          |dt AS (SELECT v.vec_id AS qid, v.sub, b.cid AS code,
-          |              CAST(round(sum((v.x - b.c) * (v.x - b.c)) * 10000) AS BIGINT) AS dfp
-          |       FROM sv v JOIN b1 b ON b.sub = v.sub AND b.dim = v.dim
-          |       WHERE v.vec_id < 8 GROUP BY 1, 2, 3),
-          |cand AS (SELECT p.qid, c.vec_id, c.sub, c.code
-          |         FROM codes c JOIN asn a ON a.vec_id = c.vec_id
-          |                      JOIN probe p ON p.lid = a.lid),
-          |ad AS (SELECT cand.qid, cand.vec_id AS nid, CAST(sum(dt.dfp) AS BIGINT) AS adist_fp
-          |       FROM cand JOIN dt ON dt.qid = cand.qid AND dt.sub = cand.sub
-          |                        AND dt.code = cand.code
-          |       GROUP BY 1, 2)""".stripMargin
-      adcChain +
+    Q("emb8_ivfpq_refine",
+      ivfPqSql +
         """,
           |short AS (SELECT qid, nid FROM (
           |            SELECT qid, nid, row_number() OVER (
@@ -534,50 +475,21 @@ object SimilarityQueries {
           |SELECT qid, nid, dist_fp FROM (
           |  SELECT qid, nid, dist_fp, row_number() OVER (
           |    PARTITION BY qid ORDER BY dist_fp, nid) AS rn FROM ex)
-          |WHERE rn <= 3 ORDER BY qid, dist_fp, nid""".stripMargin
-    }) { (s, d) =>
-      val pq = graft.similarity.ProductQuantizer
+          |WHERE rn <= 3 ORDER BY qid, dist_fp, nid""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val coarse = graft.similarity.KMeans.assign(emb, "vec_id", "embedding", cents)
-        .select(col("vec_id"), col("cid").as("lid"))
-      val pw = org.apache.spark.sql.expressions.Window
-        .partitionBy("vec_id").orderBy(col("dist"), col("cid"))
-      val probe = emb.filter(col("vec_id") < 8)
-        .crossJoin(broadcast(cents))
-        .withColumn("dist", round(graft.similarity.KMeans.sqDist("embedding", "cvec"), 4))
-        .withColumn("rn", row_number().over(pw)).filter(col("rn") <= 2)
-        .select(col("vec_id").as("qid"), col("cid").as("lid"))
-      val books = pq.train(emb, "vec_id", "embedding",
-        nSub = 8, subDim = 8, k = 4, iters = 1)
-      val subs = pq.subvectors(emb, "vec_id", "embedding", nSub = 8, subDim = 8)
-      val codes = pq.encode(subs, "vec_id", books).select("vec_id", "sub", "code")
-      val qsubs = subs.filter(col("vec_id") < 8).withColumnRenamed("vec_id", "qid")
-      val dtable = qsubs.join(broadcast(books), "sub")
-        .select(col("qid"), col("sub"), col("cid").as("code"),
-          round(graft.similarity.KMeans.sqDist("sv", "cv") * 10000)
-            .cast("long").as("dfp"))
-      val cand = codes.join(coarse, "vec_id").join(broadcast(probe), "lid")
-      val aw = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("adist_fp"), col("vec_id"))
       // 4x-overfetch shortlist by ADC (12 = 4 x the final top-3)
-      val short = cand.join(broadcast(dtable), Seq("qid", "sub", "code"))
-        .groupBy("qid", "vec_id").agg(sum(col("dfp")).as("adist_fp"))
-        .withColumn("rn", row_number().over(aw)).filter(col("rn") <= 12)
-        .select(col("qid"), col("vec_id").as("nid"))
+      val short = ivfPqTopK(emb, k = 12).select("qid", "nid")
       // refine: fetch ONLY the shortlist's raw vectors (broadcast
       // semi-fetch — the corpus is never rescanned as floats) and re-rank
       // by exact distance
       val qv = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val rv = emb.select(col("vec_id").as("nid"), col("embedding").as("ne"))
-      val rw = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("dist_fp"), col("nid"))
+      val rw = Window.partitionBy("qid").orderBy(col("dist_fp"), col("nid"))
       broadcast(short.join(broadcast(qv), "qid"))
         .join(rv, "nid")
         .select(col("qid"), col("nid"),
-          round(graft.similarity.KMeans.sqDist("qe", "ne") * 10000)
+          round(KMeans.sqDist("qe", "ne") * 10000)
             .cast("long").as("dist_fp"))
         .withColumn("rn", row_number().over(rw)).filter(col("rn") <= 3)
         .select(col("qid"), col("nid"), col("dist_fp"))
@@ -670,19 +582,9 @@ object SimilarityQueries {
     // codegen'd fold distance; dist rounds before the argmin and ties break
     // on cid, so assignment is a pure function of the data in both engines.
     Q("km1_kmeans_assign",
-      """WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
-        |d AS (SELECT e.vec_id, c.cid,
-        |        round(sum((CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))
-        |                * (CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))), 4) AS dist
-        |      FROM embeddings e, c, range(64) r GROUP BY 1, 2),
-        |rr AS (SELECT vec_id, cid, dist,
-        |             row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d)
-        |SELECT vec_id, cid, dist FROM rr WHERE rn = 1 ORDER BY vec_id""".stripMargin) { (s, d) =>
+      kmAssignSql + "\nSELECT vec_id, cid, dist FROM rr WHERE rn = 1 ORDER BY vec_id") { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      graft.similarity.KMeans.assign(emb, "vec_id", "embedding", cents)
-        .orderBy("vec_id")
+      KMeans.assign(emb, "vec_id", "embedding", seedCentroids(emb)).orderBy("vec_id")
     },
 
     // ── KM2: one full Lloyd iteration — E-step assignment then per-cluster
@@ -690,22 +592,14 @@ object SimilarityQueries {
     // so the compare stays scalar. KMeans.recompute/fit are the array-form
     // production path (inertia-descent asserted in KMeansSpec).
     Q("km2_kmeans_step",
-      """WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
-        |d AS (SELECT e.vec_id, c.cid,
-        |        round(sum((CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))
-        |                * (CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))), 4) AS dist
-        |      FROM embeddings e, c, range(64) r GROUP BY 1, 2),
-        |rr AS (SELECT vec_id, cid, dist,
-        |             row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d),
-        |a AS (SELECT vec_id, cid FROM rr WHERE rn = 1),
-        |u AS (SELECT a.cid, r2.range AS dim, CAST(e.embedding[r2.range+1] AS DOUBLE) AS x
-        |      FROM a JOIN embeddings e ON e.vec_id = a.vec_id, range(64) r2)
-        |SELECT cid, CAST(dim AS INT) AS dim, round(avg(x), 6) AS c
-        |FROM u GROUP BY 1, 2 ORDER BY cid, dim""".stripMargin) { (s, d) =>
+      s"""$kmAssignSql,
+         |a AS (SELECT vec_id, cid FROM rr WHERE rn = 1),
+         |u AS (SELECT a.cid, r2.range AS dim, CAST(e.embedding[r2.range+1] AS DOUBLE) AS x
+         |      FROM a JOIN embeddings e ON e.vec_id = a.vec_id, range(64) r2)
+         |SELECT cid, CAST(dim AS INT) AS dim, round(avg(x), 6) AS c
+         |FROM u GROUP BY 1, 2 ORDER BY cid, dim""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      graft.similarity.KMeans.assign(emb, "vec_id", "embedding", cents)
+      KMeans.assign(emb, "vec_id", "embedding", seedCentroids(emb))
         .select("vec_id", "cid")
         .join(emb, "vec_id")
         .select(col("cid"), posexplode(col("embedding")).as(Seq("dim", "x")))
@@ -794,7 +688,7 @@ object SimilarityQueries {
       val ann = graft.similarity.AnnLsh.topk(
         corpus = emb, queries = emb.filter(col("vec_id") < 10),
         idCol = "vec_id", vecCol = "embedding", k = 10, dim = 64)
-      val exact = topkCos(s, d, sameLabelOnly = false, k = 10)
+      val exact = topkCos(Tables.embeddings(s, d), sameLabelOnly = false, k = 10)
       val hits = ann.join(exact.select(col("qid"), col("nid")),
           Seq("qid", "nid"), "left_semi")
         .agg(count(lit(1)).as("hits"))
@@ -817,30 +711,22 @@ object SimilarityQueries {
     // integer ppm per point, so cluster means are order-independent:
     // integer sums + one terminal division, the j1 money contract.
     Q("cm1_silhouette",
-      """WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 8),
-        |d AS (SELECT e.vec_id, c.cid,
-        |        round(sum((CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))
-        |                * (CAST(e.embedding[r.range+1] AS DOUBLE) - CAST(c.ce[r.range+1] AS DOUBLE))), 4) AS dist
-        |      FROM embeddings e, c, range(64) r GROUP BY 1, 2),
-        |rr AS (SELECT vec_id, cid, dist,
-        |             row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d),
-        |p AS (SELECT vec_id,
-        |        min(CASE WHEN rn = 1 THEN cid END) AS cid,
-        |        min(CASE WHEN rn = 1 THEN dist END) AS a,
-        |        min(CASE WHEN rn = 2 THEN dist END) AS b
-        |      FROM rr WHERE rn <= 2 GROUP BY vec_id),
-        |sv AS (SELECT cid, CASE WHEN greatest(a, b) = 0 THEN 0
-        |              ELSE CAST(round((b - a) / greatest(a, b) * 1000000) AS BIGINT) END AS sppm
-        |       FROM p)
-        |SELECT cid, count(*) AS n,
-        |       round(sum(sppm) * 1.0 / (count(*) * 1000000.0), 6) AS mean_s
-        |FROM sv GROUP BY cid ORDER BY cid""".stripMargin) { (s, d) =>
+      s"""$kmAssignSql,
+         |p AS (SELECT vec_id,
+         |        min(CASE WHEN rn = 1 THEN cid END) AS cid,
+         |        min(CASE WHEN rn = 1 THEN dist END) AS a,
+         |        min(CASE WHEN rn = 2 THEN dist END) AS b
+         |      FROM rr WHERE rn <= 2 GROUP BY vec_id),
+         |sv AS (SELECT cid, CASE WHEN greatest(a, b) = 0 THEN 0
+         |              ELSE CAST(round((b - a) / greatest(a, b) * 1000000) AS BIGINT) END AS sppm
+         |       FROM p)
+         |SELECT cid, count(*) AS n,
+         |       round(sum(sppm) * 1.0 / (count(*) * 1000000.0), 6) AS mean_s
+         |FROM sv GROUP BY cid ORDER BY cid""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val top2 = emb.crossJoin(broadcast(cents))
+      val top2 = emb.crossJoin(broadcast(seedCentroids(emb)))
         .select(col("vec_id"),
-          round(graft.similarity.KMeans.sqDist("embedding", "cvec"), 4).as("dist"),
+          round(KMeans.sqDist("embedding", "cvec"), 4).as("dist"),
           col("cid"))
         .groupBy("vec_id")
         .agg(slice(array_sort(collect_list(struct(col("dist"), col("cid")))), 1, 2).as("t"))
@@ -1015,9 +901,9 @@ object SimilarityQueries {
          |        GROUP BY 1)
          |SELECT qid, n_hit, (n_hit * 1000000) // 5 AS recall_ppm
          |FROM hit ORDER BY qid""".stripMargin) { (s, d) =>
-      val ex = SimilarityQueries.topkCos(s, d, sameLabelOnly = false, k = 5)
+      val ex = SimilarityQueries.topkCos(Tables.embeddings(s, d), sameLabelOnly = false, k = 5)
         .select(col("qid"), col("nid"))
-      val iv = SimilarityQueries.topkCos(s, d, sameLabelOnly = true, k = 5)
+      val iv = SimilarityQueries.topkCos(Tables.embeddings(s, d), sameLabelOnly = true, k = 5)
         .select(col("qid").as("iqid"), col("nid").as("inid"))
       ex.join(iv, col("iqid") === col("qid") && col("inid") === col("nid"), "left")
         .groupBy("qid").agg(count(col("inid")).as("n_hit"))

@@ -54,6 +54,53 @@ object StatQueries {
   private def lnMilliSql(e: String): String =
     s"CAST(round(ln($e) * 1e3) AS BIGINT)"
 
+  /** The two-sample family's input: document lengths split en (a) vs
+    * non-en (b), collapsed to the distinct-score table (score, ca, cb). Its
+    * row count is bounded by the score domain, not by the corpus.
+    */
+  private def scoreCounts(docs: DataFrame): DataFrame =
+    docs.select(col("n_chars").as("score"),
+        when(col("lang") === "en", 1L).otherwise(0L).as("a"),
+        when(col("lang") === "en", 0L).otherwise(1L).as("b"))
+      .groupBy("score")
+      .agg(sum("a").cast("long").as("ca"), sum("b").cast("long").as("cb"))
+
+  /** [[scoreCounts]]'s side totals as one row (n_a, n_b). */
+  private def sideTotals(g: DataFrame): DataFrame =
+    g.agg(sum("ca").cast("long").as("n_a"), sum("cb").cast("long").as("n_b"))
+
+  /** The ECDF table: [[scoreCounts]] with the prefix sums cum_a, cum_b and
+    * the side totals on every row. The unpartitioned window runs over the
+    * distinct-score table only.
+    */
+  private def ecdf(docs: DataFrame): DataFrame = {
+    val g = scoreCounts(docs)
+    val w = Window.orderBy("score")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    g.withColumn("cum_a", sum("ca").over(w).cast("long"))
+      .withColumn("cum_b", sum("cb").over(w).cast("long"))
+      .crossJoin(broadcast(sideTotals(g)))
+  }
+
+  /** [[scoreCounts]] as DuckDB CTEs `s` and `g`. */
+  private val scoreCountsSql =
+    """WITH s AS (SELECT n_chars AS score,
+      |             CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS a,
+      |             CAST(CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS BIGINT) AS b
+      |           FROM documents),
+      |g AS (SELECT score, CAST(sum(a) AS BIGINT) AS ca, CAST(sum(b) AS BIGINT) AS cb
+      |      FROM s GROUP BY 1)""".stripMargin
+
+  /** [[ecdf]] as DuckDB CTEs `s`, `g` and `c`. */
+  private val ecdfSql =
+    s"""$scoreCountsSql,
+       |c AS (SELECT score, ca, cb,
+       |        CAST(sum(ca) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_a,
+       |        CAST(sum(cb) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_b,
+       |        CAST(sum(ca) OVER () AS BIGINT) AS n_a,
+       |        CAST(sum(cb) OVER () AS BIGINT) AS n_b
+       |      FROM g)""".stripMargin
+
   def all: Seq[Q] = Seq(
 
     // ── KS1: two-sample Kolmogorov–Smirnov statistic between the English
@@ -74,36 +121,13 @@ object StatQueries {
     // (an ML quality float) must be binned/quantized to a bounded domain
     // first — the same pre-step dq3's PSI takes — before riding this plan.
     Q("ks1_ks_test",
-      """WITH s AS (SELECT n_chars AS score,
-        |             CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS a,
-        |             CAST(CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS BIGINT) AS b
-        |           FROM documents),
-        |g AS (SELECT score, CAST(sum(a) AS BIGINT) AS ca, CAST(sum(b) AS BIGINT) AS cb
-        |      FROM s GROUP BY 1),
-        |c AS (SELECT score,
-        |        CAST(sum(ca) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_a,
-        |        CAST(sum(cb) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_b,
-        |        CAST(sum(ca) OVER () AS BIGINT) AS n_a,
-        |        CAST(sum(cb) OVER () AS BIGINT) AS n_b
-        |      FROM g)
-        |SELECT max(n_a) AS n_a, max(n_b) AS n_b,
-        |       CAST(max(abs(cum_a * n_b - cum_b * n_a)) AS BIGINT) AS d_scaled,
-        |       CAST((CAST(max(abs(cum_a * n_b - cum_b * n_a)) AS HUGEINT) * 1000000)
-        |         // (CAST(max(n_a) AS HUGEINT) * max(n_b)) AS BIGINT) AS d_ppm
-        |FROM c""".stripMargin) { (s, d) =>
-      val g = Tables.documents(s, d)
-        .select(col("n_chars").as("score"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("a"),
-          when(col("lang") === "en", 0L).otherwise(1L).as("b"))
-        .groupBy("score")
-        .agg(sum("a").cast("long").as("ca"), sum("b").cast("long").as("cb"))
-      val tot = g.agg(sum("ca").cast("long").as("n_a"),
-        sum("cb").cast("long").as("n_b"))
-      val w = Window.orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      g.withColumn("cum_a", sum("ca").over(w).cast("long"))
-        .withColumn("cum_b", sum("cb").over(w).cast("long"))
-        .crossJoin(broadcast(tot))
+      s"""$ecdfSql
+         |SELECT max(n_a) AS n_a, max(n_b) AS n_b,
+         |       CAST(max(abs(cum_a * n_b - cum_b * n_a)) AS BIGINT) AS d_scaled,
+         |       CAST((CAST(max(abs(cum_a * n_b - cum_b * n_a)) AS HUGEINT) * 1000000)
+         |         // (CAST(max(n_a) AS HUGEINT) * max(n_b)) AS BIGINT) AS d_ppm
+         |FROM c""".stripMargin) { (s, d) =>
+      ecdf(Tables.documents(s, d))
         .agg(max("n_a").as("n_a"), max("n_b").as("n_b"),
           max(abs(col("cum_a") * col("n_b") - col("cum_b") * col("n_a")))
             .cast("long").as("d_scaled"))
@@ -410,41 +434,16 @@ object StatQueries {
     // 100 TB: identical plan class to ks1 — one keyed agg to the
     // domain-bounded score table, windows over THAT, 1-row result.
     Q("emd1_wasserstein",
-      """WITH s AS (SELECT n_chars AS score,
-        |             CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS a,
-        |             CAST(CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS BIGINT) AS b
-        |           FROM documents),
-        |g AS (SELECT score, CAST(sum(a) AS BIGINT) AS ca, CAST(sum(b) AS BIGINT) AS cb
-        |      FROM s GROUP BY 1),
-        |c AS (SELECT score,
-        |        CAST(sum(ca) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_a,
-        |        CAST(sum(cb) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_b,
-        |        CAST(sum(ca) OVER () AS BIGINT) AS n_a,
-        |        CAST(sum(cb) OVER () AS BIGINT) AS n_b,
-        |        lead(score) OVER (ORDER BY score) AS nxt
-        |      FROM g)
-        |SELECT max(n_a) AS n_a, max(n_b) AS n_b,
-        |       CAST((sum(CASE WHEN nxt IS NULL THEN CAST(0 AS HUGEINT)
-        |                      ELSE CAST(abs(cum_a * n_b - cum_b * n_a) AS HUGEINT)
-        |                             * (nxt - score) END) * 1000000)
-        |         // (CAST(max(n_a) AS HUGEINT) * max(n_b)) AS BIGINT) AS w1_micro
-        |FROM c""".stripMargin) { (s, d) =>
-      val g = Tables.documents(s, d)
-        .select(col("n_chars").as("score"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("a"),
-          when(col("lang") === "en", 0L).otherwise(1L).as("b"))
-        .groupBy("score")
-        .agg(sum("a").cast("long").as("ca"), sum("b").cast("long").as("cb"))
-      val tot = g.agg(sum("ca").cast("long").as("n_a"),
-        sum("cb").cast("long").as("n_b"))
-      val w = Window.orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // same bounded-window contract as ks1: every window input is the
-      // distinct-score table
-      g.withColumn("cum_a", sum("ca").over(w).cast("long"))
-        .withColumn("cum_b", sum("cb").over(w).cast("long"))
+      s"""$ecdfSql,
+         |cn AS (SELECT *, lead(score) OVER (ORDER BY score) AS nxt FROM c)
+         |SELECT max(n_a) AS n_a, max(n_b) AS n_b,
+         |       CAST((sum(CASE WHEN nxt IS NULL THEN CAST(0 AS HUGEINT)
+         |                      ELSE CAST(abs(cum_a * n_b - cum_b * n_a) AS HUGEINT)
+         |                             * (nxt - score) END) * 1000000)
+         |         // (CAST(max(n_a) AS HUGEINT) * max(n_b)) AS BIGINT) AS w1_micro
+         |FROM cn""".stripMargin) { (s, d) =>
+      ecdf(Tables.documents(s, d))
         .withColumn("nxt", lead("score", 1).over(Window.orderBy("score")))
-        .crossJoin(broadcast(tot))
         .agg(max("n_a").as("n_a"), max("n_b").as("n_b"),
           sum(when(col("nxt").isNull, lit(0).cast("decimal(38,0)"))
             .otherwise((abs(col("cum_a") * col("n_b") - col("cum_b") * col("n_a"))
@@ -606,12 +605,7 @@ object StatQueries {
       val lnBi = lnMicroSql("CAST(bi AS DOUBLE)")
       val lnM = lnMicroSql("CAST(ai + bi AS DOUBLE)")
       val ln2 = lnMicroSql("2")
-      s"""WITH s AS (SELECT n_chars AS score,
-         |             CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS a,
-         |             CAST(CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS BIGINT) AS b
-         |           FROM documents),
-         |g AS (SELECT score, CAST(sum(a) AS BIGINT) AS ca, CAST(sum(b) AS BIGINT) AS cb
-         |      FROM s GROUP BY 1),
+      s"""$scoreCountsSql,
          |t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a, CAST(sum(cb) AS BIGINT) AS n_b FROM g),
          |m AS (SELECT n_a, n_b,
          |        CAST(ca AS HUGEINT) * n_b AS ai, CAST(cb AS HUGEINT) * n_a AS bi
@@ -637,15 +631,8 @@ object StatQueries {
          |           * (abs(sa + sb) // (2 * dd)) AS BIGINT) END AS js_micro
          |FROM f""".stripMargin
     }) { (s, d) =>
-      val g = Tables.documents(s, d)
-        .select(col("n_chars").as("score"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("a"),
-          when(col("lang") === "en", 0L).otherwise(1L).as("b"))
-        .groupBy("score")
-        .agg(sum("a").cast("long").as("ca"), sum("b").cast("long").as("cb"))
-      val tot = g.agg(sum("ca").cast("long").as("n_a"),
-        sum("cb").cast("long").as("n_b"))
-      val m = g.crossJoin(broadcast(tot))
+      val g = scoreCounts(Tables.documents(s, d))
+      val m = g.crossJoin(broadcast(sideTotals(g)))
         .select(col("n_a"), col("n_b"),
           (col("ca").cast("decimal(38,0)") * col("n_b")).as("ai"),
           (col("cb").cast("decimal(38,0)") * col("n_a")).as("bi"))
@@ -885,36 +872,13 @@ object StatQueries {
     // conditional-min agg. BOUNDED-WINDOW CONTRACT: the ECDF window
     // input is the distinct-score table (ks1's spec-pinned bound).
     Q("qq1_quantile_drift",
-      """WITH s AS (SELECT n_chars AS score,
-        |             CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS a,
-        |             CAST(CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS BIGINT) AS b
-        |           FROM documents),
-        |g AS (SELECT score, CAST(sum(a) AS BIGINT) AS ca, CAST(sum(b) AS BIGINT) AS cb
-        |      FROM s GROUP BY 1),
-        |c AS (SELECT score,
-        |        CAST(sum(ca) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_a,
-        |        CAST(sum(cb) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_b,
-        |        CAST(sum(ca) OVER () AS BIGINT) AS n_a,
-        |        CAST(sum(cb) OVER () AS BIGINT) AS n_b
-        |      FROM g),
-        |l AS (SELECT CAST(range + 1 AS BIGINT) AS lvl FROM range(19))
-        |SELECT l.lvl,
-        |       min(CASE WHEN n_a > 0 AND 20 * cum_a >= l.lvl * n_a THEN score END) AS qa,
-        |       min(CASE WHEN n_b > 0 AND 20 * cum_b >= l.lvl * n_b THEN score END) AS qb
-        |FROM c CROSS JOIN l GROUP BY 1 ORDER BY lvl""".stripMargin) { (s, d) =>
-      val g = Tables.documents(s, d)
-        .select(col("n_chars").as("score"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("a"),
-          when(col("lang") === "en", 0L).otherwise(1L).as("b"))
-        .groupBy("score")
-        .agg(sum("a").cast("long").as("ca"), sum("b").cast("long").as("cb"))
-      val tot = g.agg(sum("ca").cast("long").as("n_a"),
-        sum("cb").cast("long").as("n_b"))
-      val w = Window.orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val c = g.withColumn("cum_a", sum("ca").over(w).cast("long"))
-        .withColumn("cum_b", sum("cb").over(w).cast("long"))
-        .crossJoin(broadcast(tot))
+      s"""$ecdfSql,
+         |l AS (SELECT CAST(range + 1 AS BIGINT) AS lvl FROM range(19))
+         |SELECT l.lvl,
+         |       min(CASE WHEN n_a > 0 AND 20 * cum_a >= l.lvl * n_a THEN score END) AS qa,
+         |       min(CASE WHEN n_b > 0 AND 20 * cum_b >= l.lvl * n_b THEN score END) AS qb
+         |FROM c CROSS JOIN l GROUP BY 1 ORDER BY lvl""".stripMargin) { (s, d) =>
+      val c = ecdf(Tables.documents(s, d))
       val levels = s.range(1, 20).select(col("id").as("lvl"))
       c.crossJoin(broadcast(levels))
         .groupBy("lvl")
@@ -1018,40 +982,23 @@ object StatQueries {
     // empty side guard to NULL symmetrically. BOUNDED-WINDOW CONTRACT:
     // ks1's — the only window runs over the distinct-score table.
     Q("mwu1_mann_whitney",
-      """WITH s AS (SELECT n_chars AS score,
-        |             CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS a,
-        |             CAST(CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS BIGINT) AS b
-        |           FROM documents),
-        |g AS (SELECT score, CAST(sum(a) AS BIGINT) AS ca, CAST(sum(b) AS BIGINT) AS cb
-        |      FROM s GROUP BY 1),
-        |c AS (SELECT ca, cb,
-        |        CAST(sum(cb) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_b
-        |      FROM g),
-        |f AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a, CAST(sum(cb) AS BIGINT) AS n_b,
-        |        CAST(sum(CAST(ca AS HUGEINT) * (2 * (cum_b - cb) + cb)) AS BIGINT) AS u2,
-        |        sum(CAST(ca + cb AS HUGEINT) * (ca + cb) * (ca + cb) - (ca + cb)) AS tsum
-        |      FROM c)
-        |SELECT n_a, n_b, u2,
-        |  CASE WHEN n_a = 0 OR n_b = 0 OR n_a + n_b < 2
-        |         OR CAST(n_a + n_b + 1 AS DOUBLE)
-        |            - CAST(tsum AS DOUBLE) / (CAST(n_a + n_b AS DOUBLE) * (n_a + n_b - 1.0)) <= 0
-        |       THEN NULL
-        |       ELSE round((CAST(u2 AS DOUBLE) - CAST(n_a AS DOUBLE) * n_b)
-        |         / (2.0 * sqrt(CAST(n_a AS DOUBLE) * n_b
-        |            * (CAST(n_a + n_b + 1 AS DOUBLE)
-        |               - CAST(tsum AS DOUBLE) / (CAST(n_a + n_b AS DOUBLE) * (n_a + n_b - 1.0)))
-        |            / 12.0)), 6) END AS z
-        |FROM f""".stripMargin) { (s, d) =>
-      val g = Tables.documents(s, d)
-        .select(col("n_chars").as("score"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("a"),
-          when(col("lang") === "en", 0L).otherwise(1L).as("b"))
-        .groupBy("score")
-        .agg(sum("a").cast("long").as("ca"), sum("b").cast("long").as("cb"))
-      val w = Window.orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val c = g.select(col("ca"), col("cb"),
-        sum("cb").over(w).cast("long").as("cum_b"))
+      s"""$ecdfSql,
+         |f AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a, CAST(sum(cb) AS BIGINT) AS n_b,
+         |        CAST(sum(CAST(ca AS HUGEINT) * (2 * (cum_b - cb) + cb)) AS BIGINT) AS u2,
+         |        sum(CAST(ca + cb AS HUGEINT) * (ca + cb) * (ca + cb) - (ca + cb)) AS tsum
+         |      FROM c)
+         |SELECT n_a, n_b, u2,
+         |  CASE WHEN n_a = 0 OR n_b = 0 OR n_a + n_b < 2
+         |         OR CAST(n_a + n_b + 1 AS DOUBLE)
+         |            - CAST(tsum AS DOUBLE) / (CAST(n_a + n_b AS DOUBLE) * (n_a + n_b - 1.0)) <= 0
+         |       THEN NULL
+         |       ELSE round((CAST(u2 AS DOUBLE) - CAST(n_a AS DOUBLE) * n_b)
+         |         / (2.0 * sqrt(CAST(n_a AS DOUBLE) * n_b
+         |            * (CAST(n_a + n_b + 1 AS DOUBLE)
+         |               - CAST(tsum AS DOUBLE) / (CAST(n_a + n_b AS DOUBLE) * (n_a + n_b - 1.0)))
+         |            / 12.0)), 6) END AS z
+         |FROM f""".stripMargin) { (s, d) =>
+      val c = ecdf(Tables.documents(s, d))
       c.agg(sum("ca").cast("long").as("n_a"), sum("cb").cast("long").as("n_b"),
           sum((col("ca").cast("decimal(38,0)")
             * (lit(2L) * (col("cum_b") - col("cb")) + col("cb"))))

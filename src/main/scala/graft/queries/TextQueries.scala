@@ -189,6 +189,30 @@ object TextQueries {
        |sig AS (SELECT doc_id, ($sig) AS sig FROM sums)""".stripMargin
   }
 
+  /** Near-dup clusters: every doc in a dd2 pair (Jaccard ≥
+    * [[NearDupThreshold]]) mapped to its keeper, the component's minimum
+    * doc_id (graft.dedup.Clusters iterates min-label propagation to a
+    * fixpoint) → (doc_id, keeper_id).
+    */
+  private def nearDupKeepers(s: SparkSession, d: String): DataFrame =
+    graft.dedup.Clusters.assignKeepers(
+      allPairsDf(s, d).filter(col("jaccard") >= NearDupThreshold).select("a", "b"))
+
+  /** [[nearDupKeepers]] in DuckDB: the same propagation unrolled 40 rounds
+    * (≥ the maximum component diameter on the test corpora).
+    */
+  private val nearDupClustersSql = graft.dedup.Clusters.unrolledSql(
+    s"""$shingleCtes,
+       |pairs0 AS MATERIALIZED (
+       |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
+       |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
+       |  GROUP BY 1, 2),
+       |pairs AS MATERIALIZED (
+       |  SELECT a, b FROM pairs0
+       |  JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
+       |  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= $NearDupThreshold)""".stripMargin,
+    rounds = 40)
+
   def all: Seq[Q] = Seq(
     // ── T1: token counting (whitespace + BPE-ish piece regex) ──────────────
     Q("t1_token_count",
@@ -469,48 +493,19 @@ object TextQueries {
     // clustered doc to its keeper (component min id). Spark iterates to
     // fixpoint (graft.dedup.Clusters); the oracle unrolls the same
     // propagation 40 rounds (≥ max component diameter here).
-    Q("dd6_dedup_clusters",
-      graft.dedup.Clusters.unrolledSql(
-        s"""$shingleCtes,
-           |pairs0 AS MATERIALIZED (
-           |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
-           |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
-           |  GROUP BY 1, 2),
-           |pairs AS MATERIALIZED (
-           |  SELECT a, b FROM pairs0
-           |  JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-           |  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= $NearDupThreshold)""".stripMargin,
-        rounds = 40)) { (s, d) =>
-      val pairs = allPairsDf(s, d)
-        .filter(col("jaccard") >= NearDupThreshold)
-        .select("a", "b")
-      graft.dedup.Clusters.assignKeepers(pairs).orderBy("doc_id")
+    Q("dd6_dedup_clusters", nearDupClustersSql) { (s, d) =>
+      nearDupKeepers(s, d).orderBy("doc_id")
     },
 
     // ── DD7: the end-to-end dedup decision — the corpus with near-dup
     // non-keepers REMOVED (pairs → components → anti-join). This is the
     // operator a training pipeline actually runs; dd2/dd6 are its stages.
-    Q("dd7_dedup_corpus", {
-      val clustersSql = graft.dedup.Clusters.unrolledSql(
-        s"""$shingleCtes,
-           |pairs0 AS MATERIALIZED (
-           |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
-           |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
-           |  GROUP BY 1, 2),
-           |pairs AS MATERIALIZED (
-           |  SELECT a, b FROM pairs0
-           |  JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-           |  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= $NearDupThreshold)""".stripMargin,
-        rounds = 40)
+    Q("dd7_dedup_corpus",
       s"""SELECT d.doc_id FROM documents d
          |WHERE d.doc_id NOT IN (
-         |  SELECT doc_id FROM ($clustersSql) cl WHERE doc_id <> keeper_id)
-         |ORDER BY d.doc_id""".stripMargin
-    }) { (s, d) =>
-      val pairs = allPairsDf(s, d)
-        .filter(col("jaccard") >= NearDupThreshold)
-        .select("a", "b")
-      val nonKeepers = graft.dedup.Clusters.assignKeepers(pairs)
+         |  SELECT doc_id FROM ($nearDupClustersSql) cl WHERE doc_id <> keeper_id)
+         |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
+      val nonKeepers = nearDupKeepers(s, d)
         .filter(col("doc_id") =!= col("keeper_id"))
       Tables.documents(s, d).select("doc_id")
         .join(nonKeepers.select("doc_id"), Seq("doc_id"), "left_anti")

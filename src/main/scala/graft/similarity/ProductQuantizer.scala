@@ -112,6 +112,16 @@ object ProductQuantizer {
     books
   }
 
+  /** The ADC distance table (qid, sub, code, dfp): each query subvector's
+    * squared distance to every codebook entry in 1e-4 fixed point.
+    */
+  def distanceTable(querySubs: DataFrame, books: DataFrame, qIdCol: String): DataFrame = {
+    graft.functions.GraftFunctions.register(querySubs.sparkSession)
+    querySubs.join(broadcast(books), "sub")
+      .select(col(qIdCol).as("qid"), col("sub"), col("cid").as("code"),
+        round(KMeans.sqDist("sv", "cv") * 10000).cast("long").as("dfp"))
+  }
+
   /** ADC top-k: `codes` is the encoded corpus (idCol, sub, code),
     * `querySubs` the queries' subvectors (qIdCol, sub, sv). The distance
     * table (qid, sub, cid, dfp) is nQ·nSub·k rows — broadcast; approximate
@@ -120,10 +130,7 @@ object ProductQuantizer {
     */
   def adcTopK(codes: DataFrame, books: DataFrame, querySubs: DataFrame,
       qIdCol: String, idCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(querySubs.sparkSession)
-    val dtable = querySubs.join(broadcast(books), "sub")
-      .select(col(qIdCol).as("qid"), col("sub"), col("cid").as("code"),
-        round(KMeans.sqDist("sv", "cv") * 10000).cast("long").as("dfp"))
+    val dtable = distanceTable(querySubs, books, qIdCol)
     val w = Window.partitionBy("qid").orderBy(col("adist_fp"), col(idCol))
     codes.join(broadcast(dtable), Seq("sub", "code"))
       .groupBy(col("qid"), col(idCol))

@@ -95,6 +95,28 @@ class Wave14Spec extends SparkSpec {
       ("view", 249999750000L, 999L)), s"got ${out.toSeq}")
   }
 
+  test("at3: an event type named like the audit tag is an ordinary channel") {
+    // the at3a journeys with `view` spelled `__CT__`: the rows must be
+    // at3a's, channel name aside
+    def run(view: String): Seq[(String, Long, Long)] = {
+      val dir = tmpDir("at3c")
+      writeEvents(dir, Seq(
+        (1L, 1L, "2024-01-01 10:00:00", view, 0.0),
+        (2L, 1L, "2024-01-01 10:01:00", "click", 0.0),
+        (3L, 1L, "2024-01-01 10:02:00", "purchase", 10.0),
+        (4L, 1L, "2024-01-01 10:03:00", view, 0.0),
+        (5L, 2L, "2024-01-01 11:00:00", view, 0.0),
+        (6L, 3L, "2024-01-01 12:00:00", "click", 0.0),
+        (7L, 3L, "2024-01-01 12:05:00", "purchase", 20.0),
+        (8L, 4L, "2024-01-01 13:00:00", view, 0.0)))
+      SparkEntry.queries("at3_markov_attribution")(spark, dir).collect().toSeq
+        .map(r => (if (r.getString(0) == view) "view" else r.getString(0),
+          r.getLong(1), r.getLong(2)))
+        .sorted
+    }
+    assert(run("__CT__") == run("view"))
+  }
+
   test("at3: a corpus with no purchases attributes zero everywhere " +
       "(the sum_eff=0 guard)") {
     val dir = tmpDir("at3b")

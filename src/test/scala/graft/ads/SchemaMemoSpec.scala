@@ -41,7 +41,10 @@ class SchemaMemoSpec extends SparkSpec {
 
   test("a second readTable on an unchanged table runs no Spark job") {
     val table = s"${work("hit")}/t"
-    Sinks.appendToTableChecked(spark, batch("ad1", "2024-05-01", "act_a"), table).appended
+    // a plain write: an append through Sinks would record its schema itself
+    batch("ad1", "2024-05-01", "act_a")
+      .withColumn("p_date", $"date_start".cast("date"))
+      .write.partitionBy("p_date").parquet(table)
     val (_, first) = JobCounter.during(spark)(Sinks.readTable(spark, table))
     assert(first.footerMerges.get() == 1, "the table changed, so the first read merges")
     val (df, second) = JobCounter.during(spark)(Sinks.readTable(spark, table))
@@ -69,6 +72,28 @@ class SchemaMemoSpec extends SparkSpec {
     val plain = Sinks.readTable(spark, table)
     assert(plain.schema == mergedRead(table))
     assert(plain.filter($"ad_name" === "ad3").select("act_c").as[Double].head() == 1.0)
+  }
+
+  test("an append records the merging read's schema: the next read runs no job") {
+    val table = s"${work("record")}/t"
+    Sinks.appendToTableChecked(spark, batch("ad1", "2024-05-01", "act_a"), table).appended
+    // the first adds a column, the second does not
+    Seq(batch("ad2", "2024-05-02", "act_b"), batch("ad3", "2024-05-03", "act_a")).foreach { b =>
+      assert(Sinks.appendToTableChecked(spark, b, table).appended == 1)
+      val (df, counter) = JobCounter.during(spark)(Sinks.readTable(spark, table))
+      assert(counter.jobs.get() == 0, s"${counter.jobs.get()} jobs")
+      assert(df.schema == mergedRead(table)) // names, order, types and nullability
+    }
+  }
+
+  test("compact right after loadCsv runs no footer-merge job") {
+    val dir = work("compact")
+    val (csv, _) = Pipelines.backfill(spark, fixtureDir, Seq("a1", "a2"),
+      "2024-03-01", "2024-03-02", s"$dir/out")
+    assert(Pipelines.loadCsv(spark, csv, s"$dir/t").counters.appended == 4)
+    val (_, counter) = JobCounter.during(spark)(Sinks.compact(spark, s"$dir/t"))
+    assert(counter.footerMerges.get() == 0, counter.callSites)
+    assert(Sinks.readTable(spark, s"$dir/t").count() == 4)
   }
 
   test("a dailySync into a just-read table runs no footer merge and at most 6 jobs") {

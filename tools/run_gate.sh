@@ -1,10 +1,15 @@
 #!/usr/bin/env bash
-# One-command local gate: tests + correctness (DuckDB oracle) + ads ETL smoke
-# + pack smoke + bench smoke.
+# One-command local gate: copied-code scan + tests + correctness (DuckDB
+# oracle) + ads ETL smoke + pack smoke + bench smoke.
 # Usage: tools/run_gate.sh [sfDir]   (default /root/testdata/sf0.01)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
+
+echo "== Copied code in src/main =="
+# lines repeating an earlier 5-line block; a stage several queries share
+# belongs in one builder and its DuckDB twin, not in a new copy
+python3 tools/dup_scan.py --max 107 | tail -n 1
 
 echo "== sbt test =="
 sbt test 2>&1 | grep -E "Tests: |All tests" || { echo "TESTS FAILED"; exit 1; }
