@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Rounds
 
 /** Multi-hop BFS (unweighted shortest hop-distance from a seed set) as
   * frontier-at-a-time joins — the third iterative graph operator next to
@@ -23,13 +24,11 @@ import org.apache.spark.sql.functions._
   */
 object Bfs {
 
-  /** Hash-partition edges on `src` once and cache; every expansion round
-    * reuses this partitioning directly.
+  /** Hash-partition edges on `src` once; cached (see [[run]]), every
+    * expansion round reuses this partitioning directly.
     */
   def prepare(edges0: DataFrame): DataFrame =
-    edges0.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    edges0.select(col("src"), col("dst")).repartition(col("src"))
 
   /** One BFS round: nodes first reached at distance `hop` — the frontier's
     * out-neighbors minus everything already settled. Only the frontier side
@@ -54,28 +53,28 @@ object Bfs {
     */
   def run(edges0: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0)
-    val edges = prepare(edges0)
-    try {
-      edges.count() // materialize once; every round reuses the partitioning
-      var settled = seeds.select(col("node")).distinct()
+    Rounds.withCached(prepare(edges0)) { edges =>
+      // fill the cache before round 1 is planned: round 1's reach carries
+      // the cache's stats into the settled set, and an unfilled cache's
+      // estimate (the whole upstream join) keeps round 2's anti-join on
+      // settled from being pushed below its distinct as a broadcast
+      edges.count()
+      val seeded = seeds.select(col("node")).distinct()
         .select(col("node"), lit(0).as("dist"))
         .localCheckpoint()
-      var frontier = settled
-      var hop = 0
       // No per-round emptiness probe (one Spark job per round): with a
       // FIXED hop budget an emptied frontier no-ops the remaining rounds
       // (expand of an empty frontier is empty), so the probe only ever
-      // costs — see Sssp.run for the same reasoning.
-      while (hop < maxHops) {
-        hop += 1
-        val reached = expand(edges, frontier, settled, hop).localCheckpoint()
-        // reached is checkpointed, so the settled union is a flat union of
-        // ≤maxHops checkpointed frames — O(1)-deep lineage without its own
-        // checkpoint (which re-materialized ALL settled rows every round)
-        settled = settled.unionByName(reached)
-        frontier = reached
+      // costs — see Sssp.run for the same reasoning. Each round's reach is
+      // checkpointed, so the settled set is a flat union of ≤maxHops
+      // checkpointed frames — O(1)-deep lineage without a checkpoint of
+      // its own (which re-materialized ALL settled rows every round).
+      val (settled, _) = (1 to maxHops).foldLeft((seeded, seeded)) {
+        case ((settled, frontier), hop) =>
+          val reached = expand(edges, frontier, settled, hop).localCheckpoint()
+          (settled.unionByName(reached), reached)
       }
       settled
-    } finally edges.unpersist(blocking = false)
+    }
   }
 }

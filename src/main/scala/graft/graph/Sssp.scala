@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Rounds
 
 /** Weighted single-source shortest paths (bounded synchronous
   * Bellman–Ford) — the weighted sibling of [[Bfs]].
@@ -35,47 +36,39 @@ object Sssp {
     */
   def run(edges0: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0)
-    val edges = edges0.select(col("src"), col("dst"), col("w"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      edges.count() // materialize once; every round reuses the partitioning
-      var dist = seeds.select(col("node")).distinct()
+    // every round reuses the cached partitioning; round 1's job fills it
+    // (unlike Bfs's, no round here plans differently on an unfilled cache)
+    Rounds.withCached(edges0.select(col("src"), col("dst"), col("w"))
+        .repartition(col("src"))) { edges =>
+      val seeded = seeds.select(col("node")).distinct()
         .select(col("node"), lit(0L).as("dist"))
         .localCheckpoint()
-      var frontier = dist
-      var r = 0
-      // No per-round emptiness probe: the probe was its own Spark job every
-      // round (~1/12 of the query's job budget each), and under a FIXED
-      // round count an emptied frontier makes every remaining round a
-      // no-op anyway (empty cand ⇒ merged = dist), so the early exit buys
-      // nothing at any scale where `rounds` is sized to the graph — while
-      // the probe is paid on every round of every run.
-      while (r < rounds) {
-        r += 1
+      // The state is the round's checkpointed min-merge; the frontier (the
+      // nodes it improved) and the distances are filters over it, so
+      // neither needs its own checkpoint. No per-round emptiness probe:
+      // the probe was its own Spark job every round (~1/12 of the query's
+      // job budget each), and under a FIXED round count an emptied
+      // frontier makes every remaining round a no-op anyway (empty cand ⇒
+      // merged = dist), so the early exit buys nothing at any scale where
+      // `rounds` is sized to the graph — while the probe is paid on every
+      // round of every run.
+      Rounds.iterate(seeded, rounds) { (merged, r) =>
+        // every seed is new in round 1
+        val frontier = if (r == 1) merged
+          else merged.filter(col("old").isNull || col("dist") < col("old"))
         // candidate distances through the frontier's out-edges
         val cand = edges
           .join(frontier.select(col("node").as("src"), col("dist").as("fd")), "src")
           .select(col("dst").as("node"), (col("fd") + col("w")).as("dist"))
         // min-merge with the settled map; a node improves iff its new
         // min beats its old distance (or it is newly reached)
-        val merged = dist.select(col("node"), col("dist"), lit(1).as("settled"))
+        merged.select(col("node"), col("dist"), lit(1).as("settled"))
           .unionByName(cand.select(col("node"), col("dist"), lit(0).as("settled")))
           .groupBy("node")
           .agg(min(col("dist")).as("dist"),
             min(when(col("settled") === 1, col("dist"))).as("old"))
-          .localCheckpoint()
-        // merged is already checkpointed: the frontier filter over it has
-        // O(1) lineage, so a second checkpoint here was a pure extra
-        // materialization job per round (removed; isEmpty + next round's
-        // join read the cheap filter directly)
-        frontier = merged
-          .filter(col("old").isNull || col("dist") < col("old"))
-          .select(col("node"), col("dist"))
-        dist = merged.select(col("node"), col("dist"))
-      }
-      dist
-    } finally edges.unpersist(blocking = false)
+      }.select(col("node"), col("dist"))
+    }
   }
 
   /** Oracle-side mirror: the same synchronous rounds unrolled as CTEs.

@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables}
-import QueryHelpers.h16
+import graft.{Q, Rounds, Tables}
+import QueryHelpers.{h16, purchaseCentsByDay, purchaseCentsByDaySql}
 
 /** The model-evaluation and monitoring operators of a production pipeline
   * — rank-statistic AUC, empirical calibration tables, precision/recall
@@ -945,10 +945,7 @@ object EvalQueries {
     // length. Corpus scans once into the day-grain pre-agg; everything
     // after is |days| rows.
     Q("ses1_exp_smoothing",
-      """WITH dc AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
-        |                            '%Y-%m-%d') AS day,
-        |             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-        |           FROM events WHERE event_type = 'purchase' GROUP BY 1),
+      s"""WITH ${purchaseCentsByDaySql()},
         |r AS (SELECT day, cents,
         |             CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t FROM dc),
         |y AS (SELECT day, cents, t,
@@ -965,9 +962,7 @@ object EvalQueries {
         |            THEN CAST(ut // (CAST(1 AS HUGEINT) << (t - 1)) AS BIGINT)
         |       END AS smoothed_cents
         |FROM u ORDER BY day""".stripMargin) { (s, d) =>
-      val dc = Tables.events(s, d).filter(col("event_type") === "purchase")
-        .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-        .agg(sum(expr("cast(round(value * 100) as bigint)")).as("cents"))
+      val dc = purchaseCentsByDay(s, d)
       val wd = Window.orderBy("day")
       val r = dc.withColumn("t", row_number().over(wd).cast("long"))
       val centsBound = 320000000000L // the documented $3.2B/day contract
@@ -1269,10 +1264,7 @@ object EvalQueries {
     // twin or with zero revenue score NULL and drop from both engines
     // identically.
     Q("fc1_backtest_mape",
-      """WITH dc AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
-        |                            '%Y-%m-%d') AS day,
-        |              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-        |            FROM events WHERE event_type = 'purchase' GROUP BY 1),
+      s"""WITH ${purchaseCentsByDaySql()},
         |l AS (SELECT a.day, a.cents, b.cents AS fc
         |      FROM dc a LEFT JOIN dc b
         |        ON CAST(b.day AS DATE) = CAST(a.day AS DATE) - INTERVAL 7 DAY),
@@ -1289,9 +1281,7 @@ object EvalQueries {
         |            ELSE CAST(CAST(sign(sum(yh) - sum(y)) AS BIGINT)
         |                   * ((CAST(abs(sum(yh) - sum(y)) AS HUGEINT) * 1000000) // sum(y)) AS BIGINT) END AS bias_ppm
         |FROM s""".stripMargin) { (s, d) =>
-      val dc = Tables.events(s, d).filter(col("event_type") === "purchase")
-        .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-        .agg(sum(expr("cast(round(value * 100) as bigint)")).as("cents"))
+      val dc = purchaseCentsByDay(s, d)
       val a = dc.select(to_date(col("day")).as("dd"), col("cents"))
       val b = dc.select(to_date(col("day")).as("bd"), col("cents").as("fc"))
       val l = a.join(b, col("bd") === date_sub(col("dd"), 7), "left")
@@ -1498,7 +1488,7 @@ object EvalQueries {
     // a round (only st does), and HashPartitioning(rem) clusters the
     // round agg's (rem, st) keys — so every round's groupBy runs WITHOUT
     // an exchange and the whole chain between checkpoints is one stage
-    var m = rem.select(col("rem"), lit("START").as("st"),
+    val m0 = rem.select(col("rem"), lit("START").as("st"),
       lit(1000000000000L).as("v")).repartition(col("rem")).localCheckpoint()
     // One round = ONE left join instead of the former absorbed/moved
     // filter-union (which referenced m twice, so plans doubled per
@@ -1515,8 +1505,8 @@ object EvalQueries {
     // 12 pays superlinear planning) bounds lineage; the
     // truncated-integer arithmetic is checkpoint-cadence-invariant.
     val absorbing = col("m.st").isin("CONV", "NULL")
-    for (r <- 1 to at3Rounds) {
-      m = m.as("m")
+    val m = Rounds.iterate(m0, at3Rounds, every = 8) { (mass, _) =>
+      mass.as("m")
         .join(broadcast(p.as("p")),
           !absorbing && col("p.src") === col("m.st") &&
             col("p.nxt") =!= col("m.rem"), "left")
@@ -1526,7 +1516,6 @@ object EvalQueries {
           when(absorbing, col("m.v"))
             .otherwise(expr("(v * ppm) div 1000000L")).as("v"))
         .groupBy("rem", "st").agg(sum("v").cast("long").as("v"))
-      if (r % 8 == 0) m = m.localCheckpoint()
     }
     val conv = m.filter(col("st") === "CONV").select(col("rem"), col("v"))
     val base = rem.filter(col("rem") === "__none__")

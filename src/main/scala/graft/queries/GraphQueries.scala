@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Rounds, Tables}
 import QueryHelpers.lnMicroSql
 
 /** Graph queries: PageRank (gr1, personalized ppr1), triangles and
@@ -85,6 +85,32 @@ object GraphQueries {
        |      FROM bc x JOIN bc y ON x.o = y.o AND x.s < y.s)""".stripMargin
   }
 
+  /** The customer↔supplier trade graph (gr1, gr3): one directed edge
+    * `(src, dst)` each way per distinct (customer, supplier) pair traded
+    * through orders×lineitem. Node ids are parity-disjoint (customer = 2k,
+    * supplier = 2k+1): unlike a fixed additive offset this cannot collide
+    * at ANY scale factor. [[tradeEdgesSql]] is the oracle's spelling.
+    */
+  def tradeEdges(s: SparkSession, d: String): DataFrame = {
+    val e0 = orders(s, d)
+      .join(lineitem(s, d), col("l_orderkey") === col("o_orderkey"))
+      .select((col("o_custkey") * 2).cast("long").as("c"),
+        (col("l_suppkey") * 2 + 1).cast("long").as("s"))
+      .distinct()
+    // the two directions are disjoint (c even, s odd), so plain union
+    // equals SQL UNION's dedup here
+    e0.select(col("c").as("src"), col("s").as("dst"))
+      .union(e0.select(col("s").as("src"), col("c").as("dst")))
+  }
+
+  /** The oracle's [[tradeEdges]]: CTEs `e0(c, s)` and `ed(src, dst)`. */
+  val tradeEdgesSql: String =
+    """e0 AS MATERIALIZED (
+      |  SELECT DISTINCT CAST(2 * o_custkey AS BIGINT) AS c,
+      |                  CAST(2 * l_suppkey + 1 AS BIGINT) AS s
+      |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+      |ed AS MATERIALIZED (SELECT c AS src, s AS dst FROM e0 UNION SELECT s, c FROM e0)""".stripMargin
+
   /** Degrees (n, d) and per-node triangle counts (n, n_tri) of an
     * undirected edge list `(a, b)`. Every edge is oriented from its
     * (degree, id)-smaller endpoint, which bounds wedge fan-out by O(sqrt m)
@@ -162,22 +188,20 @@ object GraphQueries {
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     val sym = edges.select(col("a").as("u"), col("b").as("v"))
       .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
-    var labels = sym.select(col("u").as("node")).distinct()
+    val labels0 = sym.select(col("u").as("node")).distinct()
       .withColumn("lbl", col("node"))
-    for (_ <- 1 to rounds) {
+    Rounds.iterate(labels0, rounds) { (labels, _) =>
       val votes = sym.join(
         labels.select(col("node").as("v"), col("lbl").as("nl")), "v")
         .select(col("u").as("node"), col("nl").as("cand"))
       // argmax(count, then min label) as ONE agg over a struct ordering —
       // (cnt, -cand) max picks the highest count, then the smallest
       // label — cheaper than a per-node rank window and identical rows
-      labels = votes.groupBy("node", "cand").agg(count(lit(1)).as("cnt"))
+      votes.groupBy("node", "cand").agg(count(lit(1)).as("cnt"))
         .groupBy("node")
         .agg(max(struct(col("cnt"), (-col("cand")).as("neg"))).as("m"))
         .select(col("node"), (-col("m.neg")).as("lbl"))
-        .localCheckpoint()
     }
-    labels
   }
 
   /** Bounded k-core peel over undirected edges `(a, b)`: `rounds`
@@ -261,11 +285,12 @@ object GraphQueries {
       // localCheckpoint here also CUTS the growing per-round lineage at
       // node grain, which the serialized edge persists do not. alive and
       // dropped are cheap FILTERS over this one checkpoint — one
-      // materialization job per round, not one per derived set.
-      val prevDegAll = degAll
+      // materialization job per round, not one per derived set. A
+      // generation's checkpoint blocks are freed by the ContextCleaner
+      // once the frame is unreachable (CacheLifecycleSpec); only the
+      // serialized edge persists are released here.
       degAll = deg.localCheckpoint()
       if (olderEdges != null) olderEdges.unpersist()
-      if (prevDegAll != null) prevDegAll.unpersist()
       val dropNow = degAll.filter(col("dg") < k.toLong).select("u")
       olderEdges = edges
       edges = edges
@@ -283,40 +308,22 @@ object GraphQueries {
         degAll.filter(col("dg") >= k.toLong).count(), edges.count()))
     }
     // the result rows are already materialized driver-side (two longs per
-    // round); release the final generations' caches before returning
+    // round); release the final edge generations before returning
     if (olderEdges != null) olderEdges.unpersist()
     edges.unpersist()
-    if (degAll != null) degAll.unpersist()
     rows.toSeq.toDF("round", "n_nodes", "n_edges").orderBy("round")
   }
 
   def all: Seq[Q] = Seq(
 
     // ── GR1: PageRank (graft.graph.PageRank) over the customer↔supplier
-    // trade graph (distinct pairs through orders×lineitem, symmetrized so
-    // no node dangles; supplier ids offset to a disjoint range). 3 Lloyd-
+    // trade graph ([[tradeEdges]]: distinct pairs through orders×lineitem,
+    // symmetrized so no node dangles, parity-disjoint ids). 3 Lloyd-
     // style rounds of iterated joins, per-round rounding for cross-engine
     // determinism; oracle = the same rounds unrolled as materialized CTEs.
     Q("gr1_pagerank",
-      graft.graph.PageRank.unrolledSql(
-        """WITH e0 AS MATERIALIZED (
-          |  SELECT DISTINCT CAST(2 * o_custkey AS BIGINT) AS c,
-          |                  CAST(2 * l_suppkey + 1 AS BIGINT) AS s
-          |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-          |ed AS MATERIALIZED (SELECT c AS src, s AS dst FROM e0 UNION SELECT s, c FROM e0)""".stripMargin,
-        iters = 3, topK = 20)) { (s, d) =>
-      // parity-disjoint node ids (customer = 2k, supplier = 2k+1): a fixed
-      // additive offset collides once custkey reaches it (sf >= ~6.7)
-      val e0 = orders(s, d)
-        .join(lineitem(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).cast("long").as("c"),
-          (col("l_suppkey") * 2 + 1).cast("long").as("s"))
-        .distinct()
-      // the two directions are disjoint (c even, s odd), so plain union
-      // equals SQL UNION's dedup here
-      val ed = e0.select(col("c").as("src"), col("s").as("dst"))
-        .union(e0.select(col("s").as("src"), col("c").as("dst")))
-      graft.graph.PageRank.run(ed, iters = 3)
+      graft.graph.PageRank.unrolledSql(s"WITH $tradeEdgesSql", iters = 3, topK = 20)) { (s, d) =>
+      graft.graph.PageRank.run(tradeEdges(s, d), iters = 3)
         .orderBy(col("pr").desc, col("node")).limit(20)
     },
 
@@ -343,11 +350,7 @@ object GraphQueries {
     // re-joins. Integer distances + min semantics = exactly reproducible,
     // so the oracle just unrolls the rounds as CTEs.
     Q("gr3_bfs_hops",
-      """WITH e0 AS MATERIALIZED (
-        |  SELECT DISTINCT CAST(2 * o_custkey AS BIGINT) AS c,
-        |                  CAST(2 * l_suppkey + 1 AS BIGINT) AS s
-        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-        |ed AS MATERIALIZED (SELECT c AS src, s AS dst FROM e0 UNION SELECT s, c FROM e0),
+      s"""WITH $tradeEdgesSql,
         |d0 AS (SELECT CAST(2 AS BIGINT) AS node, 0 AS dist),
         |r1 AS (SELECT DISTINCT ed.dst AS node FROM ed JOIN d0 ON ed.src = d0.node),
         |a1 AS (SELECT node, dist FROM d0 UNION ALL
@@ -359,18 +362,8 @@ object GraphQueries {
         |a3 AS (SELECT node, dist FROM a2 UNION ALL
         |       SELECT node, 3 FROM r3 WHERE node NOT IN (SELECT node FROM a2))
         |SELECT node, dist FROM a3 ORDER BY node""".stripMargin) { (s, d) =>
-      // parity-disjoint node ids (customer = 2k, supplier = 2k+1): unlike a
-      // fixed additive offset this cannot collide at ANY scale factor
-      val e0 = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).cast("long").as("c"),
-          (col("l_suppkey") * 2 + 1).cast("long").as("s"))
-        .distinct()
-      // directions are disjoint (c even, s odd): union == UNION's dedup
-      val ed = e0.select(col("c").as("src"), col("s").as("dst"))
-        .union(e0.select(col("s").as("src"), col("c").as("dst")))
       val seeds = s.range(1, 2).select((col("id") * 2).as("node")) // customer 1 → 2
-      graft.graph.Bfs.run(ed, seeds, maxHops = 3).orderBy("node")
+      graft.graph.Bfs.run(tradeEdges(s, d), seeds, maxHops = 3).orderBy("node")
     },
 
     // ── GR4: per-node local clustering coefficient — gr2 answers "how
@@ -660,13 +653,13 @@ object GraphQueries {
     // 100 TB: PageRank's contract — edges partitioned once and cached,
     // only the O(|nodes|) rank side shuffles per round, seeds broadcast.
     Q("ppr1_personalized_pagerank",
-      graft.graph.PageRank.personalizedSql(
+      graft.graph.PageRank.unrolledSql(
         s"""WITH ${coPurchaseEdgesSql("l_suppkey", Some(40), 25)},
           |ed AS MATERIALIZED (SELECT a AS src, b AS dst FROM e
           |     UNION SELECT b, a FROM e),
           |seeds0 AS (SELECT CAST(s_suppkey AS BIGINT) AS node FROM supplier
           |           WHERE s_nationkey = 1)""".stripMargin,
-        iters = 3, topK = 20)) { (s, d) =>
+        iters = 3, topK = 20, seeded = true)) { (s, d) =>
       val e = coPurchaseEdges(Tables.lineitem(s, d), "l_suppkey", Some(40), Some(25))
       val ed = e.select(col("a").as("src"), col("b").as("dst"))
         .union(e.select(col("b").as("src"), col("a").as("dst")))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
-import QueryHelpers.{h16, lnMicro, lnMicroSql, ws, wsSql}
+import QueryHelpers.{h16, lnMicro, lnMicroSql, purchaseCentsByDay, purchaseCentsByDaySql,
+  ws, wsSql}
 
 /** The model-adjacent operators of a training-data pipeline — per-doc
   * information metrics (token entropy), broadcast-weight linear-model
@@ -869,14 +870,11 @@ object MlQueries {
            |     ELSE CAST(CAST(sign($num) AS BIGINT) * CAST(sign($ridgeDet) AS BIGINT)
            |            * ((abs($num) * 1000) // abs($ridgeDet)) AS BIGINT) END AS $alias"""
           .stripMargin.replace("\n", " ")
-      s"""WITH dc AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
-         |                            '%Y-%m-%d') AS day,
-         |              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
-         |            FROM events WHERE event_type = 'purchase' GROUP BY 1),
+      s"""WITH ${purchaseCentsByDaySql()},
          |anchor AS (SELECT min(day) AS d0 FROM dc),
          |d AS (SELECT CAST(date_diff('day', CAST(d0 AS DATE), CAST(day AS DATE)) AS BIGINT) AS t,
          |        CAST(CASE WHEN isodow(CAST(day AS DATE)) >= 6 THEN 1 ELSE 0 END AS BIGINT) AS w,
-         |        y
+         |        cents AS y
          |      FROM dc, anchor),
          |s AS (SELECT CAST(count(*) AS HUGEINT) AS n,
          |        CAST(sum(t) AS HUGEINT) AS st, CAST(sum(t * t) AS HUGEINT) AS stt,
@@ -895,9 +893,7 @@ object MlQueries {
         when(expr(ridgeDet) === 0, lit(null).cast("long"))
           .otherwise(expr(s"cast(cast(sign($num) as bigint) * cast(sign($ridgeDet) as bigint)" +
             s" * ((abs($num) * 1000) div abs($ridgeDet)) as bigint)"))
-      val dc = Tables.events(s, d).filter(col("event_type") === "purchase")
-        .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-        .agg(sum(expr("cast(round(value * 100) as bigint)")).as("y"))
+      val dc = purchaseCentsByDay(s, d).withColumnRenamed("cents", "y")
       val anchor = dc.agg(min("day").as("d0"))
       val day = dc.crossJoin(broadcast(anchor))
         .select(datediff(to_date(col("day")), to_date(col("d0"))).cast("long").as("t"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
 import graft.operators.{GlobalIds, Sampling}
-import QueryHelpers.{lnMicro, lnMicroSql, ws, wsSql}
+import QueryHelpers.{lnMicro, lnMicroSql, purchaseCentsByDay, purchaseCentsByDaySql, ws, wsSql}
 
 /** The distribution-testing and corpus-statistics operators of a
   * monitoring/curation pipeline — two-sample Kolmogorov–Smirnov drift,
@@ -548,10 +548,7 @@ object StatQueries {
     // in ONE keyed scan (ses1's plan class); the weekday windows run over
     // that |days|-row table.
     Q("sd1_weekday_decomp",
-      """WITH dc AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
-        |                            '%Y-%m-%d') AS day,
-        |                   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-        |            FROM events WHERE event_type = 'purchase' GROUP BY 1),
+      s"""WITH ${purchaseCentsByDaySql()},
         |wd AS (SELECT day, cents,
         |         CAST(date_diff('day', DATE '1970-01-01', CAST(day AS DATE)) AS BIGINT) % 7 AS dow
         |       FROM dc),
@@ -563,9 +560,7 @@ object StatQueries {
         |       CAST((CAST(s_wd AS HUGEINT) * 1000000) // n_wd AS BIGINT) AS wd_mean_micro,
         |       cents * 1000000 - CAST((CAST(s_wd AS HUGEINT) * 1000000) // n_wd AS BIGINT) AS residual_micro
         |FROM m ORDER BY day""".stripMargin) { (s, d) =>
-      val dc = Tables.events(s, d).filter(col("event_type") === "purchase")
-        .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-        .agg(sum(expr("cast(round(value * 100) as bigint)")).as("cents"))
+      val dc = purchaseCentsByDay(s, d)
       val wd = dc.withColumn("dow",
         expr("cast(datediff(cast(day as date), date'1970-01-01') as bigint) % 7"))
       val win = Window.partitionBy("dow")
@@ -680,10 +675,7 @@ object StatQueries {
     // window and the ×7-lag self-join input is the day table (|days|
     // rows — ses1's class), never the corpus.
     Q("acf1_autocorrelation",
-      """WITH dc AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
-        |                            '%Y-%m-%d') AS day,
-        |             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-        |           FROM events WHERE event_type = 'purchase' GROUP BY 1),
+      s"""WITH ${purchaseCentsByDaySql()},
         |r AS (SELECT cents, CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t FROM dc),
         |tt AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS s FROM r),
         |dn AS (SELECT sum(CAST(n * cents - s AS HUGEINT) * (n * cents - s)) AS den
@@ -703,9 +695,7 @@ object StatQueries {
         |       END AS acf_ppm
         |FROM p CROSS JOIN dn
         |GROUP BY p.lag ORDER BY p.lag""".stripMargin) { (s, d) =>
-      val dc = Tables.events(s, d).filter(col("event_type") === "purchase")
-        .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-        .agg(sum(expr("cast(round(value * 100) as bigint)")).as("cents"))
+      val dc = purchaseCentsByDay(s, d)
       val r = dc.select(col("cents"),
         row_number().over(Window.orderBy("day")).cast("long").as("t"))
       val tt = r.agg(count(lit(1)).cast("long").as("n"),
@@ -750,10 +740,7 @@ object StatQueries {
     // for a 10-year daily series). BOUNDED-WINDOW CONTRACT: every window
     // input is the day table or its pair grid, never the corpus.
     Q("theil1_theil_sen",
-      """WITH dc AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
-        |                            '%Y-%m-%d') AS day,
-        |             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-        |           FROM events WHERE event_type = 'purchase' GROUP BY 1),
+      s"""WITH ${purchaseCentsByDaySql()},
         |r AS (SELECT cents, CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t FROM dc),
         |p AS (SELECT x.t AS ti, y.t AS tj,
         |        CAST(CAST(sign(y.cents - x.cents) AS BIGINT)
@@ -772,9 +759,7 @@ object StatQueries {
         |        FROM r CROSS JOIN sl)
         |SELECT n_days, n_pairs, slope_micro, CAST(resid AS BIGINT) AS icept_micro
         |FROM res WHERE rn = (n_days + 1) // 2""".stripMargin) { (s, d) =>
-      val dc = Tables.events(s, d).filter(col("event_type") === "purchase")
-        .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-        .agg(sum(expr("cast(round(value * 100) as bigint)")).as("cents"))
+      val dc = purchaseCentsByDay(s, d)
       val r = dc.select(col("cents"),
         row_number().over(Window.orderBy("day")).cast("long").as("t"))
       val x = r.select(col("cents").as("cx"), col("t").as("ti"))
@@ -1031,11 +1016,7 @@ object StatQueries {
     // bounded table. BOUNDED-WINDOW CONTRACT: the rank window input is
     // the day table, never the corpus.
     Q("kt1_kendall_tau",
-      """WITH dc AS (SELECT strftime(date_trunc('day', CAST(ts AS TIMESTAMP)),
-        |                            '%Y-%m-%d') AS day,
-        |             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
-        |             CAST(count(*) AS BIGINT) AS cnt
-        |           FROM events WHERE event_type = 'purchase' GROUP BY 1),
+      s"""WITH ${purchaseCentsByDaySql(withCount = true)},
         |r AS (SELECT cents, cnt, CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t FROM dc),
         |p AS (SELECT CAST(sign(y.cents - x.cents) AS BIGINT)
         |               * CAST(sign(y.cnt - x.cnt) AS BIGINT) AS s
@@ -1049,10 +1030,7 @@ object StatQueries {
         |       ELSE CAST(CAST(sign(n_conc - n_disc) AS BIGINT)
         |         * ((abs(n_conc - n_disc) * 1000000) // n_pairs) AS BIGINT) END AS tau_a_ppm
         |FROM f""".stripMargin) { (s, d) =>
-      val dc = Tables.events(s, d).filter(col("event_type") === "purchase")
-        .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-        .agg(sum(expr("cast(round(value * 100) as bigint)")).as("cents"),
-          count(lit(1)).cast("long").as("cnt"))
+      val dc = purchaseCentsByDay(s, d, withCount = true)
       val r = dc.select(col("cents"), col("cnt"),
         row_number().over(Window.orderBy("day")).cast("long").as("t"))
       val x = r.select(col("cents").as("cx"), col("cnt").as("kx"), col("t").as("ti"))

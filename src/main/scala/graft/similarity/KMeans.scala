@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Rounds
 
 /** Distributed Lloyd's k-means over an embedding column — the trainer for
   * the IVF coarse quantizer (`sim2`/`sim2b` probe the clusters this
@@ -82,14 +83,12 @@ object KMeans {
       k: Int, iters: Int): DataFrame = {
     // orderBy+limit plans as TakeOrderedAndProject (distributed top-k) —
     // never a single-partition global window
-    var cents = points.orderBy(col(idCol)).limit(k)
+    val seeds = points.orderBy(col(idCol)).limit(k)
       .select(col(idCol).cast("long").as("cid"),
         expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("cvec"))
       .localCheckpoint()
-    (1 to iters).foreach { _ =>
-      cents = recompute(points, idCol, vecCol,
-        assign(points, idCol, vecCol, cents)).localCheckpoint()
+    Rounds.iterate(seeds, iters) { (cents, _) =>
+      recompute(points, idCol, vecCol, assign(points, idCol, vecCol, cents))
     }
-    cents
   }
 }

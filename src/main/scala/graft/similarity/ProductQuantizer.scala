@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Rounds
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search") — the high-ratio vector compression behind
@@ -104,12 +105,10 @@ object ProductQuantizer {
   def train(emb: DataFrame, idCol: String, vecCol: String,
       nSub: Int, subDim: Int, k: Int, iters: Int): DataFrame = {
     val subs = subvectors(emb, idCol, vecCol, nSub, subDim)
-    var books = initCodebooks(emb, idCol, vecCol, nSub, subDim, k)
-      .localCheckpoint()
-    (1 to iters).foreach { _ =>
-      books = lloydStep(subs, idCol, books).localCheckpoint()
+    Rounds.iterate(
+        initCodebooks(emb, idCol, vecCol, nSub, subDim, k).localCheckpoint(), iters) {
+      (books, _) => lloydStep(subs, idCol, books)
     }
-    books
   }
 
   /** The ADC distance table (qid, sub, code, dfp): each query subvector's

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Rounds
 
 /** Byte-pair-encoding merge training (Sennrich et al. 2016) as relational
   * rounds — the tokenizer-training step of an LLM data pipeline.
@@ -109,14 +110,10 @@ object Bpe {
     * inherit the encoding by word lookup, so the corpus is never
     * re-segmented). Returns (word, cnt, pos, sym) after all k merges.
     */
-  def encodeVocab(vocab: DataFrame, k: Int): DataFrame = {
-    var sym = initialSymbols(vocab).localCheckpoint()
-    for (_ <- 1 to k) {
-      val best = bestPair(sym).localCheckpoint()
-      sym = mergeBest(sym, best).localCheckpoint()
+  def encodeVocab(vocab: DataFrame, k: Int): DataFrame =
+    Rounds.iterate(initialSymbols(vocab).localCheckpoint(), k) { (sym, _) =>
+      mergeBest(sym, bestPair(sym).localCheckpoint())
     }
-    sym
-  }
 
   /** DuckDB oracle for [[trainMerges]]: the same rounds unrolled as CTEs —
     * structurally identical windows, so any divergence is a real bug.

@@ -1,4 +1,4 @@
-package graft.ads
+package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
@@ -9,10 +9,10 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Jobs started with their call sites, footer-merge jobs among them (a
-  * stage whose call site is [[SchemaEvolution.tableSchema]]), and records
-  * read by file scans (stages
-  * holding a `FileScanRDD`; cached-block reads are not counted), between
-  * `reset` and `drain`. Use it through [[JobCounter.during]].
+  * stage whose call site is [[graft.ads.SchemaEvolution.tableSchema]]),
+  * and records read by file scans (stages holding a `FileScanRDD`;
+  * cached-block reads are not counted), between `reset` and `drain`. Use
+  * it through [[JobCounter.during]].
   */
 final class JobCounter(spark: SparkSession) extends SparkListener {
   val jobs = new AtomicInteger

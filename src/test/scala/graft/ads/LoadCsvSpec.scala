@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
 
 /** The CSV load (reference `load_csv_to_bq.py`): an append onto a table that
   * already holds days, REQUIRED-column rejects counted, and no job after the

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
 
 /** `Sinks.readTable` takes the footer-merged schema from the per-version
   * memo in [[SchemaEvolution.tableSchema]]: the same schema as a merging

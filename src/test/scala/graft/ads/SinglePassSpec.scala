@@ -7,7 +7,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
 
 /** The daily sync is one pass: one scan of the raw records, one dedup
   * shuffle, counts observed on the writes, the dedup cache released on every

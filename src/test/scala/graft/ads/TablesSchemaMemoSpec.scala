@@ -13,7 +13,7 @@ import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
-import graft.{SparkSpec, Tables}
+import graft.{JobCounter, SparkSpec, Tables}
 
 /** `Tables.read` takes each table's schema from the shared per-version memo
   * ([[graft.SchemaMemo]]) that also serves [[SchemaEvolution.tableSchema]]:

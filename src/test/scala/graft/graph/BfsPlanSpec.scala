@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.SparkSpec
+import graft.{Rounds, SparkSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -31,10 +31,9 @@ class BfsPlanSpec extends SparkSpec {
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val edges = Bfs.prepare(spark.range(2000).select(
-        (col("id") % 97).as("src"), (col("id") % 89 + 100).as("dst")))
-      try {
-        edges.count() // materialize the cache, as run() does
+      Rounds.withCached(Bfs.prepare(spark.range(2000).select(
+        (col("id") % 97).as("src"), (col("id") % 89 + 100).as("dst")))) { edges =>
+        edges.count() // materialize the cache, as run()'s first round does
         val settled = spark.range(0, 5).select(col("id").as("node"),
           lit(0).as("dist"))
         val frontier = settled
@@ -51,7 +50,7 @@ class BfsPlanSpec extends SparkSpec {
         }
         assert(offending.isEmpty,
           s"cached edge scan re-shuffled per round:\n${offending.mkString("\n")}")
-      } finally edges.unpersist(blocking = false)
+      }
     } finally {
       conf.set("spark.sql.adaptive.enabled", prevAqe)
       conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)

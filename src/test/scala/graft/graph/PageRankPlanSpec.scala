@@ -49,9 +49,9 @@ class PageRankPlanSpec extends SparkSpec {
     try {
       val edges = spark.range(2000).select(
         (col("id") % 97).as("src"), (col("id") % 89 + 1000).as("dst"))
-      val g = PageRank.prepare(edges)
+      val g = PageRank.prepare(PageRank.partitioned(edges).persist())
       val pr0 = g.nodes.select(col("node"), lit(1.0 / g.n).as("pr"))
-      val stepDf = PageRank.step(g, pr0, 0.15, 0.85, 9)
+      val stepDf = PageRank.step(g, g.nodes, lit(0.15 / g.n), pr0, 0.85, 9)
       stepDf.collect()
       val nodes = everyNode(stepDf.queryExecution.executedPlan)
       assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),

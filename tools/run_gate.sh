@@ -9,7 +9,7 @@ SF="${1:-/root/testdata/sf0.01}"
 echo "== Copied code in src/main =="
 # lines repeating an earlier 5-line block; a stage several queries share
 # belongs in one builder and its DuckDB twin, not in a new copy
-python3 tools/dup_scan.py --max 107 | tail -n 1
+python3 tools/dup_scan.py --max 71 | tail -n 1
 
 echo "== sbt test =="
 sbt test 2>&1 | grep -E "Tests: |All tests" || { echo "TESTS FAILED"; exit 1; }
@@ -61,6 +61,10 @@ if r["correct"] is not True:
 # than 4 jobs means a footer-inference job is back in the query body
 if m["q.tq3_shipping_priority.jobs"]["value"] > 4:
     sys.exit("pack smoke: tq3_shipping_priority ran more than 4 jobs (a footer job came back)")
+# gr1's rounds run on graft.Rounds: one checkpoint job per round plus the
+# node set's; a 24th job means a round or the edge cache gained a job
+if m["q.gr1_pagerank.jobs"]["value"] > 23:
+    sys.exit("pack smoke: gr1_pagerank ran more than 23 jobs (an eager job came back into its rounds)")
 PY
 
 echo "== Bench smoke @sf0.001 =="
