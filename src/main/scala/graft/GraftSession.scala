@@ -13,6 +13,8 @@ import org.apache.spark.sql.SparkSession
   *  - 128 MB scan partitions: large enough to amortize task overhead,
   *    small enough that a partition's working set fits executor memory;
   *  - UTC session time zone: oracle/engine date parity;
+  *  - parquet TIMESTAMP(NANOS) read as a raw long (Spark rejects it
+  *    natively; [[Tables.events]] truncates it to micros);
   *  - graft extensions (cosine_sim, rolling_hash) registered up front.
   */
 object GraftSession {
@@ -31,6 +33,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", (128 * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // standard (RFC 4648) base64, no 76-char MIME line breaks — portable
       // across engines (the oracle's base64 is unchunked)
       .config("spark.sql.chunkBase64String.enabled", "false")

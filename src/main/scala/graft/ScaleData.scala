@@ -121,10 +121,9 @@ object ScaleData {
       s"reps=$reps exceeds the $maxReps spec-certified distinct transforms")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = GraftSession.build("graft-scaledata", cpus.toInt)
-    // events.ts is parquet TIMESTAMP(NANOS) (see Tables.events): read the
-    // nanos as a raw long and write them back as BIGINT — Tables.events'
-    // `ts div 1000` accepts either representation
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events.ts is parquet TIMESTAMP(NANOS) (see Tables.events): the
+    // session reads the nanos as a raw long and they are written back as
+    // BIGINT — Tables.events' `ts div 1000` accepts either representation
 
     def table(t: String): DataFrame = Tables.read(spark, src, t)
     def keySpan(t: String, c: String): Long =

@@ -31,7 +31,8 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = read(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = read(s, d, "lineitem")
   /** events.ts has shipped in two physical forms across driver corpora:
-    * TIMESTAMP(NANOS) (which Spark rejects natively — the legacy flag reads
+    * TIMESTAMP(NANOS) (which Spark rejects natively — the session's
+    * `spark.sql.legacy.parquet.nanosAsLong`, set by [[GraftSession]], reads
     * the nanos as a raw long, truncated here to micros) and plain
     * TIMESTAMP(MICROS)/NTZ. Branch on the footer schema and normalize both
     * to session-local TimestampType; the session runs UTC
@@ -41,7 +42,6 @@ object Tables {
     * on their side, so the two engines agree either way.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = read(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -69,8 +69,6 @@ final case class Q(
 object Q {
   def apply(name: String, sql: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, registered(run), Some(sql))
-  def unchecked(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, registered(run), None)
 
   private def registered(run: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = { (s, d) =>

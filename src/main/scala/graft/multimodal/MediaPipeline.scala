@@ -1,54 +1,18 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Multimodal-column plumbing: media travels through the engine as an opaque
-  * `binary` payload column plus typed metadata, processed per-partition in
-  * batches.
+/** Multimodal-column plumbing (mm1/mm2): media travels through the engine
+  * as an opaque `binary` payload column keyed by `media_id`, and is cut
+  * into frames with plain column ops, no UDF.
   *
-  * The actual codec step is STUBBED (this environment ships no image/audio
-  * libraries): [[DecodeStub.decode]] is a deterministic fake that derives
-  * "features" from the payload bytes. Everything around it — the schema
-  * contract, the mapPartitions batching, the partition sizing — is the real
-  * Spark-side design and is tested.
-  *
-  * Scale notes: payloads stay columnar (parquet binary) end to end; decode
-  * is a narrow per-partition pass (no shuffle); partition byte size is
+  * Scale notes: payloads stay columnar (parquet binary) end to end; frame
+  * sampling is a narrow per-row pass (no shuffle); partition byte size is
   * controlled upstream via `spark.sql.files.maxPartitionBytes` so a batch of
-  * payloads fits executor memory; feature vectors flow into the similarity
-  * operators (graft.similarity) unchanged.
+  * payloads fits executor memory.
   */
 object MediaPipeline {
-
-  /** Typed row after decode: payload metadata + fixed-size feature vector. */
-  final case class MediaFeatures(
-      media_id: Long,
-      n_bytes: Int,
-      format: String,
-      width: Int,
-      height: Int,
-      features: Array[Float])
-
-  val FeatureDim = 16
-
-  /** The deterministic stand-in for the real codec (??? in production terms:
-    * swap with an actual image/audio decode). Derives pseudo metadata and
-    * features purely from the bytes, so tests are stable.
-    */
-  object DecodeStub {
-    def decode(mediaId: Long, payload: Array[Byte]): MediaFeatures = {
-      val n = payload.length
-      val fmt = if (n % 3 == 0) "png" else if (n % 3 == 1) "jpeg" else "webp"
-      val features = Array.tabulate(FeatureDim) { i =>
-        var acc = 0
-        var j = i
-        while (j < n) { acc = acc * 31 + (payload(j) & 0xff); j += FeatureDim }
-        (acc % 1000) / 1000.0f
-      }
-      MediaFeatures(mediaId, n, fmt, 64 + n % 512, 64 + n % 256, features)
-    }
-  }
 
   /** Attach a payload column (here: the doc text bytes standing in for real
     * media blobs) — the ingest boundary of a media table.
@@ -56,29 +20,6 @@ object MediaPipeline {
   def toMediaTable(docs: DataFrame): DataFrame =
     docs.select(col("doc_id").as("media_id"),
       encode(col("text"), "UTF-8").as("payload"))
-
-  /** Decode/feature-extract as a per-partition batch pass. Typed Dataset in,
-    * typed Dataset out; the partition iterator IS the batch (mirrors Arrow
-    * batch UDF shape without the Python bridge).
-    */
-  def decodeFeatures(media: DataFrame): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) => DecodeStub.decode(id, bytes) })
-  }
-
-  /** Resize stage (stub codec): recompute metadata for a target box while
-    * preserving aspect ratio — pure column arithmetic over the typed
-    * metadata, no payload touch until the real codec slots in.
-    */
-  def resize(features: Dataset[MediaFeatures], maxDim: Int): DataFrame =
-    features.toDF().withColumn("scale",
-      least(lit(1.0), lit(maxDim) / greatest(col("width"), col("height"))))
-      .withColumn("out_width", ceil(col("width") * col("scale")).cast("int"))
-      .withColumn("out_height", ceil(col("height") * col("scale")).cast("int"))
-      .drop("scale")
 
   /** Frame-sample shape for video-like payloads: chunk the payload into
     * fixed-size "frames" and keep every `stride`-th — pure column ops, no

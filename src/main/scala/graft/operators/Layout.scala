@@ -1,18 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Data-layout clustering: Morton (Z-order) keys and Z-ordered writes.
+/** The Morton (Z-order) key of two columns, and its DuckDB twin (z1).
   *
-  * Why at 100 TB: parquet row-group and file pruning works off per-file
-  * min/max. A single-column sort gives perfect pruning on that column and
-  * none on any other; clustering by the Morton interleave of two columns
-  * gives each file a compact TILE in both dimensions, so predicates on
-  * EITHER column prune to ~√(files) instead of scanning everything — the
-  * standard lakehouse layout trick (Delta/Iceberg `OPTIMIZE ZORDER BY`),
-  * expressed here as plain codegen'd column arithmetic + a range
-  * repartition, no engine support needed.
+  * Parquet file pruning works off per-file min/max. A single-column sort
+  * prunes on that column and on no other; rows clustered by the Morton
+  * interleave of two columns give each file a compact tile in both
+  * dimensions (Delta/Iceberg `OPTIMIZE ZORDER BY`). The key is plain
+  * codegen'd column arithmetic.
   */
 object Layout {
 
@@ -31,17 +28,4 @@ object Layout {
       s"(($a // ${1L << i}) % 2) * ${1L << (2 * i)} + " +
         s"(($b // ${1L << i}) % 2) * ${1L << (2 * i + 1)}"
     }.mkString("(", " + ", ")")
-
-  /** Write parquet clustered on the Morton key of (a, b): range-partition
-    * into `nFiles` + sort within each — every file covers a compact tile
-    * in both dimensions. The helper column is dropped before the write
-    * (projection preserves the sort).
-    */
-  def writeZOrdered(df: DataFrame, a: String, b: String, out: String,
-      nFiles: Int, bits: Int = 16): Unit =
-    df.withColumn("__z", zorderKey(col(a), col(b), bits))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(out)
 }

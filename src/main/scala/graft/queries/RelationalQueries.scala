@@ -1314,9 +1314,8 @@ object RelationalQueries {
     },
 
     // ── Z1: Morton (Z-order) clustering key (graft.operators.Layout) —
-    // the key both engines compute bit-identically; Layout.writeZOrdered
-    // uses it to tile files in two dimensions (spec asserts Morton order
-    // and per-file bounding boxes). Pure codegen'd bit arithmetic.
+    // the key both engines compute bit-identically (LayoutSpec asserts
+    // the Morton order). Pure codegen'd bit arithmetic.
     Q("z1_zorder_key", {
       val z = graft.operators.Layout.zorderOracleExpr(
         "(l_partkey % 256)", "(l_suppkey % 256)", bits = 8)

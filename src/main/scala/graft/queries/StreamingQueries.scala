@@ -16,7 +16,7 @@ import graft.{Q, Tables}
   * probe proved non-scalable (st6 overflowed `spark.driver.maxResultSize`
   * at ~10M rows), so no streaming query materializes rows on the driver.
   * At scale the same plan runs continuously with a watermark bounding state
-  * (see graft.streaming.EventStream for the watermarked append-mode variant).
+  * (st4/st5 are the watermarked append-mode variants).
   */
 object StreamingQueries {
 
@@ -153,8 +153,8 @@ object StreamingQueries {
     * results through the driver (the memory sink's collect), making the
     * no-driver-rows property universal; StreamingPlanSpec asserts no
     * memory-sink query remains. Complete-mode output is still inherently
-    * state-sized — the watermarked append-mode variants (st4/st5,
-    * graft.streaming.EventStream) remain the unbounded-cardinality path.
+    * state-sized — the watermarked append-mode variants (st4/st5) remain
+    * the unbounded-cardinality path.
     */
   private def drainCompleteToParquet(s: SparkSession, df: DataFrame, tag: String): DataFrame = {
     val out = graft.CacheRegistry.trackPath(

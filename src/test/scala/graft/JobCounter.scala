@@ -28,7 +28,8 @@ final class JobCounter(spark: SparkSession) extends SparkListener {
       marker.set(true)
     else {
       jobs.incrementAndGet()
-      callSites.add(e.stageInfos.maxBy(_.stageId).name)
+      // a recursive CTE's loop (UnionLoopExec) can start a job with no stages
+      callSites.add(e.stageInfos.maxByOption(_.stageId).fold("<no stage>")(_.name))
       if (e.stageInfos.exists(_.details.contains("SchemaEvolution$.tableSchema")))
         footerMerges.incrementAndGet()
       e.stageInfos.filter(_.rddInfos.exists(_.name == "FileScanRDD"))

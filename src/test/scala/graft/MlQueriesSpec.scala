@@ -267,12 +267,10 @@ class MlQueriesSpec extends SparkSpec {
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     // same data, different parallelism: the fixed-point contract means not
     // one micro-digit may move
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
+    withConf("spark.sql.shuffle.partitions" -> "7") {
       val alt = q("pca1_power_iteration").run(spark, "/root/testdata/sf0.001")
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
       assert(base == alt)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 }

@@ -15,12 +15,10 @@ class PartitionInvarianceSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def runAt(partitions: Int, name: String): Seq[String] = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    try SparkEntry.queries(name)(spark, sf).collect().map(_.toString).toSeq
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def runAt(partitions: Int, name: String): Seq[String] =
+    withConf("spark.sql.shuffle.partitions" -> partitions.toString) {
+      SparkEntry.queries(name)(spark, sf).collect().map(_.toString).toSeq
+    }
 
   // ed1: GlobalIds rank + offset equi-join; cm1: integer-ppm sums through
   // a collect_list top-2 (order inside the collected array is sorted, and

@@ -192,18 +192,12 @@ class PlanSpec extends SparkSpec {
     // two hashpartitioning(user_id) exchanges (agg input + the raw ev join
     // side) — a third would mean the co-partitioning was lost. AQE and
     // auto-broadcast off so the join genuinely shuffles at spec scale.
-    val keys = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("co1_retention_cohorts")
       val n = "Exchange hashpartitioning\\(user_id".r.findAllIn(p).size
       assert(p.contains("SortMergeJoin"), s"no shuffle join — vacuous:\n$p")
       assert(n == 2, s"expected 2 user_id exchanges, got $n:\n$p")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -218,16 +212,10 @@ class PlanSpec extends SparkSpec {
     // both window passes and the (user_id, session_id) rollup cluster on
     // user_id — the plan carries exactly one hashpartitioning(user_id)
     // exchange; a second would mean the rollup lost the window partitioning
-    val keys = Seq("spark.sql.adaptive.enabled" -> "false")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val p = plan("w6_sessionize")
       val n = "Exchange hashpartitioning\\(user_id".r.findAllIn(p).size
       assert(n == 1, s"expected 1 user_id exchange, got $n:\n$p")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -283,13 +271,10 @@ class PlanSpec extends SparkSpec {
     // rewrite on test data, and disable broadcast so the join actually
     // shuffles (broadcast joins don't need the bloom).
     import org.apache.spark.sql.functions._
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.lineitem(spark, sf)
       val ord = Tables.orders(spark, sf).filter(col("o_orderstatus") === "F")
       val j = li.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -297,9 +282,6 @@ class PlanSpec extends SparkSpec {
       val opt = j.queryExecution.optimizedPlan.toString
       assert(opt.contains("might_contain") || opt.contains("bloom_filter"),
         s"no runtime bloom filter injected:\n$opt")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

@@ -92,6 +92,7 @@ class RoundsSpec extends SparkSpec {
       val q = SparkEntry.queries(name)
       q(spark, sf).collect()
       val counts = (1 to 3).map(_ => JobCounter.during(spark)(q(spark, sf).collect())._2.jobs.get)
+      info(s"jobs per run: ${counts.mkString(", ")}")
       assert(counts.min <= maxJobs, counts)
     }
   }

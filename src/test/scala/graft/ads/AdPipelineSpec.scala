@@ -9,13 +9,9 @@ import graft.SparkSpec
 class AdPipelineSpec extends SparkSpec {
 
   private lazy val fixtureDir = Fixtures.write()
-  private val workDir = "/root/repo/target/test-work"
+  private lazy val workDir = Files.createTempDirectory("graft-ad-pipeline").toString
 
-  private def fresh(name: String): String = {
-    val p = s"$workDir/$name"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-    p
-  }
+  private def fresh(name: String): String = s"$workDir/$name"
 
   test("daily sync end-to-end: dedup, pivot, zero-fill, audit, append") {
     val table = fresh("ad_data")

@@ -1,12 +1,13 @@
 package graft.ads
 
+import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
 
 class AdsConfigSpec extends AnyFunSuite {
 
   test("file config round-trips and updates keys") {
-    val path = "/root/repo/target/test-work/cfg/secrets.properties"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    val path = s"${Files.createTempDirectory("graft-ads-config")}/secrets.properties"
     val cfg = new FileConfig(path)
     assert(cfg.get("fb_access_token").isEmpty)
     TokenState.persist(cfg, TokenState("tok1", 1000L))

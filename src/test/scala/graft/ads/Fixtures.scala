@@ -9,7 +9,8 @@ import java.nio.file.{Files, Paths}
   */
 object Fixtures {
 
-  val dir: String = "/root/repo/target/test-fixtures"
+  /** A fresh temp directory per test JVM. */
+  lazy val dir: String = Files.createTempDirectory("graft-test-fixtures").toString
 
   private def rec(
       campaign: String, ad: String, platform: String, date: String,

@@ -73,16 +73,14 @@ class OpsSpec extends SparkSpec {
       sum(col(AdOps.normalizeActionName(t))).as(t)): _*).collect()(0)
     // the oracle takes last-wins from the map policy, set for it alone
     // (flattenAndPivot must not depend on the session's policy)
-    val policy = "spark.sql.mapKeyDedupPolicy"
-    val prior = spark.conf.getOption(policy)
-    spark.conf.set(policy, "LAST_WIN")
-    val rawLastWins = try raw.select(explode(expr(
-      "map_entries(map_from_entries(transform(actions, a -> struct(a.action_type, a.value))))"
-    )).as("e"))
-      .select(col("e.key").as("t"), col("e.value").cast("long").as("v"))
-      .groupBy("t").agg(sum("v").as("s"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    finally prior.fold(spark.conf.unset(policy))(spark.conf.set(policy, _))
+    val rawLastWins = withConf("spark.sql.mapKeyDedupPolicy" -> "LAST_WIN") {
+      raw.select(explode(expr(
+        "map_entries(map_from_entries(transform(actions, a -> struct(a.action_type, a.value))))"
+      )).as("e"))
+        .select(col("e.key").as("t"), col("e.value").cast("long").as("v"))
+        .groupBy("t").agg(sum("v").as("s"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
     types.zipWithIndex.foreach { case (t, i) =>
       assert(pivotSum.getLong(i) == rawLastWins.getOrElse(t, 0L), s"mismatch for $t")
     }

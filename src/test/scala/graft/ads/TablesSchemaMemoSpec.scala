@@ -87,8 +87,6 @@ class TablesSchemaMemoSpec extends SparkSpec {
   }
 
   test("toggling nanosAsLong changes the ts type Tables.events sees") {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
     val dir = work("nanos")
     // one event with a TIMESTAMP(NANOS) ts, the older corpus form
     val schema = MessageTypeParser.parseMessageType(
@@ -100,18 +98,18 @@ class TablesSchemaMemoSpec extends SparkSpec {
     try writer.write(new SimpleGroupFactory(schema).newGroup()
       .append("event_id", 1L).append("ts", 1700000000123456789L))
     finally writer.close()
-    try {
-      spark.conf.set(key, "true")
-      assert(Tables.read(spark, dir, "events").schema("ts").dataType == LongType)
+    // the session reads the nanos as a raw long
+    assert(Tables.read(spark, dir, "events").schema("ts").dataType == LongType)
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "false") {
       // the memoized LongType belongs to the other setting: this read infers
       // afresh, and Spark rejects nanosecond timestamps natively
-      spark.conf.set(key, "false")
       val err = intercept[Exception](Tables.read(spark, dir, "events"))
       assert(err.getMessage.contains("NANOS"), err.getMessage)
-      val events = Tables.events(spark, dir)
-      assert(events.schema("ts").dataType == TimestampType)
-      assert(events.select("ts").as[Timestamp].head() ==
-        Timestamp.from(Instant.ofEpochSecond(1700000000L, 123456000L)))
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    // back under the session's setting, Tables.events reads the nanos
+    val events = Tables.events(spark, dir)
+    assert(events.schema("ts").dataType == TimestampType)
+    assert(events.select("ts").as[Timestamp].head() ==
+      Timestamp.from(Instant.ofEpochSecond(1700000000L, 123456000L)))
   }
 }

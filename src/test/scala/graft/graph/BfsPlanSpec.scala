@@ -25,12 +25,8 @@ class BfsPlanSpec extends SparkSpec {
     if (p.children.size == 1) unaryDescend(p.children.head) else p
 
   test("bfs expansion re-uses the pre-partitioned edge cache (frontier is the only per-round shuffle)") {
-    val conf = spark.conf
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val prevBc = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Rounds.withCached(Bfs.prepare(spark.range(2000).select(
         (col("id") % 97).as("src"), (col("id") % 89 + 100).as("dst")))) { edges =>
         edges.count() // materialize the cache, as run()'s first round does
@@ -51,9 +47,6 @@ class BfsPlanSpec extends SparkSpec {
         assert(offending.isEmpty,
           s"cached edge scan re-shuffled per round:\n${offending.mkString("\n")}")
       }
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
 

@@ -41,12 +41,8 @@ class PageRankPlanSpec extends SparkSpec {
   }
 
   test("pagerank iteration re-uses the pre-partitioned edge cache (no edge re-shuffle)") {
-    val conf = spark.conf
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val prevBc = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val edges = spark.range(2000).select(
         (col("id") % 97).as("src"), (col("id") % 89 + 1000).as("dst"))
       val g = PageRank.prepare(PageRank.partitioned(edges).persist())
@@ -70,9 +66,6 @@ class PageRankPlanSpec extends SparkSpec {
         .flatMap(a => a.children.flatMap(joinsToScan))
       assert(edgeJoins == Seq(1), s"joins on the edge scan per aggregate: $edgeJoins")
       g.edges.unpersist()
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
 }

@@ -14,31 +14,4 @@ class LayoutSpec extends SparkSpec {
     // row-major (y outer) walk of the 4x4 Morton curve
     assert(got == Seq(0L, 1, 4, 5, 2, 3, 6, 7, 8, 9, 12, 13, 10, 11, 14, 15))
   }
-
-  test("z-ordered write tiles both dimensions: file bounding boxes are compact") {
-    val pts = (for { x <- 0 until 32; y <- 0 until 32 } yield (x, y))
-      .toDF("x", "y").repartition(8)
-    val out = "/root/repo/target/layout-spec/z"
-    Layout.writeZOrdered(pts, "x", "y", out, nFiles = 16, bits = 5)
-    val back = spark.read.parquet(out)
-    assert(back.count() == 1024)
-    // per-file bounding boxes: a Morton-tiled file covers a compact square,
-    // so its area is close to points-per-file; a single-column sort would
-    // give full-width stripes (area ~32 * pointsPerFile / 32 rows = 2x32).
-    val boxes = back.withColumn("f", input_file_name())
-      .groupBy("f").agg(
-        (max("x") - min("x") + 1).as("wx"), (max("y") - min("y") + 1).as("wy"),
-        count(lit(1)).as("n"))
-      .select("wx", "wy", "n").as[(Int, Int, Long)].collect()
-    boxes.foreach { case (wx, wy, n) =>
-      // compact tile: bounding box at most 4x the points it holds
-      assert(wx.toLong * wy <= 4 * n, s"box ${wx}x$wy for $n points")
-      // and never a full-width stripe in either dimension unless tiny
-      assert(wx < 32 || wy <= 2, s"stripe ${wx}x$wy")
-      assert(wy < 32 || wx <= 2, s"stripe ${wx}x$wy")
-    }
-    // data survives the round trip
-    assert(back.as[(Int, Int)].collect().toSet ==
-      (for { x <- 0 until 32; y <- 0 until 32 } yield (x, y)).toSet)
-  }
 }

@@ -65,7 +65,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     def run() = ps.join(is, col("t") >= col("s") && col("t") < col("e"))
       .select("pid", "iid").as[(Long, Long)].collect().sorted.toSeq
     spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-    val brute = try run() finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+    val brute = try run() finally spark.conf.unset("spark.graft.rangeJoin.enabled")
     Seq(3600L, 86400L, 7L * 86400).foreach { bin =>
       spark.conf.set("spark.graft.rangeJoin.binSeconds", bin.toString)
       try assert(run() == brute, s"bin $bin")

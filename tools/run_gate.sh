@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
-# One-command local gate: copied-code scan + tests + correctness (DuckDB
-# oracle) + ads ETL smoke + pack smoke + bench smoke.
+# One-command local gate: copied-code and dead-code scans + tests +
+# correctness (DuckDB oracle) + ads ETL smoke + pack smoke + bench smoke.
 # Usage: tools/run_gate.sh [sfDir]   (default /root/testdata/sf0.01)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -10,6 +10,10 @@ echo "== Copied code in src/main =="
 # lines repeating an earlier 5-line block; a stage several queries share
 # belongs in one builder and its DuckDB twin, not in a new copy
 python3 tools/dup_scan.py --max 71 | tail -n 1
+
+echo "== Dead code in src/main =="
+# a src/main file nothing else names is code the system does not run
+python3 tools/dead_scan.py
 
 echo "== sbt test =="
 sbt test 2>&1 | grep -E "Tests: |All tests" || { echo "TESTS FAILED"; exit 1; }
