@@ -30,8 +30,7 @@ object SparkEntry {
     allQ.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    allQ.flatMap(q => q.oracle.map(q.name -> _)).toMap
+  def oracleSql: Map[String, String] = allQ.map(q => q.name -> q.oracle).toMap
 }

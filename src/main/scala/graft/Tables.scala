@@ -56,19 +56,19 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
 }
 
-/** One named query: a Spark plan plus (optionally) the DuckDB oracle SQL the
-  * driver hash-compares against. Column names/aliases MUST match the oracle.
+/** One named query: a Spark plan plus the DuckDB oracle SQL the driver
+  * hash-compares against. Column names/aliases MUST match the oracle.
   * The builders register graft's native functions on the session before
   * the body runs, so no query body registers them itself.
   */
 final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object Q {
   def apply(name: String, sql: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, registered(run), Some(sql))
+    Q(name, registered(run), sql)
 
   private def registered(run: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = { (s, d) =>

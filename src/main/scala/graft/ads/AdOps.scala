@@ -40,31 +40,47 @@ object AdOps {
     *
     * Driver-side collect is deliberate and bounded: the key set is the
     * column dimension (hundreds at most), never the row dimension.
+    *
+    * This standalone form runs its own jobs. The pipelines observe the same
+    * set on the job that materializes their flat rows instead (see
+    * `Pipelines.dedupPivot`).
     */
   def collectActionTypes(raw: DataFrame): Seq[String] =
     raw.select(explode(col("actions.action_type")).as("t"))
       .distinct().collect().map(_.getString(0)).toSeq.sorted
 
-  /** P2 + V1 pass 2: nested record → flat wide row in ONE row-local
-    * projection — no shuffle, no aggregate. The reference's per-row
-    * overwrite semantics (`main.py:389-391`: later entries win per key) are
-    * part of the expression: an entry is dropped when a later entry repeats
-    * its action type, so `map_from_entries` never sees a duplicate key and
-    * the result holds under any `spark.sql.mapKeyDedupPolicy`. Missing
-    * actions zero-fill (`main.py:383-386`).
-    *
-    * Scale: this is a narrow map over the scan — whole-stage codegen'd,
-    * partition-count preserving, embarrassingly parallel at any SF.
+  /** P2 + V1 pass 2: nested record → flat wide row, [[flattenToMap]] then
+    * [[expandActions]]. Both are row-local projections: no shuffle, no
+    * aggregate, partition-count preserving at any SF.
     */
-  def flattenAndPivot(raw: DataFrame, actionTypes: Seq[String]): DataFrame = {
-    val base = Seq(
+  def flattenAndPivot(raw: DataFrame, actionTypes: Seq[String]): DataFrame =
+    expandActions(flattenToMap(raw), actionTypes)
+
+  /** The action map column of [[flattenToMap]]'s rows. */
+  val actionsCol = "__actions"
+
+  /** P2: nested record → the static flat columns plus one [[actionsCol]]
+    * map from action type to its value, already guarded to a long
+    * (malformed → 0). The reference's per-row overwrite semantics
+    * (`main.py:389-391`: later entries win per key) are part of the
+    * expression: an entry is dropped when a later entry repeats its action
+    * type, so `map_from_entries` never sees a duplicate key and the result
+    * holds under any `spark.sql.mapKeyDedupPolicy`. The lambdas run once per
+    * row, however many action columns [[expandActions]] makes of the map.
+    */
+  def flattenToMap(raw: DataFrame): DataFrame = {
+    def guardedLong(c: Column) =
+      coalesce(numericOrNull(c, "^-?[0-9]+$").cast("long"), lit(0L))
+    val entries = transform(
+      filter(col("actions"), (a, i) => !exists(slice(col("actions"), i + 2, size(col("actions"))),
+        b => b.getField("action_type") === a.getField("action_type"))),
+      a => struct(a.getField("action_type").as("k"), guardedLong(a.getField("value")).as("v")))
+    raw.select(
       col("campaign_name"),
       col("ad_name"),
       col("publisher_platform"),
-      coalesce(numericOrNull(col("impressions"), "^-?[0-9]+$").cast("long"),
-        lit(0L)).as("impressions"),
-      coalesce(numericOrNull(col("clicks"), "^-?[0-9]+$").cast("long"),
-        lit(0L)).as("clicks"),
+      guardedLong(col("impressions")).as("impressions"),
+      guardedLong(col("clicks")).as("clicks"),
       coalesce(numericOrNull(col("spend"), "^-?[0-9]+(\\.[0-9]+)?$").cast("double"),
         lit(0.0)).as("spend"),
       col("date_start"),
@@ -75,20 +91,21 @@ object AdOps {
       extractMetric(col("video_p25_watched_actions")).as("video_p25_views"),
       extractMetric(col("video_p50_watched_actions")).as("video_p50_views"),
       extractMetric(col("video_p75_watched_actions")).as("video_p75_views"),
-      extractMetric(col("video_p100_watched_actions")).as("video_p100_views"))
-    val actionMap = map_from_entries(
-      when(col("actions").isNull, array())
-        .otherwise(expr("transform(filter(actions, (a, i) -> NOT exists(" +
-          "slice(actions, i + 2, size(actions)), b -> b.action_type = a.action_type)), " +
-          "a -> struct(a.action_type AS k, a.value AS v))")))
-    // the map is projected once and looked up per action column, so the
-    // lambdas are analyzed and evaluated once per row, not once per column
-    val withMap = raw.select(base :+ actionMap.as("__actions"): _*)
+      extractMetric(col("video_p100_watched_actions")).as("video_p100_views"),
+      map_from_entries(when(col("actions").isNull, array()).otherwise(entries))
+        .as(actionsCol))
+  }
+
+  /** V1 pass 2: [[flattenToMap]]'s rows with the map expanded to one long
+    * column per action type, in the given order, named by
+    * [[normalizeActionName]]. A type the row lacks zero-fills
+    * (`main.py:383-386`).
+    */
+  def expandActions(flat: DataFrame, actionTypes: Seq[String]): DataFrame = {
     val actionCols = actionTypes.map { t =>
-      coalesce(numericOrNull(try_element_at(col("__actions"), lit(t)), "^-?[0-9]+$")
-        .cast("long"), lit(0L)).as(normalizeActionName(t))
+      coalesce(try_element_at(col(actionsCol), lit(t)), lit(0L)).as(normalizeActionName(t))
     }
-    withMap.select(withMap.columns.init.map(col).toSeq ++ actionCols: _*)
+    flat.select(flat.columns.filterNot(_ == actionsCol).map(col).toSeq ++ actionCols: _*)
   }
 
   /** D1: deterministic first-wins dedup (reference `main.py:500-515`).

@@ -2,8 +2,11 @@ package graft.ads
 
 import java.util.concurrent.atomic.AtomicReference
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, when}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, collect_set, count, flatten, lit, map_keys, when}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Typed counters of one ETL run, read from observations on the run's own
@@ -37,41 +40,80 @@ object Pipelines {
 
   /** The one ETL core, under the daily, backfill and streaming triggers:
     * runs `sink` over the first-wins dedup of `raw`, flattened and pivoted
-    * on the batch's own action types. The dedup is materialized once: the
-    * ranked raw rows are cached, filled by the first job that reads them
-    * (one scan, one shuffle), and released when `sink` returns or throws.
+    * on the batch's own action types.
     *
-    * The rows `sink` gets also observe (rows read, rows after dedup); both
-    * are returned. The observation completes on the first query that runs
-    * them, and a query whose adaptive plan drops the cached scan (an
-    * aggregate over no rows) completes it with no values.
+    * The deduped rows are materialized once, in [[AdOps.flattenToMap]]'s
+    * map form: an eager `localCheckpoint` whose fill is two jobs (the dedup
+    * shuffle's map stage, then the checkpoint), each raw record scanned
+    * once. Observations on that fill count the rows read and kept and
+    * collect the kept rows' action types, so no job runs only to get the
+    * types. `sink` gets the checkpoint with the map expanded to the sorted
+    * types ([[AdOps.expandActions]]); the checkpoint's blocks are released
+    * when `sink` returns or throws.
+    *
+    * Returns `sink`'s result, rows read, rows after dedup.
     */
   private def dedupPivot[T](raw: DataFrame)(sink: DataFrame => T): (T, Long, Long) = {
-    val ranked = AdOps.firstWinsRank(raw).cache()
     val winner = col(AdOps.rankCol) === 1
     val counts = Observation()
-    val counted = ranked
+    val seen = Observation()
+    // the dedup's own hash partitioning, as a fixed count: left to AQE, the
+    // checkpoint's shuffle would coalesce, which reorders the audit's rows
+    // and changes how many files the append writes per day
+    val partitions = raw.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val kept = AdOps.firstWinsRank(raw.repartition(partitions, AdOps.dedupKey.map(col): _*))
       .observe(counts, count(lit(1)).as("read"), count(when(winner, 1)).as("kept"))
-    def winners(df: DataFrame) = df.filter(winner).drop(AdOps.rankCol)
+      .filter(winner).drop(AdOps.rankCol)
+    val flat = AdOps.flattenToMap(kept)
+      .observe(seen, flatten(collect_set(map_keys(col(AdOps.actionsCol)))).as("types"))
+      .localCheckpoint()
     try {
-      val out = sink(AdOps.flattenAndPivot(winners(counted),
-        AdOps.collectActionTypes(winners(ranked))))
-      (out, counts.get("read").asInstanceOf[Long], counts.get("kept").asInstanceOf[Long])
-    } finally ranked.unpersist(): Unit
+      // an observation over no rows may complete with no values
+      val types = seen.get.get("types").collect { case ts: Seq[_] => ts.map(_.toString) }
+        .getOrElse(Seq.empty).distinct.sorted
+      def counted(k: String) = counts.get.get(k).fold(0L)(_.asInstanceOf[Long])
+      (sink(AdOps.expandActions(flat, types)), counted("read"), counted("kept"))
+    } finally flat.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false): Unit
+      case _ =>
+    }
+  }
+
+  /** Runs `a` on the calling thread while `b` runs on a new thread, and
+    * returns both outcomes once both have ended. A new thread per call, not
+    * a pool, so the Spark local properties it inherits (job group, trace
+    * tags) are the caller's at this call.
+    */
+  private def both[A, B](a: => A, b: => B): (Try[A], Try[B]) = {
+    var second: Try[B] = Failure(new IllegalStateException("sink thread did not finish"))
+    val t = new Thread(() => second = try Success(b) catch { case e: Throwable => Failure(e) },
+      "graft-sink")
+    t.start()
+    val first = try Try(a) finally t.join()
+    (first, second)
   }
 
   /** Daily sync (reference `main.py:454-550`): fetch per account with
-    * failure isolation → first-wins dedup on RAW records → collect action
-    * types → flatten+pivot → CSV audit → append to day-partitioned table
-    * (schema-evolving). `dryRun` builds and audits but skips the table sink
-    * (reference `main.py:462,538-540`).
+    * failure isolation → first-wins dedup on RAW records → flatten+pivot on
+    * the batch's action types → CSV audit and append to the day-partitioned
+    * table (schema-evolving). `dryRun` builds and audits but skips the
+    * table sink (reference `main.py:462,538-540`).
     *
-    * One pass, like the reference: the dedup is materialized once and the
-    * action-type collect, the pivot, the CSV audit and the append all read
-    * that one materialization (see [[dedupPivot]]), so each raw record is
-    * scanned once and the dedup shuffle runs once. Every count in the
-    * result is observed on those jobs (see [[EtlCounters]]); none runs a
-    * job of its own.
+    * One pass, like the reference: the dedup is materialized once (two
+    * jobs, see [[dedupPivot]]), the action types are observed on that fill,
+    * and the CSV audit and the append (one job each) both read the
+    * materialization, so each raw record is scanned once and the dedup
+    * shuffle runs once: 4 jobs in all. Every count in the result is
+    * observed on those jobs (see [[EtlCounters]]); none runs a job of its
+    * own.
+    *
+    * The audit and the append do not depend on each other and run at the
+    * same time: the append on a new thread, the audit on the caller's. Both
+    * have ended before the materialization is released. So, unlike the
+    * reference, the append does not wait for the audit to commit: a failed
+    * audit can leave a committed append behind, and its error says how many
+    * rows the append committed (a re-run of the day would append them
+    * again). A failed append fails the sync whatever the audit did.
     */
   def dailySync(
       spark: SparkSession,
@@ -82,8 +124,18 @@ object Pipelines {
       dryRun: Boolean = false): JobResult = {
     val read = InsightsSource.read(spark, fixtureDir, accounts)
     val ((audited, append), rowsRead, rowsDeduped) = dedupPivot(read.data) { flat =>
-      (Sinks.csvAudit(flat, auditCsvPath),
-        if (dryRun) None else Some(Sinks.appendToTableChecked(spark, flat, tablePath)))
+      if (dryRun) (Sinks.csvAudit(flat, auditCsvPath), None)
+      else both(Sinks.csvAudit(flat, auditCsvPath),
+          Sinks.appendToTableChecked(spark, flat, tablePath)) match {
+        case (Success(n), Success(a)) => (n, Some(a))
+        case (audit, Failure(e)) =>
+          audit.failed.foreach(e.addSuppressed)
+          throw e
+        case (Failure(e), Success(a)) =>
+          throw new IllegalStateException(s"CSV audit to $auditCsvPath failed after the " +
+            s"append committed ${a.appended} rows to $tablePath; re-running this day " +
+            "appends them again", e)
+      }
     }
     val rows = append.fold(audited)(_.appended)
     val rejectNote = append.filter(_.rejected > 0).fold("")(r =>

@@ -46,6 +46,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // theta range joins → binned equi-joins (no nested loops at scale)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
+    // plans graft.plans.AsOfJoin's logical node
+    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoin.AsOfStrategy)
     GraftFunctions.functions.foreach(ext.injectFunction)
   }
 }

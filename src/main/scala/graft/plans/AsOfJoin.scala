@@ -158,7 +158,10 @@ object AsOfJoin {
     }
   }
 
-  /** Public API (columns resolved by name against each side):
+  /** Public API (columns resolved by name against each side). The node is
+    * planned by [[AsOfStrategy]], which [[graft.functions.GraftExtensions]]
+    * injects when the session is built (as `GraftSession.build` does);
+    * this call leaves the session as it is.
     * {{{
     * AsOfJoin(events, orders,
     *   leftKey = "user_id", rightKey = "o_custkey",
@@ -173,7 +176,6 @@ object AsOfJoin {
       rightTieBreak: Seq[String] = Nil,
       inclusive: Boolean = true): DataFrame = {
     val spark: SparkSession = left.sparkSession
-    GraftSqlBridge.addStrategy(spark, AsOfStrategy)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(plan: LogicalPlan, name: String): Attribute =

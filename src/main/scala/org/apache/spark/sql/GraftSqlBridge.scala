@@ -1,7 +1,6 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkStrategy
 
 /** Bridge into `private[sql]` constructors needed to expose a custom
   * LogicalPlan as a public DataFrame (the same technique Spark extension
@@ -11,11 +10,4 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
-
-  def addStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
-    val s = spark.asInstanceOf[classic.SparkSession]
-    if (!s.experimental.extraStrategies.contains(strategy)) {
-      s.experimental.extraStrategies = s.experimental.extraStrategies :+ strategy
-    }
-  }
 }

@@ -18,12 +18,10 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("every query has an oracle (or is explicitly unchecked)") {
-    // round 6: every query is oracle-checked — the approximate operators
-    // (agg4/agg6/sim3/dd5b) emit in-engine-verified accuracy/recall bounds
-    // the oracle asserts as literal flags
-    val unchecked = Set.empty[String]
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(missing == unchecked, s"queries without oracle SQL: $missing")
+    // every query is oracle-checked (`Q.oracle` is not optional) — the
+    // approximate operators (agg4/agg6/sim3/dd5b) emit in-engine-verified
+    // accuracy/recall bounds the oracle asserts as literal flags
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
     // the query set is pinned: a dropped or duplicated name fails here
     // (SparkEntry itself refuses a duplicate name)
     assert(SparkEntry.queries.size == 272)

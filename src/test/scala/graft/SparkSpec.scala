@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Suites run one after another on the same session, so a setting one
   * suite leaves behind changes what the next one measures. The suite
-  * fails if its session config differs from the one it started with.
+  * fails if its session config, or the optimizer rules and planner
+  * strategies added through `spark.experimental`, differ from the ones it
+  * started with.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -19,6 +21,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.chunkBase64String.enabled", "false")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     .getOrCreate()
 
   /** Runs `body` with `settings` on the session, then puts each key back
@@ -36,10 +39,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private var confAtStart: Map[String, String] = Map.empty
+  private var experimentalAtStart: (Seq[Any], Seq[Any]) = (Nil, Nil)
+
+  /** The optimizer rules and planner strategies added at runtime. */
+  private def experimental: (Seq[Any], Seq[Any]) =
+    (spark.experimental.extraOptimizations, spark.experimental.extraStrategies)
 
   override protected def beforeAll(): Unit = {
     super.beforeAll()
     confAtStart = spark.conf.getAll
+    experimentalAtStart = experimental
   }
 
   override protected def afterAll(): Unit =
@@ -49,5 +58,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter(k => confAtStart.get(k) != now.get(k))
         .map(k => s"$k: ${confAtStart.getOrElse(k, "<unset>")} -> ${now.getOrElse(k, "<unset>")}")
       assert(changed.isEmpty, s"session config leaked: ${changed.mkString("; ")}")
+      assert(experimental == experimentalAtStart,
+        s"experimental rules leaked: $experimentalAtStart -> $experimental")
     } finally super.afterAll()
 }

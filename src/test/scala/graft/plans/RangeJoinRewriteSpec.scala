@@ -2,9 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class RangeJoinRewriteSpec extends AnyFunSuite {
+class RangeJoinRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // Production wires the rule through spark.sql.extensions
   // (GraftExtensions → GraftSession); under sbt's parallel suite
@@ -13,6 +14,9 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
   // object at runtime via experimental.extraOptimizations — deterministic
   // for any session. If both paths are present the rule applies twice,
   // which is safe: a rewritten join has an equi key and no longer matches.
+  // The session is shared with the suites that run after this one, so the
+  // rule this spec adds is removed again in afterAll.
+  private var added = false
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -23,10 +27,17 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.conf.set("spark.sql.session.timeZone", "UTC")
-    if (!s.experimental.extraOptimizations.exists(_ eq RangeJoinRewrite))
+    if (!s.experimental.extraOptimizations.exists(_ eq RangeJoinRewrite)) {
       s.experimental.extraOptimizations ++= Seq(RangeJoinRewrite)
+      added = true
+    }
     s
   }
+
+  override protected def afterAll(): Unit =
+    try if (added) spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ eq RangeJoinRewrite)
+    finally super.afterAll()
 
   import spark.implicits._
 
